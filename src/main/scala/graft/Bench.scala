@@ -4,17 +4,11 @@ import scala.jdk.CollectionConverters._
 
 /** Benchmark main. Prints per-query diagnostics to stderr and a
   * bench-detail JSON file, then ONE JSON line to stdout as the driver
-  * contract, carrying the COMPLETE per-query warm map (r19 verdict #1
-  * "what's wrong": five rounds of PERF had `per_query: {}` because the
-  * line truncated to the slowest ~17 with `"omitted":217` — and the
-  * real parse blocker was sbt's `[info] ` logger prefix on non-raw
-  * forked output, fixed in build.sbt via `run / outputStrategy :=
-  * StdoutOutput`; `parsed` was null in EVERY round r01–r19, including
-  * rounds whose final line was complete). The map is sorted by
-  * descending cost so a tail-windowed reader still sees the expensive
-  * queries first; the full detail lives in `bench_detail_c<cpus>.json`
-  * (per-cpus since r20 — the r19 8-core run clobbered the 32-core
-  * detail, losing the round's per-query baseline).
+  * contract, carrying the COMPLETE per-query warm map. The map is
+  * sorted by descending cost so a tail-windowed reader still sees the
+  * expensive queries first; the full detail lives in
+  * `bench_detail_c<cpus>.json`, one file per core count so a run at
+  * one count never overwrites (or adjudicates against) another's.
   */
 object Bench {
 
@@ -37,145 +31,47 @@ object Bench {
     if (s.contains('.')) s else s + ".0"
   }
 
-  /** Committed per-query SETTLED FLOORS (`floors.json`, a flat
-    * `{"query": seconds}` map measured by dedicated `graft.Scratch`
-    * runs — SCALING.md "Settled floors"): the drift-adjudication
-    * basis the r12 verdict asked for. An isolated re-measure landing
-    * at ≤ ~1.2× its floor is suite noise by definition, whatever the
-    * prior round's in-suite warm happened to be. Missing file or
-    * query → no floor, adjudication falls back to prior-warm only.
-    *
-    * METHODOLOGY MATTERS: floors must be measured the way
-    * [[isolatedSec]] measures — one FRESH JVM per query, 3 reps, min,
-    * quiet host (`for q in ...; do GRAFT_SCRATCH_JSON=... Scratch $q
-    * sfDir 3; done`). A floor taken mid-sweep in a long-warmed JVM is
-    * systematically BELOW what a fresh-JVM child can reach for
-    * slow-JIT queries (r13 measured q_dedup_report_minhash needing
-    * ~5 runs to settle 25.5→2.6 s), which manufactures false
-    * `regressed?` verdicts. */
-  private[graft] def settledFloors(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      val q = """"([A-Za-z0-9_()]+)"\s*:\s*(-?[0-9.]+)""".r
-      q.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble)
-        .filter(_._2 > 0).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+  /** The warm-pass queries given a fresh-JVM isolated spawn every run,
+    * heaviest first; `robust_total` takes min(warm, isolated) for them. */
+  private val HeavyIso = 10
 
-  /** Prior round's per-query WARM numbers from the `bench_detail.json`
-    * the last run left behind — the self-adjudication baseline. Parsed
-    * with a scan for `"<name>":{...,"warm":X` instead of a JSON lib
-    * (none on the classpath); a missing/corrupt file just disables
+  /** Per-query WARM numbers from the detail file the previous run at
+    * this core count left behind — the self-adjudication baseline.
+    * Parsed with a scan for `"<name>":{...,"warm":X` instead of a JSON
+    * lib (none on the classpath); a missing/corrupt file just disables
     * adjudication for the run. */
   private[graft] def priorWarms(path: String): Map[String, Double] =
     try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8")
       // whitespace-tolerant: the file may have been pretty-printed by
-      // an external tool between rounds
+      // an external tool between runs
       val q = """"([A-Za-z0-9_()]+)"\s*:\s*\{\s*"sec"\s*:[^}]*?"warm"\s*:\s*(-?[0-9.]+)""".r
       q.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble)
         .filter(_._2 > 0).toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  /** Drift-verdict cascade for the self-adjudication pass (r13 ADVICE
-    * #1 rewrote the last two branches): a drifted query's fresh-JVM
-    * isolated figure is judged against the settled FLOOR first, then
-    * against the PRIOR round's warm — NOT against this run's warm. A
-    * fresh JVM on a quiet host is almost always at or below the
-    * in-suite warm, so the old `iso <= warm` branch labeled confirmed
-    * regressions (prior 1.0 s, warm 2.0 s, iso 1.9 s) "suite-noise"
-    * and made "regressed?" nearly unreachable — the exact
-    * false-negative the floors were added to prevent, inverted.
-    * `iso <= pw*1.2` = the settled figure still matches last round →
-    * suite-order effect; above that with the floor also blown → a
-    * real plan/constant regression. (A prior always exists for a
-    * drift: detection is keyed on `prior.get(n)`.)
-    *
-    * HOST NORMALIZATION (r15 verdict #2): `floorHostUp` is the
-    * measured [[HostCanary]] slowdown vs floor-settle time,
-    * `priorHostUp` vs the prior bench — both ≥1, capped at 1.6. A
-    * figure that only blows its bound by less than the measured host
-    * slowdown is labeled `suite-noise(host)`: the named cause every
-    * archival-binary A/B so far has ended at, now read off two canary
-    * numbers instead. Factors stay OUT of the first two branches so
-    * an unchanged-speed host reproduces the old cascade exactly.
-    *
-    * ABSORB CAP (r16 self-review): the host branches multiply two
-    * independently-capped factors (tol ≤1.6 × host ≤1.6 = 2.56), so
-    * without a cap on the PRODUCT a genuine 2× regression on a
-    * maximally-drifted host would be auto-labeled suite-noise(host) —
-    * violating the stated contract that a real 2× always surfaces.
-    * The combined noise bound is therefore capped at [[AbsorbCap]]
-    * (1.9, strictly below 2): beyond it the verdict stays `regressed?`
-    * no matter what tolerance + canary claim, and a human re-settles. */
-  private[graft] val AbsorbCap = 1.9
-
-  private[graft] def driftVerdict(iso: Double, priorWarm: Double,
-                                  floor: Option[Double],
-                                  floorHostUp: Double = 1.0,
-                                  priorHostUp: Double = 1.0,
-                                  floorTol: Double = 1.25): String =
+  /** Verdict on a drifted query: its fresh-JVM isolated figure is
+    * judged against the PRIOR run's warm, not this run's warm. A fresh
+    * JVM is almost always at or below the in-suite warm, so an
+    * `iso <= warm` rule would label a confirmed regression (prior 1.0 s,
+    * warm 2.0 s, iso 1.9 s) suite noise and make `regressed?`
+    * unreachable. `iso <= prior·1.2`: the isolated figure still matches
+    * the prior run, so the drift was a suite-order effect; above that,
+    * the plan or a constant factor regressed. */
+  private[graft] def driftVerdict(iso: Double, priorWarm: Double): String =
     if (iso < 0) "spawn-failed"
-    else if (floor.exists(f => iso <= f * floorTol)) "suite-noise(floor)"
-    else if (floorHostUp > 1.001 &&
-      floor.exists(f => iso <= f * math.min(AbsorbCap, floorTol * floorHostUp)))
-      "suite-noise(host)"
     else if (iso <= priorWarm * 1.2) "suite-noise(prior)"
-    else if (priorHostUp > 1.001 &&
-      iso <= priorWarm * math.min(AbsorbCap, 1.2 * priorHostUp))
-      "suite-noise(host)"
     else "regressed?"
 
-  /** Per-query floor tolerance: `"__tol_<query>"` metadata inside
-    * floors.json overrides the default 1.25× noise bound — for queries
-    * whose fresh-JVM spawn-min DISTRIBUTION is heavy-tailed relative
-    * to it (r16: `q_mm_dedup_index`, ImageIO-decode-bound, 7 quiet-
-    * host spawn-mins spanning 0.75–1.49 s against a 1.06 floor — the
-    * default bound cries wolf on ~25% of single spawns with NO code
-    * change, and has flapped two rounds of adjudications). Tolerances
-    * are committed and reviewed like floors; the sane range is pinned
-    * by [[driftVerdict]]'s contract — a real 2× regression must stay
-    * above any committed tol × hostcap product, which [[AbsorbCap]]
-    * enforces IN CODE (the product is clamped at 1.9) rather than by
-    * convention on what tolerances reviewers commit. */
-  private[graft] def floorTolOf(floors: Map[String, Double], n: String): Double =
-    floors.getOrElse("__tol_" + n, 1.25) min 1.6
-
-  /** Per-floor canary lookup (r16 verdict #4): the `__canary_<query>`
-    * stamp written at THAT floor's settle time, falling back to the
-    * global latest-settle [[HostCanary.FloorKey]] for floors from
-    * before the per-floor schema. Host normalization for a floor is
-    * then exact — measured against the host window the floor was
-    * actually cut on — instead of approximated by whenever the most
-    * recent settle of ANY floor happened. */
-  private[graft] def floorCanaryOf(floors: Map[String, Double],
-                                   n: String): Option[Double] =
-    floors.get(HostCanary.floorKeyFor(n)).orElse(floors.get(HostCanary.FloorKey))
-
-  /** The prior round's recorded `host_factor` (bench_detail.json
-    * header), 1.0 when absent — pre-canary detail files and fresh
-    * checkouts adjudicate exactly as before. */
-  private[graft] def priorHostFactor(path: String): Double =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      """"host_factor"\s*:\s*([0-9.]+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).filter(_ > 0).getOrElse(1.0)
-    } catch { case scala.util.control.NonFatal(_) => 1.0 }
-
-  /** FRESH-JVM isolation re-measure of one query — the trailing
-    * self-adjudication pass (r11 verdict #1: two consecutive rounds
-    * burned judge+builder time re-litigating 1.2–1.9× in-suite warm
-    * drifts that fresh-JVM isolation later attributed to suite
-    * heap/page-cache pressure; now the suite adjudicates itself).
-    * Spawns `graft.Scratch <q> <sfDir> <reps>` with this JVM's
-    * classpath and module-opens flags, cwd in tmp (no metastore/derby
-    * collision with the running suite), and returns the MIN of the
-    * printed reps — the settled-plan figure, cold run included (a
-    * valid observation that can only tighten the min). None on any
-    * spawn/parse failure: adjudication must never fail the bench. */
-  private[graft] def isolatedSec(name: String, sfDir: String, cpus: String,
+  /** FRESH-JVM isolation re-measure of one query: spawns
+    * `graft.Profile <q> <sfDir> <reps> time` with this JVM's classpath
+    * and module-opens flags, cwd in tmp (no metastore/derby collision
+    * with the running suite), and returns the MIN of the printed reps —
+    * the settled-plan figure, cold run included (a valid observation
+    * that can only tighten the min). None on any spawn/parse failure
+    * or timeout: adjudication must never fail the bench. */
+  private[graft] def isolatedSec(name: String, sfDir: String, cpus: Int,
                                  reps: Int = 3, heapGb: Int = 8,
                                  timeoutSec: Long = 600): Option[Double] =
     try {
@@ -206,8 +102,7 @@ object Bench {
         ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
       // the child runs from tmpdir, so RELATIVE classpath entries (a
       // plain `java -cp target/...:... graft.Bench` launch) must be
-      // absolutized or the child dies with ClassNotFound — the r13
-      // first bench run lost all 8 adjudications exactly this way
+      // absolutized or the child dies with ClassNotFound
       val sep = java.io.File.pathSeparator
       val absCp = System.getProperty("java.class.path").split(sep)
         .filter(_.nonEmpty)
@@ -217,26 +112,24 @@ object Bench {
         s"-Xmx${heapGb}g", "-Dspark.ui.enabled=false",
         "-Dspark.sql.session.timeZone=UTC",
         "-cp", absCp,
-        "graft.Scratch", name, sfDir, reps.toString)).toArray
+        "graft.Profile", name, sfDir, reps.toString, "time")).toArray
       val pb = new ProcessBuilder(cmd: _*)
       pb.directory(new java.io.File(System.getProperty("java.io.tmpdir")))
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      // never let a child spawn WRITE floors (r14 ADVICE #3): if the
-      // operator has GRAFT_SCRATCH_JSON exported (the floors workflow),
-      // an inherited copy would make every adjudication/curve rep
-      // silently rewrite floors.json — at sf1 scale in ScaleCurves'
-      // case — corrupting the settled floors the drift verdict keys on
-      pb.environment().remove("GRAFT_SCRATCH_JSON")
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.redirectErrorStream(true)
       val p = pb.start()
-      // drain stdout on its OWN thread (r12 advice): a to-EOF read on
-      // this thread would block forever on a hung child, so the 600 s
-      // waitFor/destroyForcibly path could never engage — one stuck
-      // spawn would hang the whole bench
-      val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      // drain stdout on its OWN thread: a to-EOF read on this thread
+      // would block forever on a hung child, so the timeout/
+      // destroyForcibly path could never engage — one stuck spawn
+      // would hang the whole bench
+      val rep = """\[profile\] \S+ run \d+: ([0-9.]+) s""".r
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
       val reader = new Thread(() =>
         try scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
-          .getLines().foreach { l => if (l.startsWith("[scratch]")) out.add(l) }
+          .getLines().foreach {
+            case rep(s) => out.add(s.toDouble)
+            case _ =>
+          }
         catch { case scala.util.control.NonFatal(_) => () },
         s"bench-iso-drain-$name")
       reader.setDaemon(true)
@@ -245,10 +138,7 @@ object Bench {
       if (!done) { p.destroyForcibly(); reader.join(2000); None }
       else {
         reader.join(10000) // stream closes with the exited process
-        import scala.jdk.CollectionConverters._
-        val secs = out.asScala.toList.flatMap(_.split(": ").lastOption)
-          .flatMap(s => scala.util.Try(s.stripSuffix(" s").toDouble).toOption)
-        if (secs.isEmpty) None else Some(secs.min)
+        out.asScala.minOption
       }
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] isolation spawn for $name failed: $e"); None
@@ -256,17 +146,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // host-speed canary at bench OPEN, before Spark exists (r15 verdict
-    // #2): pure-JVM, so it measures the HOST, not the engine
-    val canaryOpen = HostCanary.sec(sfDir)
-    Graft.coreTune()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.tune(spark)
+    val cpus = Graft.cpus
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warmup outside the timed section: exercise the scan,
     // shuffle (groupBy), broadcast-join, and window machinery once on a
@@ -291,9 +172,9 @@ object Bench {
       // the fused per-row kernels (shingles, minhash, simhash, text
       // counts, md5 tier, dot products) JIT-compile on first use;
       // without this the alphabetically-first text/dedup query absorbs
-      // every kernel's codegen+JIT cost (r5: q_curation 22.9 s in-bench
-      // vs 3.4 s warm). A 256-doc slice compiles the same generated
-      // code the sf-scale queries run.
+      // every kernel's codegen+JIT cost (measured: q_curation 22.9 s
+      // in-bench vs 3.4 s warm). A 256-doc slice compiles the same
+      // generated code the sf-scale queries run.
       {
         import graft.dedup.DedupOps
         import graft.text.TextOps
@@ -313,9 +194,9 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
         // the curation COMPOSITION generates its own fused codegen
         // stages (quality+fingerprint+window over a union, anti-join +
-        // token count) distinct from the per-family classes above —
-        // r8: q_curation 4.4 s cold vs 1.5 s warm with every family
-        // individually warmed. Compile the composed shape itself.
+        // token count) distinct from the per-family classes above
+        // (q_curation measured 4.4 s cold vs 1.5 s warm with every
+        // family individually warmed). Compile the composed shape itself.
         locally {
           val doubled = docs.unionByName(
             docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
@@ -333,10 +214,10 @@ object Bench {
             .write.format("noop").mode("overwrite").save()
           dd.unpersist()
         }
-        // transitive-groups family (r6 cold-attribution finding: the
-        // alphabetically-first dedup query absorbed the banded
-        // collect_list buckets, pair-struct explode, connected-
-        // components and group-assembly codegen — compile them here)
+        // transitive-groups family: the alphabetically-first dedup
+        // query otherwise absorbs the banded collect_list buckets,
+        // pair-struct explode, connected-components and group-assembly
+        // codegen — compile them here
         DedupOps.nearDupGroups(docs, "doc_id", "text")
           .write.format("noop").mode("overwrite").save()
         DedupOps.minhashDupGroups(docs, "doc_id", "text", k = 16, bands = 8,
@@ -391,30 +272,20 @@ object Bench {
       }
     } catch { case e: Throwable =>
       // warmup stays best-effort, but a silent failure makes cold
-      // numbers unattributable (r9 verdict: the q_curation warm drift
-      // could not be adjudicated without knowing if warmup ran)
+      // numbers unattributable: a cold figure means nothing without
+      // knowing whether warmup ran
       System.err.println(s"[bench] WARMUP FAILED (degrading to unwarmed): $e")
     }
     val mem = java.lang.management.ManagementFactory.getMemoryMXBean
     var gcForced = 0
-    // per-run process-CPU + an in-suite quick-canary strip (r16 verdict
-    // #2): the open/adjudication canaries measure two INSTANTS, but the
-    // r16-class warm inflation (in-suite warm ~2× same-session isolated,
-    // unreproducible on a quiet host under the exact query sequence at
-    // any heap size — graft.SuiteEffect evidence, SCALING.md r17) is
-    // consistent only with host load that comes and goes DURING the
-    // suite. Two witnesses make it legible per run: (a) wall≫cpu on a
-    // query = stolen cores, that run was contended; (b) quick-canary
-    // samples through the suite vs the open sample = when.
+    // per-run process CPU: a query whose wall time is far above its
+    // CPU time ran on stolen cores, i.e. that run was contended
     def procCpuNanos: Long =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
         case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
         case _ => -1L
       }
     val cpuSecs = scala.collection.mutable.Map.empty[String, Double]
-    val suiteQuick = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val quickOpen = HostCanary.quick()
-    var runCount = 0
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
     : (String, Double, Boolean, Double, Long) = {
       // operators that persist intermediates (LSH/jaccard) must not
@@ -454,24 +325,20 @@ object Bench {
       val peakMb = peakHeapMb
       System.err.println(f"[bench] $name%-28s ${sec}%8.3f s  gc ${gcSec}%6.3f s  " +
         f"cpu ${cpuSec}%7.2f s  peak ${peakMb}%6d MB")
-      runCount += 1
-      if (runCount % 30 == 0) suiteQuick += name -> HostCanary.quick()
       (name, sec, ok, gcSec, peakMb)
     }
     val queryMap = SparkEntry.queries
     val results = queryMap.toSeq.sortBy(_._1).map { case (name, fn) => runOne(name, fn) }
-    // FULL WARM PASS (r8 verdict "what's wrong #4"): the cold pass keeps
-    // booking JIT/page-cache/host-contention first-hit costs against
-    // whichever query runs first over a shape (r8: q1_agg 17.8 s in-bench
-    // vs 0.91 s warm — a trivial agg), and per-shape warmup whack-a-mole
-    // demonstrably doesn't close the gap. So the suite now runs twice and
-    // the WARM total is the headline metric: warm numbers measure the
-    // PLANS, cold numbers (kept as secondary fields + in the detail file)
-    // measure suite startup. Queries under 1 s cold skip the rerun (their
-    // attribution noise is bounded by 1 s; skipping keeps the second pass
-    // cheap); the 5 slowest get two warm runs and the MIN is taken — a
-    // single rerun is itself exposed to contention (r7: one rerun came out
-    // 1.6× SLOWER than its cold run).
+    // FULL WARM PASS: the cold pass books JIT/page-cache/host-contention
+    // first-hit costs against whichever query runs first over a shape
+    // (measured: q1_agg 17.8 s in-bench vs 0.91 s warm — a trivial agg),
+    // and per-shape warmup cannot close that gap. So the suite runs
+    // twice and the WARM total is the headline metric: warm numbers
+    // measure the PLANS, cold numbers (secondary fields + the detail
+    // file) measure suite startup. Queries under 1 s cold skip the rerun
+    // (their attribution noise is bounded by 1 s; skipping keeps the
+    // second pass cheap); the 5 slowest get two warm runs and the MIN is
+    // taken — a single rerun is itself exposed to contention.
     val coldOk = results.filter(_._3)
     val slowest5 = coldOk.sortBy(-_._2).take(5).map(_._1).toSet
     val warmRuns: Map[String, Double] = coldOk
@@ -479,9 +346,8 @@ object Bench {
       .map { case (name, cold, _, _, _) =>
         // a failed warm run must not enter the min — fall back to cold.
         // ≥2.5s-cold queries get two reruns, not just the top-5: the
-        // composed shapes (r10 adjudication: q_curation 11.4→3.2→1.76s
-        // in isolation) need TWO warm executions to reach steady state,
-        // and one rerun books the half-warmed middle as "warm"
+        // composed shapes need TWO warm executions to reach steady
+        // state, and one rerun books the half-warmed middle as "warm"
         val reps = if (slowest5(name) || cold >= 2.5) 2 else 1
         val warms = (1 to reps)
           .map(i => runOne(s"$name(warm$i)", queryMap(name)))
@@ -498,37 +364,15 @@ object Bench {
     val warmTotal = coldOk.map { case (n, c, _, _, _) => warmOf(n, c) }.sum
     val total = warmTotal + failed.size * 1e6 // failures poison the total
     val gcTotal = results.map(_._4).sum
-    // SELF-ADJUDICATING DRIFT PASS (r11 verdict #1): any query whose
-    // warm exceeds the PRIOR round's warm (the bench_detail.json this
-    // run is about to overwrite) by >1.15× AND >0.25 s absolute gets a
-    // trailing fresh-JVM isolation re-measure — published as
-    // prior_warm/isolated fields so the judge reads the attribution
+    // SELF-ADJUDICATING DRIFT PASS: any query whose warm exceeds the
+    // prior run's warm at this core count by >1.15× AND >0.25 s gets a
+    // trailing fresh-JVM isolation re-measure, published as
+    // prior_warm/isolated/verdict so a reader gets the attribution
     // instead of re-deriving it. Capped at the 8 largest (each spawn
-    // costs a JVM+session boot); the cap itself is published via the
-    // adjudicated map's size vs the drift list printed to stderr.
-    // prior warms must compare like with like: prefer the detail file
-    // of THIS cpu count (the driver also runs a low-core pass; r19's
-    // 8-core run overwrote the 32-core detail and the next 32-core
-    // bench would have adjudicated against 8-core warms)
+    // costs a JVM+session boot); the deferred rest is printed to stderr.
+    // No detail file at this core count → no prior → nothing drifts.
     val detailFile = s"bench_detail_c$cpus.json"
-    val priorPath =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(detailFile))) detailFile
-      else "bench_detail.json"
-    val prior = priorWarms(priorPath)
-    val floors = settledFloors("floors.json")
-    // floors are settled at a specific core count (the `__cpus` stamp,
-    // written by Scratch since r20; absent = legacy floors, assumed
-    // 32). Adjudicating an 8-core warm against a 32-core floor
-    // manufactures false `regressed?`/LOOSE-FLOOR flags (r19 verdict
-    // "what's wrong" #6) — at a mismatched cpu count the floor
-    // branches are skipped and the cascade falls back to prior-warm.
-    val floorCpusOk = floors.getOrElse("__cpus", 32.0).toInt.toString == cpus
-    if (!floorCpusOk)
-      System.err.println(s"[bench] floors settled at cpus=" +
-        s"${floors.getOrElse("__cpus", 32.0).toInt} but running at $cpus — " +
-        "floor adjudication skipped this run")
-    def floorOf(n: String): Option[Double] =
-      if (floorCpusOk) floors.get(n) else None
+    val prior = priorWarms(detailFile)
     val drifted = coldOk.flatMap { case (n, c, _, _, _) =>
       val w = warmOf(n, c)
       prior.get(n).collect {
@@ -538,123 +382,69 @@ object Bench {
     if (drifted.size > 8)
       System.err.println(s"[bench] ${drifted.size} drifts; adjudicating top 8, " +
         s"deferred: ${drifted.drop(8).map(_._1).mkString(",")}")
-    // HEAVY-QUERY UNCONDITIONAL ISOLATION (r18 verdict #3): only
-    // >1.15×-drift queries used to get isolated substitution, so
-    // sub-trigger contention still rode robust_total (the r18 strip
-    // witnessed 2.3× mid-suite bursts while only 8 queries crossed the
-    // trigger). The heaviest warm queries dominate the total — the
-    // graph/index family alone is ~60 s of 267 — so the top
-    // GRAFT_BENCH_HEAVY_ISO (default 10) by warm cost get ONE
-    // fresh-JVM isolated spawn every round, unconditionally, and
-    // robust_total takes min(warm, isolated) for them. Queries already
-    // in the drift pass are not spawned twice.
+    // HEAVY-QUERY UNCONDITIONAL ISOLATION: the heaviest warm queries
+    // dominate the total, so sub-trigger contention on them would ride
+    // robust_total unseen. The top HeavyIso by warm cost get ONE
+    // fresh-JVM spawn every run; queries already in the drift pass are
+    // not spawned twice.
     val adjNames = drifted.take(8).map(_._1).toSet
-    val heavyN = sys.env.getOrElse("GRAFT_BENCH_HEAVY_ISO", "10").toInt
     val heavyPlanned = coldOk
       .map { case (n0, c, _, _, _) => (n0, warmOf(n0, c)) }
-      .sortBy(-_._2).take(heavyN)
+      .sortBy(-_._2).take(HeavyIso)
       .filterNot { case (n0, _) => adjNames.contains(n0) }
-    // ISOLATION AFTER SUITE SHUTDOWN (r12 verdict #3): the r12 pass ran
-    // beside the still-resident suite SparkSession, so under memory/
-    // page-cache pressure an isolated figure could land ABOVE in-suite
-    // warm and adjudicate nothing. Stop the suite session (executor
-    // threads, block manager, cached pools all released) and settle the
-    // heap before the first spawn; the spawned JVM then owns the host.
-    val anySpawns = drifted.nonEmpty || heavyPlanned.nonEmpty
-    if (anySpawns) { spark.stop(); System.gc() }
-    // canary AGAIN at adjudication time (the suite ran for minutes;
-    // the verdicts should key on host speed NOW, not at open), against
-    // the floor-settle canary recorded inside floors.json and the
-    // prior round's recorded factor
-    val canaryAdj = if (anySpawns) HostCanary.sec(sfDir) else canaryOpen
-    val floorCanary = floors.get(HostCanary.FloorKey)
-    val hostFactor = HostCanary.factor(canaryAdj, floorCanary)
-    val hostRel = math.min(1.6, math.max(1.0,
-      hostFactor / math.max(1.0, priorHostFactor(priorPath))))
-    if (hostFactor > 1.001 || hostRel > 1.001)
-      System.err.println(f"[bench] host canary: ${canaryAdj}%.3f s vs floor " +
-        f"${floorCanary.getOrElse(-1.0)}%.3f -> factor $hostFactor%.3f (vs prior round $hostRel%.3f)")
-    val adjudicated: Map[String, (Double, Double, Double, Option[Double], String)] =
+    // ISOLATION AFTER SUITE SHUTDOWN: beside a still-resident suite
+    // session, memory/page-cache pressure can push an isolated figure
+    // ABOVE the in-suite warm and adjudicate nothing. Stop the suite
+    // session and settle the heap before the first spawn; the spawned
+    // JVM then owns the host.
+    if (drifted.nonEmpty || heavyPlanned.nonEmpty) { spark.stop(); System.gc() }
+    val adjudicated: Map[String, (Double, Double, Double, String)] =
       drifted.take(8).map { case (n, w, pw) =>
         System.err.println(f"[bench] drift $n: warm ${w}%.3f vs prior ${pw}%.3f — isolating")
-        // per-floor host factor (r16 verdict #4): normalize against
-        // THIS floor's settle-window canary stamp when one exists
-        // (falls back to the global latest-settle canary = the outer
-        // hostFactor, so unstamped floors adjudicate exactly as before)
-        val hostFactorN = HostCanary.factor(canaryAdj, floorCanaryOf(floors, n))
         val iso1 = isolatedSec(n, sfDir, cpus).getOrElse(-1.0)
-        // a `regressed?` label needs TWO independent spawns (the floors
-        // protocol's min-over-2-spawns): decode-/IO-bound queries show
-        // ±30% spawn-to-spawn variance (r15 q_mm_dedup_index A/B; r16
-        // close caught the same query again at 1.38× floor on ONE spawn
-        // while three fresh spawns all landed ≤1.25× — one below the
-        // floor). A second spawn only runs for would-be regressions, so
-        // the common suite-noise path stays one spawn cheap.
+        // a `regressed?` label needs TWO independent spawns: decode-/
+        // IO-bound queries show ±30% spawn-to-spawn variance. The second
+        // spawn only runs for would-be regressions, so the common
+        // suite-noise path stays one spawn cheap.
         val iso =
-          if (driftVerdict(iso1, pw, floorOf(n), hostFactorN, hostRel,
-            floorTolOf(floors, n)) != "regressed?") iso1
+          if (driftVerdict(iso1, pw) != "regressed?") iso1
           else {
             val iso2 = isolatedSec(n, sfDir, cpus).getOrElse(-1.0)
             System.err.println(f"[bench] drift $n: regressed? on spawn 1 " +
               f"(${iso1}%.3f) — confirming spawn 2: ${iso2}%.3f")
             if (iso2 < 0) iso1 else math.min(iso1, iso2)
           }
-        val fl = floorOf(n)
-        val verdict = driftVerdict(iso, pw, fl, hostFactorN, hostRel, floorTolOf(floors, n))
-        System.err.println(f"[bench] drift $n: isolated ${iso}%.3f s, " +
-          f"floor ${fl.getOrElse(-1.0)}%.3f — $verdict")
-        n -> (pw, w, iso, fl, verdict)
+        val verdict = driftVerdict(iso, pw)
+        System.err.println(f"[bench] drift $n: isolated ${iso}%.3f s — $verdict")
+        n -> (pw, w, iso, verdict)
       }.toMap
-    // the r18 verdict #3 spawns: one isolated figure per heavy query,
-    // every round (failures drop silently — adjudication must never
-    // fail the bench; robust_total just keeps the warm figure)
+    // one isolated figure per heavy query (failures drop silently —
+    // robust_total just keeps the warm figure)
     val heavyIso: Map[String, Double] = heavyPlanned.flatMap { case (n0, w) =>
       System.err.println(f"[bench] heavy $n0: warm ${w}%.3f — unconditional isolation")
       isolatedSec(n0, sfDir, cpus).filter(_ >= 0).map(n0 -> _)
     }.toMap
-    // FLOOR-SANITY (r18 verdict #2): a floor settled in a contended
-    // pass can sit LOOSE (q_index_stats 9.147 vs isolated 4.796 —
-    // 1.91×), and a 1.25×-tolerance gate on a 1.9×-loose floor passes
-    // a true ~2.4× regression silently. Every isolated figure this run
-    // measured cross-checks its committed floor: any floor >1.25×
-    // ABOVE the isolated observation is flagged for re-settle (3-rep
-    // rule, quiet window — never auto-rewritten here: floors are
-    // reviewed artifacts).
-    val isoAll: Map[String, Double] = heavyIso ++ adjudicated.collect {
-      case (k, (_, _, i, _, _)) if i >= 0 => k -> i }
-    val looseFloors = isoAll.flatMap { case (n0, i) =>
-      floorOf(n0).collect { case f if f > i * 1.25 => (n0, f, i) }
-    }.toSeq.sortBy(_._1)
-    looseFloors.foreach { case (n0, f, i) =>
-      System.err.println(f"[bench] LOOSE FLOOR $n0: floor ${f}%.3f > 1.25x " +
-        f"isolated ${i}%.3f — re-settle next quiet window") }
-    // CONTENTION-ROBUST headline (r17 verdict #5): warm_total embeds
-    // whatever in-suite co-tenant bursts the witnesses record
-    // (suite_quick_max_ratio, wall≫cpu), so round-over-round judgment
-    // on it conflates plan changes with host weather. robust_total
-    // substitutes the fresh-JVM isolated figure wherever one was
-    // measured — the drift cascade's, or the unconditional heavy
-    // spawn's (min(warm, isolated) — both are valid observations of
-    // the same plan; the min is the least-contended) — and is the
-    // number future rounds compare (SCALING.md r18; substitution set
-    // widened to the heavy tier in r19). Residual sub-1.15× contention
-    // now rides only in the LIGHT tail, bounded by construction to
-    // 15% of a small per-query cost.
+    // CONTENTION-ROBUST headline: warm_total embeds whatever in-suite
+    // co-tenant bursts hit the run, so comparing it across runs
+    // conflates plan changes with host weather. robust_total substitutes
+    // min(warm, isolated) wherever an isolated figure was measured —
+    // both are valid observations of the same plan; the min is the
+    // least-contended. Residual sub-1.15× contention rides only in the
+    // light tail, bounded by construction to 15% of a small per-query
+    // cost.
     val robustTotal = coldOk.map { case (n, c, _, _, _) =>
       val w = warmOf(n, c)
-      val iso = adjudicated.get(n).collect { case (_, _, i, _, _) if i >= 0 => i }
+      val iso = adjudicated.get(n).collect { case (_, _, i, _) if i >= 0 => i }
         .orElse(heavyIso.get(n))
       iso.fold(w)(i => math.min(w, i))
     }.sum
     val detailEntries = results.map { case (k, v, ok, gcS, mb) =>
       val warm = if (ok) r3(warmOf(k, v)) else "-1"
-      val adj = adjudicated.get(k).fold("") { case (pw, _, iso, fl, verdict) =>
+      val adj = adjudicated.get(k).fold("") { case (pw, _, iso, verdict) =>
         s""","prior_warm":${r3(pw)},"isolated":${if (iso >= 0) r3(iso) else "-1"}""" +
-          fl.fold("")(f => s""","floor":${r3(f)}""") +
           s""","verdict":"$verdict"""" }
-      // wall-vs-cpu witness (r16 verdict #2): a contended run shows
-      // wall ≫ cpu (stolen cores); cpu of the cold run plus the min
-      // over this query's warm reruns
+      // wall-vs-cpu witness: cpu of the cold run plus the min over this
+      // query's warm reruns
       val cpu = cpuSecs.get(k).filter(_ >= 0).fold("")(c => s""","cpu":${r3(c)}""")
       val warmCpu = cpuSecs.collect {
         case (lbl, c) if c >= 0 && lbl.startsWith(s"$k(warm") => c
@@ -668,67 +458,36 @@ object Bench {
     val rerunJson = rerun.map { case (k, _, w) => s""""$k":${r3(w)}""" }.mkString("{", ",", "}")
     val ratioJson = rerun.map { case (k, c, w) =>
       s""""$k":${r3(c / math.max(1e-9, w))}""" }.mkString("{", ",", "}")
-    // the verdict LABEL rides in every artifact (r14 verdict #2: the
-    // cascade's labels printed to stderr only, so two `regressed?`
-    // passed unnoticed — every reader had to re-derive the cascade)
-    val adjJson = adjudicated.toSeq.sortBy(_._1).map { case (k, (pw, w, iso, fl, verdict)) =>
+    // the verdict LABEL rides in every artifact, so no reader has to
+    // re-derive it from stderr
+    val adjJson = adjudicated.toSeq.sortBy(_._1).map { case (k, (pw, w, iso, verdict)) =>
       s""""$k":{"prior":${r3(pw)},"warm":${r3(w)},"isolated":${if (iso >= 0) r3(iso) else "-1"}""" +
-        fl.fold("")(f => s""","floor":${r3(f)}""") + s""","verdict":"$verdict"}"""
+        s""","verdict":"$verdict"}"""
     }.mkString("{", ",", "}")
     val regressed = adjudicated.collect {
-      case (k, (_, _, _, _, "regressed?")) => k }.toSeq.sorted
+      case (k, (_, _, _, "regressed?")) => k }.toSeq.sorted
     if (regressed.nonEmpty)
       System.err.println("[bench] ATTENTION: unresolved regressed? verdicts: " +
-        regressed.mkString(", ") + " — adjudicate before accepting this round's numbers")
-    val canaryJson = s""""host_canary_sec":${r3(canaryAdj)},"host_canary_open":${r3(canaryOpen)}""" +
-      floorCanary.fold("")(f => s""","host_canary_floor":${r3(f)}""") +
-      s""","host_factor":${r3(hostFactor)}"""
-    // the in-suite quick-canary strip: comparable only to ITS OWN
-    // open sample (different workload than the settle canary); ratios
-    // >1 timestamp in-suite host load that the two instant canaries
-    // cannot see (detail file only — the contract head has a budget)
-    val quickJson = {
-      val maxRatio =
-        if (suiteQuick.isEmpty || quickOpen <= 0) 1.0
-        else math.max(1.0, suiteQuick.map(_._2).max / quickOpen)
-      s""","suite_quick_open":${r3(quickOpen)},"suite_quick_max_ratio":${r3(maxRatio)}""" +
-        s""","suite_quick":[${suiteQuick.map { case (n, s) =>
-          s"""["$n",${r3(s)}]""" }.mkString(",")}]"""
-    }
-    // the r19 witnesses: per-heavy-query isolated figures feeding
-    // robust_total, and any committed floor provably loose against a
-    // fresh isolated observation (r18 verdicts #3/#2)
+        regressed.mkString(", ") + " — adjudicate before accepting this run's numbers")
     val heavyJson = heavyIso.toSeq.sortBy(_._1)
       .map { case (k, i) => s""""$k":${r3(i)}""" }.mkString("{", ",", "}")
-    val looseJson = looseFloors
-      .map { case (k, f, i) => s"""["$k",${r3(f)},${r3(i)}]""" }.mkString("[", ",", "]")
     val detail = detailEntries.mkString(
-      s"""{"metric":"detail","sf":"$sfDir","cpus":$cpus,"gc_forced":$gcForced,"basis":"warm",$canaryJson$quickJson,"cold_total":${r3(coldTotal)},"warm_total":${r3(warmTotal)},"robust_total":${r3(robustTotal)},"heavy_iso":$heavyJson,"loose_floors":$looseJson,"warm_slowest":$rerunJson,"cold_over_warm":$ratioJson,"adjudicated":$adjJson,"queries":{""",
+      s"""{"metric":"detail","sf":"$sfDir","cpus":$cpus,"gc_forced":$gcForced,"basis":"warm","cold_total":${r3(coldTotal)},"warm_total":${r3(warmTotal)},"robust_total":${r3(robustTotal)},"heavy_iso":$heavyJson,"warm_slowest":$rerunJson,"cold_over_warm":$ratioJson,"adjudicated":$adjJson,"queries":{""",
       ",", "}}")
-    // write the detail BOTH to the legacy path (prior-warm fallback,
-    // judges' habit) and the per-cpus path (r19 verdict #1: the 8-core
-    // run clobbered the 32-core detail mid-round)
-    for (path <- Seq("bench_detail.json", detailFile))
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        detail.getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] detail write failed ($path): $e") }
+    try java.nio.file.Files.write(java.nio.file.Paths.get(detailFile), detail.getBytes("UTF-8"))
+    catch { case e: Throwable => System.err.println(s"[bench] detail write failed ($detailFile): $e") }
     // detail line first: if a tail window clips anything, it clips this
     println(detail)
-    // final contract line: the COMPLETE per-query warm map (r19 verdict
-    // #1 — the driver's PERF per_query/scaling blocks were empty for
-    // five rounds because this line held only the slowest ~17 with an
-    // "omitted" count; the 2000-char-tail concern it was guarding
-    // against never actually parsed a single round, the blocker being
-    // sbt's `[info] ` prefix, now fixed at the launcher level).
-    // Descending cost keeps the expensive queries visible to any
-    // tail-windowed reader; failures report -1, never a fast success.
+    // final contract line: the COMPLETE per-query warm map. Descending
+    // cost keeps the expensive queries visible to any tail-windowed
+    // reader; failures report -1, never a fast success.
     val byCost = results
       .map { case (k, v, ok, _, _) => (k, if (ok) warmOf(k, v) else -1.0, ok) }
       .sortBy { case (_, w, ok) => (if (ok) 0 else -1, -w) }
       .map { case (k, w, ok) => s""""$k":${if (ok) r3(w) else "-1"}""" }
     val regressedJson = regressed.map(q => s""""$q"""").mkString("[", ",", "]")
     val head =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","basis":"warm","cold_total":${r3(coldTotal)},"warm_total":${r3(warmTotal)},"robust_total":${r3(robustTotal)},"gc_sec":${r3(gcTotal)},"gc_forced":$gcForced,"failed":${failed.size},"regressed":$regressedJson,"host_factor":${r3(hostFactor)},"sf":"$sfDir","detail":"$detailFile","warm_slowest":$rerunJson,"cold_over_warm":$ratioJson,"adjudicated":$adjJson,"queries":{"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","basis":"warm","cold_total":${r3(coldTotal)},"warm_total":${r3(warmTotal)},"robust_total":${r3(robustTotal)},"gc_sec":${r3(gcTotal)},"gc_forced":$gcForced,"failed":${failed.size},"regressed":$regressedJson,"sf":"$sfDir","detail":"$detailFile","warm_slowest":$rerunJson,"cold_over_warm":$ratioJson,"adjudicated":$adjJson,"queries":{"""
     println(byCost.mkString(head, ",",
       s"""},"n_queries":${results.size},"omitted":0}"""))
     spark.stop()

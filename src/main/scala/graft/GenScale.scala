@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: build an sfN fixture set as `copies`× a source sf dir —
-  * the scale-curve harness the r12 verdict asked for ("generate sf1
-  * fixtures and record sec(sf0.1) vs sec(sf1)"). NOT part of the
+  * the fixture behind the scale curves ([[ScaleCurves]] records
+  * sec(sf0.1) vs sec(sf1)). NOT part of the
   * engine; writes only under the given destination (default
   * /tmp/graft_sf1).
   *
@@ -37,14 +37,7 @@ object GenScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Graft.coreTune()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.tune(spark)
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     def scaled(table: String, keyCols: Seq[String],

@@ -39,7 +39,7 @@ object Graft {
     * building its session; on an already-running context it is a
     * harmless no-op for that context.
     *
-    * r19 optimization: never use the bypass-merge shuffle writer.
+    * Never use the bypass-merge shuffle writer.
     * Thread-dump sampling of the bench (OPTIMIZATION_r19.md) showed
     * non-combine exchanges (repartition/distinct map sides) dominated
     * by DiskBlockObjectWriter.initialize + createTempShuffleBlock +
@@ -59,7 +59,12 @@ object Graft {
       System.setProperty("spark.shuffle.sort.bypassMergeThreshold",
         sys.env.getOrElse("GRAFT_BYPASS_MERGE", "1"))
 
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  /** Local core count for the package mains (`Bench`, `Verify`,
+    * `Profile`, `GenScale`, `ScaleCurves`): `SPARK_GRAFT_CPUS`,
+    * default 4. Also their shuffle-partition count. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus): SparkSession = {
     coreTune()
     tune(
       SparkSession.builder()
@@ -136,8 +141,8 @@ object Tables {
     }
 
   /** Fail fast, by name, when a regenerated fixture no longer matches
-    * FIXTURES.md — round 8 lost 7 queries to a silent dtype drift that
-    * surfaced only as analyzer errors deep inside unrelated plans.
+    * FIXTURES.md — a silent dtype drift otherwise surfaces only as
+    * analyzer errors deep inside unrelated plans.
     */
   private def assertSchema(name: String, df: DataFrame): DataFrame = {
     expected.get(name).foreach { cols =>

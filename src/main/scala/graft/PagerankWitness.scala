@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale correctness witness for `q_pagerank` where the DuckDB replay
-  * is infeasible (r14 verdict #3: the sf1 oracle spills >80 GB; the
-  * mass-conservation / partitioning-independence substitute was prose,
-  * not a recorded check). The engine's PageRank is EXACT integer
+  * is infeasible (the sf1 oracle spills >80 GB), as a recorded check
+  * rather than a prose argument. The engine's PageRank is EXACT integer
   * arithmetic ([[graft.graph.GraphOps.pageRank]]) — replayable
   * arithmetic, so where oracle-vs-engine is infeasible the right
   * witness is engine-vs-engine: run the registered production query
@@ -35,13 +34,7 @@ object PagerankWitness {
                        minRank: Long, checksum: Long, sec: Double)
 
   def observe(tag: String, cpus: Int, sp: Int, sfDir: String): Obs = {
-    Graft.coreTune()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sp)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.tune(spark)
+    val spark = Graft.session(s"local[$cpus]", sp)
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val ranks = SparkEntry.queries("q_pagerank")(spark, sfDir)
@@ -54,7 +47,7 @@ object PagerankWitness {
       expr("bit_xor(xxhash64(node, rank_ppb))").as("ck")).head()
     val sec = (System.nanoTime() - t0) / 1e9
     // n == 0 makes every other aggregate NULL, and getLong on a null
-    // would report the witness failure as an opaque NPE (r15 ADVICE #1)
+    // would report the witness failure as an opaque NPE
     if (row.getLong(0) == 0L) {
       spark.stop()
       sys.error(s"PagerankWitness: q_pagerank returned ZERO rows on $sfDir " +

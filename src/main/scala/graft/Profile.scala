@@ -1,0 +1,145 @@
+package graft
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
+/** Dev tool: time, stage-profile or explain named `SparkEntry.queries`
+  * entries in one fresh session with the same confs as [[Bench]].
+  *
+  *   sbt "runMain graft.Profile <q[,q…]> <sfDir> <reps> [time|stages|explain]"
+  *
+  * (comma-separated query names, fixture dir, repetitions per query,
+  * mode; `SPARK_GRAFT_CPUS` sets the core count as for every main). Every
+  * mode runs the reps after the between-query hygiene Bench applies
+  * and prints `[profile] <q> run <i>: <s> s` per rep, cold first —
+  * the lines [[Bench.isolatedSec]] parses.
+  *
+  *   - `time` (default): the rep timings only.
+  *   - `stages`: the last (warmest) rep runs under [[stages]] and a
+  *     per-stage table follows, descending by task time, with each
+  *     stage's callsite so rows map back to operators — the local
+  *     stand-in for the Spark UI's stage table.
+  *   - `explain`: the formatted physical plan precedes the reps; grep
+  *     it (`-c "Scan parquet"`) to catch a subtree re-expanded once
+  *     per consumer.
+  */
+object Profile {
+
+  /** One stage's task metrics, summed over its tasks. `wallMs` is the
+    * submit-to-complete span (-1 when either event was not seen). */
+  final case class StageRow(id: Int, site: String, tasks: Int, taskMs: Long,
+                            cpuNs: Long, wallMs: Long, maxTaskMs: Long,
+                            medTaskMs: Long, deserMs: Long, gcMs: Long,
+                            shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                            inputBytes: Long)
+
+  private final class Agg {
+    var site = ""
+    var firstMs, lastMs, taskMs, cpuNs, deserMs, gcMs = 0L
+    var srBytes, swBytes, inBytes = 0L
+    val durs = scala.collection.mutable.ArrayBuffer.empty[Long]
+  }
+
+  /** Run `body` with a listener attached and return its stages,
+    * descending by task time. The listener bus is asynchronous, so the
+    * read waits until no event has arrived for 250 ms (at most 10 s). */
+  def stages(spark: SparkSession)(body: => Unit): Seq[StageRow] = {
+    val aggs = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
+    val events = new java.util.concurrent.atomic.AtomicLong()
+    def agg(id: Int): Agg = aggs.computeIfAbsent(id, _ => new Agg)
+    val listener = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        val a = agg(s.stageInfo.stageId)
+        a.site = s.stageInfo.name
+        a.firstMs = System.currentTimeMillis()
+        events.incrementAndGet()
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        agg(s.stageInfo.stageId).lastMs = System.currentTimeMillis()
+        events.incrementAndGet()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) {
+          val a = agg(t.stageId)
+          a.taskMs += m.executorRunTime
+          a.cpuNs += m.executorCpuTime
+          a.deserMs += m.executorDeserializeTime
+          a.gcMs += m.jvmGCTime
+          a.srBytes += m.shuffleReadMetrics.totalBytesRead
+          a.swBytes += m.shuffleWriteMetrics.bytesWritten
+          a.inBytes += m.inputMetrics.bytesRead
+          a.durs += m.executorRunTime
+        }
+        events.incrementAndGet()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      var seen = -1L
+      val deadline = System.nanoTime() + 10000000000L
+      while (events.get != seen && System.nanoTime() < deadline) {
+        seen = events.get
+        Thread.sleep(250)
+      }
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    aggs.asScala.toSeq.map { case (id, a) =>
+      val ds = a.durs.sorted
+      StageRow(id, a.site, ds.size, a.taskMs, a.cpuNs,
+        if (a.firstMs > 0 && a.lastMs > 0) a.lastMs - a.firstMs else -1L,
+        ds.lastOption.getOrElse(0L), if (ds.isEmpty) 0L else ds(ds.size / 2),
+        a.deserMs, a.gcMs, a.srBytes, a.swBytes, a.inBytes)
+    }.sortBy(-_.taskMs)
+  }
+
+  private def printStages(rows: Seq[StageRow]): Unit = {
+    println(f"[profile] ${rows.size} stages, total task-time ${rows.map(_.taskMs).sum / 1e3}%.1f s")
+    println(f"[profile] ${"stage"}%-7s ${"taskS"}%7s ${"cpuS"}%7s ${"wallS"}%6s " +
+      f"${"tasks"}%5s ${"maxMs"}%6s ${"medMs"}%6s ${"deserS"}%6s ${"gcS"}%5s " +
+      f"${"shRdMB"}%7s ${"shWrMB"}%7s ${"inMB"}%7s  site")
+    rows.take(60).foreach { r =>
+      println(f"[profile] ${r.id}%-7d ${r.taskMs / 1e3}%7.2f ${r.cpuNs / 1e9}%7.2f " +
+        f"${r.wallMs / 1e3}%6.2f ${r.tasks}%5d ${r.maxTaskMs}%6d ${r.medTaskMs}%6d " +
+        f"${r.deserMs / 1e3}%6.2f ${r.gcMs / 1e3}%5.2f ${r.shuffleReadBytes / 1e6}%7.1f " +
+        f"${r.shuffleWriteBytes / 1e6}%7.1f ${r.inputBytes / 1e6}%7.1f  ${r.site.take(45)}")
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: graft.Profile <q[,q…]> <sfDir> <reps> [time|stages|explain]")
+    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val sfDir = args(1)
+    val reps = args(2).toInt
+    val mode = args.lift(3).getOrElse("time")
+    require(Set("time", "stages", "explain")(mode),
+      s"unknown mode $mode; expected time, stages or explain")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries ${unknown.mkString(", ")}; known: " +
+      SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+    val spark = Graft.session()
+    spark.sparkContext.setLogLevel("WARN")
+    for (name <- names) {
+      val fn = SparkEntry.queries(name)
+      if (mode == "explain") fn(spark, sfDir).explain("formatted")
+      for (i <- 1 to reps) {
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        var sec = 0.0
+        def run(): Unit = {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          sec = (System.nanoTime() - t0) / 1e9
+        }
+        val profiled = mode == "stages" && i == reps
+        val rows = if (profiled) stages(spark)(run()) else { run(); Nil }
+        println(f"[profile] $name run $i: $sec%.3f s")
+        if (profiled) printStages(rows)
+      }
+    }
+    spark.stop()
+  }
+}

@@ -1,46 +1,38 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerate the COMMITTED scale curves (`scale_curves.json`) with one
-  * command — r13 verdict #3: the sf1/sf10 numbers in `SCALING.md` were
-  * one-off Scratch sweeps, so a plan-preserving but constant-factor
-  * regression (e.g. a lost artifact prune re-reading the corpus at 10×
-  * data) would move neither the sf0.1 bench much nor the plan gate at
-  * all. With the curve committed, the next round's judge diffs a
-  * number instead of re-deriving the measurement protocol.
+  * command. The curve catches what neither the sf0.1 bench nor the
+  * plan gate can: a plan-preserving constant-factor regression (e.g. a
+  * lost artifact prune re-reading the corpus at 10× data). With the
+  * curve committed, such a regression shows as a changed number in a
+  * diff instead of needing the measurement protocol re-derived.
   *
-  *   sbt "runMain graft.ScaleCurves [sf01Dir] [sf1Dir] [reps]"
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleCurves [sf01Dir] [sf1Dir] [reps]"
   *
-  * Defaults: `/root/testdata/sf0.1`, `/tmp/graft_sf1`, 3 reps —
-  * matching the floors protocol (r14 verdict #4: the curve used
-  * min-over-2 where floors use min-over-3, blunting its power to
-  * catch a 2× constant regression on the JIT-dominated rows). If
-  * `sf1Dir` does not exist it is built first with [[GenScale]] (10
-  * disjoint-key copies of sf0.1 — the corpus-growth scaling model).
+  * Defaults (see `main`): the sf0.1 fixture, a `graft_sf1` dir, 3 reps —
+  * min over 3 keeps the power to catch a 2× constant regression on the
+  * JIT-dominated rows. If `sf1Dir` does not exist it is built first
+  * with [[GenScale]] (10 disjoint-key copies of sf0.1 — the
+  * corpus-growth scaling model).
   * Per (query, SF) the recorded figure is the MIN over reps in a
-  * FRESH child JVM ([[Bench.isolatedSec]]'s spawn, 24 GiB heap):
-  * measuring the whole family in one long-lived JVM was tried first
-  * and the tail queries read 4–8× slow — by the tenth query the
-  * heap carries every predecessor's shuffle/cleaner debt
-  * (unpersist is async, the ContextCleaner lags) and the biggest
-  * shuffles in the sweep then run inside a GC storm that has
+  * FRESH child JVM ([[Bench.isolatedSec]]'s `graft.Profile` spawn,
+  * 24 GiB heap): measured in one long-lived JVM, the tail queries read
+  * 4–8× slow — by the tenth query the heap carries every predecessor's
+  * shuffle/cleaner debt (unpersist is async, the ContextCleaner lags)
+  * and the biggest shuffles then run inside a GC storm that has
   * nothing to do with the plan being measured. One JVM per query
   * bounds that state; both SFs of a query still compare
-  * identically-measured figures.
-  * Run on a QUIET host (the bench/Scratch discipline).
+  * identically-measured figures. Run on a quiet host.
   *
   * Output: `scale_curves.json` in the cwd, one entry per curve query:
   * `{"q": {"sf0.1": s, "sf1": s, "ratio": r}}`. A row whose 10× ratio
   * lands under [[JitFloorRatio]] additionally carries
-  * `"jit_floor": true` (r14 verdict #4): at that slope the sf0.1
-  * figure is dominated by fixed per-action JIT/startup cost, not by
-  * data (the lifecycle queries run a dozen small actions each), so
-  * the RATIO of such a row has little power against a constant-factor
-  * regression — read its absolute sf1 number instead. The flag is the
-  * machine-readable form of what was previously a prose caveat in
-  * SCALING.md. `PlanAuditSpec` pins the committed file to parse and
-  * name only registered queries.
+  * `"jit_floor": true`: at that slope the sf0.1 figure is dominated by
+  * fixed per-action JIT/startup cost, not by data (the lifecycle
+  * queries run a dozen small actions each), so the RATIO of such a row
+  * has little power against a constant-factor regression — read its
+  * absolute sf1 number instead. `PlanAuditSpec` pins the committed
+  * file to parse and name only registered queries.
   */
 object ScaleCurves {
 
@@ -65,7 +57,7 @@ object ScaleCurves {
   val CurvesFile = "scale_curves.json"
 
   /** Parse a committed curves file: `name -> (sf0.1 sec, sf1 sec)`.
-    * Regex-parsed like the floors file (no JSON lib on the classpath);
+    * Regex-parsed (no JSON lib on the classpath);
     * corrupt/missing → empty. */
   def parse(txt: String): Map[String, (Double, Double)] =
     ("\"([A-Za-z0-9_]+)\"\\s*:\\s*\\{\\s*\"sf0\\.1\"\\s*:\\s*([0-9.]+)\\s*," +
@@ -78,7 +70,7 @@ object ScaleCurves {
     val sf01 = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val sf1 = args.lift(1).getOrElse("/tmp/graft_sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(sf1))) {
       println(s"[curves] $sf1 absent — building the 10x GenScale fixture first")
       GenScale.main(Array(sf01, sf1, "10"))

@@ -30,8 +30,8 @@ import org.apache.spark.storage.StorageLevel
   * [[CheckpointEvery]] rounds to truncate the growing plan (the same
   * discipline GraphFrames applies).
   *
-  * Node-id ingestion contract, family-wide (r19 ANSI cast audit —
-  * THROW, not exclude): every operator here casts `srcCol`/`dstCol`/
+  * Node-id ingestion contract, family-wide (ANSI casts THROW, not
+  * exclude): every operator here casts `srcCol`/`dstCol`/
   * `nodeCol` to long with a PLAIN cast. Ids are identity, not
   * measurements — a non-numeric or out-of-range id is corpus
   * corruption, and silently dropping its edges would split components
@@ -112,7 +112,7 @@ object GraphOps {
     def largeStar(e: DataFrame): DataFrame = {
       // symmetrize in ONE pass over the (cached) round frame: inline
       // emits both orientations per edge row — the union-of-two-scans
-      // form read the frame twice per round (r19 optimization)
+      // form read the frame twice per round
       val sym = e.select(inline(array(
         struct(col("src").as("u"), col("dst").as("v")),
         struct(col("dst").as("u"), col("src").as("v")))))
@@ -133,7 +133,7 @@ object GraphOps {
       // evaluated the `withMin` window subtree (exchange reuse does
       // not cover post-shuffle operators), doubling every round's
       // orient + window work — inline emits both output rows from ONE
-      // evaluation (r19 optimization)
+      // evaluation
       withMin.select(inline(array(
         struct(col("v").as("src"), col("m").as("dst")),
         struct(col("u").as("src"), col("m").as("dst")))))
@@ -252,8 +252,7 @@ object GraphOps {
   /** Atomically publish a frame as a whole-replaced artifact — shared
     * by the group-assignment and rank-vector artifacts. RenameCommit:
     * swap protocol against an existing target, stage + one rename for
-    * the first publish (atomic on HDFS/local). PointerCommit (r13
-    * verdict #2): the `Merge` manifest protocol — data lands in an
+    * the first publish (atomic on HDFS/local). PointerCommit: the `Merge` manifest protocol — data lands in an
     * immutable `__data_` generation and one small `_current` pointer
     * republishes, correct on object stores where rename is
     * copy+delete; exactly the artifact a daily PageRank/dedup-group
@@ -295,7 +294,7 @@ object GraphOps {
     // no lineage into the released blocks). Handles, NOT a
     // getPersistentRDDs diff: a sweep would also unpersist blocks a
     // concurrent job in the same session persisted mid-call — a
-    // severed localCheckpoint block is unrecoverable (r10 advice).
+    // severed localCheckpoint block is unrecoverable.
     val (updated, release) =
       if (exists) connectedComponentsFromReleasable(readGroupIndex(spark, dir),
         newEdges, srcCol, dstCol, maxIterations, localThreshold)
@@ -646,7 +645,7 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one cache scan, not two: explode((src, dst)) emits both endpoint
     // roles per edge row in a single pass over the cached edge set
-    // (same multiset the src ∪ dst union produced; r19 optimization)
+    // (same multiset the src ∪ dst union produced)
     val nodes = e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     if (nodes.head(1).isEmpty) {
@@ -688,7 +687,7 @@ object GraphOps {
       if (isCkpt) next.localCheckpoint()
       val nextDf = next.toDF("node", "label").persist(StorageLevel.MEMORY_AND_DISK)
       if (converge) {
-        // FUSED materialize+probe (r20, r19 verdict #8): the round used
+        // FUSED materialize+probe: the round used
         // to pay TWO jobs — a count() to build the stats-bearing cache,
         // then a join-probe for the changed count. One full-scan
         // aggregate does both: scanning nextDf populates its cache (and
@@ -751,7 +750,7 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one cache scan, not two: explode((src, dst)) emits both endpoint
     // roles per edge row in a single pass over the cached edge set
-    // (same multiset the src ∪ dst union produced; r19 optimization)
+    // (same multiset the src ∪ dst union produced)
     val nodes = e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
@@ -782,7 +781,7 @@ object GraphOps {
           .select(col("node"), coalesce(col("__pr"), lit(scale / n)).as("rank"))
     }
     var rankRdd = init.as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // STATS-BEARING state frame (r19 optimization): a bare
+    // STATS-BEARING state frame: a bare
     // `rankRdd.toDF` is a LogicalRDD whose size estimate is
     // `defaultSizeInBytes` (effectively infinite), so every
     // iteration's rank⋈edges planned as a SortMergeJoin — an Exchange
@@ -825,7 +824,7 @@ object GraphOps {
       val nextDf = next.toDF("node", "rank").persist(StorageLevel.MEMORY_AND_DISK)
       tol match {
         case Some(t) =>
-          // FUSED materialize+probe (r20, r19 verdict #8): one full-scan
+          // FUSED materialize+probe: one full-scan
           // aggregate both populates the stats-bearing cache (scanning
           // nextDf materializes it and the backing RDD) and computes the
           // exact integer movement vs the prior cached state — the round
@@ -982,7 +981,7 @@ object GraphOps {
     try {
       // the three tranche families are independent projections of the
       // SAME cached membership — overlap their write jobs on driver
-      // threads (r19 optimization, [[graft.util.Par]]; RDD block locks
+      // threads ([[graft.util.Par]]; RDD block locks
       // make the concurrent first-touch cache build compute each
       // partition once). Crash contract unchanged: each family is
       // self-consistent per tag, and a partially-written wave is
@@ -1030,7 +1029,7 @@ object GraphOps {
   def consolidateCooc(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
     // the three families fold independently (disjoint dirs, per-family
     // manifest protocol) — overlap the fold jobs on driver threads
-    // (r19 optimization, [[graft.util.Par]]); a crash leaves each
+    // ([[graft.util.Par]]); a crash leaves each
     // family self-consistent exactly as the sequential form did
     graft.util.Par.jobs(
       () => graft.util.SumTranches.consolidate(spark, s"$dir/pairs",
@@ -1092,8 +1091,8 @@ object GraphOps {
     * the valued universe). Determinism: counts exact, `sum_val` an
     * exact DECIMAL(12,2) sum cast to double, `avg_val` ONE IEEE
     * division of that by the exact count — the oracle-parity sum
-    * discipline. The snap is a `try_cast` (r18 verdict #1 — the
-    * AnomalyOps ANSI-overflow sibling): a magnitude beyond
+    * discipline. The snap is a `try_cast` (the ANSI-overflow
+    * exclusion rule AnomalyOps also follows): a magnitude beyond
     * DECIMAL(12,2) (|v| ≥ 10^10) behaves exactly like a NULL value —
     * the neighbor still counts, contributes nothing to the sum —
     * instead of throwing under ANSI mode (Spark 4's default) and
@@ -1107,22 +1106,12 @@ object GraphOps {
                       portable: Boolean = false): DataFrame = {
     require(hops == 1 || hops == 2, s"neighborhoodAgg: hops=$hops not in {1, 2}")
     require(maxDegree >= 0, s"neighborhoodAgg: maxDegree=$maxDegree < 0")
-    val e0 = edges
+    // The operator leaves no persisted state: the returned frame is a
+    // plain lazy plan, so callers have nothing to release.
+    val e = edges
       .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .distinct()
-    // The 2-hop expansion consumes the distinct edge set THREE times
-    // (union arm, self-join probe side, cap-window input). Catalyst
-    // copies the subtree per consumer and exchange reuse does not
-    // reliably collapse them (r19 plan: three separate scan→join→
-    // distinct chains, 3× the edge-derivation work). Persisting `e`
-    // lets the CacheManager substitute ONE InMemoryRelation at every
-    // reference — computed once inside the single output action, freed
-    // by the session's normal cache lifecycle (`spark.catalog.
-    // clearCache()`; callers in long-lived sessions should clear when
-    // done). |E| storage is within the op's own cost model: the
-    // distinct pair multiset it shuffles is maxDegree×|E| rows.
-    val e = if (hops == 1) e0 else e0.persist()
     val nbr =
       if (hops == 1) e
       else {
@@ -1154,7 +1143,7 @@ object GraphOps {
     nbr.join(v, "dst")
       .groupBy(col("src"))
       .agg(count(lit(1)).as("n_neighbors"),
-        // (38,2) summand (r19 long-sum audit): the default (22,2) sum
+        // (38,2) summand: the default (22,2) sum
         // type overflows at Σ|v| > 10^20 — reachable for a 10^10-degree
         // hub at the snap bound — where ANSI throws; widened, the sum
         // is provably exact (|v| < 10^10, rows ≤ 2^63 ⇒ Σ < 10^29)
@@ -1167,7 +1156,7 @@ object GraphOps {
 
   /** 2-hop feature aggregation over WALKS instead of the distinct
     * neighbor SET — the sublinear tier for [[neighborhoodAgg]]'s
-    * linear frontier (r13 verdict #6). The exact op's cost is the
+    * linear frontier. The exact op's cost is the
     * materialized 2-hop pair multiset: O(|E|·maxDegree) rows through
     * a global `distinct()` — measured 94× runtime at 100× data,
     * exactly its bound. This operator never materializes that set:
@@ -1205,11 +1194,11 @@ object GraphOps {
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .distinct()
     // try_cast snap: same wild-value-behaves-like-NULL exclusion as
-    // [[neighborhoodAgg]] (r18 verdict #1 — ANSI-overflow class)
+    // [[neighborhoodAgg]] (ANSI-overflow exclusion)
     val v = values.select(col(nodeCol).cast(LongType).as("dst"),
       col(valueCol).try_cast(org.apache.spark.sql.types.DecimalType(12, 2)).as("__v"))
     // per-node 1-hop stat tranche (node-sized, the at-rest-index shape).
-    // MATERIALIZED once (r19 optimization, the rolling gauges'
+    // MATERIALIZED once (the rolling gauges'
     // Materialize.bounded idiom): the tranche feeds BOTH the 2-hop
     // combine and the final full_outer join — as a lazy subtree it
     // evaluated once per consumer unless AQE happened to reuse the
@@ -1220,7 +1209,7 @@ object GraphOps {
     // tranche compute-once by construction.
     val one = graft.util.Materialize.bounded(
       e.join(v, "dst").groupBy(col("src"))
-      // (38,2) summands here and below (r19 long-sum audit): exact for
+      // (38,2) summands here and below: exact for
       // any fan-out — the (22,2) default overflowed (ANSI-threw) at
       // Σ|v| > 10^20; walk COUNTS stay long (bounded by the operator's
       // own cost model: total ≤2-hop walks ≪ 2^63 on any graph whose
@@ -1239,7 +1228,7 @@ object GraphOps {
     // counts twice in every neighbor stat, including its own backtrack
     // legs) — join value rows FIRST, then aggregate, so the correction
     // is one row per node with count = mutual-edges × value-rows. The
-    // pre-aggregated-count-then-join order (r14) emitted one OUTPUT row
+    // pre-aggregated-count-then-join order emitted one OUTPUT row
     // per duplicate value row and undercounted the subtracted paths.
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
     val back = e.intersect(rev)

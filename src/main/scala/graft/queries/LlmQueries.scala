@@ -446,8 +446,7 @@ object LlmQueries {
   /** Both orientations of each edge in ONE pass over the derivation:
     * the `sc.unionAll(sc.reversed)` form evaluated the lineitem⋈orders
     * subtree once per union arm — two full scans + joins per query for
-    * what is a per-row row-doubling (r19 optimization, guide §2.4:
-    * remove redundant passes). Same output multiset; every consumer
+    * what is a per-row row-doubling. Same output multiset; every consumer
     * dedups or repartitions downstream. */
   private def symmetrize(sc: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     sc.select(inline(array(
@@ -772,7 +771,7 @@ object LlmQueries {
 
   /** [[duckMinhashCtes]] over an arbitrary `(doc_id, text)` relation —
     * the sig-tier composition plugs its post-decontamination `clean`
-    * CTE in here (r15 verdict #5). */
+    * CTE in here. */
   private def duckMinhashCtesFrom(rel: String) =
     s"""sh AS (
       |  SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
@@ -1153,7 +1152,7 @@ object LlmQueries {
         // never stale across fixture regenerations): the operational
         // morning dashboard reads EXISTING indexes — rebuilding all
         // four families on every run measured 4.3 s of build against
-        // a directory-metadata gauge (r10 verdict #7). Deterministic:
+        // a directory-metadata gauge. Deterministic:
         // the builders are pure functions of the fixture, so a reused
         // build yields the identical gauge.
         val dedupIdx = graft.util.Scratch.path("health_all_dedup", dir)
@@ -2379,10 +2378,10 @@ object LlmQueries {
       val bloomDir = graft.util.Scratch.path("pipeline_bloom", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bloomDir))
       DedupOps.benchmarkShingleBloom(bench, "text", bloomDir, "s0", shingleN = 8)
-      // the assembly lives in graft.pipeline.DecontamPipeline (r17) —
-      // clean-id set materialized ONCE (r16: the lazy plan re-ran the
-      // whole bloom gate per consumer; 185 s vs ~90 s of stage work at
-      // 100× data), tier forced Exact so the oracle replay is
+      // the assembly lives in graft.pipeline.DecontamPipeline —
+      // clean-id set materialized ONCE (a lazy plan re-runs the whole
+      // bloom gate per consumer: 185 s vs ~90 s of stage work at 100×
+      // data), tier forced Exact so the oracle replay is
       // SF-independent. The one-shot form leaves the ~8 B/doc clean-id
       // blocks for the driver's between-queries persistent-RDD sweep;
       // long-lived sessions use decontamDedupSplitReleasable.
@@ -2392,13 +2391,14 @@ object LlmQueries {
         jaccardThreshold = 0.5, portable = true)
     },
 
-    // ---- the SIG-TIER assembly (r15 verdict #5): same pipeline, but
-    //      the near-dup stage is the banded-MinHash signature join
-    //      instead of the exact n-gram Jaccard pair join. DecontamStages
-    //      named the exact pair join the composition's SOLE 100× slope
-    //      owner (13.0×/decade; every other stage ≤1.9×) and the sig
-    //      tier its scale path — this registers that path as an
-    //      oracle-gated query so the claim is executable, not prose.
+    // ---- the SIG-TIER assembly: same pipeline, but the near-dup
+    //      stage is the banded-MinHash signature join instead of the
+    //      exact n-gram Jaccard pair join. Per-stage timing at 10× and
+    //      100× data (SCALING.md) makes the exact pair join the
+    //      composition's SOLE 100× slope owner (13.0×/decade; every
+    //      other stage ≤1.9×) and the sig tier its scale path — this
+    //      registers that path as an oracle-gated query so the claim
+    //      is executable, not prose.
     //      Signature cost is O(docs·k), bucketing is an equi-join on
     //      (band, key) with the same hot-bucket cap — no shingle²
     //      pair blowup at any scale. ----
@@ -2700,7 +2700,7 @@ object LlmQueries {
         hops = 2, maxDegree = 8, sampleSalt = Some("nbh"), portable = true)
     },
 
-    // ---- the SUBLINEAR 2-hop tier (r13 verdict #6): walk-multiset
+    // ---- the SUBLINEAR 2-hop tier: walk-multiset
     //      aggregate computed by combining per-node 1-hop stat
     //      tranches — O(|E|) shuffled rows, no E·cap pair
     //      materialization, no global distinct; exact for walk
@@ -2771,9 +2771,9 @@ object LlmQueries {
     //      6): continuation is exact, and the artifact round-trip
     //      changes no bit. The convergence dividend (fewer rounds to
     //      tol after an edge-tranche append) is spec-gated in
-    //      GraphOpsSpec; the r10 verdict's complaint — the warm entry
-    //      recomputing its prior inline and benching SLOWER than
-    //      cold-start — is exactly what this shape removes ----
+    //      GraphOpsSpec; a warm entry that recomputed its prior inline
+    //      would bench SLOWER than cold-start, which this shape
+    //      rules out ----
     Q("q_pagerank_warm", duckPageRankSql(iters = 6, scale = 1000000000L)) { (s, dir) =>
       val sc = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
         .join(Tables(s, dir, "orders").select("o_orderkey", "o_custkey"),
@@ -3138,7 +3138,7 @@ object LlmQueries {
       val idx = graft.util.Scratch.path("dayhll_idx", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
       val half = pmod(xxhash64(lit("dhll"), col("event_id")), lit(2))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => Sketches.writeDayHllTranche(ev.where(half === 0), "user_id", "ts", idx, "t0"),
         () => Sketches.writeDayHllTranche(ev.where(half === 1), "user_id", "ts", idx, "t1"))
       Sketches.consolidateDayHll(s, idx)
@@ -3209,7 +3209,7 @@ object LlmQueries {
       val li = Tables(s, dir, "lineitem")
       val cDir = graft.util.Scratch.path("cooc_index", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cDir))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === 0),
           "l_orderkey", "l_partkey", cDir, tag = "d0", maxPerGroup = 8),
         () => GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === 1),
@@ -3250,7 +3250,7 @@ object LlmQueries {
       val hDir = graft.util.Scratch.path("hist_tranches", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
       // d0/d1 are independent tranches (disjoint batch= dirs) —
-      // overlapped on driver threads (r19, [[graft.util.Par]])
+      // overlapped on driver threads ([[graft.util.Par]])
       graft.util.Par.jobs(
         () => HistSketch.writeHistTranche(
           HistSketch.histSketch(docs.where(col("doc_id") % 3 === 0), "n_chars"),
@@ -3295,7 +3295,7 @@ object LlmQueries {
       val docs = Tables(s, dir, "documents")
       val hDir = graft.util.Scratch.path("hist_bucketize", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => HistSketch.writeHistTranche(
           HistSketch.histSketch(docs.where(col("doc_id") % 2 === 0), "n_chars"),
           hDir, tag = "d0"),
@@ -3381,7 +3381,7 @@ object LlmQueries {
       val en = docs.where(col("lang") === "en")
       val hDir = graft.util.Scratch.path("psi_drift", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => HistSketch.writeHistTranche(
           HistSketch.histSketch(en.where(col("doc_id") % 2 === 0), "n_chars"),
           hDir, tag = "d0"),
@@ -3563,7 +3563,7 @@ object LlmQueries {
       val idx = graft.util.Scratch.path("dayhist_idx", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
       val half = pmod(xxhash64(lit("dh"), col("event_id")), lit(2))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => HistSketch.writeDayHistTranche(ev.where(half === 0), "value", "ts", idx, "t0"),
         () => HistSketch.writeDayHistTranche(ev.where(half === 1), "value", "ts", idx, "t1"))
       graft.util.SumTranches.maybeConsolidate(s, idx,
@@ -4365,7 +4365,7 @@ object LlmQueries {
     },
 
     // ---- GROUPED signed winsorize: each balance clamped into ITS
-    //      SEGMENT's signed [p05, p95] band — the r11 signed ladder
+    //      SEGMENT's signed [p05, p95] band — the signed ladder
     //      (mirrored buckets, fixed-point cents) under the grouped-
     //      window machinery of q_winsorize_by; bounds broadcast-joined,
     //      scoring stays a shuffle-free per-row clamp ----
@@ -4476,7 +4476,7 @@ object LlmQueries {
       val li = Tables(s, dir, "lineitem")
       val cmDir = graft.util.Scratch.path("cm_counts", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cmDir))
-      graft.util.Par.jobs( // independent tranches (r19, Par)
+      graft.util.Par.jobs( // independent tranches
         () => CountMin.writeCmTranche(
           CountMin.cmSketch(li.where(col("l_orderkey") % 2 === 0), "l_partkey"),
           cmDir, tag = "d0"),

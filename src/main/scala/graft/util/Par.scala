@@ -1,9 +1,8 @@
 package graft.util
 
-/** Overlap INDEPENDENT Spark jobs from driver threads (r19
-  * optimization; guide §2.6 "Overlap independent jobs"). A Spark
-  * driver schedules actions sequentially only because caller code
-  * invokes them sequentially; artifact writers that produce several
+/** Overlap INDEPENDENT Spark jobs from driver threads. A Spark driver
+  * schedules actions sequentially only because caller code invokes
+  * them sequentially; artifact writers that produce several
   * independent outputs from the same (cached or re-scannable) input
   * were paying one full job-orchestration latency per artifact —
   * measured ~0.15–0.2 s of driver/commit gap per job on this host,
@@ -11,24 +10,30 @@ package graft.util
   * task-time under half the wall. Running the independent chains on a
   * few driver threads back-fills those gaps (and at cluster scale
   * lets the next job's tasks fill executors freed by the current
-  * job's tail — the §2.6 rationale; FIFO scheduling gives exactly the
-  * back-fill behaviour).
+  * job's tail; FIFO scheduling gives exactly the back-fill behaviour).
   *
   * Semantics: runs every thunk to completion (no cancellation — a
   * crashed sibling must not carve an artifact set no failure mode
   * documents; each writer's crash contract is stated per WAVE at the
   * call site), then rethrows the first failure in argument order with
   * the other failures attached as suppressed plus a marker exception
-  * carrying the CALL SITE's stack (r19 ADVICE: a worker-thread stack
-  * alone does not say which wave failed). If the CALLER's thread is
-  * interrupted while waiting, workers are interrupted and briefly
-  * joined before the interrupt propagates — never abandoned running
-  * (r19 ADVICE). Plain threads, not a shared pool: callers are rare,
-  * chains are few, and Spark's scheduler state (job group/description)
-  * is thread-local and deliberately NOT inherited — these maintenance
-  * jobs carry their own callsites. [[Materialize]]'s scope capture IS
-  * inherited (InheritableThreadLocal + concurrent buffer since r20),
-  * so thunks may materialize under a caller's `Materialize.scoped`.
+  * carrying the CALL SITE's stack (a worker-thread stack alone does
+  * not say which wave failed).
+  *
+  * Interrupts: if the CALLER's thread is interrupted while waiting,
+  * every worker is interrupted and then joined for at most 10 s each,
+  * and the InterruptedException propagates — possibly while workers
+  * are still unwinding (a worker that ignores the interrupt keeps
+  * running past the 10 s join).
+  *
+  * Thread state: plain threads, not a shared pool — callers are rare
+  * and chains are few. Spark's scheduler state (job group/description)
+  * is thread-local and NOT inherited; these maintenance jobs carry
+  * their own callsites. [[Materialize]]'s scope capture is NOT
+  * inherited either (a plain ThreadLocal): a handle a worker creates
+  * is invisible to the caller's `Materialize.scoped` and would never
+  * be released by it, so thunks must not materialize under a caller's
+  * `Materialize.scoped`.
   */
 object Par {
   /** Run the thunks concurrently for their side effects. */
@@ -38,9 +43,7 @@ object Par {
   }
 
   /** Run the thunks concurrently and return their values in argument
-    * order — the frame-building form ([[graft.meta.IndexDashboard]]'s
-    * gauge fan: each gauge's eager Materialize jobs overlap instead of
-    * queueing behind one another). */
+    * order — the value-returning form [[jobs]] delegates to. */
   def eval[A](thunks: (() => A)*): Seq[A] = {
     if (thunks.sizeIs <= 1) return thunks.map(_.apply())
     val n = thunks.size

@@ -147,147 +147,35 @@ class MiscSpec extends SparkSpec {
     assert(graft.Bench.priorWarms(dir.resolve("missing.json").toString).isEmpty)
   }
 
-  test("Bench.driftVerdict: floor first, then PRIOR warm — confirmed regressions reachable") {
+  test("Bench.driftVerdict: judged against the PRIOR warm, confirmed regressions reachable") {
     import graft.Bench.driftVerdict
-    assert(driftVerdict(-1.0, 1.0, Some(0.9)) == "spawn-failed")
-    // isolated at/near its settled floor → suite-order noise
-    assert(driftVerdict(1.0, 1.0, Some(0.9)) == "suite-noise(floor)")
-    // the r13 ADVICE #1 scenario: prior 1.0 s, in-suite warm 2.0 s,
-    // isolated 1.9 s, floor 0.9 s — the old `iso <= warm` branch read
-    // this as suite-noise; it is a CONFIRMED regression (the fresh-JVM
-    // figure itself doubled vs the prior round)
-    assert(driftVerdict(1.9, 1.0, Some(0.9)) == "regressed?")
-    // isolated back at the prior round's figure → the suite run was hot
-    assert(driftVerdict(1.1, 1.0, Some(0.5)) == "suite-noise(prior)")
-    // no floor on file: prior comparison still adjudicates both ways
-    assert(driftVerdict(1.1, 1.0, None) == "suite-noise(prior)")
-    assert(driftVerdict(1.9, 1.0, None) == "regressed?")
+    assert(driftVerdict(-1.0, 1.0) == "spawn-failed")
+    // prior 1.0 s, in-suite warm 2.0 s, isolated 1.9 s: an `iso <= warm`
+    // rule would read this as suite noise; it is a CONFIRMED 2×-class
+    // regression (the fresh-JVM figure itself nearly doubled vs prior)
+    assert(driftVerdict(1.9, 1.0) == "regressed?")
+    assert(driftVerdict(2.0, 1.0) == "regressed?")
+    // isolated back at the prior run's figure → the suite run was hot
+    assert(driftVerdict(1.1, 1.0) == "suite-noise(prior)")
+    // the 1.2× bound is inclusive; a hair above surfaces
+    assert(driftVerdict(1.2, 1.0) == "suite-noise(prior)")
+    assert(driftVerdict(1.2 + 1e-9, 1.0) == "regressed?")
   }
 
-  test("Bench.driftVerdict host normalization: measured canary slowdown absorbs exactly its own band (r16)") {
-    import graft.Bench.driftVerdict
-    // floor 1.493, iso 1.899 (the r15 q_bloom_index shape): 1.27× floor
-    // blows the 1.25 bound un-normalized...
-    assert(driftVerdict(1.899, 1.529, Some(1.493)) == "regressed?")
-    // ...but a canary-measured 1.3× host slowdown explains it
-    assert(driftVerdict(1.899, 1.529, Some(1.493), floorHostUp = 1.3) == "suite-noise(host)")
-    // a regression LARGER than the measured slowdown still surfaces
-    assert(driftVerdict(2.6, 1.529, Some(1.493), floorHostUp = 1.3) == "regressed?")
-    // factor 1.0 (host unchanged) reproduces the old cascade bit for bit
-    assert(driftVerdict(1.899, 1.529, Some(1.493), floorHostUp = 1.0, priorHostUp = 1.0) == "regressed?")
-    // prior-relative leg: no floor on file, prior 1.0, iso 1.45 —
-    // above the 1.2 prior bound, inside it once the host is 1.3× slower
-    assert(driftVerdict(1.45, 1.0, None) == "regressed?")
-    assert(driftVerdict(1.45, 1.0, None, priorHostUp = 1.3) == "suite-noise(host)")
-    // floor match wins before any host reasoning (label stability)
-    assert(driftVerdict(1.0, 1.0, Some(0.9), floorHostUp = 1.3) == "suite-noise(floor)")
-  }
-
-  test("Bench.floorTolOf: per-query tolerance from floors metadata, defaulted and capped (r16)") {
-    import graft.Bench.{driftVerdict, floorTolOf}
-    val floors = Map("q_mm_dedup_index" -> 1.06, "__tol_q_mm_dedup_index" -> 1.45,
-      "__tol_q_wild" -> 9.0, "q_wild" -> 1.0)
-    assert(floorTolOf(floors, "q_mm_dedup_index") == 1.45)
-    assert(floorTolOf(floors, "q_other") == 1.25)       // default
-    assert(floorTolOf(floors, "q_wild") == 1.6)         // capped
-    // the r16 close shape: iso 1.486 vs floor 1.06 — regressed? at the
-    // default bound, suite-noise under the committed 1.45 tolerance
-    assert(driftVerdict(1.486, 1.027, Some(1.06)) == "regressed?")
-    assert(driftVerdict(1.486, 1.027, Some(1.06), floorTol = 1.45) == "suite-noise(floor)")
-    // a genuine 2x regression still surfaces under the widest cap
-    assert(driftVerdict(2.2, 1.027, Some(1.06), floorTol = 1.6) == "regressed?")
-  }
-
-  test("Bench.driftVerdict absorb cap: tol x host product clamped below 2x (r16 self-review)") {
-    import graft.Bench.{driftVerdict, AbsorbCap}
-    assert(AbsorbCap < 2.0)
-    // worst committable combination: tol 1.6 x host 1.6 = 2.56 un-capped.
-    // A genuine 2x regression (iso = 2.0 x floor) MUST stay regressed?
-    assert(driftVerdict(2.0, 0.9, Some(1.0), floorHostUp = 1.6, floorTol = 1.6)
-      == "regressed?")
-    // ...while 1.85x (inside the 1.9 clamp) is still absorbable
-    assert(driftVerdict(1.85, 0.9, Some(1.0), floorHostUp = 1.6, floorTol = 1.6)
-      == "suite-noise(host)")
-    // prior leg: 1.2 x host 1.6 = 1.92 un-capped; 1.91x prior must surface
-    assert(driftVerdict(1.91, 1.0, None, priorHostUp = 1.6) == "regressed?")
-    assert(driftVerdict(1.89, 1.0, None, priorHostUp = 1.6) == "suite-noise(host)")
-  }
-
-  test("Bench.driftVerdict absorb cap boundary: exactly 1.9x absorbs, a hair above surfaces (r17)") {
-    import graft.Bench.driftVerdict
-    // iso == floor·AbsorbCap sits ON the clamped bound (<=) — absorbed;
-    // the next representable step above must stay regressed?
-    assert(driftVerdict(1.9, 0.9, Some(1.0), floorHostUp = 1.6, floorTol = 1.6)
-      == "suite-noise(host)")
-    assert(driftVerdict(1.9 + 1e-9, 0.9, Some(1.0), floorHostUp = 1.6, floorTol = 1.6)
-      == "regressed?")
-    // prior leg at the same boundary
-    assert(driftVerdict(1.9, 1.0, None, priorHostUp = 1.6) == "suite-noise(host)")
-    assert(driftVerdict(1.9 + 1e-9, 1.0, None, priorHostUp = 1.6) == "regressed?")
-  }
-
-  test("per-floor canary stamps: payload stamps only this run's floors; cascade prefers the stamp (r17)") {
-    import graft.{Bench, HostCanary, Scratch}
-    // Scratch payload: global key + one __canary_<q> per measured floor
-    val p = Scratch.floorsPayload(Seq("q_a" -> 1.0, "q_b" -> 2.0), Some(0.4)).toMap
-    assert(p == Map("q_a" -> 1.0, "q_b" -> 2.0,
-      HostCanary.FloorKey -> 0.4, "__canary_q_a" -> 0.4, "__canary_q_b" -> 0.4))
-    // no canary taken (no GRAFT_SCRATCH_JSON) → no stamps at all
-    assert(Scratch.floorsPayload(Seq("q_a" -> 1.0), None).toMap == Map("q_a" -> 1.0))
-    // merge keeps OTHER floors' older stamps, replaces this run's
-    val tmp = tempDir("floors_stamp") + "/floors.json"
-    Scratch.writeFloors(tmp, Scratch.floorsPayload(Seq("q_a" -> 1.0, "q_b" -> 2.0), Some(0.4)))
-    Scratch.writeFloors(tmp, Scratch.floorsPayload(Seq("q_b" -> 1.8), Some(0.6)))
-    val merged = Bench.settledFloors(tmp)
-    assert(merged("__canary_q_a") == 0.4 && merged("__canary_q_b") == 0.6 &&
-      merged(HostCanary.FloorKey) == 0.6 && merged("q_a") == 1.0 && merged("q_b") == 1.8,
-      s"merged=$merged")
-    // cascade lookup: per-floor stamp wins, global is the fallback
-    assert(Bench.floorCanaryOf(merged, "q_a").contains(0.4))
-    assert(Bench.floorCanaryOf(merged, "q_b").contains(0.6))
-    assert(Bench.floorCanaryOf(merged, "q_unstamped").contains(0.6))
-    assert(Bench.floorCanaryOf(Map("q_x" -> 1.0), "q_x").isEmpty)
-  }
-
-  test("HostCanary.factor: 1-floored, capped, robust to missing floor canary (r16)") {
-    import graft.HostCanary.factor
-    assert(factor(2.0, Some(1.5)) > 1.33 && factor(2.0, Some(1.5)) < 1.34)
-    assert(factor(1.0, Some(1.5)) == 1.0)   // faster host never tightens
-    assert(factor(9.0, Some(1.5)) == 1.6)   // capped: a wild canary must not absorb real regressions
-    assert(factor(2.0, None) == 1.0)        // pre-canary floors file
-    assert(factor(2.0, Some(0.0)) == 1.0)   // degenerate floor canary
-  }
-
-  test("Bench.priorHostFactor reads the detail header; absent/corrupt → 1.0 (r16)") {
-    val dir = java.nio.file.Paths.get(tempDir("graft_hostfactor"))
-    def write(name: String, body: String): String = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.write(p, body.getBytes("UTF-8")); p.toString
-    }
-    assert(graft.Bench.priorHostFactor(write("h.json",
-      """{"metric":"detail","host_canary_sec":1.2,"host_factor":1.25,"queries":{}}""")) == 1.25)
-    assert(graft.Bench.priorHostFactor(write("n.json",
-      """{"metric":"detail","queries":{}}""")) == 1.0)
-    assert(graft.Bench.priorHostFactor(dir.resolve("missing.json").toString) == 1.0)
-  }
-
-  test("Scratch.writeFloors merges with the existing file instead of truncating") {
-    val dir = java.nio.file.Paths.get(tempDir("graft_floors"))
-    val path = dir.resolve("floors.json").toString
-    // the documented loop: one query per Scratch run, SAME target file
-    assert(graft.Scratch.writeFloors(path, Seq("q_a" -> 1.234)) == 1)
-    assert(graft.Scratch.writeFloors(path, Seq("q_b" -> 0.5)) == 2)
-    // a re-measure REPLACES (deliberate plan change may loosen a floor)
-    assert(graft.Scratch.writeFloors(path, Seq("q_a" -> 2.0)) == 2)
-    val got = graft.Bench.settledFloors(path)
-    assert(got == Map("q_a" -> 2.0, "q_b" -> 0.5), s"merged floors: $got")
-  }
-
-  test("Bench.isolatedSec spawns a fresh-JVM Scratch run and parses the min") {
+  test("Bench.isolatedSec spawns a fresh-JVM Profile run and parses the min") {
     // the adjudication spawn path end-to-end on the smallest fixture:
     // one rep of a trivial query (~20 s JVM+session boot dominated)
     val got = graft.Bench.isolatedSec("q_filter_equals",
-      "/root/testdata/sf0.001", "4", reps = 1)
+      "/root/testdata/sf0.001", 4, reps = 1)
     assert(got.exists(s => s > 0 && s < 120), s"isolatedSec returned $got")
+  }
+
+  test("Profile.stages: the stage table counts tasks and names callsites") {
+    val fn = SparkEntry.queries("q1_agg")
+    val rows = graft.Profile.stages(spark) {
+      fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
+    }
+    assert(rows.exists(r => r.tasks > 0 && r.site.nonEmpty), s"stage rows: $rows")
+    assert(rows.map(_.taskMs) == rows.map(_.taskMs).sorted.reverse, "not ordered by task time")
   }
 }

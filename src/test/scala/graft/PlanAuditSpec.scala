@@ -4,8 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.PlanAudit.{QueryShapes, Shape, diff, parse, render, shapeOf}
 
-/** The ENFORCED plan gate (r12 verdict #1; EXECUTED-final since r13
-  * verdict #1). Every registered query is planned at sf0.001 under
+/** The ENFORCED plan gate. Every registered query is planned at sf0.001 under
   * the canonical session, then EXECUTED so AQE commits to its final
   * plan, and BOTH shapes — static (pre-execution) and adaptive-final
   * — are compared against the committed `plan_snapshot.json`. A
@@ -32,8 +31,8 @@ class PlanAuditSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   // audited = every registered query PLUS the audit-only subtrees
-  // (frames a parent query eagerly checkpoints — r16 ADVICE #2: the
-  // gate must see the PRE-checkpoint shape too)
+  // (frames a parent query eagerly checkpoints — the gate must see
+  // the PRE-checkpoint shape too)
   private def audited = SparkEntry.queries ++ SparkEntry.auditOnlyPlans
 
   private def shapesOf(name: String): QueryShapes = {
@@ -60,7 +59,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(cartesians.isEmpty,
       s"CartesianProduct planned in: ${cartesians.mkString(", ")}")
     if (sys.env.get("GRAFT_PLAN_SNAPSHOT_UPDATE").contains("1")) {
-      // update ergonomics (r15 review): the rewrite covers ALL queries,
+      // update ergonomics: the rewrite covers ALL queries,
       // so an UNINTENDED drift in an unrelated query would get baked in
       // silently — print the old-vs-new diff so the committer sees
       // exactly which shapes the regeneration is re-pinning
@@ -80,7 +79,7 @@ class PlanAuditSpec extends SparkSpec {
           "GRAFT_PLAN_SNAPSHOT_UPDATE=1 sbt \"testOnly graft.PlanAuditSpec\"")
       val snap = parse(Files.readString(Paths.get(PlanAudit.SnapshotFile)))
       val cur = shapes.toMap
-      // FINAL-shape flap absorber (r16): AQE's post-shuffle coalescing
+      // FINAL-shape flap absorber: AQE's post-shuffle coalescing
       // makes borderline ENSURE_REQUIREMENTS-exchange decisions from
       // RUNTIME byte sizes, which vary with record order/compression at
       // sf0.001 — q_neighborhood_paths measured final 47↔48 across four
@@ -143,7 +142,7 @@ class PlanAuditSpec extends SparkSpec {
     val cur = Map(
       "a" -> qs(4, 0, 1, 4, 0, 1),              // static regression
       "b" -> qs(1, 2, 0, 1, 2, 0),              // new BNLJ
-      // the r13 gate's blind spot: static identical, but AQE demoted a
+      // a static-only gate's blind spot: static identical, but AQE demoted a
       // broadcast at runtime — final bhj 2->1, final exchanges 2->4
       "demoted" -> qs(2, 0, 2, 4, 0, 1),
       "new" -> qs(0, 0, 0, 0, 0, 0))
@@ -185,30 +184,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!PlanAudit.absorbFlap(committed, qs(27, 0, 13, 48, 0, 20), () => poison()))
     assert(!PlanAudit.absorbFlap(committed, qs(26, 0, 13, 49, 0, 19), () => poison()))
     assert(!PlanAudit.absorbFlap(committed, committed, () => poison()))
-  }
-
-  test("committed floors.json parses and every floor names a registered query") {
-    val p = Paths.get("floors.json")
-    assert(Files.exists(p), "floors.json missing — regenerate with the " +
-      "fresh-JVM-per-query Scratch loop (see Bench.settledFloors doc)")
-    val floors = Bench.settledFloors("floors.json")
-    assert(floors.nonEmpty, "floors.json parsed to zero entries")
-    // "__"-prefixed keys are floors-file METADATA, not query floors:
-    // __host_canary_sec (global settle canary, r15), __tol_<q>
-    // (per-query tolerance, r16), __canary_<q> (per-floor settle-window
-    // canary stamp, r17). The SUFFIXED metadata must itself name
-    // registered queries, or a rename silently orphans its stamp/tol.
-    val stale = floors.keySet.filterNot(_.startsWith("__")) -- SparkEntry.queries.keySet
-    assert(stale.isEmpty,
-      s"floors for unregistered queries (renamed/removed?): ${stale.toSeq.sorted.mkString(", ")}")
-    val staleMeta = floors.keySet.collect {
-      case k if k.startsWith("__tol_") => k -> k.stripPrefix("__tol_")
-      case k if k.startsWith("__canary_") => k -> k.stripPrefix("__canary_")
-    }.filterNot { case (_, q) => SparkEntry.queries.contains(q) }
-    assert(staleMeta.isEmpty,
-      s"floors metadata for unregistered queries: ${staleMeta.map(_._1).toSeq.sorted.mkString(", ")}")
-    assert(floors.values.forall(v => v > 0 && v < 600),
-      "floor outside sane (0, 600)s range")
   }
 
   test("committed scale_curves.json parses, names registered queries, ratios consistent") {
