@@ -43,12 +43,11 @@ object AnomalyOps {
     * `spark.sql.ansi.enabled`). Shrink `decimals` to buy headroom; the
     * envelope is a documented contract, checked by the spec at its
     * edges rather than a per-row runtime guard the hot loop would pay
-    * for. (r19 third member of the ANSI sibling class: S was previously
-    * a LONG-typed sum, which under legacy mode WRAPPED SILENTLY at
-    * Σ|u| > 9.2·10^18 — arbitrary wrong flags, not NULL ones — and
-    * under ANSI mode threw, both a factor ~10^19 inside the envelope
-    * this scaladoc promised; the plain-decimal products meanwhile threw
-    * under ANSI at the envelope edge instead of degrading to NULL.)
+    * for. (Why DECIMAL(38) and try_ products: a LONG S WRAPS SILENTLY
+    * under legacy mode at Σ|u| > 9.2·10^18 — arbitrary wrong flags,
+    * not NULL ones — and throws under ANSI mode, both a factor ~10^19
+    * inside this envelope; plain-decimal products throw under ANSI at
+    * the envelope edge instead of degrading to NULL.)
     *
     * Shuffle plan: one map-side-combinable groupBy over the group key
     * (three integer aggregates) + one broadcast-or-hash join of the
@@ -70,13 +69,13 @@ object AnomalyOps {
     require(decimals >= 0 && decimals <= 6,
       s"sigma stats: decimals=$decimals outside [0, 6]")
     val unit = math.pow(10, decimals).toLong // exact: decimals <= 6
-    // try_cast, not cast (r18 differential find): under ANSI mode the
+    // try_cast, not cast: under ANSI mode the
     // plain cast THROWS on a magnitude beyond DECIMAL(18, decimals),
     // so one wild reading (a sensor spike, a unit bug) would kill the
     // whole stats job instead of being excluded — the exclusion
     // semantics this family documents and the n/S/Q alignment relies
     // on. try_cast yields NULL on overflow in both ANSI modes.
-    // Column API, not a SQL string (r18 ADVICE): interpolating the
+    // Column API, not a SQL string: interpolating the
     // name broke on backticks and silently re-resolved dotted names
     // (`a.b` the nested field became `a.b` the literal top-level name).
     (col(valueCol).try_cast(DecimalType(18, decimals)) * lit(unit))
@@ -87,7 +86,7 @@ object AnomalyOps {
     * exact integer triple `(n, S = Σx, Q = Σx²)` over fixed-point-
     * snapped values, melted to `(key, stat ∈ {n,s,q}, val)` rows —
     * every component merges by SUM, so this is a
-    * [[graft.util.SumTranches]] citizen like the histogram and
+    * [[graft.util.Tranches]] citizen like the histogram and
     * co-occurrence artifacts: per-day tranches, merge-on-read,
     * crash-safe superseding-manifest consolidation. "Flag today's
     * readings against ALL of history's distribution" reads a
@@ -96,9 +95,9 @@ object AnomalyOps {
     * Null and UNSNAPPABLE values (a NULL input, or a magnitude beyond
     * DECIMAL(18, decimals) whose snap overflows to null) are excluded
     * from ALL THREE components — n counts the same observations S and
-    * Q sum (r16 self-review: the old `count(*)` counted rows S/Q had
-    * skipped, so one null value silently shifted the group's mean and
-    * corrupted every row's flag; [[rollingSigmaFlags]] already counted
+    * Q sum (a `count(*)` would count rows S/Q had
+    * skipped, so one null value would silently shift the group's mean and
+    * corrupt every row's flag; [[rollingSigmaFlags]] counts the same
     * null-skipping). Such rows still report a NULL `is_anomaly` when
     * flagged themselves — no verdict, never a wrong one.
     */
@@ -113,7 +112,7 @@ object AnomalyOps {
         // to NULL-from-empty, which is semantically ZERO contribution —
         // it must stay distinguishable from NULL-from-breach, because
         // the tranche merge NULL-POISONS breach verdicts
-        // (SumTranches.readMulti) but must skip empties
+        // (Tranches.readMulti) but must skip empties
         coalesce(sum(col("__u").cast(D38)), lit(0).cast(D38)).as("__s"),
         // u² < 10^36 is exact per row; only the AGGREGATE can breach 38
         // digits — try_sum makes that NULL in both ANSI modes. The
@@ -127,8 +126,8 @@ object AnomalyOps {
       .select(col(keyCol), col("__sv.stat").as("stat"), col("__sv.val").as("val"))
   }
 
-  /** Semantics marker for the at-rest stats artifact (r16 ADVICE #1).
-    * The r16 statsSketch fix changed `n` from count-every-row to
+  /** Semantics marker for the at-rest stats artifact. The
+    * statsSketch semantics changed `n` from count-every-row to
     * count-snappable-only (matching S/Q); tranches written BEFORE the
     * fix carry the old semantics, and because merge-on-read SUMS
     * across tranches, ONE pre-fix tranche silently blends the two
@@ -141,9 +140,9 @@ object AnomalyOps {
   private[graft] val StatsMetaName = "_graft_stats_meta"
   private[graft] val StatsSemanticsV2 = "n_semantics=snappable_only_v2"
 
-  /** One ingest = one tranche ([[graft.util.SumTranches]] layout),
-    * stamped with the [[StatsSemanticsV2]] marker. Marker FIRST (r17
-    * ADVICE): "marker present with zero tranches" is already a valid
+  /** One ingest = one tranche ([[graft.util.Tranches]] layout),
+    * stamped with the [[StatsSemanticsV2]] marker. Marker FIRST:
+    * "marker present with zero tranches" is already a valid
     * state, so ordering it before the tranche write keeps the
     * invariant under crashes — tranche-first left a provably post-fix
     * artifact that [[readStats]] fail-fasts on, forcing the manual
@@ -153,7 +152,7 @@ object AnomalyOps {
     val meta = s"$dir/$StatsMetaName"
     if (!graft.util.Fs.pathExists(spark, meta))
       graft.util.Fs.writeSmallFile(spark, meta, StatsSemanticsV2 + "\n")
-    graft.util.SumTranches.write(sketch, dir, tag)
+    graft.util.Tranches.write(sketch, dir, tag)
   }
 
   /** Merge-on-read of the at-rest stats, superseding-manifest-aware.
@@ -164,20 +163,20 @@ object AnomalyOps {
                 keyCol: String): DataFrame = {
     val hasMarker = graft.util.Fs.readSmallFile(spark, s"$dir/$StatsMetaName")
       .exists(_.contains(StatsSemanticsV2))
-    require(hasMarker || graft.util.SumTranches.live(spark, dir).isEmpty,
+    require(hasMarker || graft.util.Tranches.live(spark, dir).isEmpty,
       s"stats artifact $dir has tranches but no $StatsMetaName marker — " +
         "written before the n-semantics fix (n counted rows the null-" +
         "skipping sums excluded), so its merged stats may be silently " +
         "blended. Regenerate the artifact from history, or create the " +
         s"marker containing '$StatsSemanticsV2' if every tranche is " +
         "provably post-fix.")
-    graft.util.SumTranches.read(spark, dir, Seq(keyCol, "stat"), "val")
+    graft.util.Tranches.read(spark, dir, Seq(keyCol, "stat"), "val")
   }
 
   /** Crash-safe fold of the live tranches. */
   def consolidateStats(spark: org.apache.spark.sql.SparkSession, dir: String,
                        keyCol: String): Unit =
-    graft.util.SumTranches.consolidate(spark, dir, Seq(keyCol, "stat"), "val")
+    graft.util.Tranches.consolidate(spark, dir, Seq(keyCol, "stat"), "val")
 
   /** ROLLING k-sigma flags: each row tested against the distribution
     * of its key's `nRows` PRIOR rows in `orderCol` order (the current
@@ -190,7 +189,7 @@ object AnomalyOps {
     * Same float-free inequality as [[sigmaFlags]] — `(n·x − S)² >
     * k²·(n·Q − S²)` — with (n, S, Q) as exact integer WINDOW sums
     * (one key-partitioned ordered window, reused for all three).
-    * Envelope (r19): this tier's S is a checked LONG window sum —
+    * Envelope: this tier's S is a checked LONG window sum —
     * exact to Σ|u| ≤ 9.2·10^18, NULL verdicts beyond, in both ANSI
     * modes (see the body comment for why the grouped tier's
     * DECIMAL(38) sum is the wrong trade inside a sliding frame); Q
@@ -214,10 +213,10 @@ object AnomalyOps {
       .partitionBy(col(keyCol)).orderBy(col(orderCol))
       .rowsBetween(-nRows.toLong, -1L)
     val n = count(col("__u")).over(w)
-    // r19 long-sum audit, WINDOW tier: S is a try_sum over LONG —
+    // WINDOW tier: S is a try_sum over LONG —
     // checked long adds that go NULL past ±9.2e18 in BOTH ANSI modes,
-    // where the old plain long sum wrapped silently (wrong flags)
-    // under legacy and killed the job under ANSI. Deliberately NOT the
+    // where a plain long sum wraps silently (wrong flags)
+    // under legacy and kills the job under ANSI. Deliberately NOT the
     // grouped tier's D38 sum: a sliding frame RECOMPUTES its aggregate
     // per row, and a second DECIMAL(38) window sum (Q is already one)
     // measured ~2× on the window-dominated bench query. The exactness
@@ -260,10 +259,10 @@ object AnomalyOps {
       .agg(max(when(col("stat") === "n", col("val"))).as("__n"),
         max(when(col("stat") === "s", col("val"))).as("__s"),
         max(when(col("stat") === "q", col("val"))).as("__q"))
-    // try_ arithmetic, not plain (r19 long-sum audit): a 38-digit
+    // try_ arithmetic, not plain: a 38-digit
     // breach in any product degrades the comparison to NULL in BOTH
     // ANSI modes — the envelope contract in [[sigmaFlags]]'s doc; the
-    // plain decimal ops threw under ANSI (the default) at the edge.
+    // plain decimal ops throw under ANSI (the default) at the edge.
     val dev = try_subtract(
       try_multiply(col("__n"), col("__u").cast(D38)), col("__s"))
     val rhs = try_multiply(lit(k.toLong * k),

@@ -651,7 +651,7 @@ object DedupOps {
       writeSmallFile(spark, s"$root/_graft_meta",
         metaString(DedupIndexMeta(shingleN, portable, sigK, sigBands)))
       // three INDEPENDENT artifact chains overlapped on driver threads
-      // (r19 optimization, [[graft.util.Par]]): (sh → df), (fp),
+      // ([[graft.util.Par]]): (sh → df), (fp),
       // (sig → bf) share no intermediate — each derived count reads
       // back ITS OWN just-written row tranche, never a sibling. Crash
       // contract unchanged: the swap paths publish all-or-nothing, and
@@ -689,7 +689,7 @@ object DedupOps {
     }
     commit match {
       case graft.merge.Merge.PointerCommit =>
-        // S3-safe (r13 verdict #2): the whole tree lands in an immutable
+        // S3-safe: the whole tree lands in an immutable
         // __data_ generation; one manifest PUT publishes it. Every
         // index reader/mutator resolves the root through the manifest.
         graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
@@ -751,7 +751,7 @@ object DedupOps {
         .count())) return
     val frozen = newRows.localCheckpoint(true)
     // two independent row+count chains overlapped on driver threads
-    // (r19 optimization, [[graft.util.Par]]), then fp STRICTLY LAST —
+    // ([[graft.util.Par]]), then fp STRICTLY LAST —
     // the ordering contracts all hold: shingles and signatures (and
     // their derived df/bf counts, each read back from ITS OWN at-rest
     // tranche) land before fingerprints, so the fp commit witness
@@ -960,7 +960,7 @@ object DedupOps {
       // onto an index built before it existed.
       // df/bf regenerate from DIFFERENT just-consolidated row artifacts
       // (sh and sig) into disjoint dirs — overlap the two rebuild jobs
-      // on driver threads (r19 optimization, [[graft.util.Par]])
+      // on driver threads ([[graft.util.Par]])
       graft.util.Par.jobs(
         () => if (pathExists(spark, s"$dir/sh")) {
           def buildDf(root: String): Unit =
@@ -989,7 +989,7 @@ object DedupOps {
   }
 
   /** AUTO-consolidation tick for the dedup index — the
-    * [[graft.util.SumTranches.maybeConsolidate]] contract over the
+    * [[graft.util.Tranches.maybeFold]] contract over the
     * sh/fp/sig artifact set: fold only when the COMMITTED tranche
     * count of the witness artifact (`fp` — the one the append path
     * writes last) exceeds `maxLive`, so a long-lived
@@ -1068,8 +1068,8 @@ object DedupOps {
     val committed = committedTranches(spark, s"$dir/$witness")
       .map(_.stripPrefix("batch=")).toSet + "build" + "consolidated"
     // per-artifact rewrites touch disjoint subdirs and share only the
-    // pre-computed committed set — overlap them on driver threads (r19
-    // optimization, [[graft.util.Par]]). Crash contract unchanged: a
+    // pre-computed committed set — overlap them on driver threads
+    // ([[graft.util.Par]]). Crash contract unchanged: a
     // crash mid-consolidation already left SOME artifacts folded and
     // others not (tag sets diverge → countArtifactFresh routes probes
     // to the exact window fallback until the next fold); an arbitrary
@@ -1123,7 +1123,7 @@ object DedupOps {
 
   /** The PointerCommit body of [[consolidateArtifacts]] — one whole
     * index GENERATION built under a fresh immutable `__data_` dir and
-    * published by one manifest PUT (S3-safe; r13 verdict #2), instead
+    * published by one manifest PUT (S3-safe), instead
     * of per-artifact rename swaps whose crash window can leave
     * artifacts at mixed generations on stores where rename is
     * copy+delete. Same rewrite contract: committed tranches fold
@@ -1273,7 +1273,7 @@ object DedupOps {
                                    dir: String, artifacts: Seq[String]): DataFrame = {
     import spark.implicits._
     // per-artifact count jobs are independent — overlap them on driver
-    // threads (r19 optimization, [[graft.util.Par]]): the gauge's cost
+    // threads ([[graft.util.Par]]): the gauge's cost
     // is one wave of artifact scans instead of one job latency each
     val out = new Array[(String, Long, Option[Long], Int)](artifacts.size)
     graft.util.Par.jobs(artifacts.zipWithIndex.map { case (a, i) => () => {

@@ -956,7 +956,7 @@ object GraphOps {
 
   /** AT-REST co-occurrence index: pair counts, item margins, and the
     * group total each live as a SUM-algebra tranche artifact
-    * ([[graft.util.SumTranches]] — tagged tranches, superseding-
+    * ([[graft.util.Tranches]] — tagged tranches, superseding-
     * manifest consolidation), so a daily lift dashboard reads bounded
     * pair/margin frames instead of re-projecting the whole membership
     * table. CONTRACT: tranches must PARTITION THE GROUPS — every
@@ -987,11 +987,11 @@ object GraphOps {
       // self-consistent per tag, and a partially-written wave is
       // healed by the same-tag retry exactly as before.
       graft.util.Par.jobs(
-        () => graft.util.SumTranches.write(pairsOf(capped), s"$dir/pairs", tag),
-        () => graft.util.SumTranches.write(
+        () => graft.util.Tranches.write(pairsOf(capped), s"$dir/pairs", tag),
+        () => graft.util.Tranches.write(
           capped.groupBy(col("__i").as("item")).agg(count(lit(1)).as("n_i")),
           s"$dir/margins", tag),
-        () => graft.util.SumTranches.write(
+        () => graft.util.Tranches.write(
           capped.agg(count_distinct(col("__g")).as("n_g")), s"$dir/totals", tag))
     } finally capped.unpersist()
   }
@@ -1000,7 +1000,7 @@ object GraphOps {
     * n_groups`), `minCount` applied AFTER the cross-tranche sum. */
   def readCoocPairs(spark: org.apache.spark.sql.SparkSession, dir: String,
                     minCount: Long = 1L): DataFrame =
-    graft.util.SumTranches.read(spark, s"$dir/pairs",
+    graft.util.Tranches.read(spark, s"$dir/pairs",
         Seq("item_a", "item_b"), "n_groups")
       .where(col("n_groups") >= minCount)
 
@@ -1012,8 +1012,8 @@ object GraphOps {
   def coocLiftFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                         minCount: Long = 1L): DataFrame = {
     val pairs = readCoocPairs(spark, dir, minCount)
-    val margins = graft.util.SumTranches.read(spark, s"$dir/margins", Seq("item"), "n_i")
-    val total = graft.util.SumTranches.read(spark, s"$dir/totals", Seq.empty, "n_g")
+    val margins = graft.util.Tranches.read(spark, s"$dir/margins", Seq("item"), "n_i")
+    val total = graft.util.Tranches.read(spark, s"$dir/totals", Seq.empty, "n_g")
     pairs
       .join(margins.select(col("item").as("item_a"), col("n_i").as("__na")), "item_a")
       .join(margins.select(col("item").as("item_b"), col("n_i").as("__nb")), "item_b")
@@ -1025,37 +1025,36 @@ object GraphOps {
 
   /** Fold each of the three tranche families to one tranche
     * (crash-safe superseding-manifest protocol —
-    * [[graft.util.SumTranches.consolidate]]). */
+    * [[graft.util.Tranches.consolidate]]). */
   def consolidateCooc(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
     // the three families fold independently (disjoint dirs, per-family
     // manifest protocol) — overlap the fold jobs on driver threads
     // ([[graft.util.Par]]); a crash leaves each
     // family self-consistent exactly as the sequential form did
     graft.util.Par.jobs(
-      () => graft.util.SumTranches.consolidate(spark, s"$dir/pairs",
+      () => graft.util.Tranches.consolidate(spark, s"$dir/pairs",
         Seq("item_a", "item_b"), "n_groups"),
-      () => graft.util.SumTranches.consolidate(spark, s"$dir/margins",
+      () => graft.util.Tranches.consolidate(spark, s"$dir/margins",
         Seq("item"), "n_i"),
-      () => graft.util.SumTranches.consolidate(spark, s"$dir/totals",
+      () => graft.util.Tranches.consolidate(spark, s"$dir/totals",
         Seq.empty, "n_g"))
 
   /** Count-triggered auto-fold for the three co-occurrence families
-    * ([[graft.util.SumTranches.maybeConsolidate]] semantics): each
-    * family folds only when its live tranche count exceeds `maxLive`,
-    * keeping every merge-on-read ≤ maxLive-wide under unattended
-    * ingest. The families are checked independently — a crash between
-    * them leaves each family self-consistent (the manifest protocol
-    * is per family). */
+    * ([[graft.util.Tranches.maybeFold]]): each family folds only when
+    * its live tranche count exceeds `maxLive`, keeping every
+    * merge-on-read ≤ maxLive-wide under unattended ingest. The
+    * families are checked independently — a crash between them leaves
+    * each family self-consistent (the manifest protocol is per
+    * family). */
   def maybeConsolidateCooc(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, maxLive: Int): Boolean = {
-    val a = graft.util.SumTranches.maybeConsolidate(spark, s"$dir/pairs",
-      Seq("item_a", "item_b"), "n_groups", maxLive)
-    val b = graft.util.SumTranches.maybeConsolidate(spark, s"$dir/margins",
-      Seq("item"), "n_i", maxLive)
-    val c = graft.util.SumTranches.maybeConsolidate(spark, s"$dir/totals",
-      Seq.empty, "n_g", maxLive)
-    a || b || c
-  }
+                           dir: String, maxLive: Int): Boolean =
+    Seq(("pairs", Seq("item_a", "item_b"), "n_groups"),
+      ("margins", Seq("item"), "n_i"), ("totals", Seq.empty[String], "n_g"))
+      .map { case (family, keys, cnt) =>
+        val d = s"$dir/$family"
+        graft.util.Tranches.maybeFold(spark, d, maxLive)(
+          graft.util.Tranches.consolidate(spark, d, keys, cnt))
+      }.contains(true)
 
   /** Graph FEATURE aggregation: for every node, exact aggregates of a
     * value column over its distinct ≤`hops`-hop neighborhood (self

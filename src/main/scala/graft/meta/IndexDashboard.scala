@@ -162,15 +162,15 @@ object IndexDashboard {
         .withColumn("family", lit("rank"))),
       ccDir.map(d => graft.graph.GraphOps.groupIndexHealth(spark, d)
         .withColumn("family", lit("cc"))),
-      dayHistDir.map(d => graft.util.SumTranches.health(spark, d, "dayhist")
+      dayHistDir.map(d => graft.util.Tranches.health(spark, d, "dayhist")
         .withColumn("family", lit("dayhist"))),
-      dayHllDir.map(d => graft.profile.Sketches.registerTrancheHealth(spark, d, "dayhll")
+      dayHllDir.map(d => graft.util.Tranches.health(spark, d, "dayhll")
         .withColumn("family", lit("dayhll"))),
-      dayMixDir.map(d => graft.util.SumTranches.health(spark, d, "daymix")
+      dayMixDir.map(d => graft.util.Tranches.health(spark, d, "daymix")
         .withColumn("family", lit("daymix"))),
-      centroidDir.map(d => graft.util.SumTranches.health(spark, d, "centroid")
+      centroidDir.map(d => graft.util.Tranches.health(spark, d, "centroid")
         .withColumn("family", lit("centroid"))),
-      imageHashDir.map(d => graft.multimodal.MultimodalOps.imageHashIndexHealth(spark, d)
+      imageHashDir.map(d => graft.util.Tranches.health(spark, d, "dhash")
         .withColumn("family", lit("imagehash")))).flatten
     require(parts.nonEmpty, "indexHealthAll: pass at least one index directory")
     parts.reduce(_.unionByName(_))

@@ -437,56 +437,13 @@ object MultimodalOps {
       () => { batchHashed.unpersist(); () })
   }
 
-  /** Fold the hash tranches to one — plain distinct rewrite (set
-    * semantics: a crash that leaves folded + inputs visible changes
-    * nothing; the [[graft.relational.BloomIndex.consolidateBloom]]
-    * protocol). */
-  def consolidateImageHashIndex(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val tranches = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).sortBy(_.getName).toSeq
-    if (tranches.length <= 1) return
-    val tag = "consolidated-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(tranches.map(_.getName).mkString("\n")))
-    readImageHashes(spark, dir)
-      .write.mode("overwrite").parquet(s"$dir/batch=$tag")
-    tranches.filterNot(_.getName == s"batch=$tag")
-      .foreach(t => fs.delete(t, true))
-  }
-
-  /** TRIAGE gauge in the cross-family dashboard schema
-    * ([[graft.meta.IndexDashboard.indexHealthAll]]) — directory
-    * metadata only; `n_unproven = 0` by SET semantics (a crash
-    * remnant's rows distinct away, the bloom stance). */
-  def imageHashIndexHealth(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"imageHashIndexHealth: $dir does not exist")
-    val tranches = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
-    val marked = fs.globStatus(
-      new org.apache.hadoop.fs.Path(dir, "batch=*/_SUCCESS"))
-      .map(_.getPath.getParent.getName).toSet
-    Seq(("dhash", tranches.length, tranches.count(marked.contains),
-      0, Option.empty[Boolean]))
-      .toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
-  }
-
-  /** Count-triggered auto-fold, the [[graft.relational.BloomIndex
-    * .maybeConsolidateBloom]] contract (set semantics: safe at any
-    * instant). Returns whether a fold ran. */
-  def maybeConsolidateImageHashIndex(spark: SparkSession, dir: String,
-                                     maxLive: Int): Boolean = {
-    require(maxLive >= 1, s"maybeConsolidateImageHashIndex: maxLive=$maxLive must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = if (!fs.exists(root)) 0
-      else fs.listStatus(root).count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    if (n > maxLive) { consolidateImageHashIndex(spark, dir); true } else false
-  }
+  /** Fold the hash tranches to one distinct set
+    * ([[graft.util.Tranches.foldIdempotent]] — set semantics: a crash
+    * that leaves folded + inputs visible changes nothing); auto-fold
+    * with `Tranches.maybeFold`, gauge with `Tranches.health(spark,
+    * dir, "dhash")`. */
+  def consolidateImageHashIndex(spark: SparkSession, dir: String): Unit =
+    graft.util.Tranches.foldIdempotent(spark, dir)(readImageHashes(spark, dir))
 
   /** Frame sampling for (fake) video payloads: every `step`-th frame
     * index of `n_frames` derived from payload size — the explode keeps

@@ -27,7 +27,7 @@ import graft.functions.Hashes
   * and each minimum exactly, which no randomized-seed CM can offer.
   *
   * At-rest: cell counts are a SUM-algebra artifact —
-  * [[graft.util.SumTranches]] tranches with the superseding-manifest
+  * [[graft.util.Tranches]] tranches with the superseding-manifest
   * consolidation, same as the histogram and co-occurrence families.
   */
 object CountMin {
@@ -97,7 +97,7 @@ object CountMin {
     *
     * Both grids must share (width, depth) — they are joined cell-by-
     * cell, so a mismatched geometry silently estimates garbage; keep
-    * grids in [[graft.util.SumTranches]] dirs per key-column and the
+    * grids in [[graft.util.Tranches]] dirs per key-column and the
     * frozen defaults make that structural.
     *
     * Exactness: cell counts are exact integers and the row inner
@@ -126,16 +126,16 @@ object CountMin {
         .cast(DoubleType).as("n_est"))
   }
 
-  /** One ingest = one tranche ([[graft.util.SumTranches]] layout). */
+  /** One ingest = one tranche ([[graft.util.Tranches]] layout). */
   def writeCmTranche(sketch: DataFrame, dir: String, tag: String): Unit =
-    graft.util.SumTranches.write(sketch, dir, tag)
+    graft.util.Tranches.write(sketch, dir, tag)
 
   /** Merge-on-read of the at-rest grid, superseding-manifest-aware. */
   def readCm(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SumTranches.read(spark, dir, Seq("r", "c"), "cnt")
+    graft.util.Tranches.read(spark, dir, Seq("r", "c"), "cnt")
 
   /** Crash-safe fold of the live tranches
-    * ([[graft.util.SumTranches.consolidate]]). */
+    * ([[graft.util.Tranches.consolidate]]). */
   def consolidateCm(spark: SparkSession, dir: String): Unit =
-    graft.util.SumTranches.consolidate(spark, dir, Seq("r", "c"), "cnt")
+    graft.util.Tranches.consolidate(spark, dir, Seq("r", "c"), "cnt")
 }

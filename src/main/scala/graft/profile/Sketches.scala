@@ -280,10 +280,10 @@ object Sketches {
     * `(__d, bucket, max_rho)` and overwrites its own `batch=<tag>`
     * tranche. Register MAX is idempotent, so like the flat sketch
     * artifact (and unlike the sum families) replays, day splits, and
-    * consolidation need NO protocol. A 90-day rolling-MAU series over
-    * a year of events reads 365 ≤m-register day rows — never an
-    * event. `b` is a caller contract shared across tranches (the flat
-    * artifact's convention). */
+    * consolidation need no superseding manifest. A 90-day rolling-MAU
+    * series over a year of events reads 365 ≤m-register day rows —
+    * never an event. `b` is a caller contract shared across tranches
+    * (the flat artifact's convention). */
   def writeDayHllTranche(df: DataFrame, keyCol: String, tsCol: String,
                          dir: String, tag: String, b: Int = DefaultB): Unit =
     dayRegisters(df, keyCol, tsCol, b)
@@ -305,84 +305,11 @@ object Sketches {
     hllRollingFromPerDay(readDayHll(spark, dir), windowDays, b)
   }
 
-  /** The artifact's `batch=` tranche directories (register artifacts
-    * have no superseding manifest — max is idempotent, every tranche
-    * is live). */
-  private def trancheDirs(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).sortBy(_.getName).toSeq
-  }
-
-  /** TRIAGE gauge for a REGISTER (max-algebra) tranche artifact in
-    * the cross-family dashboard schema ([[graft.meta.IndexDashboard
-    * .indexHealthAll]]): directory metadata only. Every visible
-    * tranche is live (max is idempotent — no superseding manifest, no
-    * crash-remnant state), so `n_unproven = 0` by algebra and
-    * `n_tranches` is directly the merge-on-read fan-in the
-    * consolidate tick bounds. */
-  def registerTrancheHealth(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, artifact: String): DataFrame = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"registerTrancheHealth: $dir does not exist")
-    val tranches = trancheDirs(spark, dir)
-    val marked = fs.globStatus(
-      new org.apache.hadoop.fs.Path(dir, "batch=*/_SUCCESS"))
-      .map(_.getPath.getParent.getName).toSet
-    Seq((artifact, tranches.length, tranches.count(t => marked(t.getName)),
-      0, Option.empty[Boolean]))
-      .toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
-  }
-
-  /** AUTO-consolidation tick for the DAY-KEYED register artifact —
-    * the [[graft.util.SumTranches.maybeConsolidate]] contract under
-    * the max algebra (no manifest needed; the fold is safe at any
-    * moment): fold only when the tranche count exceeds `maxLive`, so
-    * the rolling reader's fan-in stays bounded across an unattended
-    * ingest loop. Returns whether a fold ran. */
-  def maybeConsolidateDayHll(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, maxLive: Int): Boolean = {
-    require(maxLive >= 1, s"maybeConsolidateDayHll: maxLive=$maxLive must be >= 1")
-    if (trancheDirs(spark, dir).length > maxLive) {
-      consolidateDayHll(spark, dir); true
-    } else false
-  }
-
-  /** [[maybeConsolidateDayHll]] for the FLAT register artifact
-    * ([[writeSketchTranche]] / [[consolidateSketch]]) — the
-    * count-triggered twin of [[graft.streaming.StreamingOps
-    * .sketchStream]]'s epoch-modulo trigger, which skips entirely when
-    * replayed epoch numbers never hit the modulus. */
-  def maybeConsolidateSketch(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, maxLive: Int): Boolean = {
-    require(maxLive >= 1, s"maybeConsolidateSketch: maxLive=$maxLive must be >= 1")
-    if (trancheDirs(spark, dir).length > maxLive) {
-      consolidateSketch(spark, dir); true
-    } else false
-  }
-
-  /** Fold the day-keyed tranches to one — a PLAIN max rewrite (the
-    * [[graft.relational.BloomIndex.consolidateBloom]] stance: under
-    * idempotent algebra a crash that leaves folded + inputs visible
-    * changes nothing; delete-after-write suffices). */
-  def consolidateDayHll(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val tranches = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).sortBy(_.getName).toSeq
-    if (tranches.length <= 1) return
-    val tag = "consolidated-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(tranches.map(_.getName).mkString("\n")))
-    readDayHll(spark, dir).write.mode("overwrite").parquet(s"$dir/batch=$tag")
-    tranches.filterNot(_.getName == s"batch=$tag")
-      .foreach(t => fs.delete(t, true))
-  }
+  /** Fold the day-keyed tranches to one, per-(day, bucket) max
+    * ([[graft.util.Tranches.foldIdempotent]]); auto-fold with
+    * `Tranches.maybeFold(spark, dir, n)(consolidateDayHll(spark, dir))`. */
+  def consolidateDayHll(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    graft.util.Tranches.foldIdempotent(spark, dir)(readDayHll(spark, dir))
 
   /** AT-REST sketch artifact, same tagged-tranche layout as the dedup/
     * winnow/IVF index families: each ingest writes its registers under
@@ -405,38 +332,15 @@ object Sketches {
       .agg(max(col("max_rho")).cast(IntegerType).as("max_rho"))
 
   /** Fold every tranche of an at-rest sketch artifact into ONE — the
-    * consolidation path a long-running [[graft.streaming.StreamingOps
+    * consolidation a long-running [[graft.streaming.StreamingOps
     * .sketchStream]] needs: without it the artifact accumulates one
-    * `batch=<epoch>` directory per micro-batch forever and merge-on-read
-    * cost grows linearly with epoch count. Register-max idempotence
-    * makes the fold crash-safe without a decide-once protocol, in this
-    * order: (1) the merged registers are written to a dot-prefixed
-    * scratch dir (invisible to `readSketch` — Spark's file listing
-    * skips hidden paths), (2) renamed into a new `batch=consolidated-
-    * <stable hash of the folded tranche names>` tranche, (3) only THEN
-    * are the superseded tranches deleted. A crash after (2) leaves
-    * duplicates whose merge is the identity; a re-run over the same
-    * tranche set derives the same tag and overwrites its own output.
-    * No timestamps anywhere — the tag is a pure function of what was
-    * folded, so replays converge.
+    * `batch=<epoch>` directory per micro-batch forever and
+    * merge-on-read cost grows linearly with epoch count. Register-max
+    * idempotence makes the fold crash-safe without a decide-once
+    * protocol ([[graft.util.Tranches.foldIdempotent]]).
     */
-  def consolidateSketch(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val tranches = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).sortBy(_.getName)
-    if (tranches.length <= 1) return   // already consolidated
-    val names = tranches.map(_.getName).mkString("\n")
-    val tag = "consolidated-" +
-      java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(names))
-    val scratch = new org.apache.hadoop.fs.Path(root, s".consolidating-$tag")
-    readSketch(spark, dir).write.mode("overwrite").parquet(scratch.toString)
-    val dest = new org.apache.hadoop.fs.Path(root, s"batch=$tag")
-    if (fs.exists(dest)) fs.delete(dest, true)
-    fs.rename(scratch, dest)
-    tranches.foreach(t => fs.delete(t, true))
-  }
+  def consolidateSketch(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    graft.util.Tranches.foldIdempotent(spark, dir)(readSketch(spark, dir))
 
   /** Intersection-cardinality estimate of two SKETCHES by
     * inclusion–exclusion: `est(A) + est(B) − est(A ∪ B)` with the

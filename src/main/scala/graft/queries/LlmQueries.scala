@@ -25,10 +25,10 @@ object LlmQueries {
     * coarse centroids and PQ codebooks are a property of the CORPUS,
     * not of any one query — a serving system fits them at index-build
     * time and every search reuses them ([[SimilarityOps.ivfWriteIndex]]
-    * returns them for exactly that reason). Refitting per query was the
-    * round-3 verdict's #2 defect: at 100 TB each refit is a full-corpus
-    * sample pass. Deterministic (seeded), so caching cannot change any
-    * result — it only deletes redundant fits within one JVM.
+    * returns them for exactly that reason). Refitting per query would
+    * cost a full-corpus sample pass per query at 100 TB. Deterministic
+    * (seeded), so caching cannot change any result — it only deletes
+    * redundant fits within one JVM.
     */
   private val ivfFitCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double])]]()
@@ -1188,7 +1188,7 @@ object LlmQueries {
             docs.where(col("doc_id") >= 300 && col("doc_id") < 400), bm25Idx,
             "doc_id", "text", tag = "day1")
         }
-        // the seven round-12 families: tiny artifacts, same
+        // the other eight families (bloom … imagehash): tiny artifacts, same
         // build-once-per-process discipline (the dashboard is a
         // directory-metadata gauge — content volume is irrelevant, so
         // the builders run on bounded slices)
@@ -1826,7 +1826,7 @@ object LlmQueries {
 
     // ---- end-to-end TRAINING-DATA pipeline: quality gate → exact
     //      dedup → benchmark decontamination → deterministic split —
-    //      the round-3 operator composition, one oracle (the eval-set
+    //      the LLM-data operator composition, one oracle (the eval-set
     //      docs themselves are 100% contaminated and must drop out) ----
     Q("q_training_pipeline", {
       val stop = TextOps.EnStopwords.map(w => s"'$w'").mkString(", ")
@@ -3566,8 +3566,8 @@ object LlmQueries {
       graft.util.Par.jobs( // independent tranches
         () => HistSketch.writeDayHistTranche(ev.where(half === 0), "value", "ts", idx, "t0"),
         () => HistSketch.writeDayHistTranche(ev.where(half === 1), "value", "ts", idx, "t1"))
-      graft.util.SumTranches.maybeConsolidate(s, idx,
-        Seq("__d", "bucket"), "cnt", maxLive = 1)
+      graft.util.Tranches.maybeFold(s, idx, maxLive = 1)(
+        HistSketch.consolidateDayHist(s, idx))
       HistSketch.histRollingPsiFromIndex(s, idx, windowDays = 7)
     },
 
@@ -3838,8 +3838,8 @@ object LlmQueries {
       val half = pmod(xxhash64(lit("dm"), col("event_id")), lit(2))
       TextOps.writeDayMixTranche(ev.where(half === 0), "event_type", "ts", idx, "t0")
       TextOps.writeDayMixTranche(ev.where(half === 1), "event_type", "ts", idx, "t1")
-      graft.util.SumTranches.maybeConsolidate(s, idx,
-        Seq("__d", "k"), "cnt", maxLive = 1)
+      graft.util.Tranches.maybeFold(s, idx, maxLive = 1)(
+        graft.util.Tranches.consolidate(s, idx, Seq("__d", "k"), "cnt"))
       TextOps.jsRollingFromIndex(s, idx, windowDays = 7)
     },
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   *     replayed tranches, crashed consolidations, double-delivered
   *     epochs all converge by algebra, with none of the sum family's
   *     superseding-manifest machinery. [[consolidateBloom]] is a
-  *     plain distinct-rewrite; a crash that leaves both the folded
+  *     distinct rewrite; a crash that leaves both the folded
   *     tranche and its inputs visible changes nothing.
   *   - **Bounded forever.** The artifact can never exceed `mBits`
   *     rows however much history flows through it (positions
@@ -154,69 +154,26 @@ object BloomIndex {
     (joined, anyMiss, (0 until k).map(i => s"__bf$i"))
   }
 
-  /** The index's `batch=` tranche directories — the read-side fan-in
-    * [[maybeConsolidateBloom]] bounds. */
-  private def tranchePaths(spark: SparkSession, dir: String)
-  : Seq[org.apache.hadoop.fs.Path] = {
-    val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).sortBy(_.getName).toSeq
-  }
-
-  /** AUTO-consolidation tick (the [[graft.util.SumTranches
-    * .maybeConsolidate]] contract under the cheaper OR algebra): fold
-    * only when the tranche count EXCEEDS `maxLive`, so every tick
-    * boundary leaves either ≤ maxLive untouched tranches or exactly
-    * ONE — an unattended ingest loop's probe fan-in stays bounded
-    * without an operator remembering to consolidate, and quiet
-    * periods pay nothing. Idempotence makes the tick safe to run at
-    * ANY moment (even racing a crash replay — see
-    * [[consolidateBloom]]). Returns whether a fold ran. */
-  def maybeConsolidateBloom(spark: SparkSession, dir: String,
-                            maxLive: Int): Boolean = {
-    require(maxLive >= 1, s"maybeConsolidateBloom: maxLive=$maxLive must be >= 1")
-    if (tranchePaths(spark, dir).length > maxLive) {
-      consolidateBloom(spark, dir); true
-    } else false
-  }
-
-  /** Fold the tranches to one — a PLAIN distinct rewrite: under OR
-    * algebra a crash that leaves both the folded tranche and its
-    * inputs visible double-counts nothing, so no superseding manifest
-    * is needed (delete-after-write suffices; a replay re-folds). */
-  def consolidateBloom(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val tranches = tranchePaths(spark, dir)
-    if (tranches.length <= 1) return
-    val tag = "consolidated-" + java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(tranches.map(_.getName).mkString("\n")))
-    readBloomPositions(spark, dir)
-      .write.mode("overwrite").parquet(s"$dir/batch=$tag")
-    tranches.filterNot(_.getName == s"batch=$tag")
-      .foreach(t => f.delete(t, true))
-  }
+  /** Fold the tranches to one distinct position set
+    * ([[graft.util.Tranches.foldIdempotent]] — under OR algebra a
+    * crash that leaves the folded tranche and its inputs visible
+    * changes no probe); auto-fold with
+    * `Tranches.maybeFold(spark, dir, n)(consolidateBloom(spark, dir))`. */
+  def consolidateBloom(spark: SparkSession, dir: String): Unit =
+    graft.util.Tranches.foldIdempotent(spark, dir)(readBloomPositions(spark, dir))
 
   /** TRIAGE gauge in the cross-family dashboard schema
     * ([[graft.meta.IndexDashboard.indexHealthAll]]): one row
     * `(artifact, n_tranches, n_marked, n_unproven, count_fresh)` from
-    * directory metadata only — no data file opened. `n_unproven` is 0
-    * BY ALGEBRA, not by protocol: every visible tranche is valid under
-    * idempotent OR (a crash remnant's positions merge away), so there
-    * is no crash-remnant state to page on — the pager dial for this
-    * family is [[bloomIndexStats]]' fill fraction, which needs a data
-    * scan and so stays a separate gauge. */
+    * directory metadata only — no data file opened
+    * ([[graft.util.Tranches.health]]). `n_unproven` is 0 BY ALGEBRA,
+    * not by protocol: every visible tranche is valid under idempotent
+    * OR, so there is no crash-remnant state to page on — the pager
+    * dial for this family is [[bloomIndexStats]]' fill fraction,
+    * which needs a data scan and so stays a separate gauge. */
   def bloomIndexHealth(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     readMeta(spark, dir) // fail fast on a non-index dir
-    val tranches = tranchePaths(spark, dir)
-    val marked = fs(spark, dir).globStatus(
-      new org.apache.hadoop.fs.Path(dir, "batch=*/_SUCCESS"))
-      .map(_.getPath.getParent.getName).toSet
-    Seq(("pos", tranches.length, tranches.count(t => marked(t.getName)),
-      0, Option.empty[Boolean]))
-      .toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
+    graft.util.Tranches.health(spark, dir, "pos")
   }
 
   /** Content gauge: `(m_bits, k, n_positions, fill_fraction)` — the

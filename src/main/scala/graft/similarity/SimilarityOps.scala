@@ -59,8 +59,8 @@ object SimilarityOps {
     * embedding; under legacy mode 0/0 = NaN, and NaN sorts ABOVE every
     * real double in a descending rank — a zero vector would silently
     * TOP every top-k list. NULL instead: it fails every threshold
-    * predicate and ranks LAST in desc order, in both modes (r19 ANSI
-    * division audit — the r18 cast find's division-shaped sibling). */
+    * predicate and ranks LAST in desc order, in both ANSI modes (a
+    * plain division by zero throws under ANSI). */
   def cosineOf(dotV: Column, na: Column, nb: Column): Column =
     when(na > 0 && nb > 0, round(dotV / (na * nb), 6))
 
@@ -1230,8 +1230,8 @@ object SimilarityOps {
     *
     * Same snapped-exact arithmetic as [[centroidDrift]] (per-dim sums
     * of `trunc(x·scale)` longs over DECIMAL(38,0) — order-free), per
-    * day. The snap is a `try_cast` at every site of this family (r19
-    * ANSI cast audit): a component whose |x·scale| exceeds the long
+    * day. The snap is a `try_cast` at every site of this family: a
+    * component whose |x·scale| exceeds the long
     * range — a corrupt embedding, not a measurement — contributes
     * NOTHING to that dim's sum (NULL is skipped) instead of throwing
     * under ANSI mode (Spark 4's default) and killing the gauge; the
@@ -1389,7 +1389,7 @@ object SimilarityOps {
 
   /** AT-REST per-day centroid artifact: each ingest collapses its
     * vectors to the `(__d, pos, s, c)` per-day sum frame and lands as
-    * its own tagged tranche ([[graft.util.SumTranches]] — sum-vector
+    * its own tagged tranche ([[graft.util.Tranches]] — sum-vector
     * AND vector-count both merge by sum, the multi-count family).
     * Ingests may split a day across tranches (unlike the
     * co-occurrence artifact there is no grouping contract — sums are
@@ -1398,14 +1398,14 @@ object SimilarityOps {
                            dir: String, tag: String,
                            scale: Long = 1000000L): Unit = {
     val d38 = DecimalType(38, 0)
-    graft.util.SumTranches.write(
+    graft.util.Tranches.write(
       df.where(col(vecCol).isNotNull)
         .select(to_date(col(tsCol)).as("__d"),
           posexplode(col(vecCol)).as(Seq("pos", "__x")))
         .select(col("__d"), col("pos"),
           (col("__x").cast(DoubleType) * lit(scale.toDouble)).try_cast(LongType).as("__u"))
         .groupBy(col("__d"), col("pos"))
-        // zero-coalesced (r19 long-sum audit): a (day, dim) group whose
+        // zero-coalesced: a (day, dim) group whose
         // components were ALL excluded sums to NULL-from-empty, which
         // is ZERO contribution by this family's documented semantics
         // ("component contributes 0, vector still counts") — it must
@@ -1418,14 +1418,14 @@ object SimilarityOps {
   /** The rolling gauge straight from the artifact — byte-identical to
     * [[centroidRollingDrift]] over the union of the ingested frames
     * (sum merge is exact), with zero vector access: the read is
-    * ≤ tranches × days × dim sum rows. `consolidate` via
-    * [[graft.util.SumTranches.maybeConsolidateMulti]] with keys
-    * `(__d, pos)`, counts `(s, c)`. */
+    * ≤ tranches × days × dim sum rows. Fold via
+    * [[graft.util.Tranches.consolidateMulti]] with keys `(__d, pos)`,
+    * counts `(s, c)`; auto-fold with [[graft.util.Tranches.maybeFold]]. */
   def centroidRollingFromIndex(spark: org.apache.spark.sql.SparkSession,
                                dir: String, windowDays: Int): DataFrame = {
     require(windowDays >= 1, "centroidRollingFromIndex: windowDays must be >= 1")
     centroidRollingFromPerDay(
-      graft.util.SumTranches.readMulti(spark, dir, Seq("__d", "pos"), Seq("s", "c")),
+      graft.util.Tranches.readMulti(spark, dir, Seq("__d", "pos"), Seq("s", "c")),
       windowDays)
   }
 

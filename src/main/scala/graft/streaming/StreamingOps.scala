@@ -46,6 +46,30 @@ object StreamingOps {
       .start()
   }
 
+  /** The micro-batch loop every tranche/index stream runs: `body`
+    * sees each epoch's rows and its id. `checkpointDir` is required —
+    * durable epoch numbering is what pins a replayed batch to the SAME
+    * tranche and the same committed decision; without it a restarted
+    * stream numbers its epochs from 0 again. */
+  private def epochLoop(name: String, rows: DataFrame, checkpointDir: String)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(checkpointDir.nonEmpty, s"$name: checkpointDir is required " +
+      "(replay idempotence relies on durable epoch numbering)")
+    rows.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .start()
+  }
+
+  /** The streams' count-triggered auto-fold after each epoch's write
+    * ([[graft.util.Tranches.maybeFold]]); `maxLive = 0` disables it.
+    * Read fan-in stays ≤ `maxLive` at every epoch boundary, across
+    * restarts and replays. */
+  private def autoFold(spark: SparkSession, dir: String, maxLive: Int)
+                      (fold: => Unit): Unit =
+    if (maxLive > 0) graft.util.Tranches.maybeFold(spark, dir, maxLive)(fold): Unit
+
   /** Event-time tumbling-window aggregation with a watermark: counts
     * and sums per (window, key); late rows beyond `lateness` dropped,
     * state bounded by the watermark (mandatory at scale — unbounded
@@ -162,25 +186,18 @@ object StreamingOps {
                          maxBucket: Int = 1000, portable: Boolean = false,
                          approx: Boolean = false,
                          maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "indexedDedupStream: checkpointDir is required " +
-      "(epoch-keyed decision reuse is only safe with durable epoch numbering)")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processIndexedDedupEpoch(batch, epoch, indexDir, outDir, idCol, textCol,
-          shingleN, threshold, maxBucket, portable, approx)
-        // count-triggered auto-fold AFTER the epoch's append: epochs
-        // are sequential here, so the consolidate-offline-relative-to-
-        // appends contract holds at this position, and the absorbed-tag
-        // ledger keeps a later replay of a folded epoch a no-op
-        if (maxLiveTranches > 0)
-          graft.dedup.DedupOps.maybeConsolidateDedupIndex(batch.sparkSession,
-            indexDir, maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("indexedDedupStream", docs, checkpointDir) { (batch, epoch) =>
+      processIndexedDedupEpoch(batch, epoch, indexDir, outDir, idCol, textCol,
+        shingleN, threshold, maxBucket, portable, approx)
+      // count-triggered auto-fold AFTER the epoch's append: epochs
+      // are sequential here, so the consolidate-offline-relative-to-
+      // appends contract holds at this position, and the absorbed-tag
+      // ledger keeps a later replay of a folded epoch a no-op
+      if (maxLiveTranches > 0)
+        graft.dedup.DedupOps.maybeConsolidateDedupIndex(batch.sparkSession,
+          indexDir, maxLiveTranches): Unit
+    }
 
   /** The once-per-epoch decision commit shared by the streaming index
     * loops: if `batchOut` already committed — the engine-owned
@@ -268,18 +285,11 @@ object StreamingOps {
                            idCol: String, textCol: String,
                            checkpointDir: String,
                            minShared: Int = 2, maxBucket: Int = 1000)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "indexedOverlapStream: checkpointDir is required " +
-      "(epoch-keyed decision reuse is only safe with durable epoch numbering)")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processIndexedOverlapEpoch(batch, epoch, indexDir, outDir, idCol, textCol,
-          minShared, maxBucket)
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("indexedOverlapStream", docs, checkpointDir) { (batch, epoch) =>
+      processIndexedOverlapEpoch(batch, epoch, indexDir, outDir, idCol, textCol,
+        minShared, maxBucket)
+    }
 
   /** One epoch of [[indexedOverlapStream]], exposed for replay-protocol
     * testing (same pattern as [[processIndexedDedupEpoch]]). */
@@ -316,18 +326,11 @@ object StreamingOps {
                           idCol: String, vecCol: String,
                           checkpointDir: String,
                           threshold: Double = 0.95, nProbe: Int = 4)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "semanticDedupStream: checkpointDir is required " +
-      "(epoch-keyed decision reuse is only safe with durable epoch numbering)")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processSemanticDedupEpoch(batch, epoch, indexDir, outDir, idCol, vecCol,
-          threshold, nProbe)
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("semanticDedupStream", docs, checkpointDir) { (batch, epoch) =>
+      processSemanticDedupEpoch(batch, epoch, indexDir, outDir, idCol, vecCol,
+        threshold, nProbe)
+    }
 
   /** One epoch of [[semanticDedupStream]], exposed for replay-protocol
     * testing (same pattern as [[processIndexedDedupEpoch]]). */
@@ -357,42 +360,28 @@ object StreamingOps {
     * stream. `checkpointDir` still required: durable epoch numbering
     * is what pins a replayed batch to the SAME tranche.
     *
-    * `consolidateEvery = n` folds the accumulated tranches into one
-    * every n epochs ([[graft.profile.Sketches.consolidateSketch]]) —
-    * without it a long-running stream grows one tranche directory per
-    * micro-batch forever and merge-on-read cost grows with epoch
-    * count. Consolidation AFTER the epoch's own tranche write keeps
-    * the replay contract: a re-delivered epoch re-writes its tranche
-    * (now redundant next to the consolidated one — register max
-    * absorbs it) and re-consolidation folds it away again.
+    * `maxLiveTranches = n` folds the accumulated tranches into one
+    * whenever more than n are live
+    * ([[graft.profile.Sketches.consolidateSketch]]) — without it a
+    * long-running stream grows one tranche directory per micro-batch
+    * forever and merge-on-read cost grows with epoch count.
+    * Consolidation AFTER the epoch's own tranche write keeps the
+    * replay contract: a re-delivered epoch re-writes its tranche (now
+    * redundant next to the consolidated one — register max absorbs
+    * it) and the next fold folds it away again.
     */
   def sketchStream(rows: DataFrame, sketchDir: String, keyCol: String,
                    checkpointDir: String,
                    b: Int = graft.profile.Sketches.DefaultB,
-                   consolidateEvery: Int = 0,
                    maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "sketchStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    require(consolidateEvery >= 0, "sketchStream: consolidateEvery must be >= 0")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.profile.Sketches.writeSketchTranche(
-          graft.profile.Sketches.hllSketch(batch, keyCol, b),
-          sketchDir, epoch.toString)
-        if (consolidateEvery > 0 && epoch > 0 && epoch % consolidateEvery == 0)
-          graft.profile.Sketches.consolidateSketch(batch.sparkSession, sketchDir)
-        // count-triggered auto-fold — the epoch-modulo trigger above
-        // skips when replayed epoch numbers never hit the modulus; the
-        // count trigger holds read fan-in ≤ maxLiveTranches regardless
-        if (maxLiveTranches > 0)
-          graft.profile.Sketches.maybeConsolidateSketch(batch.sparkSession,
-            sketchDir, maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("sketchStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.profile.Sketches.writeSketchTranche(
+        graft.profile.Sketches.hllSketch(batch, keyCol, b),
+        sketchDir, epoch.toString)
+      autoFold(batch.sparkSession, sketchDir, maxLiveTranches)(
+        graft.profile.Sketches.consolidateSketch(batch.sparkSession, sketchDir))
+    }
 
   /** STREAMING drift monitor: per micro-batch, the PSI of the batch's
     * `valCol` distribution against the at-rest histogram artifact
@@ -418,44 +407,38 @@ object StreamingOps {
                   valCol: String, checkpointDir: String,
                   absorb: Boolean = true,
                   subBuckets: Int = graft.profile.HistSketch.DefaultSubBuckets)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "driftStream: checkpointDir is required")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val hs = graft.profile.HistSketch
-        val cur = hs.histSketch(batch, valCol, subBuckets)
-        // FIRST epoch against an empty/missing artifact: there is no
-        // history to score against (SumTranches.read would throw,
-        // permanently failing the checkpointed stream on every
-        // restart — r10 advice). Seed the artifact with this batch's
-        // histogram instead and emit no gauge row (a score against
-        // pure smoothing is noise, not signal); scoring starts at the
-        // first epoch that has genuine history. With absorb = false
-        // the artifact is treated as externally owned — the epoch
-        // no-ops and the stream stays alive until someone seeds it.
-        val hasHistory = graft.util.SumTranches
-          .live(batch.sparkSession, histDir).nonEmpty
-        if (hasHistory) {
-          // the epoch rides as the batch=<epoch> partition directory
-          // (the tranche convention) — not as a data column, so
-          // partition discovery surfaces it on read without a name
-          // collision
-          val gauge = hs.histDriftPsi(cur,
-              hs.readHist(batch.sparkSession, histDir))
-            .select(org.apache.spark.sql.functions.col("n_buckets"),
-              org.apache.spark.sql.functions.col("n_b").as("n_ref"),
-              org.apache.spark.sql.functions.col("n_a").as("n_new"),
-              org.apache.spark.sql.functions.col("psi_bits"))
-          gauge.coalesce(1).write.mode("overwrite")
-            .parquet(s"$logDir/batch=$epoch")
-        }
-        if (absorb && (hasHistory || !batch.isEmpty))
-          hs.writeHistTranche(cur, histDir, epoch.toString)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("driftStream", rows, checkpointDir) { (batch, epoch) =>
+      val hs = graft.profile.HistSketch
+      val cur = hs.histSketch(batch, valCol, subBuckets)
+      // FIRST epoch against an empty/missing artifact: there is no
+      // history to score against (Tranches.read would throw,
+      // permanently failing the checkpointed stream on every
+      // restart). Seed the artifact with this batch's
+      // histogram instead and emit no gauge row (a score against
+      // pure smoothing is noise, not signal); scoring starts at the
+      // first epoch that has genuine history. With absorb = false
+      // the artifact is treated as externally owned — the epoch
+      // no-ops and the stream stays alive until someone seeds it.
+      val hasHistory = graft.util.Tranches
+        .live(batch.sparkSession, histDir).nonEmpty
+      if (hasHistory) {
+        // the epoch rides as the batch=<epoch> partition directory
+        // (the tranche convention) — not as a data column, so
+        // partition discovery surfaces it on read without a name
+        // collision
+        val gauge = hs.histDriftPsi(cur,
+            hs.readHist(batch.sparkSession, histDir))
+          .select(org.apache.spark.sql.functions.col("n_buckets"),
+            org.apache.spark.sql.functions.col("n_b").as("n_ref"),
+            org.apache.spark.sql.functions.col("n_a").as("n_new"),
+            org.apache.spark.sql.functions.col("psi_bits"))
+        gauge.coalesce(1).write.mode("overwrite")
+          .parquet(s"$logDir/batch=$epoch")
       }
-      .start()
-  }
+      if (absorb && (hasHistory || !batch.isEmpty))
+        hs.writeHistTranche(cur, histDir, epoch.toString)
+    }
 
   /** Merge-on-read of a [[driftStream]] log: one row per scored epoch. */
   def readDriftLog(spark: org.apache.spark.sql.SparkSession,
@@ -477,17 +460,11 @@ object StreamingOps {
   def groupIndexStream(edges: DataFrame, indexDir: String,
                        srcCol: String, dstCol: String,
                        checkpointDir: String)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "groupIndexStream: checkpointDir is required")
-    edges.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.graph.GraphOps.updateGroupIndex(
-          batch.sparkSession, indexDir, batch, srcCol, dstCol): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("groupIndexStream", edges, checkpointDir) { (batch, _) =>
+      graft.graph.GraphOps.updateGroupIndex(
+        batch.sparkSession, indexDir, batch, srcCol, dstCol): Unit
+    }
 
   /** Streaming maintenance of an at-rest QUANTILE-HISTOGRAM artifact
     * ([[graft.profile.HistSketch]]): each epoch reduces its micro-batch
@@ -501,31 +478,15 @@ object StreamingOps {
   def histStream(rows: DataFrame, histDir: String, valCol: String,
                  checkpointDir: String,
                  subBuckets: Int = graft.profile.HistSketch.DefaultSubBuckets,
-                 consolidateEvery: Int = 0,
                  maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "histStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    require(consolidateEvery >= 0, "histStream: consolidateEvery must be >= 0")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.profile.HistSketch.writeHistTranche(
-          graft.profile.HistSketch.histSketch(batch, valCol, subBuckets),
-          histDir, epoch.toString)
-        if (consolidateEvery > 0 && epoch > 0 && epoch % consolidateEvery == 0)
-          graft.profile.HistSketch.consolidateHist(batch.sparkSession, histDir)
-        // count-triggered auto-fold: read fan-in stays ≤ maxLiveTranches
-        // at every epoch boundary even across restarts/replays (the
-        // epoch-modulo trigger skips when a replayed epoch number
-        // doesn't hit the modulus)
-        if (maxLiveTranches > 0)
-          graft.util.SumTranches.maybeConsolidate(batch.sparkSession,
-            histDir, Seq("bucket"), "cnt", maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("histStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.profile.HistSketch.writeHistTranche(
+        graft.profile.HistSketch.histSketch(batch, valCol, subBuckets),
+        histDir, epoch.toString)
+      autoFold(batch.sparkSession, histDir, maxLiveTranches)(
+        graft.profile.HistSketch.consolidateHist(batch.sparkSession, histDir))
+    }
 
   /** Streaming maintenance of the at-rest DAY-KEYED HLL artifact
     * ([[graft.profile.Sketches.writeDayHllTranche]]) — the
@@ -537,21 +498,13 @@ object StreamingOps {
                    tsCol: String, checkpointDir: String,
                    b: Int = graft.profile.Sketches.DefaultB,
                    maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "dayHllStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.profile.Sketches.writeDayHllTranche(
-          batch, keyCol, tsCol, dir, epoch.toString, b)
-        if (maxLiveTranches > 0)
-          graft.profile.Sketches.maybeConsolidateDayHll(batch.sparkSession,
-            dir, maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("dayHllStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.profile.Sketches.writeDayHllTranche(
+        batch, keyCol, tsCol, dir, epoch.toString, b)
+      autoFold(batch.sparkSession, dir, maxLiveTranches)(
+        graft.profile.Sketches.consolidateDayHll(batch.sparkSession, dir))
+    }
 
   /** STREAMING provably-new gate over the at-rest bloom index
     * ([[graft.relational.BloomIndex]]): per epoch, the batch rows
@@ -572,33 +525,23 @@ object StreamingOps {
                   mBits: Long = 1L << 20, k: Int = 3,
                   portable: Boolean = false,
                   maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "bloomStream: checkpointDir is required " +
-      "(decision idempotence relies on durable epoch numbering)")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val bi = graft.relational.BloomIndex
-        val exists = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(indexDir, "_graft_bloom_meta"))
-        decideEpochOnce(spark, s"$outDir/batch=$epoch") {
-          // first epoch births the index: everything is provably new
-          (if (exists) bi.pruneAgainstBloomIndex(batch, indexDir, keyCol)
-           else batch, () => ())
-        }
-        bi.writeBloomTranche(batch, keyCol, indexDir, s"e$epoch",
-          mBits, k, portable)
-        // count-triggered auto-fold (OR algebra: safe at any moment,
-        // no manifest) — probe fan-in stays ≤ maxLiveTranches at every
-        // epoch boundary even across restarts/replays
-        if (maxLiveTranches > 0)
-          bi.maybeConsolidateBloom(spark, indexDir, maxLiveTranches): Unit
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("bloomStream", rows, checkpointDir) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      val bi = graft.relational.BloomIndex
+      val exists = new org.apache.hadoop.fs.Path(indexDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new org.apache.hadoop.fs.Path(indexDir, "_graft_bloom_meta"))
+      decideEpochOnce(spark, s"$outDir/batch=$epoch") {
+        // first epoch births the index: everything is provably new
+        (if (exists) bi.pruneAgainstBloomIndex(batch, indexDir, keyCol)
+         else batch, () => ())
       }
-      .start()
-  }
+      bi.writeBloomTranche(batch, keyCol, indexDir, s"e$epoch",
+        mBits, k, portable)
+      // OR algebra: the fold is safe at any moment, no manifest
+      autoFold(spark, indexDir, maxLiveTranches)(bi.consolidateBloom(spark, indexDir))
+    }
 
   /** STREAMING perceptual image dedup against the at-rest hash index
     * ([[graft.multimodal.MultimodalOps.imageDedupAgainstIndex]]): per
@@ -615,36 +558,29 @@ object StreamingOps {
                        checkpointDir: String,
                        maxHamming: Int = 6, bands: Int = 8,
                        maxBucket: Int = 10000, maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "imageDedupStream: checkpointDir is required " +
-      "(decision idempotence relies on durable epoch numbering)")
-    media.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        val mm = graft.multimodal.MultimodalOps
-        val exists = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(indexDir))
-        decideEpochOnce(spark, s"$outDir/batch=$epoch") {
-          // first epoch births the index: everything survives, hash
-          // attached so the sink schema matches later epochs
-          if (exists) mm.imageDedupAgainstIndexReleasable(spark, batch,
-            indexDir, maxHamming, bands, maxBucket)
-          else (batch.join(
-            mm.imageDHash(spark, batch.select(org.apache.spark.sql.functions
-              .col("media_id"), org.apache.spark.sql.functions.col("content"))).toDF()
-              .select(org.apache.spark.sql.functions.col("media_id"),
-                org.apache.spark.sql.functions.col("dhash")),
-            Seq("media_id")), () => ())
-        }
-        mm.writeImageHashTranche(spark, batch, indexDir, s"e$epoch")
-        if (maxLiveTranches > 0)
-          mm.maybeConsolidateImageHashIndex(spark, indexDir, maxLiveTranches): Unit
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("imageDedupStream", media, checkpointDir) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      val mm = graft.multimodal.MultimodalOps
+      val exists = new org.apache.hadoop.fs.Path(indexDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new org.apache.hadoop.fs.Path(indexDir))
+      decideEpochOnce(spark, s"$outDir/batch=$epoch") {
+        // first epoch births the index: everything survives, hash
+        // attached so the sink schema matches later epochs
+        if (exists) mm.imageDedupAgainstIndexReleasable(spark, batch,
+          indexDir, maxHamming, bands, maxBucket)
+        else (batch.join(
+          mm.imageDHash(spark, batch.select(org.apache.spark.sql.functions
+            .col("media_id"), org.apache.spark.sql.functions.col("content"))).toDF()
+            .select(org.apache.spark.sql.functions.col("media_id"),
+              org.apache.spark.sql.functions.col("dhash")),
+          Seq("media_id")), () => ())
       }
-      .start()
-  }
+      mm.writeImageHashTranche(spark, batch, indexDir, s"e$epoch")
+      autoFold(spark, indexDir, maxLiveTranches)(
+        mm.consolidateImageHashIndex(spark, indexDir))
+    }
 
   /** STREAMING decontamination gate: each micro-batch of documents is
     * scored against the at-rest benchmark-shingle bloom
@@ -662,18 +598,11 @@ object StreamingOps {
   def decontamStream(docs: DataFrame, bloomDir: String, benchmark: DataFrame,
                      outDir: String, idCol: String, textCol: String,
                      checkpointDir: String, shingleN: Int = 8)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "decontamStream: checkpointDir is required " +
-      "(sink idempotence relies on durable epoch numbering)")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processDecontamEpoch(batch, epoch, bloomDir, benchmark, outDir,
-          idCol, textCol, shingleN)
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("decontamStream", docs, checkpointDir) { (batch, epoch) =>
+      processDecontamEpoch(batch, epoch, bloomDir, benchmark, outDir,
+        idCol, textCol, shingleN)
+    }
 
   /** One epoch of [[decontamStream]], exposed so the streamed≡batch
     * differential can replay arbitrary batch layouts deterministically
@@ -710,16 +639,10 @@ object StreamingOps {
   def scd2Stream(rows: DataFrame, dimDir: String, keys: Seq[String],
                  tsCol: String, checkpointDir: String,
                  compareCols: Seq[String] = Nil)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "scd2Stream: checkpointDir is required")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processScd2Epoch(batch, dimDir, keys, tsCol, compareCols)
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("scd2Stream", rows, checkpointDir) { (batch, _) =>
+      processScd2Epoch(batch, dimDir, keys, tsCol, compareCols)
+    }
 
   /** One epoch of [[scd2Stream]], exposed so the streamed≡batch
     * differential can replay arbitrary batch layouts deterministically
@@ -751,21 +674,13 @@ object StreamingOps {
                     tsCol: String, checkpointDir: String,
                     subBuckets: Int = graft.profile.HistSketch.DefaultSubBuckets,
                     maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "dayHistStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.profile.HistSketch.writeDayHistTranche(
-          batch, valCol, tsCol, histDir, epoch.toString, subBuckets)
-        if (maxLiveTranches > 0)
-          graft.util.SumTranches.maybeConsolidate(batch.sparkSession,
-            histDir, Seq("__d", "bucket"), "cnt", maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("dayHistStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.profile.HistSketch.writeDayHistTranche(
+        batch, valCol, tsCol, histDir, epoch.toString, subBuckets)
+      autoFold(batch.sparkSession, histDir, maxLiveTranches)(
+        graft.profile.HistSketch.consolidateDayHist(batch.sparkSession, histDir))
+    }
 
   /** Streaming maintenance of the at-rest DAY-KEYED mix artifact
     * ([[graft.text.TextOps.writeDayMixTranche]]) — same protocol as
@@ -774,45 +689,30 @@ object StreamingOps {
   def dayMixStream(rows: DataFrame, dir: String, keyCol: String,
                    tsCol: String, checkpointDir: String,
                    maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "dayMixStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.text.TextOps.writeDayMixTranche(
-          batch, keyCol, tsCol, dir, epoch.toString)
-        if (maxLiveTranches > 0)
-          graft.util.SumTranches.maybeConsolidate(batch.sparkSession,
-            dir, Seq("__d", "k"), "cnt", maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("dayMixStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.text.TextOps.writeDayMixTranche(
+        batch, keyCol, tsCol, dir, epoch.toString)
+      autoFold(batch.sparkSession, dir, maxLiveTranches)(
+        graft.util.Tranches.consolidate(batch.sparkSession, dir, Seq("__d", "k"), "cnt"))
+    }
 
   /** Streaming maintenance of the at-rest per-day CENTROID artifact
     * ([[graft.similarity.SimilarityOps.writeCentroidTranche]]) — the
     * embedding member of the day-keyed family; the rolling centroid
     * gauge reads dim-sized sum rows, never vectors. Multi-count fold
-    * via `maybeConsolidateMulti` (sum-vector + count). */
+    * via `Tranches.consolidateMulti` (sum-vector + count). */
   def centroidStream(rows: DataFrame, dir: String, vecCol: String,
                      tsCol: String, checkpointDir: String,
                      scale: Long = 1000000L, maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "centroidStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.similarity.SimilarityOps.writeCentroidTranche(
-          batch, vecCol, tsCol, dir, epoch.toString, scale)
-        if (maxLiveTranches > 0)
-          graft.util.SumTranches.maybeConsolidateMulti(batch.sparkSession,
-            dir, Seq("__d", "pos"), Seq("s", "c"), maxLiveTranches): Unit
-      }
-      .start()
-  }
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("centroidStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.similarity.SimilarityOps.writeCentroidTranche(
+        batch, vecCol, tsCol, dir, epoch.toString, scale)
+      autoFold(batch.sparkSession, dir, maxLiveTranches)(
+        graft.util.Tranches.consolidateMulti(batch.sparkSession, dir,
+          Seq("__d", "pos"), Seq("s", "c")))
+    }
 
   /** Streaming maintenance of the at-rest CO-OCCURRENCE index
     * ([[graft.graph.GraphOps.writeCoocTranche]]): each epoch projects
@@ -823,30 +723,20 @@ object StreamingOps {
     * artifact): every group must arrive WHOLLY inside one micro-batch
     * — feed this closed sessions / completed orders, not raw clicks;
     * a group split across epochs loses its cross-epoch pairs.
-    * `consolidateEvery = n` folds each family every n epochs.
+    * `maxLiveTranches = n` folds each family once it holds more than n
+    * live tranches.
     */
   def coocStream(rows: DataFrame, indexDir: String, groupCol: String,
                  itemCol: String, checkpointDir: String,
-                 maxPerGroup: Int = 64, consolidateEvery: Int = 0,
-                 maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "coocStream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    require(consolidateEvery >= 0, "coocStream: consolidateEvery must be >= 0")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.graph.GraphOps.writeCoocTranche(
-          batch, groupCol, itemCol, indexDir, epoch.toString, maxPerGroup)
-        if (consolidateEvery > 0 && epoch > 0 && epoch % consolidateEvery == 0)
-          graft.graph.GraphOps.consolidateCooc(batch.sparkSession, indexDir)
-        if (maxLiveTranches > 0)
-          graft.graph.GraphOps.maybeConsolidateCooc(batch.sparkSession,
-            indexDir, maxLiveTranches): Unit
-      }
-      .start()
-  }
+                 maxPerGroup: Int = 64, maxLiveTranches: Int = 0)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("coocStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.graph.GraphOps.writeCoocTranche(
+        batch, groupCol, itemCol, indexDir, epoch.toString, maxPerGroup)
+      if (maxLiveTranches > 0)
+        graft.graph.GraphOps.maybeConsolidateCooc(batch.sparkSession,
+          indexDir, maxLiveTranches): Unit
+    }
 
   /** Streaming maintenance of the at-rest anomaly-stats artifact
     * ([[graft.analytics.AnomalyOps.statsSketch]]): each micro-batch's
@@ -857,32 +747,20 @@ object StreamingOps {
     * the histogram/co-occurrence/CM streams). The stream keeps ZERO
     * state: "flag a reading against everything ever seen" is a
     * reader-side [[graft.analytics.AnomalyOps.sigmaFlagsAgainstStats]]
-    * against the artifact, not stream state. `consolidateEvery` folds
+    * against the artifact, not stream state. `maxLiveTranches` folds
     * in-loop so a long-lived stream's merge-on-read stays bounded.
     */
   def sigmaStatsStream(rows: DataFrame, indexDir: String, keyCol: String,
                        valueCol: String, checkpointDir: String,
-                       decimals: Int = 4, consolidateEvery: Int = 0,
-                       maxLiveTranches: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "sigmaStatsStream: checkpointDir is " +
-      "required (tranche idempotence relies on durable epoch numbering)")
-    require(consolidateEvery >= 0, "sigmaStatsStream: consolidateEvery must be >= 0")
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.analytics.AnomalyOps.writeStatsTranche(
-          graft.analytics.AnomalyOps.statsSketch(batch, keyCol, valueCol, decimals),
-          indexDir, epoch.toString)
-        if (consolidateEvery > 0 && epoch > 0 && epoch % consolidateEvery == 0)
-          graft.analytics.AnomalyOps.consolidateStats(batch.sparkSession, indexDir, keyCol)
-        if (maxLiveTranches > 0)
-          graft.util.SumTranches.maybeConsolidate(batch.sparkSession,
-            indexDir, Seq(keyCol, "stat"), "val", maxLiveTranches): Unit
-      }
-      .start()
-  }
+                       decimals: Int = 4, maxLiveTranches: Int = 0)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("sigmaStatsStream", rows, checkpointDir) { (batch, epoch) =>
+      graft.analytics.AnomalyOps.writeStatsTranche(
+        graft.analytics.AnomalyOps.statsSketch(batch, keyCol, valueCol, decimals),
+        indexDir, epoch.toString)
+      autoFold(batch.sparkSession, indexDir, maxLiveTranches)(
+        graft.analytics.AnomalyOps.consolidateStats(batch.sparkSession, indexDir, keyCol))
+    }
 
   /** Streaming maintenance of the at-rest BM25 postings index
     * ([[graft.text.RetrievalOps.bm25WriteIndex]] must have built the
@@ -892,26 +770,24 @@ object StreamingOps {
     * after an in-loop consolidation no-ops instead of resurrecting
     * folded postings. Docs must be epoch-disjoint (the per-doc tranche
     * contract). Probes stay partition-pruned reader-side queries —
-    * the stream holds no state.
+    * the stream holds no state. `maxLiveTranches = n` folds the index
+    * ([[graft.text.RetrievalOps.bm25ConsolidateIndex]]) once its
+    * postings hold more than n live tranches.
     */
   def bm25Stream(docs: DataFrame, indexDir: String, idCol: String,
                  textCol: String, checkpointDir: String,
-                 consolidateEvery: Int = 0)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checkpointDir.nonEmpty, "bm25Stream: checkpointDir is required " +
-      "(tranche idempotence relies on durable epoch numbering)")
-    require(consolidateEvery >= 0, "bm25Stream: consolidateEvery must be >= 0")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.text.RetrievalOps.bm25AppendToIndex(
-          batch, indexDir, idCol, textCol, s"e$epoch")
-        if (consolidateEvery > 0 && epoch > 0 && epoch % consolidateEvery == 0)
-          graft.text.RetrievalOps.bm25ConsolidateIndex(batch.sparkSession, indexDir)
+                 maxLiveTranches: Int = 0)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    epochLoop("bm25Stream", docs, checkpointDir) { (batch, epoch) =>
+      graft.text.RetrievalOps.bm25AppendToIndex(
+        batch, indexDir, idCol, textCol, s"e$epoch")
+      if (maxLiveTranches > 0) {
+        val spark = batch.sparkSession
+        graft.util.Tranches.maybeFold(spark,
+          s"${graft.merge.Merge.resolveDir(spark, indexDir)}/postings", maxLiveTranches)(
+          graft.text.RetrievalOps.bm25ConsolidateIndex(spark, indexDir)): Unit
       }
-      .start()
-  }
+    }
 
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   final case class SessionState(n: Long, sum: Double, start: Long, last: Long)

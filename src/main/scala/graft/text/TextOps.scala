@@ -42,8 +42,7 @@ object TextOps {
     * what an empty doc deserves. The guards exist because under ANSI
     * mode (Spark 4's default) EVERY numeric division by zero THROWS —
     * double included — so one empty string would otherwise kill the
-    * whole quality job (r19 ANSI division audit: the r18 cast find's
-    * division-shaped sibling, found by measurement).
+    * whole quality job.
     */
   def qualityScore(df: DataFrame, textCol: String): DataFrame = {
     val t = col(textCol)
@@ -250,7 +249,7 @@ object TextOps {
     // max(1): an all-empty corpus yields ZERO rows (empty output is
     // already correct) but l8(lit(0)) is a CONSTANT — log10(0) = -Inf,
     // whose long cast ANSI-throws at constant-folding time, crashing a
-    // job whose right answer is "no rows" (r19 ANSI division audit)
+    // job whose right answer is "no rows"
     val n = math.max(terms.count(), 1L) // bounded scalar, like the tfidf N
     def l8(e: Column): Column =
       floor(log10(e.cast(DoubleType)) * lit(1e8) + lit(0.5)).cast(LongType)
@@ -317,7 +316,7 @@ object TextOps {
     // a token-less REFERENCE corpus is a misconfiguration, not a
     // scorable state (every doc would be "OOV against nothing") —
     // and l8(lit(0)) would ANSI-throw at constant folding anyway;
-    // fail with a named cause instead (r19 ANSI division audit)
+    // fail with a named cause instead
     require(n > 0, "bigramLogProbBackoff: training corpus has no tokens")
     withPrev(toks(score))
       .join(uni, Seq("term"), "left")
@@ -469,16 +468,17 @@ object TextOps {
     * monitor then reads counts, never events. */
   def writeDayMixTranche(df: DataFrame, keyCol: String, tsCol: String,
                          dir: String, tag: String): Unit =
-    graft.util.SumTranches.write(dayMix(df, keyCol, tsCol), dir, tag)
+    graft.util.Tranches.write(dayMix(df, keyCol, tsCol), dir, tag)
 
   /** Merge-on-read of the day-keyed mix artifact. */
   def readDayMix(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.util.SumTranches.read(spark, dir, Seq("__d", "k"), "cnt")
+    graft.util.Tranches.read(spark, dir, Seq("__d", "k"), "cnt")
 
   /** Rolling JS straight from the artifact — byte-identical to
     * [[jsRollingDivergence]] over the union of the ingested frames
     * (per-(day, key) sum merge is exact), zero event access; fold via
-    * `SumTranches.maybeConsolidate(dir, Seq("__d","k"), "cnt", n)`. */
+    * `Tranches.maybeFold(spark, dir, n)(Tranches.consolidate(spark, dir,
+    * Seq("__d","k"), "cnt"))`. */
   def jsRollingFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                          windowDays: Int): DataFrame = {
     require(windowDays >= 1, "jsRollingFromIndex: windowDays must be >= 1")

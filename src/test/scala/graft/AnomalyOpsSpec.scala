@@ -91,8 +91,8 @@ class AnomalyOpsSpec extends SparkSpec {
     val dir = tempDir("graft_sigma_meta")
     val d1 = Seq(("g", 10.0), ("g", 11.0)).toDF("grp", "value")
     // a PRE-FIX artifact: tranches written without the marker (the
-    // r16-and-earlier layout) must refuse to merge-read
-    graft.util.SumTranches.write(AnomalyOps.statsSketch(d1, "grp", "value"), dir, "legacy")
+    // count-every-row layout) must refuse to merge-read
+    graft.util.Tranches.write(AnomalyOps.statsSketch(d1, "grp", "value"), dir, "legacy")
     val e = intercept[IllegalArgumentException] {
       AnomalyOps.readStats(spark, dir, "grp").collect()
     }
@@ -113,7 +113,7 @@ class AnomalyOpsSpec extends SparkSpec {
       AnomalyOps.readStats(spark, tempDir("graft_sigma_meta3"), "grp")
     }
     assert(e2.getMessage.contains("no live tranches"), e2.getMessage)
-    // crash ordering (r17 ADVICE #2): the marker lands BEFORE the
+    // crash ordering: the marker lands BEFORE the
     // tranche, so a write that dies mid-tranche leaves "marker, zero
     // tranches" — a valid state — never "tranche, no marker" (which
     // would fail-fast a provably post-fix artifact into the manual
@@ -127,7 +127,7 @@ class AnomalyOpsSpec extends SparkSpec {
     intercept[Throwable] { AnomalyOps.writeStatsTranche(poison, dir4, "t0") }
     assert(graft.util.Fs.pathExists(spark, s"$dir4/${AnomalyOps.StatsMetaName}"),
       "marker must precede the tranche write")
-    assert(graft.util.SumTranches.live(spark, dir4).isEmpty)
+    assert(graft.util.Tranches.live(spark, dir4).isEmpty)
   }
 
   test("rollingSigmaFlags: level shift flags on arrival; current row outside its baseline") {

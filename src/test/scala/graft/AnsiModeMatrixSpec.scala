@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The ANSI mode matrix (r18 verdict #4): every operator that snaps or
+/** The ANSI mode matrix: every operator that snaps or
   * casts a USER value documents mode-INDEPENDENT semantics — `try_cast`
-  * exclusion where a wild reading must not kill the job (the r18
-  * AnomalyOps find, swept engine-wide in r19), a documented loud THROW
+  * exclusion where a wild reading must not kill the job, a documented
+  * loud THROW
   * where silent exclusion would corrupt identity or position. This
   * suite pins the matrix: each exclusion-family operator runs on
   * wild-magnitude inputs (±9.9e15, ±1e11, NaN) under
@@ -186,7 +186,7 @@ class AnsiModeMatrixSpec extends SparkSpec {
   }
 
   test("qualityScore: empty/whitespace docs get NULL metrics, never a job kill; both modes identical") {
-    // the r19 DIVISION sibling of the cast class: under ANSI every
+    // the DIVISION sibling of the cast class: under ANSI every
     // numeric division by zero throws (double included — measured), so
     // one empty string used to kill the whole quality job
     val df = Seq((1L, "a solid little document with the usual words in it"),
@@ -242,8 +242,8 @@ class AnsiModeMatrixSpec extends SparkSpec {
     modeInvariant("applySchema")(graft.schema.SchemaOps.applySchema(df, schema))
   }
 
-  // ── r19 long-sum audit: the third member of the ANSI sibling class.
-  // S was a LONG-typed sum that wrapped silently at Σ|u| > 9.2e18
+  // ── long sums: the third member of the ANSI sibling class.
+  // A LONG-typed S wraps silently at Σ|u| > 9.2e18
   // (legacy: arbitrary wrong flags; ANSI: a killed job) — ~10^19
   // inside the envelope the scaladoc promised. The corridor case pins
   // S-exactness beyond the old wrap point with REAL flags; the breach
@@ -283,7 +283,7 @@ class AnsiModeMatrixSpec extends SparkSpec {
       .find(_.getString(1) == "s").get.getDecimal(2))
     assert(BigInt(sVal.toBigInteger) == sB, s"S: $sVal vs $sB")
 
-    // WINDOW path: its S is a checked LONG sum (the r19 trade — see
+    // WINDOW path: its S is a checked LONG sum (the window trade — see
     // rollingSigmaFlags' doc), so frames with Σ|u| ≤ 9.2e18 compute
     // REAL model-equal flags right up to the edge, and frames beyond
     // it yield NULL verdicts in both modes — where the old plain long
@@ -413,7 +413,7 @@ class AnsiModeMatrixSpec extends SparkSpec {
     // range), so that (day, dim) group's sum is NULL-from-empty —
     // zero contribution by the family's documented semantics. The
     // writer must coalesce it to 0 so the merge's breach-poisoning
-    // (SumTranches.readMulti) never fires on it, and the
+    // (Tranches.readMulti) never fires on it, and the
     // from-index gauge must equal the inline gauge.
     import graft.similarity.SimilarityOps
     val dir = tempDir("ansi-centroid-empty") + "/idx"
@@ -425,7 +425,7 @@ class AnsiModeMatrixSpec extends SparkSpec {
       "embedding", "ts", dir, "t1")
     SimilarityOps.writeCentroidTranche(day2.toDF("ts", "embedding"),
       "embedding", "ts", dir, "t2")
-    val merged = graft.util.SumTranches.readMulti(
+    val merged = graft.util.Tranches.readMulti(
       spark, dir, Seq("__d", "pos"), Seq("s", "c")).collect()
       .map(r => (r.getDate(0).toString, r.getInt(1)) ->
         (Option(r.getDecimal(2)).map(_.toBigInteger.longValueExact()),

@@ -562,7 +562,7 @@ class HistSketchSpec extends SparkSpec {
   }
 
   test("maybeConsolidate: fan-in stays ≤ maxLive under a 3N-tranche ingest, answers unchanged") {
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val dir = tempDir("graft_autofold")
     try {
       val N = 3
@@ -570,10 +570,10 @@ class HistSketchSpec extends SparkSpec {
       chunks.zipWithIndex.foreach { case (vals, i) =>
         HistSketch.writeHistTranche(
           HistSketch.histSketch(vals.toDF("v"), "v"), dir, s"t$i")
-        SumTranches.maybeConsolidate(spark, dir, Seq("bucket"), "cnt", maxLive = N)
+        Tranches.maybeFold(spark, dir, maxLive = N)(HistSketch.consolidateHist(spark, dir))
         // the invariant at every tick boundary — this is what keeps a
         // year of unattended daily ingest readable
-        assert(SumTranches.live(spark, dir).length <= N, s"after tranche $i")
+        assert(Tranches.live(spark, dir).length <= N, s"after tranche $i")
       }
       val want = HistSketch.histSketch(chunks.flatten.toDF("v"), "v")
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -581,56 +581,57 @@ class HistSketchSpec extends SparkSpec {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       assert(got == want)
       // below-threshold ticks are free: no fold happens at ≤ maxLive
-      assert(!SumTranches.maybeConsolidate(spark, dir, Seq("bucket"), "cnt", maxLive = N))
+      assert(!Tranches.maybeFold(spark, dir, maxLive = N)(
+        HistSketch.consolidateHist(spark, dir)))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("SumTranches: superseding manifests are transitive across fold chains — a replayed absorbed tag never double-counts (r14 ADVICE #1)") {
-    import graft.util.SumTranches
+  test("Tranches: superseding manifests are transitive across fold chains — a replayed absorbed tag never double-counts") {
+    import graft.util.Tranches
     import graft.merge.Merge
     for (commit <- Seq(Merge.RenameCommit, Merge.PointerCommit)) {
       val dir = java.nio.file.Paths.get(tempDir("graft_sumreplay"))
         .toString + "/art"
       try {
         def w(tag: String, c: Long): Unit =
-          SumTranches.write(Seq(("a", c)).toDF("k", "cnt"), dir, tag, commit)
-        def total: Long = SumTranches.read(spark, dir, Seq("k"), "cnt")
+          Tranches.write(Seq(("a", c)).toDF("k", "cnt"), dir, tag, commit)
+        def total: Long = Tranches.read(spark, dir, Seq("k"), "cnt")
           .collect().map(_.getLong(1)).sum
         w("t0", 1); w("t1", 2)
-        SumTranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
+        Tranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
         w("t2", 4)
         // SECOND fold: t0/t1 were absorbed a fold ago — their names must
         // carry forward through the chain, not just one manifest deep
-        SumTranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
+        Tranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
         assert(total == 7, s"$commit: folded total")
         w("t0", 1) // replayed ingest of a first-fold tag
         assert(total == 7, s"$commit: replay of an absorbed tag must stay superseded")
-        assert(SumTranches.live(spark, dir).length == 1, s"$commit: replay not live")
+        assert(Tranches.live(spark, dir).length == 1, s"$commit: replay not live")
         w("t3", 8) // a genuinely new tag still lands live
         assert(total == 15, s"$commit: fresh ingest visible")
         // third fold in the chain: answer stable, replays of BOTH early
         // generations still superseded
-        SumTranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
+        Tranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
         w("t1", 2)
         assert(total == 15, s"$commit: three-fold chain still converges")
         // mode guard: a rename fold of a pointer artifact refuses (it
         // would run the rename protocol inside the current generation)
         if (commit == Merge.PointerCommit)
           intercept[IllegalArgumentException] {
-            SumTranches.consolidate(spark, dir, Seq("k"), "cnt")
+            Tranches.consolidate(spark, dir, Seq("k"), "cnt")
           }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(dir).getParentFile)
     }
   }
 
-  test("SumTranches property: random write/replay/fold sequences converge to the fold-time model (both commit modes)") {
+  test("Tranches property: random write/replay/fold sequences converge to the fold-time model (both commit modes)") {
     // model of the replay-converge contract: a live tag's value is its
     // LAST write; a fold freezes every live tag's value-at-fold into
     // the consolidated sum; any later write of a folded tag is a
     // replay and must be INVISIBLE (the transitive manifest) —
     // whatever order writes, replays, and folds interleave in
-    import graft.util.SumTranches
+    import graft.util.Tranches
     import graft.merge.Merge
     for (commit <- Seq(Merge.RenameCommit, Merge.PointerCommit); seed <- Seq(11, 42)) {
       val rnd = new scala.util.Random(seed)
@@ -642,7 +643,7 @@ class HistSketchSpec extends SparkSpec {
         var foldedTags = Set.empty[String]
         var hasConsolidated = false // engine keeps ONE consolidated tranche after a real fold
         def expected = foldedSum + liveVals.values.sum
-        def engineTotal: Long = SumTranches.read(spark, dir, Seq("k"), "cnt")
+        def engineTotal: Long = Tranches.read(spark, dir, Seq("k"), "cnt")
           .collect().map(_.getLong(1)).sum
         // first op must be a write (read/consolidate need a born artifact)
         var nWrites = 0
@@ -655,10 +656,10 @@ class HistSketchSpec extends SparkSpec {
                 all(rnd.nextInt(all.size))
               } else { nWrites += 1; s"t$nWrites" }
               val c = rnd.nextInt(100).toLong + 1
-              SumTranches.write(Seq(("a", c)).toDF("k", "cnt"), dir, tag, commit)
+              Tranches.write(Seq(("a", c)).toDF("k", "cnt"), dir, tag, commit)
               if (!foldedTags.contains(tag)) liveVals += tag -> c // replay of folded: invisible
             case 2 =>
-              SumTranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
+              Tranches.consolidate(spark, dir, Seq("k"), "cnt", commit)
               // the engine no-ops a fold of <= 1 live tranches — a
               // lone live tag stays REPLAY-OVERWRITABLE, so the model
               // must not mark it folded
@@ -731,7 +732,7 @@ class HistSketchSpec extends SparkSpec {
   }
 
   test("day-keyed hist artifact: both rolling gauges from tranches ≡ inline, day-split safe") {
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val dir = tempDir("graft_dayhist")
     try {
       def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-0$day%d 10:00:00")
@@ -754,7 +755,7 @@ class HistSketchSpec extends SparkSpec {
       // replayed ingest overwrites its own tranche; fold preserves both
       HistSketch.writeDayHistTranche(df.where(col("i") % 2 === 1), "v", "ts", dir, "t1")
       HistSketch.consolidateDayHist(spark, dir)
-      assert(SumTranches.live(spark, dir).length == 1)
+      assert(Tranches.live(spark, dir).length == 1)
       sameRows(
         HistSketch.histRollingPsiFromIndex(spark, dir, 2),
         HistSketch.histRollingPsi(df, "v", "ts", 2))

@@ -298,7 +298,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("day-keyed mix artifact: rolling JS from tranches ≡ inline, day-split safe") {
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val dir = tempDir("graft_daymix")
     try {
       def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-0$day%d 10:00:00")
@@ -314,8 +314,8 @@ class LlmOpsSpec extends SparkSpec {
         TextOps.jsRollingDivergence(df, "k", "ts", 2))
       // replay + fold preserve the gauge
       TextOps.writeDayMixTranche(df.where(col("i") % 2 === 1), "k", "ts", dir, "t1")
-      SumTranches.consolidate(spark, dir, Seq("__d", "k"), "cnt")
-      assert(SumTranches.live(spark, dir).length == 1)
+      Tranches.consolidate(spark, dir, Seq("__d", "k"), "cnt")
+      assert(Tranches.live(spark, dir).length == 1)
       assertSameRows(
         TextOps.jsRollingFromIndex(spark, dir, 2),
         TextOps.jsRollingDivergence(df, "k", "ts", 2))
@@ -1728,8 +1728,9 @@ class LlmOpsSpec extends SparkSpec {
     MultimodalOps.writeImageHashTranche(spark, batch, dir, "day1")
     val before = MultimodalOps.readImageHashes(spark, dir)
       .as[(Long, Long)].collect().toSet
-    assert(!MultimodalOps.maybeConsolidateImageHashIndex(spark, dir, 2)) // 2 ≤ 2
-    assert(MultimodalOps.maybeConsolidateImageHashIndex(spark, dir, 1))  // 2 > 1
+    def fold = MultimodalOps.consolidateImageHashIndex(spark, dir)
+    assert(!graft.util.Tranches.maybeFold(spark, dir, 2)(fold)) // 2 ≤ 2
+    assert(graft.util.Tranches.maybeFold(spark, dir, 1)(fold))  // 2 > 1
     assert(MultimodalOps.readImageHashes(spark, dir)
       .as[(Long, Long)].collect().toSet == before)
     // post-fold probe stays exact: near copies of BOTH generations drop

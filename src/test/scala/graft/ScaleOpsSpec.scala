@@ -114,7 +114,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("centroidRollingDrift: trailing-window reference, artifact tranches ≡ inline, auto-fold") {
-    import graft.util.SumTranches
+    import graft.util.Tranches
     // four ingest days with distinct directions; window = 2 days
     def day(d: Int, vs: Seq[Seq[Float]]): Seq[(String, Seq[Float])] =
       vs.map(v => (f"2024-03-0$d%d 12:00:00", v))
@@ -166,9 +166,9 @@ class ScaleOpsSpec extends SparkSpec {
       for (i <- 3 to 5) {
         SimilarityOps.writeCentroidTranche(h2.where(lit(false)), "embedding", "ts",
           dir, s"t$i")
-        SumTranches.maybeConsolidateMulti(spark, dir, Seq("__d", "pos"),
-          Seq("s", "c"), maxLive = 2)
-        assert(SumTranches.live(spark, dir).length <= 2, s"tick $i")
+        Tranches.maybeFold(spark, dir, maxLive = 2)(
+          Tranches.consolidateMulti(spark, dir, Seq("__d", "pos"), Seq("s", "c")))
+        assert(Tranches.live(spark, dir).length <= 2, s"tick $i")
       }
       assertSameRows(
         SimilarityOps.centroidRollingFromIndex(spark, dir, windowDays = 2),
@@ -239,21 +239,21 @@ class ScaleOpsSpec extends SparkSpec {
       g <- Set("psi_bits", "js_bits", "centroid_cosine")) yield (s2, g)))
   }
 
-  test("SumTranches under PointerCommit: mode-transparent reads, one-generation fold, mode guards") {
-    import graft.util.SumTranches
+  test("Tranches under PointerCommit: mode-transparent reads, one-generation fold, mode guards") {
+    import graft.util.Tranches
     import graft.merge.Merge
     val base = tempDir("graft_sumptr")
     val ptr = s"$base/counts"
     def tranche(rows: (String, Long)*) = rows.toDF("k", "n")
-    SumTranches.write(tranche("a" -> 1L, "b" -> 2L), ptr, "d1", Merge.PointerCommit)
+    Tranches.write(tranche("a" -> 1L, "b" -> 2L), ptr, "d1", Merge.PointerCommit)
     assert(new java.io.File(ptr, "_current").exists(), "manifest-born artifact")
     // later writes need no commit param — resolution is automatic
-    SumTranches.write(tranche("a" -> 10L), ptr, "d2")
-    def m() = SumTranches.read(spark, ptr, Seq("k"), "n")
+    Tranches.write(tranche("a" -> 10L), ptr, "d2")
+    def m() = Tranches.read(spark, ptr, Seq("k"), "n")
       .as[(String, Long)].collect().toMap
     assert(m() == Map("a" -> 11L, "b" -> 2L))
     val gen1 = Merge.resolveDir(spark, ptr)
-    SumTranches.consolidateMulti(spark, ptr, Seq("k"), Seq("n"), Merge.PointerCommit)
+    Tranches.consolidateMulti(spark, ptr, Seq("k"), Seq("n"), Merge.PointerCommit)
     val gen2 = Merge.resolveDir(spark, ptr)
     assert(gen2 != gen1, "fold published a fresh generation")
     // the generation holds exactly ONE folded tranche — the S3
@@ -262,19 +262,19 @@ class ScaleOpsSpec extends SparkSpec {
     assert(new java.io.File(gen2).listFiles().map(_.getName)
       .filter(_.startsWith("batch=")).toSeq == Seq("batch=consolidated"))
     assert(m() == Map("a" -> 11L, "b" -> 2L))
-    assert(SumTranches.live(spark, ptr).length == 1)
-    assert(SumTranches.health(spark, ptr, "counts").head().getInt(1) == 1)
+    assert(Tranches.live(spark, ptr).length == 1)
+    assert(Tranches.health(spark, ptr, "counts").head().getInt(1) == 1)
     // replayed fold over <=1 live tranche: no-op, generation unchanged
-    SumTranches.consolidateMulti(spark, ptr, Seq("k"), Seq("n"), Merge.PointerCommit)
+    Tranches.consolidateMulti(spark, ptr, Seq("k"), Seq("n"), Merge.PointerCommit)
     assert(Merge.resolveDir(spark, ptr) == gen2)
     // mode guards, both directions
     val ren = s"$base/ren"
-    SumTranches.write(tranche("x" -> 1L), ren, "d1")
+    Tranches.write(tranche("x" -> 1L), ren, "d1")
     intercept[IllegalArgumentException] {
-      SumTranches.consolidateMulti(spark, ren, Seq("k"), Seq("n"), Merge.PointerCommit)
+      Tranches.consolidateMulti(spark, ren, Seq("k"), Seq("n"), Merge.PointerCommit)
     }
     intercept[IllegalArgumentException] {
-      SumTranches.write(tranche("y" -> 1L), ren, "d2", Merge.PointerCommit)
+      Tranches.write(tranche("y" -> 1L), ren, "d2", Merge.PointerCommit)
     }
   }
 

@@ -307,8 +307,8 @@ class StreamingSpec extends SparkSpec {
     val base = tempDir("graft_drift_cold")
     val hist = s"$base/h"; val log = s"$base/log"; val ck = s"$base/ck"
     // NO pre-seeded history: epoch 0 must absorb-as-seed, not throw
-    // (SumTranches.read on an empty dir would fail the checkpointed
-    // stream permanently — r10 advice)
+    // (Tranches.read on an empty dir would fail the checkpointed
+    // stream permanently)
     val mem = MemoryStream[Long](spark, 1)
     val q = StreamingOps.driftStream(mem.toDF.toDF("v"), hist, log, "v",
       checkpointDir = ck)
@@ -333,7 +333,7 @@ class StreamingSpec extends SparkSpec {
 
   test("histStream maxLiveTranches: in-loop auto-fold bounds the read fan-in") {
     import graft.profile.HistSketch
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val base = tempDir("graft_hist_autofold")
     val dir = s"$base/h"; val ck = s"$base/ck"
     val mem = MemoryStream[Long](spark, 1)
@@ -343,7 +343,7 @@ class StreamingSpec extends SparkSpec {
       for (e <- 0 until 6) {
         mem.addData((e * 1000 + 1).toLong to (e * 1000 + 300).toLong: _*)
         q.processAllAvailable()
-        assert(SumTranches.live(spark, dir).length <= 2, s"epoch $e")
+        assert(Tranches.live(spark, dir).length <= 2, s"epoch $e")
       }
       val want = HistSketch.histSketch(
         (0 until 6).flatMap(e => (e * 1000 + 1).toLong to (e * 1000 + 300).toLong)
@@ -382,7 +382,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dayHllStream: streamed register tranches serve the rolling estimate, auto-fold bounds fan-in") {
     import graft.profile.Sketches
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val base = tempDir("graft_dayhll_stream")
     val dir = s"$base/h"; val ck = s"$base/ck"
     def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-0$day%d 09:00:00")
@@ -397,7 +397,7 @@ class StreamingSpec extends SparkSpec {
       val (b0, b1) = rows.splitAt(rows.length / 2)
       mem.addData(b0: _*); q.processAllAvailable()
       mem.addData(b1: _*); q.processAllAvailable()
-      assert(SumTranches.live(spark, dir).length == 1)   // in-loop fold
+      assert(Tranches.live(spark, dir).length == 1)   // in-loop fold
       assertSameRows(Sketches.hllRollingFromIndex(spark, dir, 2),
         Sketches.hllRollingEstimate(df, "u", "ts", 2))
     } finally q.stop()
@@ -435,7 +435,7 @@ class StreamingSpec extends SparkSpec {
     import graft.profile.HistSketch
     import graft.text.TextOps
     import graft.similarity.SimilarityOps
-    import graft.util.SumTranches
+    import graft.util.Tranches
     val base = tempDir("graft_day_streams")
     def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-0$day%d 09:00:00")
     // numeric + mix rows (day 1, 2, 4) and vectors (day 1-3)
@@ -464,9 +464,9 @@ class StreamingSpec extends SparkSpec {
       memVec.addData(vecRows.drop(2): _*)
       Seq(qh, qm, qc).foreach(_.processAllAvailable())
       // in-loop auto-fold kept every family at one live tranche
-      assert(SumTranches.live(spark, s"$base/h").length == 1)
-      assert(SumTranches.live(spark, s"$base/m").length == 1)
-      assert(SumTranches.live(spark, s"$base/c").length == 1)
+      assert(Tranches.live(spark, s"$base/h").length == 1)
+      assert(Tranches.live(spark, s"$base/m").length == 1)
+      assert(Tranches.live(spark, s"$base/c").length == 1)
       // artifact-served gauges ≡ whole-corpus batch forms
       assertSameRows(HistSketch.histRollingPsiFromIndex(spark, s"$base/h", 2),
         HistSketch.histRollingPsi(evDf, "v", "ts", 2))
@@ -516,7 +516,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     val mem = MemoryStream[String](spark, 1)
     val q = StreamingOps.sketchStream(mem.toDF.toDF("k"), dir, "k",
-      checkpointDir = ck, consolidateEvery = 2)
+      checkpointDir = ck, maxLiveTranches = 2)
     try {
       mem.addData(keys.take(400): _*); q.processAllAvailable()   // epoch 0
       mem.addData(keys.slice(300, 700): _*); q.processAllAvailable() // epoch 1
@@ -541,7 +541,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     val mem = MemoryStream[Long](spark, 1)
     val q = StreamingOps.histStream(mem.toDF.toDF("v"), dir, "v",
-      checkpointDir = ck, consolidateEvery = 2)
+      checkpointDir = ck, maxLiveTranches = 2)
     try {
       mem.addData(vals.take(300): _*); q.processAllAvailable()       // epoch 0
       mem.addData(vals.slice(300, 600): _*); q.processAllAvailable() // epoch 1
@@ -567,7 +567,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     val mem = MemoryStream[(Long, Long)](spark, 1)
     val q = StreamingOps.coocStream(mem.toDF.toDF("g", "i"), dir, "g", "i",
-      checkpointDir = ck, consolidateEvery = 1)
+      checkpointDir = ck, maxLiveTranches = 1)
     try {
       mem.addData(all.filter(_._1 <= 3): _*); q.processAllAvailable()  // epoch 0
       mem.addData(all.filter(_._1 > 3): _*); q.processAllAvailable()   // epoch 1 → fold
@@ -591,7 +591,7 @@ class StreamingSpec extends SparkSpec {
     val whole = (day1 ++ day2).toDF("grp", "value")
     val mem = MemoryStream[(String, Double)](spark, 1)
     val q = StreamingOps.sigmaStatsStream(mem.toDF.toDF("grp", "value"), dir,
-      "grp", "value", checkpointDir = ck, consolidateEvery = 1)
+      "grp", "value", checkpointDir = ck, maxLiveTranches = 1)
     try {
       mem.addData(day1: _*); q.processAllAvailable() // epoch 0
       mem.addData(day2: _*); q.processAllAvailable() // epoch 1 → fold
@@ -625,7 +625,7 @@ class StreamingSpec extends SparkSpec {
       nBuckets = 8)
     val mem = MemoryStream[(Long, String)](spark, 1)
     val q = StreamingOps.bm25Stream(mem.toDF.toDF("doc_id", "text"), dir,
-      "doc_id", "text", checkpointDir = ck, consolidateEvery = 1)
+      "doc_id", "text", checkpointDir = ck, maxLiveTranches = 1)
     try {
       mem.addData(d1: _*); q.processAllAvailable() // epoch 0
       mem.addData(d2: _*); q.processAllAvailable() // epoch 1 → fold
@@ -853,7 +853,21 @@ class StreamingSpec extends SparkSpec {
     assert(perEvent == viaBatch, s"per-event stream drifted: $perEvent vs $viaBatch")
   }
 
-  // ---- round-12 auto-consolidation ticks for the OR/max algebras ----
+  // ---- auto-consolidation ticks and the shared tranche fold ----
+
+  /** A 48×48 grey gradient PNG — distinct (a, b) give distinct dHashes,
+    * a small `delta` a perceptual near copy. */
+  private def png(a: Int, b: Int, delta: Int): Array[Byte] = {
+    val im = new java.awt.image.BufferedImage(48, 48,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 48; x <- 0 until 48) {
+      val v = math.min(255, math.max(0, (x * a + y * b) % 256 + delta))
+      im.setRGB(x, y, (v << 16) | (v << 8) | v)
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(im, "png", bos)
+    bos.toByteArray
+  }
 
   private def trancheNames(dir: String): Seq[String] = {
     val f = new java.io.File(dir)
@@ -954,17 +968,6 @@ class StreamingSpec extends SparkSpec {
 
   test("imageDedupStream: monitor-then-absorb on perceptual hashes, fold bounds fan-in") {
     import graft.multimodal.MultimodalOps
-    def png(a: Int, b: Int, delta: Int): Array[Byte] = {
-      val im = new java.awt.image.BufferedImage(48, 48,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 48; x <- 0 until 48) {
-        val v = math.min(255, math.max(0, (x * a + y * b) % 256 + delta))
-        im.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", bos)
-      bos.toByteArray
-    }
     val base = tempDir("graft_img_stream")
     val idx = s"$base/idx"; val out = s"$base/out"; val ck = s"$base/ck"
     val mem = MemoryStream[(Long, Array[Byte])](spark, 1)
@@ -988,20 +991,102 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("maybeConsolidate ticks: no-op at ≤ maxLive, fold above it, content identical") {
+  /** A tranche family under test: write tranche `i` (two distinct
+    * ingests per family), the merged read as comparable rows, the fold. */
+  private case class Family(name: String, write: (String, Int) => Unit,
+                            read: String => Set[String], fold: String => Unit)
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
+
+  /** The four idempotent families (day-keyed HLL, flat HLL, Bloom,
+    * image hash) — the sum family joins the tick test only. */
+  private lazy val idempotentFamilies: Seq[Family] = {
+    import graft.multimodal.MultimodalOps
+    import graft.profile.Sketches
     import graft.relational.BloomIndex
-    val base = tempDir("graft_maybe_fold")
-    val bDir = s"$base/bloom"
-    val docs = (1L to 50L).toDF("id")
-    BloomIndex.writeBloomTranche(docs, "id", bDir, "t0")
-    BloomIndex.writeBloomTranche((51L to 90L).toDF("id"), "id", bDir, "t1")
-    val before = BloomIndex.readBloomPositions(spark, bDir)
-      .as[Long].collect().toSet
-    assert(!BloomIndex.maybeConsolidateBloom(spark, bDir, 2))  // 2 ≤ 2
-    assert(trancheNames(bDir).length == 2)
-    assert(BloomIndex.maybeConsolidateBloom(spark, bDir, 1))   // 2 > 1
-    assert(trancheNames(bDir).length == 1)
-    assert(BloomIndex.readBloomPositions(spark, bDir)
-      .as[Long].collect().toSet == before)
+    def users(i: Int) = (1 to 60).map(u => (s"u${u + 40 * i}",
+      java.sql.Timestamp.valueOf(s"2024-01-0${1 + (u + i) % 3} 10:00:00")))
+      .toDF("user_id", "ts")
+    Seq(
+      Family("dayhll",
+        (dir, i) => Sketches.writeDayHllTranche(users(i), "user_id", "ts", dir, s"t$i"),
+        dir => rows(Sketches.readDayHll(spark, dir)),
+        dir => Sketches.consolidateDayHll(spark, dir)),
+      Family("hll",
+        (dir, i) => Sketches.writeSketchTranche(
+          Sketches.hllSketch(users(i), "user_id"), dir, s"t$i"),
+        dir => rows(Sketches.readSketch(spark, dir)),
+        dir => Sketches.consolidateSketch(spark, dir)),
+      Family("pos",
+        (dir, i) => BloomIndex.writeBloomTranche(
+          ((50L * i + 1) to (50L * i + 60)).toDF("id"), "id", dir, s"t$i"),
+        dir => rows(BloomIndex.readBloomPositions(spark, dir)),
+        dir => BloomIndex.consolidateBloom(spark, dir)),
+      Family("dhash",
+        (dir, i) => MultimodalOps.writeImageHashTranche(spark,
+          Seq((10L * i + 1, png(4 + i, 1, 0)), (10L * i + 2, png(1, 7 + i, 0)))
+            .toDF("media_id", "content"), dir, s"t$i"),
+        dir => rows(MultimodalOps.readImageHashes(spark, dir)),
+        dir => MultimodalOps.consolidateImageHashIndex(spark, dir)))
+  }
+
+  test("maybeConsolidate ticks: no-op at ≤ maxLive, fold above it, content identical") {
+    import graft.profile.HistSketch
+    import graft.util.Tranches
+    val hist = Family("hist",
+      (dir, i) => HistSketch.writeHistTranche(HistSketch.histSketch(
+        ((100 * i + 1) to (100 * i + 80)).map(_.toLong).toDF("v"), "v"), dir, s"t$i"),
+      dir => rows(HistSketch.readHist(spark, dir)),
+      dir => HistSketch.consolidateHist(spark, dir))
+    for (f <- idempotentFamilies :+ hist) {
+      val dir = s"${tempDir("graft_maybe_fold")}/${f.name}"
+      f.write(dir, 0); f.write(dir, 1)
+      val before = f.read(dir)
+      assert(!Tranches.maybeFold(spark, dir, 2)(f.fold(dir)), f.name)  // 2 ≤ 2
+      assert(trancheNames(dir).length == 2, f.name)
+      assert(Tranches.maybeFold(spark, dir, 1)(f.fold(dir)), f.name)   // 2 > 1
+      assert(trancheNames(dir).length == 1, f.name)
+      assert(f.read(dir) == before, f.name)
+    }
+  }
+
+  test("idempotent folds: crash remnants never change the read; health ignores scratch, re-fold converges") {
+    import graft.util.Tranches
+    import org.apache.commons.io.FileUtils
+    def gauge(dir: String, f: Family) = {
+      val r = Tranches.health(spark, dir, f.name).head()
+      (r.getString(0), r.getInt(1), r.getInt(3))
+    }
+    for (f <- idempotentFamilies) {
+      val base = tempDir(s"graft_fold_crash_${f.name}")
+      val dir = s"$base/idx"
+      f.write(dir, 0); f.write(dir, 1)
+      val want = f.read(dir)
+      val input = new java.io.File(s"$base/t0-copy")
+      FileUtils.copyDirectory(new java.io.File(s"$dir/batch=t0"), input)
+      // the fold: exactly one consolidated tranche, same read
+      f.fold(dir)
+      val folded = trancheNames(dir)
+      assert(folded.length == 1 && folded.head.startsWith("batch=consolidated-"),
+        s"${f.name}: $folded")
+      assert(f.read(dir) == want, f.name)
+      // crash before the rename: a stale scratch dir is invisible
+      FileUtils.copyDirectory(new java.io.File(s"$dir/${folded.head}"),
+        new java.io.File(s"$dir/.consolidating-stale"))
+      assert(f.read(dir) == want, f.name)
+      assert(gauge(dir, f) == ((f.name, 1, 0)), f.name)
+      // crash after the rename, before the input delete: an input
+      // beside the folded tranche merges away
+      FileUtils.copyDirectory(input, new java.io.File(s"$dir/batch=t0"))
+      assert(f.read(dir) == want, f.name)
+      assert(gauge(dir, f) == ((f.name, 2, 0)), f.name)
+      // the next fold converges to one tranche, same read
+      f.fold(dir)
+      val refolded = trancheNames(dir)
+      assert(refolded.length == 1 && refolded.head.startsWith("batch=consolidated-"),
+        s"${f.name}: $refolded")
+      assert(f.read(dir) == want, f.name)
+    }
   }
 }
