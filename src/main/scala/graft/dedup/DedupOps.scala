@@ -424,7 +424,7 @@ object DedupOps {
   : (DataFrame, () => Unit) = {
     val histSh = spark.read.parquet(s"$dir/sh")
       .select(col("doc_id").as("__id"), col("sh").as("__s"))
-    if (countArtifactFresh(spark, dir, "sh", "df")) {
+    if (graft.util.Tranches.countFresh(spark, dir, "sh", "df")) {
       val histDf = spark.read.parquet(s"$dir/df").drop("batch")
         .groupBy("sh").agg(sum(col("df")).as("__hc"))
         .select(col("sh").as("__s"), col("__hc"))
@@ -530,7 +530,7 @@ object DedupOps {
 
   // filesystem plumbing lives in graft.util.Fs (shared by every index
   // family — no domain module should depend on dedup for FS access)
-  import graft.util.Fs.{hfs, pathExists, readSmallFile, writeSmallFile}
+  import graft.util.Fs.{pathExists, readSmallFile, writeSmallFile}
 
   private def metaString(m: DedupIndexMeta): String =
     s"shingleN=${m.shingleN}\nportable=${m.portable}\nsigK=${m.sigK}\nsigBands=${m.sigBands}\n"
@@ -553,56 +553,6 @@ object DedupOps {
           s"got shingleN=$shingleN portable=$portable — mismatched params silently " +
           "diverge the shingle universe (the near-dup tier would find nothing)")
     }
-
-  /** Tranche tags absorbed into `batch=consolidated` by
-    * [[consolidateDedupIndex]]: a replayed append of an absorbed epoch
-    * must be a no-op, not a second copy of rows that already live in
-    * the consolidated tranche. */
-  private[graft] def readAbsorbedTags(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Set[String] =
-    readSmallFile(spark, s"$dir/_graft_absorbed")
-      .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
-  /** Shared append-tag gate for every tranche-appending index (dedup
-    * and winnow): reserved lifecycle names are rejected outright (an
-    * append with tag `consolidated` would overwrite the whole
-    * consolidated history), and a consolidation-absorbed tag is only a
-    * no-op when the tranche is PROVABLY a replay. `novelRows` is the
-    * caller's content probe — the count of batch artifact rows absent
-    * from the consolidated index — evaluated ONLY on the absorbed-tag
-    * path (the common un-absorbed case pays nothing). A replayed epoch
-    * counts 0 (its rows were absorbed) and no-ops with a warning; a
-    * non-zero count means genuinely NEW data was aliased onto an
-    * absorbed tag (a restarted stream with a fresh checkpoint
-    * re-numbering epochs from 0), and silently no-oping would drop it
-    * from the index forever — that fails fast instead, naming the fix
-    * (a fresh tag namespace). ONE implementation so the replay-aliasing
-    * contract can never drift between the index families. */
-  private[graft] def appendTagAllowed(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String, tag: String,
-                                      opName: String,
-                                      novelRows: () => Long): Boolean = {
-    require(tag != "build" && tag != "consolidated",
-      s"$opName: tag '$tag' is reserved — build/consolidated name lifecycle " +
-        "tranches, and an append would overwrite the entire consolidated " +
-        "history with one day's rows")
-    if (readAbsorbedTags(spark, dir).contains(tag)) {
-      val novel = novelRows()
-      if (novel > 0) throw new IllegalStateException(
-        s"$opName: tag '$tag' was already absorbed by consolidation, but this " +
-          s"tranche carries $novel artifact row(s) NOT present in the index — " +
-          "new data aliased onto an absorbed tag (e.g. a stream restarted with " +
-          "a fresh checkpoint re-numbering epochs from 0). A silent no-op would " +
-          s"permanently drop it from $dir. Append it under a tag never used " +
-          "before (e.g. prefix a new stream generation into the tag).")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$opName: tag '$tag' already absorbed by consolidation and every " +
-          s"artifact row is already indexed; skipping append to $dir " +
-          "(replay convergence).")
-      false
-    } else true
-  }
 
   /** Materialize the dedup-history index at rest: `dir/fp` holds the
     * corpus's distinct content fingerprints, `dir/sh` its exploded
@@ -648,8 +598,8 @@ object DedupOps {
       // must never leave complete-looking artifacts with param
       // validation silently disabled — a meta-only or meta+partial dir
       // fails loudly on read instead
-      writeSmallFile(spark, s"$root/_graft_meta",
-        metaString(DedupIndexMeta(shingleN, portable, sigK, sigBands)))
+      val meta = DedupIndexMeta(shingleN, portable, sigK, sigBands)
+      writeSmallFile(spark, s"$root/_graft_meta", metaString(meta))
       // three INDEPENDENT artifact chains overlapped on driver threads
       // ([[graft.util.Par]]): (sh → df), (fp),
       // (sig → bf) share no intermediate — each derived count reads
@@ -662,13 +612,7 @@ object DedupOps {
         () => {
           hashedShingleRows(corpus, idCol, textCol, shingleN, portable)
             .write.mode("overwrite").parquet(s"$root/sh/batch=build")
-          // df = per-shingle occurrence counts, derived by READING BACK
-          // the just-written sh tranche (not by re-evaluating the corpus
-          // plan): the artifact the daily prune trusts must count
-          // exactly the rows at rest. Map-side-combinable groupBy over
-          // a batch-sized tranche.
-          spark.read.parquet(s"$root/sh/batch=build")
-            .groupBy("sh").agg(count(lit(1)).as("df"))
+          shingleCounts(spark.read.parquet(s"$root/sh/batch=build"))
             .write.mode("overwrite").parquet(s"$root/df/batch=build")
         },
         () => fingerprintRows(corpus, textCol)
@@ -676,16 +620,11 @@ object DedupOps {
         () => {
           signatureRows(corpus, idCol, textCol, shingleN, sigK, portable)
             .write.mode("overwrite").parquet(s"$root/sig/batch=build")
-          // bf = per-(band, key) bucket sizes of the sig tranche at rest
-          // — the approximate tier's hot-bucket prune input (df's sig twin)
-          spark.read.parquet(s"$root/sig/batch=build")
-            .select(posexplode(bandKeys(col("sig"), sigBands, sigK / sigBands))
-              .as(Seq("band", "key")))
-            .groupBy("band", "key").agg(count(lit(1)).as("n"))
+          bandCounts(meta)(spark.read.parquet(s"$root/sig/batch=build"))
             .write.mode("overwrite").parquet(s"$root/bf/batch=build")
         })
       // a fresh build also resets the absorbed-tag ledger: the whole-dir
-      // swap drops any previous _graft_absorbed with the old tranches
+      // swap drops the previous ledger with the old tranches
     }
     commit match {
       case graft.merge.Merge.PointerCommit =>
@@ -745,7 +684,7 @@ object DedupOps {
     // novelty probe for the absorbed-tag path: batch content
     // fingerprints absent from the consolidated fp artifact. A true
     // replay counts 0 (its fps were absorbed); new content counts > 0.
-    if (!appendTagAllowed(spark, dir, tag, "appendToDedupIndex", () =>
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "appendToDedupIndex", () =>
       fingerprintRows(newRows, textCol)
         .join(spark.read.parquet(s"$dir/fp").select("fp"), Seq("fp"), "left_anti")
         .count())) return
@@ -770,8 +709,7 @@ object DedupOps {
         // (undercounted combined counts → fewer pruned shingles) until
         // the documented same-tag retry overwrites both.
         if (pathExists(spark, s"$dir/df"))
-          spark.read.parquet(s"$dir/sh/batch=$tag")
-            .groupBy("sh").agg(count(lit(1)).as("df"))
+          shingleCounts(spark.read.parquet(s"$dir/sh/batch=$tag"))
             .write.mode("overwrite").parquet(s"$dir/df/batch=$tag")
       },
       () => {
@@ -783,10 +721,7 @@ object DedupOps {
             signatureRows(frozen, idCol, textCol, shingleN, m.sigK, portable)
               .write.mode("overwrite").parquet(s"$dir/sig/batch=$tag")
             if (pathExists(spark, s"$dir/bf"))
-              spark.read.parquet(s"$dir/sig/batch=$tag")
-                .select(posexplode(bandKeys(col("sig"), m.sigBands, m.sigK / m.sigBands))
-                  .as(Seq("band", "key")))
-                .groupBy("band", "key").agg(count(lit(1)).as("n"))
+              bandCounts(m)(spark.read.parquet(s"$dir/sig/batch=$tag"))
                 .write.mode("overwrite").parquet(s"$dir/bf/batch=$tag")
           }
         }
@@ -794,71 +729,28 @@ object DedupOps {
     fingerprintRows(frozen, textCol).write.mode("overwrite").parquet(s"$dir/fp/batch=$tag")
   }
 
-  /** Is the COUNT artifact (`df`/`bf`/`wdf`) safe to drive a prune?
-    * Fresh ⇔ present AND its tranche tag set equals the row artifact's.
-    * Every crash window diverges the sets — append dying between the
-    * row tranche and its count tranche, consolidation dying after the
-    * row swap but before the count regeneration — and a diverged count
-    * artifact can OVERCOUNT (stale pre-consolidation sums against
-    * consolidated rows), which over-prunes and silently loses near-dup
-    * detections: the unsafe direction. The probes therefore fall back
-    * to the union-window path (exactly correct, just slower) whenever
-    * the sets differ; the next successful append or consolidation
-    * restores freshness. Two directory listings per probe. */
-  private[graft] def countArtifactFresh(spark: org.apache.spark.sql.SparkSession,
-                                        dir: String, rowArt: String,
-                                        cntArt: String): Boolean = {
-    // the count side additionally discounts tranches missing the
-    // job-commit marker: a count tranche that crashed mid-write is
-    // visible but incomplete, and its missing rows would silently
-    // undercount the prune — an unmarked tranche diverges the sets and
-    // routes to the fallback
-    def tags(a: String, marked: Boolean): Option[Set[String]] =
-      if (!graft.util.Fs.pathExists(spark, s"$dir/$a")) None
-      else Some((if (marked) committedTranches(spark, s"$dir/$a")
-                 else allTranches(spark, s"$dir/$a")).toSet)
-    // fresh ⇔ both artifacts exist AND the tag sets are EQUAL
-    (tags(cntArt, marked = true), tags(rowArt, marked = false)) match {
-      case (Some(cnt), Some(row)) => cnt == row
-      case _                      => false
-    }
-  }
+  /** `df`: per-shingle occurrence counts of `sh` rows — always derived
+    * by reading back rows AT REST (never by re-evaluating the corpus
+    * plan), so the counts the prune trusts equal the stored rows. */
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy("sh").agg(count(lit(1)).as("df"))
 
-  private def allTranches(spark: org.apache.spark.sql.SparkSession,
-                          artifactDir: String): Seq[String] =
-    graft.util.Fs.hfs(spark, artifactDir)
-      .listStatus(new org.apache.hadoop.fs.Path(artifactDir))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).toSeq
+  /** `bf`: per-(band, key) bucket sizes of `sig` rows at rest — the
+    * approximate tier's hot-bucket prune input (df's sig twin); the
+    * banding is the index's frozen family. */
+  private def bandCounts(m: DedupIndexMeta)(sig: DataFrame): DataFrame =
+    sig.select(posexplode(bandKeys(col("sig"), m.sigBands, m.sigK / m.sigBands))
+        .as(Seq("band", "key")))
+      .groupBy("band", "key").agg(count(lit(1)).as("n"))
 
-  /** Tranche dirs of an artifact proven COMPLETE by the committer's
-    * `_SUCCESS` marker. A tranche dir without the marker is a
-    * mid-write crash remnant — visible, possibly partial — EXCEPT when
-    * NO tranche carries a marker, which means the deployment disabled
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs` (the engine
-    * must not treat an entire healthy index as uncommitted); then all
-    * tranches count, restoring the pre-marker behavior. */
-  private[graft] def committedTranches(spark: org.apache.spark.sql.SparkSession,
-                                       artifactDir: String): Seq[String] =
-    chooseCommitted(allTranches(spark, artifactDir),
-      markedTranches(spark, artifactDir))
+  private val IndexArtifacts = Seq("sh", "fp", "sig", "df", "bf")
 
-  /** Tranche dirs carrying the committer's `_SUCCESS` marker. ONE
-    * globStatus resolves every marker — a per-tranche fs.exists would
-    * be N+1 HEAD requests against an object store on the daily probe
-    * path (a year of appends = ~365 round-trips per probe). */
-  private[graft] def markedTranches(spark: org.apache.spark.sql.SparkSession,
-                                    artifactDir: String): Set[String] =
-    graft.util.Fs.hfs(spark, artifactDir).globStatus(
-      new org.apache.hadoop.fs.Path(artifactDir, "batch=*/_SUCCESS"))
-      .map(_.getPath.getParent.getName).toSet
-
-  /** The single implementation of the no-marker fallback rule: when NO
-    * tranche carries a marker the deployment disabled
-    * `marksuccessfuljobs` and every tranche counts; otherwise only the
-    * marked ones do. */
-  private[graft] def chooseCommitted(all: Seq[String],
-                                     marked: Set[String]): Seq[String] =
-    if (marked.isEmpty && all.nonEmpty) all else all.filter(marked.contains)
+  /** The row artifacts a fold rewrites through `distinct()`. The count
+    * artifacts `df`/`bf` are NOT here: their rows are ADDITIVE across
+    * tranches (the daily read sums them), so a distinct() rewrite would
+    * collapse two tranches that legitimately carry the same count row
+    * and undercount the prune; the fold regenerates them instead. */
+  private val RowDistinctArtifacts = Seq("sh", "fp", "sig")
 
   /** Refuse to append into a pre-tranche flat index: mixing loose part
     * files and `batch=` subdirs makes Spark's partition discovery fail
@@ -867,18 +759,6 @@ object DedupOps {
     * [[consolidateDedupIndex]] call (it reads any layout and writes the
     * tranche layout).
     */
-  private val IndexArtifacts = Seq("sh", "fp", "sig", "df", "bf")
-
-  /** The artifacts consolidation row-rewrites through the generic
-    * distinct() protocol. The count artifacts `df` and `bf` are
-    * deliberately NOT here: their rows are ADDITIVE across tranches
-    * (the daily read sums them), so a distinct() rewrite would
-    * collapse two tranches that legitimately carry the same count row
-    * into one and silently undercount the prune.
-    * [[consolidateDedupIndex]] regenerates them from the consolidated
-    * sh/sig artifacts instead. */
-  private val RowDistinctArtifacts = Seq("sh", "fp", "sig")
-
   private def requireTrancheLayout(spark: org.apache.spark.sql.SparkSession,
                                    dir: String): Unit =
     for (artifact <- IndexArtifacts) {
@@ -897,292 +777,41 @@ object DedupOps {
       }
     }
 
-  /** Consolidate an appended dedup index: rewrite each artifact's
-    * accumulated `batch=` tranches into ONE tranche through the atomic
-    * tmp-tree swap — the maintenance step for the steady-state loop,
-    * where a year of daily appends means 365 tranche directories of
-    * splinter files per artifact. The swap keeps the index readable
-    * throughout and a crash leaves the original tranches intact
-    * (never a half-consolidated mix, which would double-count shingle
-    * rows). Run it offline relative to appends — a tranche appended
-    * between the consolidation read and its swap would be dropped.
+  /** Consolidate an appended dedup index: fold each row artifact's
+    * accumulated `batch=` tranches into ONE tranche — the maintenance
+    * step for the steady-state loop, where a year of daily appends means
+    * 365 tranche directories of splinter files per artifact. The
+    * protocol is [[graft.util.Tranches.foldLedger]] with `fp` (written
+    * last by the append) as the commit witness: the index stays readable
+    * throughout, unproven tranches are preserved for their same-tag
+    * retry, and `df`/`bf` are regenerated from the folded `sh`/`sig`
+    * rows — self-healing by construction, and the migration that
+    * retrofits them onto an index built before they existed. Run it
+    * offline relative to appends.
     *
     * Two defenses against replayed absorbed epochs (a stream that
     * crashed before checkpointing an epoch re-delivers it AFTER its
     * tranche was consolidated away): the rewrite is SELF-HEALING — rows
     * pass through `distinct()`, so any double-counted `(doc_id, sh)` /
     * `fp` / `(doc_id, sig)` rows collapse back to one copy — and the
-    * absorbed tranche tags are recorded in `dir/_graft_absorbed`, so
+    * absorbed tranche tags are recorded in the index's ledger, so
     * [[appendToDedupIndex]] turns a replayed append of an absorbed
     * epoch into a no-op instead of deflating history-side jaccard
-    * until the next consolidation.
+    * until the next consolidation. `commit = PointerCommit` publishes
+    * the whole folded index as one fresh generation (S3-safe).
     */
   def consolidateDedupIndex(spark: org.apache.spark.sql.SparkSession,
                             indexDir: String,
                             commit: graft.merge.Merge.Commit =
-                              graft.merge.Merge.RenameCommit): Unit = commit match {
-    case graft.merge.Merge.PointerCommit =>
-      // S3-safe whole-GENERATION rebuild via [[consolidateGeneration]]:
-      // consolidated sh/fp/sig + regenerated df/bf + meta + updated
-      // ledger land in ONE new immutable generation, published by one
-      // manifest PUT. df/bf regenerate from the just-folded rows (the
-      // rename path's post-swap rebuilds, here inside the same commit —
-      // no window where a published generation has stale counts).
-      val oldRoot = graft.merge.Merge.resolveDir(spark, indexDir)
-      consolidateArtifacts(spark, indexDir,
-        RowDistinctArtifacts.filter(a => pathExists(spark, s"$oldRoot/$a")),
-        commitWitness = "fp", commit = graft.merge.Merge.PointerCommit,
-        regenerated = Seq("df", "bf"),
-        regenerate = { newRoot =>
-          if (pathExists(spark, s"$newRoot/sh"))
-            spark.read.parquet(s"$newRoot/sh").drop("batch")
-              .groupBy("sh").agg(count(lit(1)).as("df"))
-              .write.mode("overwrite").parquet(s"$newRoot/df/batch=consolidated")
-          readDedupIndexMeta(spark, newRoot).foreach { m =>
-            if (pathExists(spark, s"$newRoot/sig"))
-              spark.read.parquet(s"$newRoot/sig").drop("batch")
-                .select(posexplode(bandKeys(col("sig"), m.sigBands, m.sigK / m.sigBands))
-                  .as(Seq("band", "key")))
-                .groupBy("band", "key").agg(count(lit(1)).as("n"))
-                .write.mode("overwrite").parquet(s"$newRoot/bf/batch=consolidated")
-          }
-        })
-    case graft.merge.Merge.RenameCommit =>
-      val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-      consolidateArtifacts(spark, dir,
-        RowDistinctArtifacts.filter(a => pathExists(spark, s"$dir/$a")),
-        commitWitness = "fp")
-      // df is regenerated from the JUST-CONSOLIDATED sh artifact rather
-      // than summed from its own tranches: self-healing by construction
-      // (df ≡ exact counts of the post-distinct rows, so any
-      // double-append the ledger crash window let through is repaired
-      // here too), and the migration path that retrofits the artifact
-      // onto an index built before it existed.
-      // df/bf regenerate from DIFFERENT just-consolidated row artifacts
-      // (sh and sig) into disjoint dirs — overlap the two rebuild jobs
-      // on driver threads ([[graft.util.Par]])
-      graft.util.Par.jobs(
-        () => if (pathExists(spark, s"$dir/sh")) {
-          def buildDf(root: String): Unit =
-            spark.read.parquet(s"$dir/sh").drop("batch")
-              .groupBy("sh").agg(count(lit(1)).as("df"))
-              .write.mode("overwrite").parquet(s"$root/batch=consolidated")
-          val dfDir = s"$dir/df"
-          if (pathExists(spark, dfDir)) graft.merge.Merge.atomicSwap(spark, dfDir)(buildDf)
-          else buildDf(dfDir)
-        },
-        // same protocol for bf, the sig tier's bucket-size artifact —
-        // regenerated (banding needs the frozen family from _graft_meta)
-        () => readDedupIndexMeta(spark, dir).foreach { m =>
-          if (pathExists(spark, s"$dir/sig")) {
-            def buildBf(root: String): Unit =
-              spark.read.parquet(s"$dir/sig").drop("batch")
-                .select(posexplode(bandKeys(col("sig"), m.sigBands, m.sigK / m.sigBands))
-                  .as(Seq("band", "key")))
-                .groupBy("band", "key").agg(count(lit(1)).as("n"))
-                .write.mode("overwrite").parquet(s"$root/batch=consolidated")
-            val bfDir = s"$dir/bf"
-            if (pathExists(spark, bfDir)) graft.merge.Merge.atomicSwap(spark, bfDir)(buildBf)
-            else buildBf(bfDir)
-          }
-        })
-  }
-
-  /** AUTO-consolidation tick for the dedup index — the
-    * [[graft.util.Tranches.maybeFold]] contract over the
-    * sh/fp/sig artifact set: fold only when the COMMITTED tranche
-    * count of the witness artifact (`fp` — the one the append path
-    * writes last) exceeds `maxLive`, so a long-lived
-    * [[graft.streaming.StreamingOps.indexedDedupStream]] keeps its
-    * probe-side read fan-in bounded without an operator remembering
-    * to run [[consolidateDedupIndex]]. Safe in-loop: the stream's
-    * epochs are sequential, so the offline-relative-to-appends
-    * contract holds at the tick's position (after the epoch's
-    * append, before the next epoch starts), and a crash mid-fold
-    * leaves the original tranches intact behind the atomic swap.
-    * Unproven (unmarked) tranches don't count toward the trigger —
-    * they are preserved, not folded, so counting them would make the
-    * tick fire every epoch without ever reducing the fan-in. Returns
-    * whether a fold ran. */
-  def maybeConsolidateDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                                 indexDir: String, maxLive: Int,
-                                 commit: graft.merge.Merge.Commit =
-                                   graft.merge.Merge.RenameCommit): Boolean = {
-    require(maxLive >= 1, s"maybeConsolidateDedupIndex: maxLive=$maxLive must be >= 1")
+                              graft.merge.Merge.RenameCommit): Unit = {
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val witness =
-      if (pathExists(spark, s"$dir/fp")) s"$dir/fp"
-      else IndexArtifacts.map(a => s"$dir/$a").find(pathExists(spark, _))
-        .getOrElse(return false)
-    if (committedTranches(spark, witness).length > maxLive) {
-      consolidateDedupIndex(spark, indexDir, commit); true
-    } else false
-  }
-
-  /** The consolidation protocol shared by every tranche-appending
-    * index family (dedup: sh/fp/sig; winnow: wfp) — ONE implementation
-    * so the rewrite/ledger contract can never drift between them.
-    *
-    * A tranche is COMMITTED only if it appears in `commitWitness` —
-    * the artifact the append path writes LAST — AND carries the
-    * committer's `_SUCCESS` marker there ([[committedTranches]]). A
-    * tag failing either test is unproven: a half-appended crash
-    * remnant whose documented recovery is "re-run the append with the
-    * same tag", or a complete tranche whose marker was stripped.
-    * Unproven tranches are EXCLUDED from the rewrite and the absorbed
-    * ledger (absorbing them would turn the recovery retry into a no-op
-    * and permanently lose the unwritten artifacts' rows) but their
-    * dirs are PRESERVED byte-for-byte through the swap — dropping them
-    * would silently destroy a stripped-marker tranche's data. The
-    * retry overwrites a preserved remnant in place and regenerates
-    * every artifact from the frozen survivor set.
-    */
-  private[graft] def consolidateArtifacts(spark: org.apache.spark.sql.SparkSession,
-                                          dir: String, artifacts: Seq[String],
-                                          commitWitness: String,
-                                          partitionCols: Seq[String] = Nil,
-                                          commit: graft.merge.Merge.Commit =
-                                            graft.merge.Merge.RenameCommit,
-                                          regenerated: Seq[String] = Nil,
-                                          regenerate: String => Unit = _ => ()): Unit = {
-    require(artifacts.nonEmpty, s"consolidate: $dir has no index artifacts")
-    if (commit == graft.merge.Merge.PointerCommit) {
-      consolidateGeneration(spark, dir, artifacts, commitWitness, partitionCols,
-        regenerated, regenerate)
-      return
-    }
-    val witness = if (artifacts.contains(commitWitness)) commitWitness else artifacts.head
-    // committedTranches: a witness tranche dir missing the committer's
-    // _SUCCESS marker is not PROVEN complete — a mid-append crash
-    // remnant, or a complete tranche whose zero-byte marker an
-    // object-store lifecycle rule stripped. The two are
-    // indistinguishable from here, so consolidation must neither
-    // absorb such a tranche (a partial one's ledger entry would turn
-    // the documented same-tag crash retry into a fail-fast) NOR drop
-    // its rows (a stripped-marker complete one would silently lose
-    // every document it holds, with nobody left to retry). Unproven
-    // tranches are therefore PRESERVED as-is through the swap,
-    // unconsolidated and unabsorbed: a crash retry overwrites them in
-    // place, a stripped-marker tranche just stays a splinter tranche
-    // (visible in the stats gauge) until a marker-bearing rewrite.
-    val committed = committedTranches(spark, s"$dir/$witness")
-      .map(_.stripPrefix("batch=")).toSet + "build" + "consolidated"
-    // per-artifact rewrites touch disjoint subdirs and share only the
-    // pre-computed committed set — overlap them on driver threads
-    // ([[graft.util.Par]]). Crash contract unchanged: a
-    // crash mid-consolidation already left SOME artifacts folded and
-    // others not (tag sets diverge → countArtifactFresh routes probes
-    // to the exact window fallback until the next fold); an arbitrary
-    // completed subset instead of a loop prefix lands in the same
-    // documented state.
-    graft.util.Par.jobs(artifacts.map { artifact => () => {
-      // no checkpoint needed: the single write action completes — fully
-      // draining the read of the old tranches — BEFORE the renames
-      // mutate anything (unlike the append path, where a second action
-      // re-evaluated a plan over an already-mutated index).
-      // distinct(): self-healing against double-appended rows; the
-      // committed-tag filter keeps unproven tranches out of the rewrite
-      // (partition values may be type-inferred, hence the string cast;
-      // a legacy flat artifact has no batch column and is read whole)
-      val all = spark.read.parquet(s"$dir/$artifact")
-      val data = (if (all.columns.contains("batch"))
-        all.where(col("batch").cast(StringType).isin(committed.toSeq: _*))
-      else all).drop("batch").distinct()
-      val unproven = allTranches(spark, s"$dir/$artifact")
-        .filterNot(t => committed.contains(t.stripPrefix("batch=")))
-      graft.merge.Merge.atomicSwap(spark, s"$dir/$artifact") { tmp =>
-        // sub-partitioning (e.g. the IVF index's ivf_list) must survive
-        // the rewrite as PARTITION columns — demoting one to a data
-        // column would silently retire partition pruning for every
-        // later probe
-        val w = data.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(s"$tmp/batch=consolidated")
-        // carry unproven tranche dirs into the new tree byte-for-byte —
-        // the swap must not be the thing that deletes unproven data
-        val fs = hfs(spark, dir)
-        val conf = spark.sparkContext.hadoopConfiguration
-        unproven.foreach { t =>
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, new org.apache.hadoop.fs.Path(s"$dir/$artifact/$t"),
-            fs, new org.apache.hadoop.fs.Path(s"$tmp/$t"),
-            false, conf)
-        }
-      }
-    }}: _*)
-    // ledger last: a crash before this line leaves a replay window for
-    // the just-absorbed tags, but the NEXT consolidation's distinct()
-    // heals any double-append it allowed — the ledger is the fast path,
-    // the distinct is the guarantee
-    val absorbed = readAbsorbedTags(spark, dir) ++
-      (committed - "build" - "consolidated")
-    if (absorbed.nonEmpty)
-      writeSmallFile(spark, s"$dir/_graft_absorbed",
-        absorbed.toSeq.sorted.mkString("", "\n", "\n"))
-  }
-
-  /** The PointerCommit body of [[consolidateArtifacts]] — one whole
-    * index GENERATION built under a fresh immutable `__data_` dir and
-    * published by one manifest PUT (S3-safe), instead
-    * of per-artifact rename swaps whose crash window can leave
-    * artifacts at mixed generations on stores where rename is
-    * copy+delete. Same rewrite contract: committed tranches fold
-    * through `distinct()` (self-healing), unproven tranche dirs carry
-    * byte-for-byte, the absorbed ledger gains the folded tags. Root
-    * entries the fold doesn't own (meta files, sibling artifacts) copy
-    * verbatim; `regenerated` artifacts are instead rebuilt into the
-    * new generation by the `regenerate` hook (df/bf, wdf — derived
-    * counts that must reflect the just-folded rows, not old tranches).
-    * Requires the index to BE pointer-committed — one commit mode per
-    * directory; converting needs a write*Index rebuild. */
-  private def consolidateGeneration(spark: org.apache.spark.sql.SparkSession,
-                                    indexDir: String, artifacts: Seq[String],
-                                    commitWitness: String,
-                                    partitionCols: Seq[String],
-                                    regenerated: Seq[String],
-                                    regenerate: String => Unit): Unit = {
-    val oldRoot = graft.merge.Merge.resolveDir(spark, indexDir)
-    require(oldRoot != indexDir,
-      s"consolidate: $indexDir is not pointer-committed; PointerCommit " +
-        "consolidation needs an index built with commit = PointerCommit")
-    val witness = if (artifacts.contains(commitWitness)) commitWitness else artifacts.head
-    val committed = committedTranches(spark, s"$oldRoot/$witness")
-      .map(_.stripPrefix("batch=")).toSet + "build" + "consolidated"
-    val fs = hfs(spark, oldRoot)
-    val conf = spark.sparkContext.hadoopConfiguration
-    graft.merge.Merge.pointerSwap(spark, indexDir) { newRoot =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(newRoot))
-      val skip = (artifacts ++ regenerated).toSet + "_graft_absorbed"
-      fs.listStatus(new org.apache.hadoop.fs.Path(oldRoot))
-        .filterNot(st => skip(st.getPath.getName)).foreach { st =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath,
-            fs, new org.apache.hadoop.fs.Path(s"$newRoot/${st.getPath.getName}"),
-            false, conf)
-        }
-      for (artifact <- artifacts) {
-        val all = spark.read.parquet(s"$oldRoot/$artifact")
-        val data = (if (all.columns.contains("batch"))
-          all.where(col("batch").cast(StringType).isin(committed.toSeq: _*))
-        else all).drop("batch").distinct()
-        val w = data.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(s"$newRoot/$artifact/batch=consolidated")
-        allTranches(spark, s"$oldRoot/$artifact")
-          .filterNot(t => committed.contains(t.stripPrefix("batch=")))
-          .foreach { t =>
-            org.apache.hadoop.fs.FileUtil.copy(
-              fs, new org.apache.hadoop.fs.Path(s"$oldRoot/$artifact/$t"),
-              fs, new org.apache.hadoop.fs.Path(s"$newRoot/$artifact/$t"),
-              false, conf)
-          }
-      }
-      regenerate(newRoot)
-      val absorbed = readAbsorbedTags(spark, oldRoot) ++
-        (committed - "build" - "consolidated")
-      if (absorbed.nonEmpty)
-        writeSmallFile(spark, s"$newRoot/_graft_absorbed",
-          absorbed.toSeq.sorted.mkString("", "\n", "\n"))
-    }
+    val rows = RowDistinctArtifacts.filter(a => pathExists(spark, s"$dir/$a"))
+    val counts =
+      (if (rows.contains("sh")) Seq(("df", "sh", shingleCounts _)) else Nil) ++
+        readDedupIndexMeta(spark, dir).filter(_ => rows.contains("sig"))
+          .map(m => ("bf", "sig", bandCounts(m) _))
+    graft.util.Tranches.foldLedger(spark, indexDir, rows.map(_ -> Nil),
+      witness = "fp", counts, commit)
   }
 
   /** [[dedupAgainstHistory]] against the MATERIALIZED index instead of
@@ -1278,9 +907,7 @@ object DedupOps {
     val out = new Array[(String, Long, Option[Long], Int)](artifacts.size)
     graft.util.Par.jobs(artifacts.zipWithIndex.map { case (a, i) => () => {
       val df = spark.read.parquet(s"$dir/$a")
-      val nTranches = hfs(spark, dir)
-        .listStatus(new org.apache.hadoop.fs.Path(s"$dir/$a"))
-        .count(_.getPath.getName.startsWith("batch="))
+      val nTranches = graft.util.Tranches.names(spark, s"$dir/$a").size
       // one aggregation pass per artifact (rows + distinct docs in a
       // single scan — the routine gauge must not read history twice)
       val (nRows, nDocs) =
@@ -1296,8 +923,9 @@ object DedupOps {
   /** At-rest index HEALTH: one row per present artifact,
     * `(artifact, n_tranches, n_marked, n_unproven, count_fresh)` — the
     * fs-metadata companion to [[dedupIndexStats]]'s row counts, read
-    * without touching any data file. `n_unproven` uses the SAME
-    * definition consolidation acts on ([[consolidateArtifacts]]): a
+    * without touching any data file
+    * ([[graft.util.Tranches.ledgerHealth]]). `n_unproven` uses the SAME
+    * definition consolidation acts on: a
     * tranche tag is unproven iff the fp commit-witness — the artifact
     * the append path writes LAST — does not prove it committed. A
     * mid-append crash (tag present in sh/sig/bf/df but absent from, or
@@ -1323,46 +951,8 @@ object DedupOps {
     require(present.nonEmpty,
       s"dedupIndexHealth: $dir has none of ${IndexArtifacts.mkString("/")} — " +
         "not a dedup index (build one with writeDedupIndex)")
-    artifactHealth(spark, dir, present, Map("df" -> "sh", "bf" -> "sig"),
-      witness = Some("fp"))
-  }
-
-  /** Family-generic core of the health gauge (shared with the winnow
-    * and IVF twins): `countPairs` maps each count artifact to the row
-    * artifact whose tag set proves it fresh; `witness` names the
-    * family's commit-witness artifact (None → each artifact witnesses
-    * itself, the single-artifact vector families). ONE listing + ONE
-    * marker glob per artifact, threaded through every derived column —
-    * the triage gauge must not double the object-store round-trips it
-    * exists to economize. No data file is opened. */
-  private[graft] def artifactHealth(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String, artifacts: Seq[String],
-                                    countPairs: Map[String, String],
-                                    witness: Option[String]): DataFrame = {
-    import spark.implicits._
-    val meta: Map[String, (Seq[String], Set[String])] = artifacts.map { a =>
-      a -> ((allTranches(spark, s"$dir/$a"), markedTranches(spark, s"$dir/$a")))
-    }.toMap
-    def committedOf(a: String): Set[String] = {
-      val (all, marked) = meta(a)
-      chooseCommitted(all, marked).toSet
-    }
-    // the witness's proven-tag set, exactly as consolidateArtifacts
-    // computes it (build/consolidated predate the witness protocol and
-    // are always committed)
-    def provenTags(a: String): Set[String] =
-      committedOf(witness.filter(meta.contains).getOrElse(a))
-        .map(_.stripPrefix("batch=")) + "build" + "consolidated"
-    artifacts.map { a =>
-      val (all, marked) = meta(a)
-      val proven = provenTags(a)
-      // same comparison countArtifactFresh makes — committed count
-      // tranches vs ALL row tranches — from the already-listed metadata
-      val fresh: Option[Boolean] = countPairs.get(a).map(row =>
-        meta.get(row).exists(r => committedOf(a) == r._1.toSet))
-      (a, all.size, all.count(marked.contains),
-        all.count(t => !proven.contains(t.stripPrefix("batch="))), fresh)
-    }.toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
+    graft.util.Tranches.ledgerHealth(spark, dir, present,
+      Map("df" -> "sh", "bf" -> "sig"), witness = Some("fp"))
   }
 
   /** Per-document dedup DECISION REPORT against the materialized
@@ -1576,7 +1166,7 @@ object DedupOps {
                                 k: Int, bands: Int, threshold: Double,
                                 maxBucket: Int): (DataFrame, () => Unit) = {
     val histSigs = spark.read.parquet(s"$dir/sig").select("doc_id", "sig")
-    if (countArtifactFresh(spark, dir, "sig", "bf")) {
+    if (graft.util.Tranches.countFresh(spark, dir, "sig", "bf")) {
       val histBf = spark.read.parquet(s"$dir/bf").drop("batch")
         .groupBy("band", "key").agg(sum(col("n")).as("__hc"))
         .select(col("band").as("__band"), col("key").as("__key"), col("__hc"))

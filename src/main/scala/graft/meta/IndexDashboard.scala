@@ -3,20 +3,20 @@ package graft.meta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cross-family index observability roll-up. The three at-rest index
-  * families each expose a per-artifact health gauge
-  * ([[graft.dedup.DedupOps.dedupIndexHealth]],
-  * [[graft.text.TextOps.winnowIndexHealth]],
-  * [[graft.similarity.SimilarityOps.ivfIndexHealth]]); the query an
-  * operator actually runs every morning is "are ALL my indexes
-  * healthy", so this unions whichever families are present into one
-  * frame with a leading `family` column. Families whose directory is
-  * not passed (or passed as None) are simply absent from the output —
-  * a deployment rarely runs all three.
+/** Cross-family index observability roll-up. Every at-rest index
+  * family exposes a per-artifact health gauge in one schema — the
+  * ledger families (dedup, winnow, vector, BM25) through
+  * [[graft.util.Tranches.ledgerHealth]], the other tranche families
+  * through [[graft.util.Tranches.health]]; the query an operator
+  * actually runs every morning is "are ALL my indexes healthy", so
+  * this unions whichever families are present into one frame with a
+  * leading `family` column. Families whose directory is not passed
+  * (or passed as None) are simply absent from the output — a
+  * deployment rarely runs them all.
   *
   * Same cost contract as the per-family gauges: directory metadata
   * only, no data file opened; the union is a driver-side concat of
-  * three tiny (≤5-row) local frames.
+  * tiny (≤5-row) local frames.
   */
 object IndexDashboard {
 

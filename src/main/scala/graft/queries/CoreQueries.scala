@@ -503,7 +503,7 @@ object CoreQueries {
         .select("l_id", "r_id", "lev_dist")
     },
 
-    // ---- the FREQUENCY-pruned key variant (r13 verdict #5), both
+    // ---- the FREQUENCY-pruned key variant, both
     //      passes, oracle-proven: a key covering > 0.5% of a side's
     //      rows is a stop-key ON THAT SIDE — scale-stable where the
     //      absolute maxBlock is not (fixed-vocabulary keys like the
@@ -675,7 +675,7 @@ object CoreQueries {
           Expectations.Unique(Seq("o_custkey"))))
     },
 
-    // ---- quarantine ROUTER (§2.2 beyond-ref, r12 verdict #5): the
+    // ---- quarantine ROUTER (§2.2 beyond-ref): the
     //      same contract rules now ROUTE rows instead of observing or
     //      aborting — quarantined rows carry their violated-rule tags
     //      (unique-excess first-wins by o_orderkey, the deterministic
@@ -1631,8 +1631,7 @@ object CoreQueries {
         |WHERE u.event_id % 3 = 2""".stripMargin) { (s, dir) =>
       import graft.analytics.AnomalyOps
       val ev = t(s, dir, "events").select("event_id", "event_type", "value")
-      val sDir = graft.util.Scratch.path("sigma_stats", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sDir))
+      val sDir = graft.util.Scratch.fresh("sigma_stats", dir)
       for (d <- 0 to 2)
         AnomalyOps.writeStatsTranche(
           AnomalyOps.statsSketch(ev.where(col("event_id") % 3 === d),

@@ -63,6 +63,12 @@ object LlmQueries {
   private def soleFit[T](cache: java.util.concurrent.ConcurrentHashMap[String, T]): Option[T] =
     if (cache.size == 1) Some(cache.values.iterator.next) else None
 
+  /** Write split `i` ∈ {0, 1} of a two-way ingest as two independent
+    * tranches (disjoint `batch=` dirs), overlapped on driver threads
+    * ([[graft.util.Par]]). */
+  private def twoTranches(write: Int => Unit): Unit =
+    graft.util.Par.jobs(() => write(0), () => write(1))
+
   private def arrLit(a: Array[Double]): String = a.map(_.toString).mkString("[", ", ", "]")
 
   /** `cents` CTE: one row per inverted list, `(l, cv)`. */
@@ -2099,8 +2105,7 @@ object LlmQueries {
     Q("q_decontaminate_bloom", duckContaminationSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val bench = docs.where(col("doc_id") < 25)
-      val idx = graft.util.Scratch.path("decontam_bloom", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("decontam_bloom", dir)
       DedupOps.benchmarkShingleBloom(bench, "text", idx, "suite0", shingleN = 8)
       DedupOps.contaminationCheckViaBloom(docs, bench, idx,
         "doc_id", "text", shingleN = 8)
@@ -2375,8 +2380,7 @@ object LlmQueries {
     }) { (s, dir) =>
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       val bench = docs.where(col("doc_id") < 25)
-      val bloomDir = graft.util.Scratch.path("pipeline_bloom", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bloomDir))
+      val bloomDir = graft.util.Scratch.fresh("pipeline_bloom", dir)
       DedupOps.benchmarkShingleBloom(bench, "text", bloomDir, "s0", shingleN = 8)
       // the assembly lives in graft.pipeline.DecontamPipeline —
       // clean-id set materialized ONCE (a lazy plan re-runs the whole
@@ -2435,8 +2439,7 @@ object LlmQueries {
     }) { (s, dir) =>
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       val bench = docs.where(col("doc_id") < 25)
-      val bloomDir = graft.util.Scratch.path("pipeline_bloom_sig", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bloomDir))
+      val bloomDir = graft.util.Scratch.fresh("pipeline_bloom_sig", dir)
       DedupOps.benchmarkShingleBloom(bench, "text", bloomDir, "s0", shingleN = 8)
       // same assembly via DecontamPipeline, tier forced Sig — this
       // query IS the registered scale path (the Auto route above the
@@ -2805,8 +2808,7 @@ object LlmQueries {
       val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
         docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
       val half = pmod(xxhash64(lit("cci"), col("id_a"), col("id_b")), lit(2))
-      val gDir = graft.util.Scratch.path("cc_group_index", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(gDir))
+      val gDir = graft.util.Scratch.fresh("cc_group_index", dir)
       GraphOps.writeGroupIndex(
         GraphOps.connectedComponents(pairs.where(half === 0), "id_a", "id_b"), gDir)
       val cc = GraphOps.updateGroupIndex(s, gDir,
@@ -2834,8 +2836,7 @@ object LlmQueries {
       val docs = Tables(s, dir, "documents")
       val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
         docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
-      val gDir = graft.util.Scratch.path("cc_group_index_stats", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(gDir))
+      val gDir = graft.util.Scratch.fresh("cc_group_index_stats", dir)
       GraphOps.writeGroupIndex(
         GraphOps.connectedComponents(pairs, "id_a", "id_b"), gDir)
       release()
@@ -3135,12 +3136,10 @@ object LlmQueries {
     Q("q_hll_rolling_index", duckHllRollingSql(7)) { (s, dir) =>
       import graft.profile.Sketches
       val ev = Tables(s, dir, "events").where(col("event_type") === "purchase")
-      val idx = graft.util.Scratch.path("dayhll_idx", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("dayhll_idx", dir)
       val half = pmod(xxhash64(lit("dhll"), col("event_id")), lit(2))
-      graft.util.Par.jobs( // independent tranches
-        () => Sketches.writeDayHllTranche(ev.where(half === 0), "user_id", "ts", idx, "t0"),
-        () => Sketches.writeDayHllTranche(ev.where(half === 1), "user_id", "ts", idx, "t1"))
+      twoTranches(i =>
+        Sketches.writeDayHllTranche(ev.where(half === i), "user_id", "ts", idx, s"t$i"))
       Sketches.consolidateDayHll(s, idx)
       Sketches.hllRollingFromIndex(s, idx, windowDays = 7)
     },
@@ -3207,13 +3206,9 @@ object LlmQueries {
         |JOIN ic ia ON ia.i = p.item_a
         |JOIN ic ib ON ib.i = p.item_b""".stripMargin) { (s, dir) =>
       val li = Tables(s, dir, "lineitem")
-      val cDir = graft.util.Scratch.path("cooc_index", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cDir))
-      graft.util.Par.jobs( // independent tranches
-        () => GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === 0),
-          "l_orderkey", "l_partkey", cDir, tag = "d0", maxPerGroup = 8),
-        () => GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === 1),
-          "l_orderkey", "l_partkey", cDir, tag = "d1", maxPerGroup = 8))
+      val cDir = graft.util.Scratch.fresh("cooc_index", dir)
+      twoTranches(i => GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === i),
+        "l_orderkey", "l_partkey", cDir, tag = s"d$i", maxPerGroup = 8))
       GraphOps.consolidateCooc(s, cDir)   // fold d0+d1, then append d2
       GraphOps.writeCoocTranche(li.where(col("l_orderkey") % 3 === 2),
         "l_orderkey", "l_partkey", cDir, tag = "d2", maxPerGroup = 8)
@@ -3247,17 +3242,9 @@ object LlmQueries {
     }) { (s, dir) =>
       import graft.profile.HistSketch
       val docs = Tables(s, dir, "documents")
-      val hDir = graft.util.Scratch.path("hist_tranches", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
-      // d0/d1 are independent tranches (disjoint batch= dirs) —
-      // overlapped on driver threads ([[graft.util.Par]])
-      graft.util.Par.jobs(
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(docs.where(col("doc_id") % 3 === 0), "n_chars"),
-          hDir, tag = "d0"),
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(docs.where(col("doc_id") % 3 === 1), "n_chars"),
-          hDir, tag = "d1"))
+      val hDir = graft.util.Scratch.fresh("hist_tranches", dir)
+      twoTranches(i => HistSketch.writeHistTranche(
+        HistSketch.histSketch(docs.where(col("doc_id") % 3 === i), "n_chars"), hDir, tag = s"d$i"))
       HistSketch.consolidateHist(s, hDir)   // fold d0+d1, then append d2
       HistSketch.writeHistTranche(
         HistSketch.histSketch(docs.where(col("doc_id") % 3 === 2), "n_chars"),
@@ -3293,15 +3280,9 @@ object LlmQueries {
     }) { (s, dir) =>
       import graft.profile.HistSketch
       val docs = Tables(s, dir, "documents")
-      val hDir = graft.util.Scratch.path("hist_bucketize", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
-      graft.util.Par.jobs( // independent tranches
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(docs.where(col("doc_id") % 2 === 0), "n_chars"),
-          hDir, tag = "d0"),
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(docs.where(col("doc_id") % 2 === 1), "n_chars"),
-          hDir, tag = "d1"))
+      val hDir = graft.util.Scratch.fresh("hist_bucketize", dir)
+      twoTranches(i => HistSketch.writeHistTranche(
+        HistSketch.histSketch(docs.where(col("doc_id") % 2 === i), "n_chars"), hDir, tag = s"d$i"))
       HistSketch.histBucketize(docs.select("doc_id", "n_chars"), "n_chars",
         HistSketch.readHist(s, hDir), Seq(0.5, 0.9))
     },
@@ -3379,15 +3360,9 @@ object LlmQueries {
       import graft.profile.HistSketch
       val docs = Tables(s, dir, "documents")
       val en = docs.where(col("lang") === "en")
-      val hDir = graft.util.Scratch.path("psi_drift", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hDir))
-      graft.util.Par.jobs( // independent tranches
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(en.where(col("doc_id") % 2 === 0), "n_chars"),
-          hDir, tag = "d0"),
-        () => HistSketch.writeHistTranche(
-          HistSketch.histSketch(en.where(col("doc_id") % 2 === 1), "n_chars"),
-          hDir, tag = "d1"))
+      val hDir = graft.util.Scratch.fresh("psi_drift", dir)
+      twoTranches(i => HistSketch.writeHistTranche(
+        HistSketch.histSketch(en.where(col("doc_id") % 2 === i), "n_chars"), hDir, tag = s"d$i"))
       HistSketch.histDriftPsi(
         HistSketch.readHist(s, hDir),
         HistSketch.histSketch(docs.where(col("lang") =!= "en"), "n_chars"))
@@ -3560,12 +3535,10 @@ object LlmQueries {
     Q("q_psi_rolling_index", duckPsiRollingSql(7)) { (s, dir) =>
       import graft.profile.HistSketch
       val ev = Tables(s, dir, "events")
-      val idx = graft.util.Scratch.path("dayhist_idx", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("dayhist_idx", dir)
       val half = pmod(xxhash64(lit("dh"), col("event_id")), lit(2))
-      graft.util.Par.jobs( // independent tranches
-        () => HistSketch.writeDayHistTranche(ev.where(half === 0), "value", "ts", idx, "t0"),
-        () => HistSketch.writeDayHistTranche(ev.where(half === 1), "value", "ts", idx, "t1"))
+      twoTranches(i =>
+        HistSketch.writeDayHistTranche(ev.where(half === i), "value", "ts", idx, s"t$i"))
       graft.util.Tranches.maybeFold(s, idx, maxLive = 1)(
         HistSketch.consolidateDayHist(s, idx))
       HistSketch.histRollingPsiFromIndex(s, idx, windowDays = 7)
@@ -3833,8 +3806,7 @@ object LlmQueries {
     //      hash-identical to the inline form, same oracle ----
     Q("q_js_rolling_index", duckJsRollingSql(7)) { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val idx = graft.util.Scratch.path("daymix_idx", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("daymix_idx", dir)
       val half = pmod(xxhash64(lit("dm"), col("event_id")), lit(2))
       TextOps.writeDayMixTranche(ev.where(half === 0), "event_type", "ts", idx, "t0")
       TextOps.writeDayMixTranche(ev.where(half === 1), "event_type", "ts", idx, "t1")
@@ -4213,8 +4185,7 @@ object LlmQueries {
     }) { (s, dir) =>
       import graft.relational.BloomIndex
       val orders = Tables(s, dir, "orders")
-      val idx = graft.util.Scratch.path("bloom_idx", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("bloom_idx", dir)
       val hist = orders.select(col("o_orderkey"), col("o_custkey"))
       BloomIndex.writeBloomTranche(hist.where(col("o_orderkey") % 4 === 0),
         "o_custkey", idx, "t0", mBits = 65536L, k = 3, portable = true)
@@ -4474,15 +4445,9 @@ object LlmQueries {
     }) { (s, dir) =>
       import graft.profile.CountMin
       val li = Tables(s, dir, "lineitem")
-      val cmDir = graft.util.Scratch.path("cm_counts", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cmDir))
-      graft.util.Par.jobs( // independent tranches
-        () => CountMin.writeCmTranche(
-          CountMin.cmSketch(li.where(col("l_orderkey") % 2 === 0), "l_partkey"),
-          cmDir, tag = "d0"),
-        () => CountMin.writeCmTranche(
-          CountMin.cmSketch(li.where(col("l_orderkey") % 2 === 1), "l_partkey"),
-          cmDir, tag = "d1"))
+      val cmDir = graft.util.Scratch.fresh("cm_counts", dir)
+      twoTranches(i => CountMin.writeCmTranche(
+        CountMin.cmSketch(li.where(col("l_orderkey") % 2 === i), "l_partkey"), cmDir, tag = s"d$i"))
       CountMin.cmLookup(CountMin.readCm(s, cmDir),
           li.where(col("l_partkey") <= 50), "l_partkey")
         .join(li.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_exact")),
@@ -4571,8 +4536,7 @@ object LlmQueries {
         |      FROM bs) WHERE rank <= 20""".stripMargin) { (s, dir) =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val idx = graft.util.Scratch.path("bm25_index", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      val idx = graft.util.Scratch.fresh("bm25_index", dir)
       RetrievalOps.bm25WriteIndex(docs.where(col("doc_id") % 2 === 0),
         idx, "doc_id", "text", nBuckets = 16)
       RetrievalOps.bm25AppendToIndex(docs.where(col("doc_id") % 2 === 1),

@@ -252,7 +252,7 @@ object SimilarityOps {
     val spark = newRows.sparkSession
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     val nbits = readLshNbits(spark, dir)
-    if (!graft.dedup.DedupOps.appendTagAllowed(spark, dir, tag, "lshAppendToIndex",
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "lshAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(spark.read.parquet(s"$dir/vec").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
@@ -267,12 +267,9 @@ object SimilarityOps {
                           indexDir: String,
                           commit: graft.merge.Merge.Commit =
                             graft.merge.Merge.RenameCommit): Unit = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    readLshNbits(spark, dir)
-    graft.dedup.DedupOps.consolidateArtifacts(spark,
-      if (commit == graft.merge.Merge.PointerCommit) indexDir else dir,
-      Seq("vec"), commitWitness = "vec", partitionCols = Seq("lsh_bucket"),
-      commit = commit)
+    readLshNbits(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    graft.util.Tranches.foldLedger(spark, indexDir, Seq("vec" -> Seq("lsh_bucket")),
+      witness = "vec", commit = commit)
   }
 
   private def lshIndexRows(df: DataFrame, cidCol: String, vecCol: String,
@@ -559,7 +556,7 @@ object SimilarityOps {
     val spark = newRows.sparkSession
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     val meta = requireIvfMeta(spark, dir)
-    if (!graft.dedup.DedupOps.appendTagAllowed(spark, dir, tag, "ivfAppendToIndex",
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(spark.read.parquet(s"$dir/vec").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
@@ -571,7 +568,7 @@ object SimilarityOps {
   /** Collapse accumulated IVF tranches into one (atomic swap,
     * `distinct()`-self-healing, absorbed-tag ledger) — the SHARED
     * consolidation protocol
-    * ([[graft.dedup.DedupOps.consolidateArtifacts]]). The rewrite
+    * ([[graft.util.Tranches.foldLedger]]). The rewrite
     * preserves `ivf_list` as a PARTITION column: a consolidation that
     * demoted it to a data column would silently retire partition
     * pruning — every probe would scan the whole index. The single
@@ -580,12 +577,9 @@ object SimilarityOps {
                           indexDir: String,
                           commit: graft.merge.Merge.Commit =
                             graft.merge.Merge.RenameCommit): Unit = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    requireIvfMeta(spark, dir)
-    graft.dedup.DedupOps.consolidateArtifacts(spark,
-      if (commit == graft.merge.Merge.PointerCommit) indexDir else dir,
-      Seq("vec"), commitWitness = "vec", partitionCols = Seq("ivf_list"),
-      commit = commit)
+    requireIvfMeta(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    graft.util.Tranches.foldLedger(spark, indexDir, Seq("vec" -> Seq("ivf_list")),
+      witness = "vec", commit = commit)
   }
 
   private def ivfIndexRows(df: DataFrame, cidCol: String, vecCol: String,
@@ -963,7 +957,7 @@ object SimilarityOps {
     val spark = newRows.sparkSession
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     val meta = requireIvfPqMeta(spark, dir)
-    if (!graft.dedup.DedupOps.appendTagAllowed(spark, dir, tag, "ivfPqAppendToIndex",
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfPqAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(spark.read.parquet(s"$dir/pq").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
@@ -986,9 +980,7 @@ object SimilarityOps {
                     indexDir: String): DataFrame = {
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     requireIvfMeta(spark, dir)
-    val nTranches = graft.util.Fs.hfs(spark, dir)
-      .listStatus(new org.apache.hadoop.fs.Path(s"$dir/vec"))
-      .count(_.getPath.getName.startsWith("batch="))
+    val nTranches = graft.util.Tranches.names(spark, s"$dir/vec").size
     spark.read.parquet(s"$dir/vec")
       .groupBy(col("ivf_list").cast(IntegerType).as("ivf_list"))
       .agg(count(lit(1)).as("n_rows"), count_distinct(col("corpus_id")).as("n_ids"))
@@ -1007,8 +999,7 @@ object SimilarityOps {
     require(present.nonEmpty,
       s"ivfIndexHealth: $dir has neither vec nor pq — not a written vector index")
     // vec/pq are single-artifact protocols — each is its own witness
-    graft.dedup.DedupOps.artifactHealth(spark, dir, present, Map.empty,
-      witness = None)
+    graft.util.Tranches.ledgerHealth(spark, dir, present, Map.empty, witness = None)
   }
 
   /** [[consolidateIvfIndex]]'s twin for the IVF-PQ code artifact —
@@ -1017,12 +1008,9 @@ object SimilarityOps {
                             indexDir: String,
                             commit: graft.merge.Merge.Commit =
                               graft.merge.Merge.RenameCommit): Unit = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    requireIvfPqMeta(spark, dir)
-    graft.dedup.DedupOps.consolidateArtifacts(spark,
-      if (commit == graft.merge.Merge.PointerCommit) indexDir else dir,
-      Seq("pq"), commitWitness = "pq", partitionCols = Seq("ivf_list"),
-      commit = commit)
+    requireIvfPqMeta(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    graft.util.Tranches.foldLedger(spark, indexDir, Seq("pq" -> Seq("ivf_list")),
+      witness = "pq", commit = commit)
   }
 
   private def ivfPqIndexRows(df: DataFrame, cidCol: String, vecCol: String,

@@ -190,13 +190,15 @@ object StreamingOps {
     epochLoop("indexedDedupStream", docs, checkpointDir) { (batch, epoch) =>
       processIndexedDedupEpoch(batch, epoch, indexDir, outDir, idCol, textCol,
         shingleN, threshold, maxBucket, portable, approx)
-      // count-triggered auto-fold AFTER the epoch's append: epochs
-      // are sequential here, so the consolidate-offline-relative-to-
-      // appends contract holds at this position, and the absorbed-tag
-      // ledger keeps a later replay of a folded epoch a no-op
+      // count-triggered auto-fold AFTER the epoch's append, on the
+      // committed `fp` witness tranches: epochs are sequential here, so
+      // the consolidate-offline-relative-to-appends contract holds at
+      // this position, and the absorbed-tag ledger keeps a later replay
+      // of a folded epoch a no-op
       if (maxLiveTranches > 0)
-        graft.dedup.DedupOps.maybeConsolidateDedupIndex(batch.sparkSession,
-          indexDir, maxLiveTranches): Unit
+        graft.util.Tranches.maybeFoldLedger(batch.sparkSession, indexDir, "fp",
+          maxLiveTranches)(
+          graft.dedup.DedupOps.consolidateDedupIndex(batch.sparkSession, indexDir)): Unit
     }
 
   /** The once-per-epoch decision commit shared by the streaming index
@@ -772,7 +774,7 @@ object StreamingOps {
     * contract). Probes stay partition-pruned reader-side queries —
     * the stream holds no state. `maxLiveTranches = n` folds the index
     * ([[graft.text.RetrievalOps.bm25ConsolidateIndex]]) once its
-    * postings hold more than n live tranches.
+    * `doclen` witness holds more than n committed tranches.
     */
   def bm25Stream(docs: DataFrame, indexDir: String, idCol: String,
                  textCol: String, checkpointDir: String,
@@ -781,12 +783,10 @@ object StreamingOps {
     epochLoop("bm25Stream", docs, checkpointDir) { (batch, epoch) =>
       graft.text.RetrievalOps.bm25AppendToIndex(
         batch, indexDir, idCol, textCol, s"e$epoch")
-      if (maxLiveTranches > 0) {
-        val spark = batch.sparkSession
-        graft.util.Tranches.maybeFold(spark,
-          s"${graft.merge.Merge.resolveDir(spark, indexDir)}/postings", maxLiveTranches)(
-          graft.text.RetrievalOps.bm25ConsolidateIndex(spark, indexDir)): Unit
-      }
+      if (maxLiveTranches > 0)
+        graft.util.Tranches.maybeFoldLedger(batch.sparkSession, indexDir, "doclen",
+          maxLiveTranches)(
+          graft.text.RetrievalOps.bm25ConsolidateIndex(batch.sparkSession, indexDir)): Unit
     }
 
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)

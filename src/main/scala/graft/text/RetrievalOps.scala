@@ -149,9 +149,10 @@ object RetrievalOps {
     * is the probe contract, like LSH's nbits); postings/doclen tranches
     * append under `batch=<tag>` (an ingest overwrites its OWN tag —
     * replay-safe; docs must be tranche-disjoint, the same data-layout
-    * obligation as the co-occurrence groups). [[bm25ConsolidateIndex]]
-    * folds tranches through the whole-dir atomic swap and records the
-    * absorbed tags so a replayed absorbed append no-ops.
+    * obligation as the co-occurrence groups). `doclen` is written last
+    * and is the family's commit witness; [[bm25ConsolidateIndex]] folds
+    * the committed tranches through the shared ledger fold and records
+    * the absorbed tags so a replayed absorbed append no-ops.
     *
     * Corpus-level D/T are aggregated from the doclen artifact at probe
     * time: |docs| rows of two longs — a bounded-metadata scan, orders
@@ -191,10 +192,12 @@ object RetrievalOps {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$root/postings/batch=$tag")
     // doclen from the written postings tranche, NOT a second tokenize
-    // pass over the corpus (r19 optimization): dl ≡ Σ_term tf — the
-    // identical value — and the read-back makes the artifact count
-    // exactly the rows at rest (the dedup index's df-from-sh idiom).
-    // One corpus scan + tokenize per tranche instead of two. Schema
+    // pass over the corpus: dl ≡ Σ_term tf — the identical value — and
+    // the read-back makes the artifact count exactly the rows at rest
+    // (the dedup index's df-from-sh idiom), so each tranche costs one
+    // corpus scan + tokenize. Written after postings, doclen is the
+    // commit witness: a crash between the two leaves `tag` unproven,
+    // so a fold preserves it for the same-tag retry. Schema
     // spelled explicitly: an EMPTY epoch's tranche has no parquet
     // footers to infer from (streaming appends hit this), and the
     // empty read must still produce a typed empty doclen tranche.
@@ -228,7 +231,7 @@ object RetrievalOps {
     val spark = newDocs.sparkSession
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     val nBuckets = readNBuckets(spark, dir)
-    if (!graft.dedup.DedupOps.appendTagAllowed(spark, dir, tag, "bm25AppendToIndex",
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "bm25AppendToIndex",
       () => newDocs.select(col(idCol).cast(LongType).as("doc_id")).distinct()
         .join(spark.read.parquet(s"$dir/doclen").select("doc_id"),
           Seq("doc_id"), "left_anti").count()))
@@ -236,43 +239,22 @@ object RetrievalOps {
     writeTranche(newDocs, dir, idCol, textCol, nBuckets, tag)
   }
 
-  /** Fold every tranche into a fresh `batch=build` through the
-    * whole-dir atomic swap (tranches are row-disjoint unions — no sum
-    * protocol needed), recording the absorbed tags so a replayed
-    * absorbed append no-ops instead of resurrecting folded rows. */
+  /** Fold the committed tranches into `batch=consolidated` through the
+    * shared ledger fold ([[graft.util.Tranches.foldLedger]]), `bucket`
+    * partitioning kept. `doclen`, written last by every append, is the
+    * commit witness: a tag missing from it (a crash between the postings
+    * and doclen writes) is preserved unabsorbed, so the same-tag retry
+    * lands instead of failing as "new data on an absorbed tag". The
+    * absorbed tags are recorded so a replayed absorbed append no-ops
+    * instead of resurrecting folded rows. */
   def bm25ConsolidateIndex(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String,
                            commit: graft.merge.Merge.Commit =
                              graft.merge.Merge.RenameCommit): Unit = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    require(commit != graft.merge.Merge.PointerCommit || dir != indexDir,
-      s"bm25ConsolidateIndex: $indexDir is not pointer-committed; PointerCommit " +
-        "consolidation needs an index built with commit = PointerCommit")
-    val nBuckets = readNBuckets(spark, dir)
-    val tags = graft.util.Fs.hfs(spark, dir)
-      .listStatus(new org.apache.hadoop.fs.Path(s"$dir/postings"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).sorted.toSeq
-    val postings = spark.read.parquet(s"$dir/postings")
-      .select("doc_id", "term", "tf", "bucket")
-    val doclen = spark.read.parquet(s"$dir/doclen").select("doc_id", "dl")
-    val absorbed = graft.dedup.DedupOps.readAbsorbedTags(spark, dir) ++
-      tags.filterNot(_ == "build")
-    // the bm25 fold is ALREADY a whole-root rebuild — the commit modes
-    // share one build body; PointerCommit publishes it as a fresh
-    // immutable generation (S3-safe, r13 verdict #2)
-    graft.merge.Merge.swapWith(spark,
-      if (commit == graft.merge.Merge.PointerCommit) indexDir else dir,
-      commit) { root =>
-      graft.util.Fs.writeSmallFile(spark, s"$root/_graft_meta",
-        s"family=bm25\nnbuckets=$nBuckets\n")
-      postings.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$root/postings/batch=build")
-      doclen.write.mode("overwrite").parquet(s"$root/doclen/batch=build")
-      if (absorbed.nonEmpty)
-        graft.util.Fs.writeSmallFile(spark, s"$root/_graft_absorbed",
-          absorbed.toSeq.sorted.mkString("\n"))
-    }
+    readNBuckets(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    graft.util.Tranches.foldLedger(spark, indexDir,
+      Seq("postings" -> Seq("bucket"), "doclen" -> Nil), witness = "doclen",
+      commit = commit)
   }
 
   /** Index statistics gauge, the family-generic shape shared with the
@@ -288,17 +270,19 @@ object RetrievalOps {
   }
 
   /** Health gauge (directory metadata only, no data file opened):
-    * tranche/marker/unproven counts per artifact. The BM25 family
-    * writes no decide-once markers — its appends are pure functions of
-    * the batch, replay-safe via own-tag overwrite — so `n_marked` is 0
-    * and every tranche counts committed (the pre-witness convention
-    * the shared gauge encodes). */
+    * tranche/marker/unproven counts per artifact
+    * ([[graft.util.Tranches.ledgerHealth]]). `n_marked` counts tranches
+    * carrying the committer's `_SUCCESS` marker; `n_unproven` counts
+    * tags the `doclen` witness does not prove committed — the same rule
+    * [[bm25ConsolidateIndex]] folds by — so a crash between an append's
+    * postings and doclen writes shows on `postings` until the same-tag
+    * retry. */
   def bm25IndexHealth(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): DataFrame = {
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     readNBuckets(spark, dir)
-    graft.dedup.DedupOps.artifactHealth(spark, dir, Seq("postings", "doclen"),
-      Map.empty, witness = None)
+    graft.util.Tranches.ledgerHealth(spark, dir, Seq("postings", "doclen"),
+      Map.empty, witness = Some("doclen"))
   }
 
   /** Top-k BM25 from the at-rest index: partition-pruned postings

@@ -878,11 +878,7 @@ object TextOps {
         winnowMetaString(WinnowIndexMeta(k, w, portable)))
       winnowRows(corpus, idCol, textCol, k, w, portable)
         .write.mode("overwrite").parquet(s"$root/wfp/batch=build")
-      // wdf = per-fingerprint occurrence counts of the tranche at rest
-      // (read back, not re-evaluated) — the overlap probe's hot-hash
-      // prune input, additive across tranches like the dedup df/bf
-      spark.read.parquet(s"$root/wfp/batch=build")
-        .groupBy("wfp").agg(count(lit(1)).as("n"))
+      winnowCounts(spark.read.parquet(s"$root/wfp/batch=build"))
         .write.mode("overwrite").parquet(s"$root/wdf/batch=build")
     }
     commit match {
@@ -910,7 +906,7 @@ object TextOps {
     // absent from the consolidated artifact — pair granularity so a
     // NEW document aliased onto an absorbed tag fails fast even when
     // its selected fingerprints all happen to exist in the index.
-    if (!graft.dedup.DedupOps.appendTagAllowed(spark, dir, tag, "appendToWinnowIndex",
+    if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "appendToWinnowIndex",
       () => winnowRows(newRows, idCol, textCol, meta.k, meta.w, meta.portable)
         .join(spark.read.parquet(s"$dir/wfp").select("doc_id", "wfp"),
           Seq("doc_id", "wfp"), "left_anti")
@@ -924,52 +920,31 @@ object TextOps {
     // next consolidation's regeneration); pre-wdf legacy indexes skip
     // (consolidateWinnowIndex retrofits the artifact)
     if (pathExists(spark, s"$dir/wdf"))
-      spark.read.parquet(s"$dir/wfp/batch=$tag")
-        .groupBy("wfp").agg(count(lit(1)).as("n"))
+      winnowCounts(spark.read.parquet(s"$dir/wfp/batch=$tag"))
         .write.mode("overwrite").parquet(s"$dir/wdf/batch=$tag")
   }
 
-  /** Collapse accumulated winnow tranches into one (atomic swap,
-    * `distinct()`-self-healing, absorbed-tag ledger) — the SHARED
-    * consolidation protocol
-    * ([[graft.dedup.DedupOps.consolidateArtifacts]]); the single `wfp`
-    * artifact is its own commit witness. */
+  /** `wdf`: per-fingerprint occurrence counts of `wfp` rows at rest
+    * (read back, never re-evaluated) — the overlap probe's hot-hash
+    * prune input, additive across tranches like the dedup `df`/`bf`. */
+  private def winnowCounts(wfp: DataFrame): DataFrame =
+    wfp.groupBy("wfp").agg(count(lit(1)).as("n"))
+
+  /** Collapse accumulated winnow tranches into one — the shared
+    * ledger fold ([[graft.util.Tranches.foldLedger]]: `distinct()`
+    * self-healing, absorbed-tag ledger, both commit modes); the single
+    * `wfp` artifact is its own commit witness, and `wdf` is regenerated
+    * from the folded rows (doubling as the pre-wdf migration). */
   def consolidateWinnowIndex(spark: org.apache.spark.sql.SparkSession,
                              indexDir: String,
                              commit: graft.merge.Merge.Commit =
-                               graft.merge.Merge.RenameCommit): Unit = commit match {
-    case graft.merge.Merge.PointerCommit =>
-      // S3-safe whole-generation fold: wfp consolidates and wdf
-      // regenerates INSIDE the same published generation (the rename
-      // path's post-swap rebuild, without its stale-counts window)
-      val oldRoot = graft.merge.Merge.resolveDir(spark, indexDir)
-      require(pathExists(spark, s"$oldRoot/wfp"),
-        s"consolidateWinnowIndex: $indexDir has no wfp artifact — not a winnow " +
-          "index (build it with writeWinnowIndex)")
-      graft.dedup.DedupOps.consolidateArtifacts(spark, indexDir, Seq("wfp"),
-        commitWitness = "wfp", commit = commit, regenerated = Seq("wdf"),
-        regenerate = { newRoot =>
-          spark.read.parquet(s"$newRoot/wfp").drop("batch")
-            .groupBy("wfp").agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$newRoot/wdf/batch=consolidated")
-        })
-    case graft.merge.Merge.RenameCommit =>
-      val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-      require(pathExists(spark, s"$dir/wfp"),
-        s"consolidateWinnowIndex: $dir has no wfp artifact — not a winnow index " +
-          "(build it with writeWinnowIndex)")
-      graft.dedup.DedupOps.consolidateArtifacts(spark, dir, Seq("wfp"),
-        commitWitness = "wfp")
-      // wdf rows are additive across tranches — regenerated from the
-      // consolidated wfp (never distinct()-rewritten, which would
-      // collapse equal count rows); doubles as the pre-wdf migration
-      def buildWdf(root: String): Unit =
-        spark.read.parquet(s"$dir/wfp").drop("batch")
-          .groupBy("wfp").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$root/batch=consolidated")
-      val wdfDir = s"$dir/wdf"
-      if (pathExists(spark, wdfDir)) graft.merge.Merge.atomicSwap(spark, wdfDir)(buildWdf)
-      else buildWdf(wdfDir)
+                               graft.merge.Merge.RenameCommit): Unit = {
+    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
+    require(pathExists(spark, s"$dir/wfp"),
+      s"consolidateWinnowIndex: $dir has no wfp artifact — not a winnow index " +
+        "(build it with writeWinnowIndex)")
+    graft.util.Tranches.foldLedger(spark, indexDir, Seq("wfp" -> Nil), witness = "wfp",
+      Seq(("wdf", "wfp", winnowCounts _)), commit)
   }
 
   /** At-rest winnow-index statistics — the [[graft.dedup.DedupOps
@@ -1001,7 +976,7 @@ object TextOps {
     readWinnowIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
       s"winnowIndexHealth: $dir has no _graft_meta — not a winnow index " +
         "(build it with writeWinnowIndex)"))
-    graft.dedup.DedupOps.artifactHealth(spark, dir,
+    graft.util.Tranches.ledgerHealth(spark, dir,
       Seq("wfp", "wdf").filter(a => graft.util.Fs.pathExists(spark, s"$dir/$a")),
       Map("wdf" -> "wfp"), witness = Some("wfp"))
   }
@@ -1048,7 +1023,7 @@ object TextOps {
     // the union window for a legacy/stale index
     // (consolidateWinnowIndex retrofits/refreshes it)
     val (a, b, release): (DataFrame, DataFrame, () => Unit) =
-      if (graft.dedup.DedupOps.countArtifactFresh(spark, dir, "wfp", "wdf")) {
+      if (graft.util.Tranches.countFresh(spark, dir, "wfp", "wdf")) {
         // batch rows fork into their counts and the join — persisted
         // so the winnow kernel runs once per consumer set; history is
         // touched only by the hot anti-join into the candidate join

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Hadoop-filesystem plumbing shared by the at-rest index families
   * (dedup, winnow) and anything else that keeps small engine-owned
-  * control files (`_graft_meta`, `_graft_absorbed`) next to parquet
+  * control files (`_graft_meta`, the absorbed-tag ledger) next to parquet
   * artifacts. Lives in `util` so no domain module has to depend on
   * another for filesystem access.
   */

@@ -17,14 +17,14 @@ object Scratch {
 
   // pid-keyed scratch is unreachable by any OTHER process, so it is
   // garbage the instant this JVM exits — and without a hook it
-  // accretes forever (r15 audit: 9,600 orphaned /tmp/graft_* dirs,
-  // 6.6 GB, after 15 rounds of harness JVMs; on a long-lived cluster
-  // node the same leak fills local disks). Best-effort delete of
+  // accretes forever (thousands of orphaned dirs, gigabytes, after
+  // repeated harness runs; on a long-lived cluster node the same leak
+  // fills local disks). Best-effort delete of
   // every path this process handed out, registered once — through
   // Hadoop's ShutdownHookManager at a priority BELOW Spark's context
   // hook (50), so the sweep runs AFTER executors/block managers stop
-  // and never yanks a dir a lingering task write still holds (r15
-  // self-review: a plain Runtime hook runs CONCURRENTLY with Spark's).
+  // and never yanks a dir a lingering task write still holds (a plain
+  // Runtime hook runs CONCURRENTLY with Spark's).
   private val issued = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private lazy val hook: Unit = {
     val sweep: Runnable = () => issued.keySet().forEach { p =>
@@ -38,7 +38,7 @@ object Scratch {
   }
 
   // The exit hook only covers GRACEFUL deaths; harness JVMs commonly
-  // die by SIGKILL/OOM-kill, where no hook runs (r15 verdict #2). The
+  // die by SIGKILL/OOM-kill, where no hook runs. The
   // pid suffix makes orphanhood decidable from the outside, so the
   // FIRST path() call of any later JVM sweeps dirs whose owning pid is
   // no longer alive — each process cleans up after its dead siblings.
@@ -50,7 +50,7 @@ object Scratch {
     * current JVM's own dirs are never touched, and a pid we cannot
     * interrogate is presumed alive (kept).
     *
-    * PID-REUSE caveat (r16 self-review): if the kernel recycles a dead
+    * PID-REUSE caveat: if the kernel recycles a dead
     * owner's pid onto an unrelated live process, that orphan reads
     * "alive" and is shielded for as long as the squatter runs — the
     * failure mode is bounded ACCRETION (a dir survives until the next
@@ -81,6 +81,14 @@ object Scratch {
     hook
     reaped
     issued.put(p, java.lang.Boolean.TRUE)
+    p
+  }
+
+  /** [[path]] emptied first, for a query that builds its artifact from
+    * nothing on every run. */
+  def fresh(tag: String, dir: String): String = {
+    val p = path(tag, dir)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     p
   }
 }

@@ -30,10 +30,20 @@ import org.apache.spark.sql.functions._
   * Both folds write the merged rows to a dot-prefixed scratch
   * directory first (hidden from Spark's file listing and from the
   * `batch=*` lister), so a crash mid-write leaves every read unchanged.
+  *
+  * LEDGER families (dedup sh/fp/sig, winnow, LSH, IVF, IVF-PQ, BM25)
+  * keep ROW artifacts whose rows are unions, appended by tag, and fold
+  * through [[foldLedger]]: a tag is committed only when the family's
+  * WITNESS artifact (the one the append writes last) carries it under
+  * the committer's `_SUCCESS` marker, folds rewrite only committed
+  * tags, and the absorbed tags go to a ledger that
+  * [[appendTagAllowed]] consults, so a replayed append of a folded tag
+  * is a no-op instead of a second copy.
   */
 object Tranches {
 
   private val ManifestName = "_graft_folded.txt"
+  private val LedgerName = "_graft_absorbed"
 
   /** Every `batch=*` directory under `root`, sorted by name, superseded
     * or not. */
@@ -41,6 +51,31 @@ object Tranches {
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("batch=")).sortBy(_.getName).toSeq
+
+  /** `batch=*` names under an artifact directory (the gauges' tranche
+    * count). */
+  private[graft] def names(spark: SparkSession, artifactDir: String): Seq[String] =
+    listed(Fs.hfs(spark, artifactDir), new Path(artifactDir)).map(_.getName)
+
+  /** Tranche names carrying the committer's `_SUCCESS` marker. ONE glob
+    * resolves every marker — a per-tranche `exists` would be one HEAD
+    * request per tranche against an object store. */
+  private def marked(fs: FileSystem, root: Path): Set[String] =
+    Option(fs.globStatus(new Path(root, "batch=*/_SUCCESS"))).toSeq.flatten
+      .map(_.getPath.getParent.getName).toSet
+
+  /** The committed-tranche rule: tranches proven COMPLETE by their
+    * `_SUCCESS` marker. A tranche without one is a mid-write crash
+    * remnant, visible and possibly partial — EXCEPT when NO tranche
+    * carries a marker: the deployment disabled
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs`, and an entire
+    * healthy artifact must not read as uncommitted, so every tranche
+    * counts. */
+  private def committedOf(all: Seq[String], marks: Set[String]): Seq[String] =
+    if (marks.isEmpty) all else all.filter(marks)
+
+  private def committed(fs: FileSystem, root: Path): Seq[String] =
+    committedOf(listed(fs, root).map(_.getName), marked(fs, root))
 
   /** One ingest = one tranche, overwriting its own tag (replay-safe).
     * Mode-transparent: a pointer-committed artifact resolves to its
@@ -183,9 +218,25 @@ object Tranches {
     * daily ingest would otherwise grow the read fan-in without bound.
     * Returns whether a fold ran. */
   def maybeFold(spark: SparkSession, dir: String, maxLive: Int)
-               (fold: => Unit): Boolean = {
+               (fold: => Unit): Boolean =
+    tick(maxLive)(live(spark, dir).length)(fold)
+
+  /** [[maybeFold]] for a LEDGER family: the count is the COMMITTED
+    * tranches of the `witness` artifact of `indexDir`. Unproven
+    * tranches do not count — a ledger fold preserves them rather than
+    * folding them, so counting them would fire the fold every tick
+    * without reducing the fan-in. Safe in-loop when ticks run between
+    * sequential appends (the fold must not race an append). */
+  def maybeFoldLedger(spark: SparkSession, indexDir: String, witness: String,
+                      maxLive: Int)(fold: => Unit): Boolean =
+    tick(maxLive) {
+      val dir = graft.merge.Merge.resolveDir(spark, indexDir)
+      committed(Fs.hfs(spark, dir), new Path(dir, witness)).length
+    }(fold)
+
+  private def tick(maxLive: Int)(count: => Int)(fold: => Unit): Boolean = {
     require(maxLive >= 1, s"Tranches.maybeFold: maxLive=$maxLive must be >= 1")
-    if (live(spark, dir).length > maxLive) { fold; true } else false
+    if (count > maxLive) { fold; true } else false
   }
 
   /** TRIAGE gauge for a tranche artifact in the cross-family dashboard
@@ -209,9 +260,8 @@ object Tranches {
     require(fs.exists(root), s"Tranches.health: $dir does not exist")
     val all = listed(fs, root).map(_.getName).toSet
     val liveNames = live(spark, dir).map(_.getName).toSet
-    val marked = fs.globStatus(new Path(dir, "batch=*/_SUCCESS"))
-      .map(_.getPath.getParent.getName).toSet
-    Seq((artifact, liveNames.size, liveNames.count(marked.contains),
+    val marks = marked(fs, root)
+    Seq((artifact, liveNames.size, liveNames.count(marks),
       (all -- liveNames).size, Option.empty[Boolean]))
       .toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
   }
@@ -306,5 +356,204 @@ object Tranches {
       (scratch, outName) =>
         writeManifest(fs, scratch, transitiveFolded(fs, liveNow, outName))
     }
+  }
+
+  // ------------------------------------------------ ledger families
+
+  /** Tags a [[foldLedger]] absorbed into `batch=consolidated`: a
+    * replayed append of an absorbed tag must be a no-op, not a second
+    * copy of rows that already live in the folded tranche. */
+  private[graft] def readAbsorbedTags(spark: SparkSession, dir: String): Set[String] =
+    Fs.readSmallFile(spark, s"$dir/$LedgerName")
+      .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty)
+
+  /** The append-tag gate of every ledger family. Reserved lifecycle
+    * names are rejected outright (an append tagged `consolidated` would
+    * overwrite the whole folded history), and an absorbed tag is a
+    * no-op only when the tranche is PROVABLY a replay. `novelRows` is
+    * the caller's content probe — the count of batch artifact rows
+    * absent from the index — evaluated ONLY on the absorbed-tag path. A
+    * replayed tag counts 0 and no-ops with a warning; a non-zero count
+    * means NEW data was aliased onto an absorbed tag (a stream
+    * restarted with a fresh checkpoint re-numbering epochs from 0), and
+    * a silent no-op would drop it from the index forever — that fails
+    * fast instead, naming the fix (a fresh tag namespace). */
+  private[graft] def appendTagAllowed(spark: SparkSession, dir: String, tag: String,
+                                      opName: String, novelRows: () => Long): Boolean = {
+    require(tag != "build" && tag != "consolidated",
+      s"$opName: tag '$tag' is reserved — build/consolidated name lifecycle " +
+        "tranches, and an append would overwrite the entire consolidated " +
+        "history with one day's rows")
+    if (readAbsorbedTags(spark, dir).contains(tag)) {
+      val novel = novelRows()
+      if (novel > 0) throw new IllegalStateException(
+        s"$opName: tag '$tag' was already absorbed by consolidation, but this " +
+          s"tranche carries $novel artifact row(s) NOT present in the index — " +
+          "new data aliased onto an absorbed tag (e.g. a stream restarted with " +
+          "a fresh checkpoint re-numbering epochs from 0). A silent no-op would " +
+          s"permanently drop it from $dir. Append it under a tag never used " +
+          "before (e.g. prefix a new stream generation into the tag).")
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$opName: tag '$tag' already absorbed by consolidation and every " +
+          s"artifact row is already indexed; skipping append to $dir " +
+          "(replay convergence).")
+      false
+    } else true
+  }
+
+  /** Tags the witness proves committed; `build` and `consolidated`
+    * predate the witness protocol and are always committed. */
+  private def proven(witnessCommitted: Seq[String]): Set[String] =
+    witnessCommitted.map(_.stripPrefix("batch=")).toSet + "build" + "consolidated"
+
+  /** Is the COUNT artifact `cntArt` (additive rows such as `df`/`bf`/
+    * `wdf`) safe to drive a prune? Fresh ⇔ both exist AND the count's
+    * committed tranche names equal ALL of the row artifact's. Every
+    * crash window diverges the two sets — an append dying between a
+    * row tranche and its count tranche, a fold dying between the row
+    * swap and the count rebuild, a count tranche missing its marker —
+    * and a diverged count can OVERCOUNT, which over-prunes and loses
+    * near-dup detections; probes then take the exact fallback until
+    * the next append or fold restores freshness. */
+  private[graft] def countFresh(spark: SparkSession, dir: String, rowArt: String,
+                                cntArt: String): Boolean = {
+    val fs = Fs.hfs(spark, dir)
+    val (row, cnt) = (new Path(dir, rowArt), new Path(dir, cntArt))
+    fs.exists(row) && fs.exists(cnt) && fresh(committed(fs, cnt), listed(fs, row).map(_.getName))
+  }
+
+  private def fresh(countCommitted: Seq[String], rowAll: Seq[String]): Boolean =
+    countCommitted.toSet == rowAll.toSet
+
+  /** Fold a ledger family's tranches, one body for both commit modes.
+    *
+    * `artifacts` are the row artifacts, each with the partition columns
+    * its rewrite must keep (an IVF `ivf_list` demoted to a data column
+    * would retire partition pruning for every later probe). A tag is
+    * committed when the `witness` artifact (the one the append writes
+    * LAST; the first artifact when the witness is absent) carries it
+    * under the committed rule. Committed rows are rewritten as
+    * `distinct()` into `batch=consolidated` — self-healing against a
+    * double-appended replay. A tag failing the witness test is
+    * unproven: a half-appended crash remnant whose recovery is a
+    * same-tag re-append, or a complete tranche whose marker was
+    * stripped. Unproven tranches are neither rewritten nor absorbed
+    * (absorbing one would turn the recovery retry into a fail-fast),
+    * and their dirs are copied byte for byte (dropping them would
+    * silently lose a stripped-marker tranche's rows).
+    *
+    * `counts` are `(name, source artifact, rows → counts)`: additive
+    * count artifacts are never `distinct()`-rewritten (two tranches may
+    * legitimately carry the same count row); each is regenerated from
+    * the source's folded committed rows alone, so a later same-tag
+    * retry of an unproven tranche adds its own count tranche without
+    * counting it twice. Regeneration doubles as the migration that
+    * retrofits a count artifact onto an index built before it existed.
+    * The absorbed ledger gains the committed tags, written last: a
+    * crash before it leaves a replay window that the next fold's
+    * `distinct()` heals.
+    *
+    * The commit modes differ only in where each artifact lands.
+    * RenameCommit: a per-artifact atomic swap in place; a crash
+    * between swaps leaves some artifacts folded and others not, which
+    * changes no read (the rewrite is a union of the same rows) and
+    * diverges count freshness until the next fold. PointerCommit
+    * (S3-safe): one fresh immutable generation holds every folded
+    * artifact, the regenerated counts, the ledger and a verbatim copy
+    * of every other root entry, published by one manifest swap; it
+    * needs an index built with `commit = PointerCommit`. Either way run
+    * it offline relative to appends — a tranche appended between the
+    * fold's listing and its swap would be dropped. */
+  private[graft] def foldLedger(spark: SparkSession, indexDir: String,
+                                artifacts: Seq[(String, Seq[String])], witness: String,
+                                counts: Seq[(String, String, DataFrame => DataFrame)] = Nil,
+                                commit: graft.merge.Merge.Commit =
+                                  graft.merge.Merge.RenameCommit): Unit = {
+    import graft.merge.Merge
+    val dir = Merge.resolveDir(spark, indexDir)
+    val pointer = commit == Merge.PointerCommit
+    require(!pointer || dir != indexDir,
+      s"consolidate: $indexDir is not pointer-committed; PointerCommit " +
+        "consolidation needs an index built with commit = PointerCommit")
+    require(artifacts.nonEmpty, s"consolidate: $dir has no index artifacts")
+    val fs = Fs.hfs(spark, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = artifacts.map(_._1).find(_ == witness).getOrElse(artifacts.head._1)
+    val tags = proven(committed(fs, new Path(dir, w)))
+    // `root` holds the folded tree; `place(name)(write)` lands one
+    // artifact, handing `write` the directory to fill
+    def fold(root: String, place: String => (String => Unit) => Unit): Unit = {
+      Par.jobs(artifacts.map { case (a, parts) => () => {
+        // partition values may be type-inferred, hence the string cast;
+        // a legacy flat artifact has no batch column and is read whole
+        val all = spark.read.parquet(s"$dir/$a")
+        val rows = (if (all.columns.contains("batch"))
+          all.where(col("batch").cast("string").isin(tags.toSeq: _*))
+        else all).drop("batch").distinct()
+        val unproven = listed(fs, new Path(dir, a))
+          .filterNot(t => tags(t.getName.stripPrefix("batch=")))
+        place(a) { out =>
+          val wr = rows.write.mode("overwrite")
+          (if (parts.nonEmpty) wr.partitionBy(parts: _*) else wr)
+            .parquet(s"$out/batch=consolidated")
+          unproven.foreach(t => org.apache.hadoop.fs.FileUtil.copy(
+            fs, t, fs, new Path(out, t.getName), false, conf))
+        }
+      }}: _*)
+      Par.jobs(counts.map { case (name, source, derive) => () =>
+        place(name) { out =>
+          derive(spark.read.parquet(s"$root/$source/batch=consolidated"))
+            .write.mode("overwrite").parquet(s"$out/batch=consolidated")
+        }
+      }: _*)
+      val absorbed = readAbsorbedTags(spark, dir) ++ (tags - "build" - "consolidated")
+      if (absorbed.nonEmpty)
+        Fs.writeSmallFile(spark, s"$root/$LedgerName",
+          absorbed.toSeq.sorted.mkString("", "\n", "\n"))
+    }
+    if (pointer) Merge.pointerSwap(spark, indexDir) { gen =>
+      fs.mkdirs(new Path(gen))
+      val owned = (artifacts.map(_._1) ++ counts.map(_._1)).toSet + LedgerName
+      fs.listStatus(new Path(dir)).filterNot(st => owned(st.getPath.getName))
+        .foreach(st => org.apache.hadoop.fs.FileUtil.copy(
+          fs, st.getPath, fs, new Path(gen, st.getPath.getName), false, conf))
+      fold(gen, a => write => write(s"$gen/$a"))
+    }
+    else fold(dir, a => Merge.swapWith(spark, s"$dir/$a", Merge.RenameCommit))
+  }
+
+  /** TRIAGE gauge for a ledger family, in the dashboard schema
+    * `(artifact, n_tranches, n_marked, n_unproven, count_fresh)`, from
+    * directory metadata only (one listing + one marker glob per
+    * artifact). `n_unproven` is the [[foldLedger]] definition — tags
+    * the witness does not prove committed (`witness = None`: each
+    * artifact witnesses itself) — so a mid-append crash shows on every
+    * half-written artifact until the same-tag re-append; unlike
+    * [[health]], where it counts manifest-superseded tranches.
+    * `n_marked < n_tranches` with `n_unproven = 0` is a stripped marker
+    * on a witness-proven tranche (the next fold absorbs it); `n_marked
+    * = 0` is a marker-disabled deployment or a fleet-wide strip, which
+    * metadata cannot tell apart. `count_fresh` is the [[countFresh]]
+    * verdict for each count artifact named in `countPairs` (count →
+    * row artifact), NULL for row artifacts. */
+  private[graft] def ledgerHealth(spark: SparkSession, dir: String,
+                                  artifacts: Seq[String],
+                                  countPairs: Map[String, String],
+                                  witness: Option[String]): DataFrame = {
+    import spark.implicits._
+    val fs = Fs.hfs(spark, dir)
+    val meta: Map[String, (Seq[String], Set[String])] = artifacts.map { a =>
+      val root = new Path(dir, a)
+      a -> ((listed(fs, root).map(_.getName), marked(fs, root)))
+    }.toMap
+    def committedIn(a: String): Seq[String] = (committedOf _).tupled(meta(a))
+    artifacts.map { a =>
+      val (all, marks) = meta(a)
+      val tags = proven(committedIn(witness.filter(meta.contains).getOrElse(a)))
+      val isFresh = countPairs.get(a).map(row =>
+        meta.get(row).exists(r => fresh(committedIn(a), r._1)))
+      (a, all.size, all.count(marks), all.count(t => !tags(t.stripPrefix("batch="))), isFresh)
+    }.toDF("artifact", "n_tranches", "n_marked", "n_unproven", "count_fresh")
   }
 }

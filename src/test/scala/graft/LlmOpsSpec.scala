@@ -723,7 +723,7 @@ class LlmOpsSpec extends SparkSpec {
     // cannot distinguish a crash remnant from a complete tranche whose
     // _SUCCESS marker was stripped, and deleting the latter would be
     // silent data loss; the same-tag retry overwrites the remnant
-    assert(DedupOps.readAbsorbedTags(spark, idx).isEmpty)
+    assert(graft.util.Tranches.readAbsorbedTags(spark, idx).isEmpty)
     assert(spark.read.parquet(s"$idx/sh/batch=consolidated")
       .where(col("doc_id") === 2L).count() == 0)
     assert(new java.io.File(s"$idx/sh/batch=day1").exists())
@@ -733,6 +733,12 @@ class LlmOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/sh").where(col("doc_id") === 2L).count() > 0)
     assert(new java.io.File(s"$idx/fp/batch=day1").exists())
     assert(new java.io.File(s"$idx/sig/batch=day1").exists())
+    // the fold counted only committed rows into df/bf, so the retry's
+    // own count tranches leave every count equal to the rows at rest
+    assert(spark.read.parquet(s"$idx/df").agg(sum("df")).as[Long].head() ==
+      spark.read.parquet(s"$idx/sh").count())
+    assert(spark.read.parquet(s"$idx/bf").agg(sum("n")).as[Long].head() ==
+      8 * spark.read.parquet(s"$idx/sig").count())
     // and the doc is now actually deduppable
     assert(DedupOps.dedupAgainstIndex(batch, idx, "doc_id", "text").count() == 0)
   }
@@ -818,7 +824,7 @@ class LlmOpsSpec extends SparkSpec {
     // must be a no-op — no batch=day1 tranche reappears, no row growth
     DedupOps.appendToDedupIndex(batch, idx, "doc_id", "text", tag = "day1")
     DedupOps.consolidateDedupIndex(spark, idx)
-    assert(DedupOps.readAbsorbedTags(spark, idx) == Set("day1"))
+    assert(graft.util.Tranches.readAbsorbedTags(spark, idx) == Set("day1"))
     val rowsAfterConsolidate = spark.read.parquet(s"$idx/sh").count()
     DedupOps.appendToDedupIndex(batch, idx, "doc_id", "text", tag = "day1")
     assert(!new java.io.File(s"$idx/sh/batch=day1").exists())
@@ -1205,36 +1211,43 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("unmarked tranche (mid-commit crash): consolidation excludes it and the same-tag retry converges") {
+    import graft.merge.Merge
     val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select("vec_id", "embedding")
-    val vidx = tempDir("graft_partial_ivf") + "/ivf"
-    SimilarityOps.ivfWriteIndex(emb.where(col("vec_id") < 200), vidx,
-      "vec_id", "embedding", nLists = 8)
     val day = emb.where(col("vec_id") >= 200 && col("vec_id") < 250)
-    SimilarityOps.ivfAppendToIndex(day, vidx, "vec_id", "embedding", tag = "d7")
-    // simulate the job-commit crash: tranche dir visible, marker absent
-    val fs = new org.apache.hadoop.fs.Path(vidx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$vidx/vec/batch=d7/_SUCCESS"), false))
-    SimilarityOps.consolidateIvfIndex(spark, vidx)
-    def total() = SimilarityOps.ivfIndexStats(spark, vidx)
-      .agg(sum("n_rows")).as[Long].head()
-    def tranches() = fs.listStatus(new org.apache.hadoop.fs.Path(s"$vidx/vec"))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    // the unproven tranche is OUT of the consolidated rewrite and OUT
-    // of the ledger, but its dir (and rows) are PRESERVED — an
-    // unmarked-but-complete tranche (marker stripped) must not lose
-    // data, and a genuinely partial one is about to be overwritten
-    assert(tranches() == Seq("batch=consolidated", "batch=d7"))
-    assert(total() == 250L)
-    // ...so the documented same-tag crash retry CONVERGES in place
-    // instead of failing fast on "new data aliased onto an absorbed
-    // tag", and the NEXT consolidation (marker restored) absorbs it
-    SimilarityOps.ivfAppendToIndex(day, vidx, "vec_id", "embedding", tag = "d7")
-    assert(total() == 250L)
-    SimilarityOps.consolidateIvfIndex(spark, vidx)
-    assert(tranches() == Seq("batch=consolidated"))
-    assert(total() == 250L)
+    for (commit <- Seq(Merge.RenameCommit, Merge.PointerCommit)) {
+      val vidx = tempDir("graft_partial_ivf") + "/ivf"
+      SimilarityOps.ivfWriteIndex(emb.where(col("vec_id") < 200), vidx,
+        "vec_id", "embedding", nLists = 8, commit = commit)
+      SimilarityOps.ivfAppendToIndex(day, vidx, "vec_id", "embedding", tag = "d7")
+      // simulate the job-commit crash: tranche dir visible, marker absent
+      // (a pointer-committed index holds its tranches in the current
+      // generation)
+      val fs = new org.apache.hadoop.fs.Path(vidx)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.delete(new org.apache.hadoop.fs.Path(
+        s"${Merge.resolveDir(spark, vidx)}/vec/batch=d7/_SUCCESS"), false), commit)
+      SimilarityOps.consolidateIvfIndex(spark, vidx, commit)
+      def total() = SimilarityOps.ivfIndexStats(spark, vidx)
+        .agg(sum("n_rows")).as[Long].head()
+      def tranches() = fs.listStatus(
+          new org.apache.hadoop.fs.Path(s"${Merge.resolveDir(spark, vidx)}/vec"))
+        .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+      // the unproven tranche is OUT of the consolidated rewrite and OUT
+      // of the ledger, but its dir (and rows) are PRESERVED — an
+      // unmarked-but-complete tranche (marker stripped) must not lose
+      // data, and a genuinely partial one is about to be overwritten
+      assert(tranches() == Seq("batch=consolidated", "batch=d7"), commit)
+      assert(total() == 250L, commit)
+      // ...so the documented same-tag crash retry CONVERGES in place
+      // instead of failing fast on "new data aliased onto an absorbed
+      // tag", and the NEXT consolidation (marker restored) absorbs it
+      SimilarityOps.ivfAppendToIndex(day, vidx, "vec_id", "embedding", tag = "d7")
+      assert(total() == 250L, commit)
+      SimilarityOps.consolidateIvfIndex(spark, vidx, commit)
+      assert(tranches() == Seq("batch=consolidated"), commit)
+      assert(total() == 250L, commit)
+    }
   }
 
   test("cross-family probes fail fast naming the family mismatch, not a bare key error") {

@@ -109,7 +109,7 @@ class RetrievalOpsSpec extends SparkSpec {
       // one postings tranche left after the fold
       val tranches = new java.io.File(s"$dir/postings").listFiles()
         .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch="))
-      assert(tranches.toSeq == Seq("batch=build"))
+      assert(tranches.toSeq == Seq("batch=consolidated"))
       // replayed absorbed append: provably-replay rows -> no-op
       RetrievalOps.bm25AppendToIndex(half2, dir, "doc_id", "text", tag = "day2")
       assertSameRows(RetrievalOps.bm25ProbeIndex(spark, dir, idxQueries, k = 10), oneShot)
@@ -118,6 +118,31 @@ class RetrievalOpsSpec extends SparkSpec {
       intercept[IllegalStateException] {
         RetrievalOps.bm25AppendToIndex(novel, dir, "doc_id", "text", tag = "day2")
       }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(dir).getParentFile)
+  }
+
+  test("bm25 index: a fold after a half-append crash preserves the tranche and the same-tag retry converges") {
+    val dir = tempDir("graft_bm25") + "/idx"
+    def tranches(artifact: String) = new java.io.File(s"$dir/$artifact").listFiles()
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    try {
+      val half1 = idxCorpus.where(col("doc_id") <= 3)
+      val half2 = idxCorpus.where(col("doc_id") > 3)
+      RetrievalOps.bm25WriteIndex(half1, dir, "doc_id", "text", nBuckets = 8)
+      RetrievalOps.bm25AppendToIndex(half2, dir, "doc_id", "text", tag = "d7")
+      // the crash window: postings landed, the doclen witness did not
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/doclen/batch=d7"))
+      RetrievalOps.bm25ConsolidateIndex(spark, dir)
+      assert(!graft.util.Tranches.readAbsorbedTags(spark, dir).contains("d7"))
+      assert(new java.io.File(s"$dir/postings/batch=d7").exists())
+      // the documented recovery: re-run the append under the same tag
+      RetrievalOps.bm25AppendToIndex(half2, dir, "doc_id", "text", tag = "d7")
+      assertSameRows(RetrievalOps.bm25ProbeIndex(spark, dir, idxQueries, k = 10),
+        RetrievalOps.bm25TopK(idxCorpus, "doc_id", "text", idxQueries, k = 10))
+      RetrievalOps.bm25ConsolidateIndex(spark, dir)
+      assert(tranches("postings") == Seq("batch=consolidated"))
+      assert(tranches("doclen") == Seq("batch=consolidated"))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(dir).getParentFile)
   }
@@ -143,7 +168,7 @@ class RetrievalOpsSpec extends SparkSpec {
       assert(gen2 != gen1, "fold published a fresh generation")
       assert(new java.io.File(s"$gen2/postings").listFiles()
         .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch="))
-        .toSeq == Seq("batch=build"), "one folded tranche in the new generation")
+        .toSeq == Seq("batch=consolidated"), "one folded tranche in the new generation")
       assertSameRows(RetrievalOps.bm25ProbeIndex(spark, ptr, idxQueries, k = 10), want)
       assert(RetrievalOps.bm25IndexStats(spark, ptr).count() > 0)
       // mode guard: pointer fold refuses a rename-mode index

@@ -634,7 +634,7 @@ class StreamingSpec extends SparkSpec {
       assertSameRows(RetrievalOps.bm25ProbeIndex(spark, dir, queries, k = 10), oneShot)
       val tranches = new java.io.File(s"$dir/postings").listFiles()
         .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch="))
-      assert(tranches.toSeq == Seq("batch=build"))
+      assert(tranches.toSeq == Seq("batch=consolidated"))
     } finally q.stop()
   }
 
