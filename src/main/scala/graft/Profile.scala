@@ -15,10 +15,10 @@ import org.apache.spark.sql.SparkSession
   * the lines [[Bench.isolatedSec]] parses.
   *
   *   - `time` (default): the rep timings only.
-  *   - `stages`: the last (warmest) rep runs under [[stages]] and a
-  *     per-stage table follows, descending by task time, with each
-  *     stage's callsite so rows map back to operators — the local
-  *     stand-in for the Spark UI's stage table.
+  *   - `stages`: the last (warmest) rep runs under [[stages]]; its job
+  *     and stage counts and a per-stage table follow, descending by
+  *     task time, with each stage's callsite so rows map back to
+  *     operators — the local stand-in for the Spark UI's stage table.
   *   - `explain`: the formatted physical plan precedes the reps; grep
   *     it (`-c "Scan parquet"`) to catch a subtree re-expanded once
   *     per consumer.
@@ -26,8 +26,11 @@ import org.apache.spark.sql.SparkSession
 object Profile {
 
   /** One stage's task metrics, summed over its tasks. `wallMs` is the
-    * submit-to-complete span (-1 when either event was not seen). */
-  final case class StageRow(id: Int, site: String, tasks: Int, taskMs: Long,
+    * submit-to-complete span (-1 when either event was not seen);
+    * `job` is the first job that listed the stage (-1 when unseen).
+    * Every job submits its own result stage, so the distinct `job`
+    * values count the jobs. */
+  final case class StageRow(id: Int, job: Int, site: String, tasks: Int, taskMs: Long,
                             cpuNs: Long, wallMs: Long, maxTaskMs: Long,
                             medTaskMs: Long, deserMs: Long, gcMs: Long,
                             shuffleReadBytes: Long, shuffleWriteBytes: Long,
@@ -46,8 +49,13 @@ object Profile {
   def stages(spark: SparkSession)(body: => Unit): Seq[StageRow] = {
     val aggs = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
     val events = new java.util.concurrent.atomic.AtomicLong()
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     def agg(id: Int): Agg = aggs.computeIfAbsent(id, _ => new Agg)
     val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        j.stageIds.foreach(jobOf.putIfAbsent(_, j.jobId))
+        events.incrementAndGet()
+      }
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
         val a = agg(s.stageInfo.stageId)
         a.site = s.stageInfo.name
@@ -88,7 +96,7 @@ object Profile {
     import scala.jdk.CollectionConverters._
     aggs.asScala.toSeq.map { case (id, a) =>
       val ds = a.durs.sorted
-      StageRow(id, a.site, ds.size, a.taskMs, a.cpuNs,
+      StageRow(id, jobOf.getOrDefault(id, -1), a.site, ds.size, a.taskMs, a.cpuNs,
         if (a.firstMs > 0 && a.lastMs > 0) a.lastMs - a.firstMs else -1L,
         ds.lastOption.getOrElse(0L), if (ds.isEmpty) 0L else ds(ds.size / 2),
         a.deserMs, a.gcMs, a.srBytes, a.swBytes, a.inBytes)
@@ -96,7 +104,7 @@ object Profile {
   }
 
   private def printStages(rows: Seq[StageRow]): Unit = {
-    println(f"[profile] ${rows.size} stages, total task-time ${rows.map(_.taskMs).sum / 1e3}%.1f s")
+    println(f"[profile] ${rows.map(_.job).distinct.size} jobs, ${rows.size} stages, total task-time ${rows.map(_.taskMs).sum / 1e3}%.1f s")
     println(f"[profile] ${"stage"}%-7s ${"taskS"}%7s ${"cpuS"}%7s ${"wallS"}%6s " +
       f"${"tasks"}%5s ${"maxMs"}%6s ${"medMs"}%6s ${"deserS"}%6s ${"gcS"}%5s " +
       f"${"shRdMB"}%7s ${"shWrMB"}%7s ${"inMB"}%7s  site")

@@ -23,12 +23,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape per round: two grouped-window passes + a distinct —
   * hash shuffles on node id, no collect of anything unbounded. The
-  * driver sees one 4-scalar checksum row per round (the convergence
-  * test). Iteration state is persisted and the previous round
-  * unpersisted, so lineage never re-runs earlier rounds; with a
-  * `sparkContext.setCheckpointDir` set, state is checkpointed every
-  * [[CheckpointEvery]] rounds to truncate the growing plan (the same
-  * discipline GraphFrames applies).
+  * driver sees one 3-scalar checksum row per round (the convergence
+  * test). The rounds run in [[Fixpoint]], the family's one iteration
+  * driver: each round's state is a persisted RDD severed from the
+  * previous round's plan, lineage-cut at the driver's fixed cadence,
+  * and materialized by the same job that probes convergence — so the
+  * returned frame's plan does not grow with the round count, and a
+  * round cap that throws releases every block the run persisted.
   *
   * Node-id ingestion contract, family-wide (ANSI casts THROW, not
   * exclude): every operator here casts `srcCol`/`dstCol`/
@@ -42,8 +43,6 @@ import org.apache.spark.storage.StorageLevel
   * `try_cast` and excluded like NULLs (see [[neighborhoodAgg]]).
   */
 object GraphOps {
-
-  private val CheckpointEvery = 5
 
   // debug-level: tier selection is diagnostic, not operational — four
   // operators call this on their hot path and stderr is not a log sink
@@ -84,13 +83,9 @@ object GraphOps {
                                     maxIterations: Int = 50,
                                     localThreshold: Int = 100000)
   : (DataFrame, () => Unit) = {
-    var cur = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = cur.sparkSession
-    val canCheckpoint = spark.sparkContext.getCheckpointDir.isDefined
+    require(maxIterations >= 1, "connectedComponents: maxIterations must be >= 1")
+    val e = simpleEdges(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val spark = e.sparkSession
 
     // edge-set fingerprint: equal across a full round ⇒ the round was a
     // no-op ⇒ converged (min-rooted stars are fixpoints of both stars;
@@ -141,42 +136,35 @@ object GraphOps {
         .distinct()
     }
 
-    var prev = checksum(cur)
-    if (prev._1 <= localThreshold) {
+    var last = checksum(e)
+    val onDriver = last._1 <= localThreshold
+    if (log.isDebugEnabled) log.debug(s"[graft.cc] tier=${if (onDriver) "driver" else
+      "distributed"} edges=${last._1} (localThreshold=$localThreshold)")
+    if (onDriver) {
       import spark.implicits._
-      if (log.isDebugEnabled) log.debug(
-        s"[graft.cc] tier=driver edges=${prev._1} (localThreshold=$localThreshold)")
-      val local = cur.as[(Long, Long)].collect()
-      cur.unpersist()
+      val local = e.as[(Long, Long)].collect()
+      e.unpersist()
       return (spark.createDataset(localComponents(local).toSeq).toDF("node", "component"),
         () => ())
     }
-    if (log.isDebugEnabled) log.debug(
-      s"[graft.cc] tier=distributed edges=${prev._1} (localThreshold=$localThreshold)")
-    var converged = false
-    var i = 0
-    while (i < maxIterations && !converged) {
-      var next = smallStar(largeStar(cur))
-      if (canCheckpoint && i % CheckpointEvery == CheckpointEvery - 1)
-        next = next.checkpoint(eager = false)
-      next = next.persist(StorageLevel.MEMORY_AND_DISK)
-      val s = checksum(next) // materializes next; cur now safe to drop
-      cur.unpersist()
-      cur = next
-      converged = s == prev
-      prev = s
-      i += 1
-    }
-    require(converged,
-      s"connectedComponents: not converged after $maxIterations rounds (theory: O(log²|V|))")
+    // the probe owns the cap: an unconverged last round throws inside
+    // the run, which releases everything it persisted
+    val (fix, _, _, release) = Fixpoint(e, maxIterations)(
+      (cur, _) => smallStar(largeStar(cur)),
+      Some { (_, next, round) =>
+        val s = checksum(next)
+        val same = s == last
+        last = s
+        require(same || round < maxIterations,
+          s"connectedComponents: not converged after $maxIterations rounds (theory: O(log²|V|))")
+        same
+      })
     // at the fixpoint every edge is (node → its component's min); the
     // roots themselves appear only on the dst side
-    val fix = cur
     (fix.select(inline(array(
       struct(col("src").as("node"), col("dst").as("component")),
       struct(col("dst").as("node"), col("dst").as("component")))))
-      .distinct(),
-      () => { fix.unpersist(blocking = false); () })
+      .distinct(), release)
   }
 
   /** WARM-START connected components over appended edge tranches —
@@ -294,7 +282,7 @@ object GraphOps {
     // no lineage into the released blocks). Handles, NOT a
     // getPersistentRDDs diff: a sweep would also unpersist blocks a
     // concurrent job in the same session persisted mid-call — a
-    // severed localCheckpoint block is unrecoverable.
+    // severed checkpoint block is unrecoverable.
     val (updated, release) =
       if (exists) connectedComponentsFromReleasable(readGroupIndex(spark, dir),
         newEdges, srcCol, dstCol, maxIterations, localThreshold)
@@ -337,6 +325,37 @@ object GraphOps {
       .select(col(idCol),
         coalesce(col("component"), col(idCol)).as("group_id"),
         coalesce(col("__gsz"), lit(1L)).as("group_size"))
+  }
+
+  /** Edge ingestion shared by the family: ids cast to long (the THROW
+    * contract above), NULL endpoints dropped. */
+  private def longEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+
+  /** Distinct non-self edges. */
+  private def simpleEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    longEdges(edges, srcCol, dstCol).where(col("src") =!= col("dst")).distinct()
+
+  /** Distinct edges (self-loops kept) partitioned on `src` ONCE: every
+    * PageRank/LPA round's edge⋈state join reuses this layout. */
+  private def srcEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    longEdges(edges, srcCol, dstCol).repartition(col("src")).dropDuplicates("src", "dst")
+
+  /** Persist an edge layout with its persisted, counted node universe
+    * `(e, nodes, |nodes|)` — one cache scan, not two: explode((src,
+    * dst)) emits both endpoint roles per edge row. An empty universe
+    * releases both and fails `op`. */
+  private def srcLayout(layout: DataFrame, op: String): (DataFrame, DataFrame, Long) = {
+    val e = layout.persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = nodes.count()
+    if (n == 0) {
+      e.unpersist(); nodes.unpersist()
+      throw new IllegalArgumentException(s"$op: empty edge list")
+    }
+    (e, nodes, n)
   }
 
   /** Driver union-find tier (min-rooted, path-compressing). `find` is
@@ -389,13 +408,11 @@ object GraphOps {
     * contribution join reuses that layout without reshuffling the
     * (large) edge side. Per iteration: one join edges⋈ranks, one
     * map-side-combinable sum shuffle on `dst`, one join back to the
-    * node universe. Rank state lives in an explicitly persisted
-    * |V|-sized RDD re-wrapped per iteration (plan depth stays
-    * constant), and the superseded iteration's RDD is released by
-    * handle — `Dataset.unpersist` after `localCheckpoint` would be a
-    * no-op (the checkpoint RDD never enters the CacheManager), which
-    * at `iterations`×|V| pinned rows is a real leak. The RETURNED
-    * frame is backed by the final persisted rank RDD.
+    * node universe. The iterations run in [[Fixpoint]]: |V|-sized
+    * rank state on a persisted RDD backbone (plan depth stays
+    * constant), superseded rounds released by handle, one job per
+    * round. The RETURNED frame is backed by the final persisted rank
+    * RDD.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 10, scale: Long = 1000000000L): DataFrame =
@@ -582,9 +599,8 @@ object GraphOps {
     * map-side-combinable count, one per-node `max_by` hash aggregate
     * for the top label (struct ordering (count, −label) = the
     * deterministic tie-break, with map-side partials and no sort),
-    * one |V|-row left join. State is RDD-severed each
-    * round and local-checkpointed every [[CheckpointEvery]] rounds —
-    * the [[pageRank]] lineage discipline; iterations are bounded
+    * one |V|-row left join. The rounds run in [[Fixpoint]] — the
+    * [[pageRank]] lineage discipline; iterations are bounded
     * (communities stabilize in a handful of rounds on real graphs).
     * Returns `(node, label)`.
     */
@@ -603,13 +619,6 @@ object GraphOps {
       labelPropagationCore(edges, srcCol, dstCol, iterations, converge = false)
     (df, release)
   }
-
-  /** Releasable form of [[labelPropagationConverged]]:
-    * `(labels, roundsRun, release)`. */
-  def labelPropagationConvergedReleasable(edges: DataFrame, srcCol: String,
-                                          dstCol: String, maxIterations: Int = 20)
-  : (DataFrame, Int, () => Unit) =
-    labelPropagationCore(edges, srcCol, dstCol, maxIterations, converge = true)
 
   /** [[labelPropagation]] iterated to a FIXPOINT: rounds run until no
     * node changes label (or `maxIterations`), with the same 1-scalar
@@ -635,98 +644,31 @@ object GraphOps {
                                    iterations: Int, converge: Boolean)
   : (DataFrame, Int, () => Unit) = {
     require(iterations >= 1, "labelPropagation: iterations must be >= 1")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one cache scan, not two: explode((src, dst)) emits both endpoint
-    // roles per edge row in a single pass over the cached edge set
-    // (same multiset the src ∪ dst union produced)
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (nodes.head(1).isEmpty) {
-      e.unpersist(); nodes.unpersist()
-      throw new IllegalArgumentException("labelPropagation: empty edge list")
-    }
-    var labelRdd = nodes.select(col("node"), col("node").as("label"))
-      .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // stats-bearing DF view of the label state — same rationale as
-    // [[pageRankCore]]: a bare toDF over the RDD has no size estimate,
-    // so the per-round labels⋈edges planned SortMergeJoin (Exchange +
-    // Sort of the state every round); the materialized cache lets the
-    // planner pick a broadcast join when the state fits and fall back
-    // to the shuffled join when it doesn't. RDD backbone unchanged.
-    var labelDf = labelRdd.toDF("node", "label").persist(StorageLevel.MEMORY_AND_DISK)
-    labelDf.count()
-    var ckptRoot: org.apache.spark.rdd.RDD[(Long, Long)] = null
-    var itersRun = 0
-    var fixed = false
-    while (itersRun < iterations && !fixed) {
-      val labels = labelDf
-      val votes = e
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      // top-1 via max_by over (count, -label): field-by-field struct
-      // ordering = highest count, then SMALLEST label — the same
-      // deterministic tie-break as a (desc count, asc label) window,
-      // but as a hash aggregate: no per-node sort, map-side partials.
-      // (-label is overflow-safe: labels are node ids, never MinValue.)
-      val winner = votes.groupBy("node")
-        .agg(max_by(col("label"), struct(col("__c"), -col("label"))).as("__new"))
-      val next = labels
-        .join(winner, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-        .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      itersRun += 1
-      val isCkpt = itersRun % CheckpointEvery == 0
-      if (isCkpt) next.localCheckpoint()
-      val nextDf = next.toDF("node", "label").persist(StorageLevel.MEMORY_AND_DISK)
-      if (converge) {
-        // FUSED materialize+probe: the round used
-        // to pay TWO jobs — a count() to build the stats-bearing cache,
-        // then a join-probe for the changed count. One full-scan
-        // aggregate does both: scanning nextDf populates its cache (and
-        // the backing RDD's), and the join against the prior cached
-        // state yields the same exact integer checksum the limit-probe
-        // read. Same comparison, same rounds, one job per round.
-        val changed = nextDf.withColumnRenamed("label", "__nl")
-          .join(labels, "node")
-          .agg(count(when(col("__nl") =!= col("label"), lit(1))).as("c"))
-          .head().getLong(0)
-        if (changed == 0) fixed = true
-      } else {
-        nextDf.count() // one job: materializes the RDD and its stats-bearing cache
-      }
-      val prev = labelRdd
-      labelRdd = next
-      labelDf.unpersist(blocking = false)
-      labelDf = nextDf
-      if (isCkpt) {
-        if ((ckptRoot ne null) && (ckptRoot ne prev)) ckptRoot.unpersist()
-        prev.unpersist()
-        ckptRoot = next
-      } else if (prev ne ckptRoot) prev.unpersist()
-    }
-    // RDD-severed from the edge/node plans — release their caches here;
-    // the FINAL label state (and its checkpoint root, when distinct)
-    // stays cached behind the returned frame and is released by handle
-    labelDf.unpersist(blocking = false)
-    val out = labelRdd.toDF("node", "label")
-    e.unpersist(); nodes.unpersist()
-    val finalRdd = labelRdd
-    val finalCkpt = ckptRoot
-    val release = () => {
-      finalRdd.unpersist(blocking = false)
-      if ((finalCkpt ne null) && (finalCkpt ne finalRdd))
-        finalCkpt.unpersist(blocking = false)
-      ()
-    }
-    (out, itersRun, release)
+    val (e, nodes, _) = srcLayout(srcEdges(edges, srcCol, dstCol), "labelPropagation")
+    val start = nodes.select(col("node"), col("node").as("label"))
+    val (out, rounds, _, release) = Fixpoint(start, iterations, Seq(e, nodes))(
+      { (labels, _) =>
+        val votes = e
+          .join(labels.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+        // top-1 via max_by over (count, -label): field-by-field struct
+        // ordering = highest count, then SMALLEST label — the same
+        // deterministic tie-break as a (desc count, asc label) window,
+        // but as a hash aggregate: no per-node sort, map-side partials.
+        // (-label is overflow-safe: labels are node ids, never MinValue.)
+        val winner = votes.groupBy("node")
+          .agg(max_by(col("label"), struct(col("__c"), -col("label"))).as("__new"))
+        labels.join(winner, Seq("node"), "left")
+          .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
+      },
+      // exact changed-node count against the prior state: 0 = fixpoint
+      Option.when(converge) { (prev, next, _) =>
+        next.withColumnRenamed("label", "__nl").join(prev, "node")
+          .agg(count(when(col("__nl") =!= col("label"), lit(1))))
+          .head().getLong(0) == 0
+      })
+    (out, rounds, release)
   }
 
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
@@ -738,135 +680,43 @@ object GraphOps {
     require(scale >= 1000000L,
       s"pageRank: scale < 1e6 leaves too few integer rank levels (got $scale)")
     require(tol.forall(_ >= 0), "pageRank: tol must be >= 0")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .withColumn("__outdeg",
-        count(lit(1)).over(Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one cache scan, not two: explode((src, dst)) emits both endpoint
-    // roles per edge row in a single pass over the cached edge set
-    // (same multiset the src ∪ dst union produced)
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    if (n == 0) {
-      e.unpersist(); nodes.unpersist()
-      throw new IllegalArgumentException("pageRank: empty edge list")
-    }
+    // out-degree rides the single src exchange of the edge layout
+    val (e, nodes, n) = srcLayout(srcEdges(edges, srcCol, dstCol)
+      .withColumn("__outdeg", count(lit(1)).over(Window.partitionBy("src"))), "pageRank")
     // (scale·3/20)/n and scale/n in this exact operation order — the
     // oracle spells the same integer expressions. Personalization
     // re-aims the SAME integer recursion: teleport mass lands only on
     // the seed set (base and init divided by |seeds|, zero elsewhere)
     // — a bounded literal membership test, the BFS-seeds discipline.
-    val baseCol = seeds match {
-      case None => lit((scale * 3L / 20L) / n)
+    def perNode(mass: Long): Column = seeds match {
+      case None => lit(mass / n)
       case Some(ss) =>
-        when(col("node").isin(ss.map(Long.box): _*),
-          lit((scale * 3L / 20L) / ss.size)).otherwise(lit(0L))
+        when(col("node").isin(ss.map(Long.box): _*), lit(mass / ss.size)).otherwise(lit(0L))
     }
-    val init = (start, seeds) match {
-      case (None, None) => nodes.select(col("node"), lit(scale / n).as("rank"))
-      case (None, Some(ss)) => nodes.select(col("node"),
-        when(col("node").isin(ss.map(Long.box): _*), lit(scale / ss.size))
-          .otherwise(lit(0L)).as("rank"))
-      case (Some(prior), _) =>
+    val init = start match {
+      case None => nodes.select(col("node"), perNode(scale).as("rank"))
+      case Some(prior) =>
         nodes.join(
             prior.select(col("node"), col("rank").cast(LongType).as("__pr")),
             Seq("node"), "left")
           .select(col("node"), coalesce(col("__pr"), lit(scale / n)).as("rank"))
     }
-    var rankRdd = init.as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // STATS-BEARING state frame: a bare
-    // `rankRdd.toDF` is a LogicalRDD whose size estimate is
-    // `defaultSizeInBytes` (effectively infinite), so every
-    // iteration's rank⋈edges planned as a SortMergeJoin — an Exchange
-    // + Sort of the state per round. Persisting the DF view and
-    // materializing it (the count below doubles as the cache build)
-    // gives the planner the MEASURED size: a node-state frame that
-    // fits the broadcast threshold joins as a codegen
-    // BroadcastHashJoin fused with the map-side partial sum, and one
-    // that doesn't (billions of nodes) keeps the shuffled join — the
-    // strategy stays size-adaptive at every scale (guide §3.1). The
-    // RDD stays the backbone: lineage severing, release handles, and
-    // the returned frame are unchanged.
-    var rankDf = rankRdd.toDF("node", "rank").persist(StorageLevel.MEMORY_AND_DISK)
-    rankDf.count()
-    // persisting alone truncates RECOMPUTATION but not the serialized
-    // dependency graph — task closures carry every prior iteration's
-    // plan, and past ~40 iterations deserialization overflows the
-    // stack. Every CheckpointEvery rounds the fresh state is local-
-    // checkpointed (marked BEFORE its first action, as required) to
-    // sever lineage; the latest root stays pinned until superseded so
-    // an evicted intermediate can always rebuild from a truncated,
-    // ≤CheckpointEvery-deep chain.
-    var ckptRoot: org.apache.spark.rdd.RDD[(Long, Long)] = null
-    var itersRun = 0
-    var converged = false
-    while (itersRun < iterations && !converged) {
-      val rank = rankDf
-      val contrib = e
-        .join(rank.withColumnRenamed("node", "src").withColumnRenamed("rank", "__r"), "src")
-        .select(col("dst").as("node"), expr("__r div __outdeg").as("__c"))
-        .groupBy("node").agg(sum("__c").as("__s"))
-      val next = nodes
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (baseCol + expr("(85 * coalesce(__s, 0L)) div 100")).as("rank"))
-        .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      itersRun += 1
-      val isCkpt = itersRun % CheckpointEvery == 0
-      if (isCkpt) next.localCheckpoint()
-      val nextDf = next.toDF("node", "rank").persist(StorageLevel.MEMORY_AND_DISK)
-      tol match {
-        case Some(t) =>
-          // FUSED materialize+probe: one full-scan
-          // aggregate both populates the stats-bearing cache (scanning
-          // nextDf materializes it and the backing RDD) and computes the
-          // exact integer movement vs the prior cached state — the round
-          // pays ONE job instead of count()+probe. Same checksum, same
-          // stopping round.
-          val delta = nextDf
-            .join(rank.withColumnRenamed("rank", "__prev"), "node")
-            .agg(coalesce(sum(abs(col("rank") - col("__prev"))), lit(0L)).as("d"))
-            .head().getLong(0)
-          if (delta <= t) converged = true
-        case None =>
-          nextDf.count() // one job: materializes the RDD and its stats-bearing cache
-      }
-      // release everything but the new state and the active root
-      val prev = rankRdd
-      rankRdd = next
-      rankDf.unpersist(blocking = false)
-      rankDf = nextDf
-      if (isCkpt) {
-        // next is checkpointed (owns its blocks): both the old root and
-        // the previous generation are now releasable
-        if ((ckptRoot ne null) && (ckptRoot ne prev)) ckptRoot.unpersist()
-        prev.unpersist()
-        ckptRoot = next
-      } else if (prev ne ckptRoot) prev.unpersist()
-    }
-    // the final state is RDD-severed from the edge/node plans — their
-    // caches are released here, not left to the session (the loop's
-    // stats-bearing DF cache too: it only served iteration planning)
-    rankDf.unpersist(blocking = false)
-    val out = rankRdd.toDF("node", "rank")
-    e.unpersist(); nodes.unpersist()
-    // release handle for artifact-writing callers: frees the final
-    // rank RDD and any still-pinned checkpoint root by HANDLE (they
-    // back the returned frame — only call once it is durably written)
-    val (finalRdd, finalRoot) = (rankRdd, ckptRoot)
-    (out, itersRun, () => {
-      finalRdd.unpersist(blocking = false)
-      if ((finalRoot ne null) && (finalRoot ne finalRdd))
-        finalRoot.unpersist(blocking = false)
-      ()
-    })
+    val base = perNode(scale * 3L / 20L)
+    val (out, rounds, _, release) = Fixpoint(init, iterations, Seq(e, nodes))(
+      { (rank, _) =>
+        val contrib = e
+          .join(rank.withColumnRenamed("node", "src").withColumnRenamed("rank", "__r"), "src")
+          .select(col("dst").as("node"), expr("__r div __outdeg").as("__c"))
+          .groupBy("node").agg(sum("__c").as("__s"))
+        nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"), (base + expr("(85 * coalesce(__s, 0L)) div 100")).as("rank"))
+      },
+      // exact integer movement Σ|Δrank| against the prior state
+      tol.map(t => (prev, next, _) => next
+        .join(prev.withColumnRenamed("rank", "__prev"), "node")
+        .agg(coalesce(sum(abs(col("rank") - col("__prev"))), lit(0L)))
+        .head().getLong(0) <= t))
+    (out, rounds, release)
   }
 
   /** CO-OCCURRENCE projection of a bipartite membership table ("parts
@@ -1023,6 +873,10 @@ object GraphOps {
           (col("__na") * col("__nb")).cast(DoubleType)).as("lift"))
   }
 
+  /** The three co-occurrence tranche families: (dir, keys, count). */
+  private val CoocFamilies = Seq(("pairs", Seq("item_a", "item_b"), "n_groups"),
+    ("margins", Seq("item"), "n_i"), ("totals", Seq.empty[String], "n_g"))
+
   /** Fold each of the three tranche families to one tranche
     * (crash-safe superseding-manifest protocol —
     * [[graft.util.Tranches.consolidate]]). */
@@ -1031,13 +885,9 @@ object GraphOps {
     // manifest protocol) — overlap the fold jobs on driver threads
     // ([[graft.util.Par]]); a crash leaves each
     // family self-consistent exactly as the sequential form did
-    graft.util.Par.jobs(
-      () => graft.util.Tranches.consolidate(spark, s"$dir/pairs",
-        Seq("item_a", "item_b"), "n_groups"),
-      () => graft.util.Tranches.consolidate(spark, s"$dir/margins",
-        Seq("item"), "n_i"),
-      () => graft.util.Tranches.consolidate(spark, s"$dir/totals",
-        Seq.empty, "n_g"))
+    graft.util.Par.jobs(CoocFamilies.map { case (family, keys, cnt) =>
+      () => graft.util.Tranches.consolidate(spark, s"$dir/$family", keys, cnt)
+    }: _*)
 
   /** Count-triggered auto-fold for the three co-occurrence families
     * ([[graft.util.Tranches.maybeFold]]): each family folds only when
@@ -1048,13 +898,11 @@ object GraphOps {
     * family). */
   def maybeConsolidateCooc(spark: org.apache.spark.sql.SparkSession,
                            dir: String, maxLive: Int): Boolean =
-    Seq(("pairs", Seq("item_a", "item_b"), "n_groups"),
-      ("margins", Seq("item"), "n_i"), ("totals", Seq.empty[String], "n_g"))
-      .map { case (family, keys, cnt) =>
-        val d = s"$dir/$family"
-        graft.util.Tranches.maybeFold(spark, d, maxLive)(
-          graft.util.Tranches.consolidate(spark, d, keys, cnt))
-      }.contains(true)
+    CoocFamilies.map { case (family, keys, cnt) =>
+      val d = s"$dir/$family"
+      graft.util.Tranches.maybeFold(spark, d, maxLive)(
+        graft.util.Tranches.consolidate(spark, d, keys, cnt))
+    }.contains(true)
 
   /** Graph FEATURE aggregation: for every node, exact aggregates of a
     * value column over its distinct ≤`hops`-hop neighborhood (self
@@ -1107,10 +955,7 @@ object GraphOps {
     require(maxDegree >= 0, s"neighborhoodAgg: maxDegree=$maxDegree < 0")
     // The operator leaves no persisted state: the returned frame is a
     // plain lazy plan, so callers have nothing to release.
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
+    val e = simpleEdges(edges, srcCol, dstCol)
     val nbr =
       if (hops == 1) e
       else {
@@ -1188,10 +1033,7 @@ object GraphOps {
   def neighborhoodAggPaths(edges: DataFrame, srcCol: String, dstCol: String,
                            values: DataFrame, nodeCol: String,
                            valueCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
+    val e = simpleEdges(edges, srcCol, dstCol)
     // try_cast snap: same wild-value-behaves-like-NULL exclusion as
     // [[neighborhoodAgg]] (ANSI-overflow exclusion)
     val v = values.select(col(nodeCol).cast(LongType).as("dst"),
@@ -1259,65 +1101,55 @@ object GraphOps {
     * neighborhoods, blast-radius estimates on the co-occurrence
     * graph).
     *
-    * Frontier iteration: level h = (frontier ⋈ edges) minus everything
-    * already labeled — each node is labeled exactly once, at its BFS
-    * level, so `dist` is the minimum by construction. `maxHops` is a
-    * REQUIRED bound (neighborhood queries want 1–4 hops; unbounded
-    * reachability is [[connectedComponents]]' job, which converges in
-    * O(log²) rounds instead of diameter).
+    * Frontier iteration over `(node, dist)` state: hop h adds the
+    * out-neighbours of the level-(h−1) frontier, anti-joined against
+    * every node already labeled — each node is labeled exactly once,
+    * at its BFS level, so `dist` is the minimum by construction.
+    * `maxHops` is a REQUIRED bound (neighborhood queries want 1–4 hops;
+    * unbounded reachability is [[connectedComponents]]' job, which
+    * converges in O(log²) rounds instead of diameter).
     *
     * Scale shape: one hop = one frontier⋈edges equi-join (frontier is
     * the NEW nodes only, never the cumulative set) + one anti-join
     * against the labeled set — both keyed on node id, AQE-handled.
-    * Each level is persisted and the driver reads one count per hop
-    * (the empty-frontier early stop — same bounded-scalar discipline
-    * as the CC convergence checksum). Seeds appear with dist 0 whether
-    * or not they occur in the edge set (the caller asked about them).
+    * The hops run in [[Fixpoint]]: one job per hop materializes the
+    * new state and counts its level-h rows (zero = empty frontier,
+    * early stop), and the returned frame's plan does not grow with the
+    * hop count. Seeds appear with dist 0 whether or not they occur in
+    * the edge set (the caller asked about them). The returned frame is
+    * backed by the final persisted state; [[bfsCore]] returns it with
+    * its release handle.
     *
     * Determinism: pure integer hop counts — trivially replayable; the
     * oracle is a recursive CTE with UNION dedup and `min(dist)`.
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
-                   sources: Seq[Long], maxHops: Int): DataFrame = {
+                   sources: Seq[Long], maxHops: Int): DataFrame =
+    bfsCore(edges, srcCol, dstCol, sources, maxHops)._1
+
+  /** [[bfsDistances]] as `(distances, hopsRun, release)`: `release`
+    * unpersists exactly what this call left persisted (the
+    * [[connectedComponentsReleasable]] contract). */
+  private[graft] def bfsCore(edges: DataFrame, srcCol: String, dstCol: String,
+                             sources: Seq[Long], maxHops: Int)
+  : (DataFrame, Int, () => Unit) = {
     require(sources.nonEmpty, "bfsDistances: empty source set")
     require(maxHops >= 0, s"bfsDistances: maxHops=$maxHops must be >= 0")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seed = sources.distinct.toDF("node").withColumn("dist", lit(0L))
-    var labeled = seed.persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = labeled
-    var prevFrontier: DataFrame = null // released once its successor exists
-    var h = 0
-    var frontierSize = 1L // seeds are nonempty by the require
-    while (h < maxHops && frontierSize > 0) {
-      h += 1
-      // using-column joins on RENAMED frames: hop ≥ 2 frontiers derive
-      // from `e` itself, and dataset-column equality predicates would
-      // hit the ambiguous-self-join check
-      val next = e.join(frontier.select(col("node").as("src")), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(labeled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h.toLong))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      frontierSize = next.count() // bounded scalar: the early-stop gauge
-      if (frontierSize > 0) {
-        val grown = labeled.unionAll(next).persist(StorageLevel.MEMORY_AND_DISK)
-        grown.count() // materialize before releasing the parents
-        labeled.unpersist()
-        if (prevFrontier != null) prevFrontier.unpersist()
-        labeled = grown
-        prevFrontier = next
-        frontier = next
-      } else next.unpersist()
-    }
-    if (prevFrontier != null) prevFrontier.unpersist()
-    e.unpersist()
-    labeled
+    val e = simpleEdges(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val seed = edges.sparkSession.createDataFrame(sources.distinct.map((_, 0L)))
+      .toDF("node", "dist")
+    val (out, hops, _, release) = Fixpoint(seed, maxHops, Seq(e))(
+      // using-column joins: the frontier and the edges share lineage
+      // from hop 2 on, and column-equality predicates would hit the
+      // ambiguous-self-join check
+      (labeled, h) => labeled.unionAll(
+        e.join(labeled.where(col("dist") === h - 1).select(col("node").as("src")), Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(labeled, Seq("node"), "left_anti")
+          .withColumn("dist", lit(h.toLong))),
+      Some((_, next, h) =>
+        next.agg(count(when(col("dist") === h, lit(1)))).head().getLong(0) == 0))
+    (out, hops, release)
   }
 
   /** Per-node triangle counts + local clustering coefficient over an

@@ -119,6 +119,37 @@ class GraphOpsSpec extends SparkSpec {
       new java.io.File(dir).getParentFile)
   }
 
+  test("connectedComponents: a round cap that throws releases every block the run persisted") {
+    val sc = spark.sparkContext
+    val cm = spark.sharedState.cacheManager
+    val (rdds0, cacheEmpty0) = (sc.getPersistentRDDs.keySet, cm.isEmpty)
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
+    intercept[IllegalArgumentException] {
+      GraphOps.connectedComponents(chain, "a", "b", maxIterations = 2, localThreshold = 0)
+    }
+    assert(sc.getPersistentRDDs.keySet == rdds0,
+      s"left persisted: ${sc.getPersistentRDDs.keySet.diff(rdds0)}")
+    assert(cm.isEmpty == cacheEmpty0, "CacheManager entry left behind")
+  }
+
+  test("plan size does not depend on round count: CC and BFS results") {
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      "Exchange".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
+    def chain(n: Long) = (1L until n).map(i => (i, i + 1))
+    val (cc30, release30) = GraphOps.connectedComponentsReleasable(
+      chain(30).toDF("a", "b"), "a", "b", localThreshold = 0)
+    val (cc3k, release3k) = GraphOps.connectedComponentsReleasable(
+      chain(3000).toDF("a", "b"), "a", "b", localThreshold = 0)
+    assert(exchanges(cc30) == exchanges(cc3k))
+    release30(); release3k()
+    val und = chain(150).flatMap(e => Seq(e, e.swap)).toDF("src", "dst")
+    val (bfs1, _, releaseBfs1) = GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 1)
+    val (bfs4, hops4, releaseBfs4) = GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 4)
+    assert(hops4 == 4 && bfs4.count() == 5)
+    assert(exchanges(bfs1) == exchanges(bfs4))
+    releaseBfs1(); releaseBfs4()
+  }
+
   test("driver union-find survives a 100k descending-ordered chain (stack safety)") {
     // processing (k+1,k) edges in DESCENDING k order builds parent(k)=k-1
     // for every k — a 100k-deep chain. The first find() from the top
@@ -780,7 +811,7 @@ class GraphOpsSpec extends SparkSpec {
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L))
     val edges = tri.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     val (out, release) = GraphOps.labelPropagationReleasable(edges, "src", "dst",
-      iterations = 6) // crosses CheckpointEvery so a ckptRoot exists too
+      iterations = 6) // crosses CheckpointEvery so a checkpoint root exists too
     assert(out.count() == 6)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
       "final label state is cached behind the frame")

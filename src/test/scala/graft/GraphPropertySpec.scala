@@ -22,28 +22,54 @@ class GraphPropertySpec extends SparkSpec {
   private def randomEdges(rnd: scala.util.Random, m: Int): Seq[(Long, Long)] =
     (0 until m).map(_ => (rnd.nextInt(N).toLong, rnd.nextInt(N).toLong))
 
+  /** Driver BFS over the cleaned edge set (no self-loops, distinct). */
+  private def driverBfs(edges: Seq[(Long, Long)], seeds: Seq[Long],
+                        maxHops: Int): Map[Long, Long] = {
+    val adj = edges.filter(e => e._1 != e._2).distinct
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val dist = mutable.Map[Long, Long](seeds.map(_ -> 0L): _*)
+    var frontier = seeds.toSet
+    var h = 0L
+    while (h < maxHops && frontier.nonEmpty) {
+      h += 1
+      frontier = frontier.flatMap(u => adj.getOrElse(u, Set.empty))
+        .filterNot(dist.contains)
+      frontier.foreach(v => dist(v) = h)
+    }
+    dist.toMap
+  }
+
   test("bfsDistances ≡ driver BFS on random digraphs (seeds, horizons, early stop)") {
     val rnd = new scala.util.Random(13016)
     (1 to TRIALS).foreach { trial =>
       val edges = randomEdges(rnd, 30)
       val seeds = (0 until 1 + rnd.nextInt(3)).map(_ => rnd.nextInt(N).toLong).distinct
       val maxHops = rnd.nextInt(5) // includes 0: seeds only
-      // driver BFS over the cleaned edge set (no self-loops, distinct)
-      val adj = edges.filter(e => e._1 != e._2).distinct
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val dist = mutable.Map[Long, Long](seeds.map(_ -> 0L): _*)
-      var frontier = seeds.toSet
-      var h = 0L
-      while (h < maxHops && frontier.nonEmpty) {
-        h += 1
-        frontier = frontier.flatMap(u => adj.getOrElse(u, Set.empty))
-          .filterNot(dist.contains)
-        frontier.foreach(v => dist(v) = h)
-      }
       val got = GraphOps.bfsDistances(edges.toDF("src", "dst"), "src", "dst",
           seeds, maxHops)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == dist.toMap, s"trial $trial seeds=$seeds maxHops=$maxHops edges=$edges")
+      assert(got == driverBfs(edges, seeds, maxHops),
+        s"trial $trial seeds=$seeds maxHops=$maxHops edges=$edges")
+    }
+  }
+
+  test("bfsCore: rows ≡ driver BFS, and release returns the session to its baseline") {
+    val sc = spark.sparkContext
+    val cm = spark.sharedState.cacheManager
+    val rnd = new scala.util.Random(13017)
+    // a directed 15-node chain runs all 8 hops (past the checkpoint
+    // cadence, so a pinned root exists); the random digraph stops early
+    val cases = Seq((0L until 14L).map(i => (i, i + 1)) -> 8, randomEdges(rnd, 30) -> 4)
+    cases.foreach { case (edges, maxHops) =>
+      val (rdds0, cacheEmpty0) = (sc.getPersistentRDDs.keySet, cm.isEmpty)
+      val (out, _, release) = GraphOps.bfsCore(edges.toDF("src", "dst"), "src", "dst",
+        Seq(0L), maxHops)
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == driverBfs(edges, Seq(0L), maxHops), s"maxHops=$maxHops edges=$edges")
+      release()
+      assert(sc.getPersistentRDDs.keySet == rdds0,
+        s"left persisted: ${sc.getPersistentRDDs.keySet.diff(rdds0)}")
+      assert(cm.isEmpty == cacheEmpty0, "CacheManager entry left behind")
     }
   }
 

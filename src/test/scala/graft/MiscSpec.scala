@@ -176,6 +176,7 @@ class MiscSpec extends SparkSpec {
       fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
     }
     assert(rows.exists(r => r.tasks > 0 && r.site.nonEmpty), s"stage rows: $rows")
+    assert(rows.forall(_.job >= 0), s"stage without its job: $rows")
     assert(rows.map(_.taskMs) == rows.map(_.taskMs).sorted.reverse, "not ordered by task time")
   }
 }
