@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
   *     and stage counts and a per-stage table follow, descending by
   *     task time, with each stage's callsite so rows map back to
   *     operators — the local stand-in for the Spark UI's stage table.
+  *     A `[profile] <q> left …` line then gives the persistent RDDs
+  *     (and whether CacheManager entries remain) the query left behind
+  *     before and after the release of the `Materialize.scoped` block
+  *     every rep runs in — the leak scan, query by query.
   *   - `explain`: the formatted physical plan precedes the reps; grep
   *     it (`-c "Scan parquet"`) to catch a subtree re-expanded once
   *     per consumer.
@@ -137,15 +141,28 @@ object Profile {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         var sec = 0.0
+        var release: () => Unit = () => ()
         def run(): Unit = {
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val (df, rel) = graft.util.Materialize.scoped(fn(spark, sfDir))
+          release = rel
+          df.write.format("noop").mode("overwrite").save()
           sec = (System.nanoTime() - t0) / 1e9
         }
         val profiled = mode == "stages" && i == reps
         val rows = if (profiled) stages(spark)(run()) else { run(); Nil }
         println(f"[profile] $name run $i: $sec%.3f s")
-        if (profiled) printStages(rows)
+        if (profiled) {
+          printStages(rows)
+          def held = (spark.sparkContext.getPersistentRDDs.size,
+            !spark.sharedState.cacheManager.isEmpty)
+          val before = held
+          release()
+          val after = held
+          println(s"[profile] $name left ${before._1} persisted RDDs (cache entries: " +
+            s"${before._2}) before its scope release, ${after._1} (cache entries: " +
+            s"${after._2}) after")
+        } else release()
       }
     }
     spark.stop()

@@ -27,10 +27,9 @@ import graft.text.TextOps
   *
   * Caching contract: the pair-finding operators persist a compact
   * intermediate (signatures / shingle arrays) because their self-join
-  * forks the plan. The cache lives until the session drops it — a
-  * long-lived service calling these repeatedly should
-  * `spark.catalog.clearCache()` (or unpersist) after consuming each
-  * result, as `graft.Bench` does between queries.
+  * forks the plan. Each such cache registers with the caller's
+  * `graft.util.Materialize.scoped` block (the engine's one release
+  * path, contract in `Materialize`).
   */
 object DedupOps {
 
@@ -152,25 +151,13 @@ object DedupOps {
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 3, k: Int = 16, bands: Int = 8,
                           threshold: Double = 0.5, portable: Boolean = false,
-                          maxBucket: Int = 1000): DataFrame =
-    minhashNearDupPairsReleasable(df, idCol, textCol, shingleN, k, bands,
-      threshold, portable, maxBucket)._1
-
-  /** [[minhashNearDupPairs]] plus a release thunk for the internal
-    * signature cache (same contract as
-    * [[ngramJaccardPairsReleasable]]). */
-  private[graft] def minhashNearDupPairsReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.5, portable: Boolean = false,
-      maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                          maxBucket: Int = 1000): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val rowsPer = k / bands
-    val sigs = df
+    val sigs = graft.util.Materialize.persist(df
       .select(col(idCol).as("__id"), wordShingles(col(textCol), shingleN).as("__sh"))
       .where(size(col("__sh")) > 0)
-      .select(col("__id"), minhashSignature(col("__sh"), k, portable).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__id"), minhashSignature(col("__sh"), k, portable).as("__sig")))
     val buckets = sigs
       .select(col("__id"), col("__sig"),
         posexplode(bandKeys(col("__sig"), bands, rowsPer)).as(Seq("__band", "__key")))
@@ -189,8 +176,7 @@ object DedupOps {
                                  x.__sig AS sig_a, y.__sig AS sig_b))))""")).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         estJaccard(col("p.sig_a"), col("p.sig_b"), k).as("est_jaccard"))
-    (pairs.distinct().where(col("est_jaccard") >= threshold),
-      () => { sigs.unpersist(); () })
+    pairs.distinct().where(col("est_jaccard") >= threshold)
   }
 
   /** Transitive near-dup groups from MinHash+LSH pairs — the
@@ -205,8 +191,10 @@ object DedupOps {
                        shingleN: Int = 3, k: Int = 16, bands: Int = 8,
                        threshold: Double = 0.5, portable: Boolean = false,
                        maxBucket: Int = 1000): DataFrame = {
-    val (pairs, release) = minhashNearDupPairsReleasable(df, idCol, textCol,
-      shingleN, k, bands, threshold, portable, maxBucket)
+    val (pairs, release) = graft.util.Materialize.scoped {
+      minhashNearDupPairs(df, idCol, textCol, shingleN, k, bands, threshold,
+        portable, maxBucket)
+    }
     val cc = graft.graph.GraphOps.connectedComponents(pairs, "id_a", "id_b")
     release()
     graft.graph.GraphOps.assignGroups(df, idCol, cc)
@@ -231,27 +219,11 @@ object DedupOps {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.5,
                         maxBucket: Int = 1000): DataFrame =
-    ngramJaccardPairsReleasable(df, idCol, textCol, shingleN, threshold, maxBucket)._1
-
-  /** [[ngramJaccardPairs]] plus a release thunk that unpersists the
-    * internal pruned-shingle cache. Compositions that fully consume the
-    * pairs midway (e.g. [[nearDupGroups]], whose connected-components
-    * step materializes them into its own persisted edge set) call it to
-    * stop the cache outliving its usefulness. Only call after an action
-    * has materialized every consumer of the pairs. */
-  private[graft] def ngramJaccardPairsReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.5,
-      maxBucket: Int = 1000): (DataFrame, () => Unit) = {
-    val (counts, release) = pairOverlapCountsReleasable(df, idCol, textCol,
-      shingleN, maxBucket)
-    val pairs = counts
+    pairOverlapCounts(df, idCol, textCol, shingleN, maxBucket)
       .select(col("id_a"), col("id_b"),
         (col("__inter").cast(DoubleType) /
           (col("__na") + col("__nb") - col("__inter"))).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (pairs, release)
-  }
 
   /** Shared candidate core of the exact set-overlap family: every
     * same-corpus document pair sharing ≥1 post-prune shingle, with the
@@ -268,28 +240,25 @@ object DedupOps {
     * warehouse scale the equivalent is checkpointing the shingle
     * table; MLlib's LSH persists internally too.
     */
-  private def pairOverlapCountsReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, maxBucket: Int): (DataFrame, () => Unit) = {
+  private def pairOverlapCounts(df: DataFrame, idCol: String, textCol: String,
+                                shingleN: Int, maxBucket: Int): DataFrame = {
     val sh = df
       .select(col(idCol).as("__id"), wordShingles(col(textCol), shingleN).as("__sh"))
       .where(size(col("__sh")) > 0)
       .select(col("__id"), explode(col("__sh")).as("__s"))
-    val pruned = sh.withColumn("__bn",
+    val pruned = graft.util.Materialize.persist(sh.withColumn("__bn",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__s")))
       .where(col("__bn") <= maxBucket).drop("__bn")
       .withColumn("__n",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__id"))))
     // symmetric self-join streams candidate pairs straight into the
     // pair aggregation; post-prune set sizes ride along with each
     // exploded shingle so no join back to a per-doc size table is needed.
     val a = pruned.select(col("__s"), col("__id").as("id_a"), col("__n").as("__na"))
     val b = pruned.select(col("__s"), col("__id").as("id_b"), col("__n").as("__nb"))
-    val counts = a.join(b, Seq("__s"))
+    a.join(b, Seq("__s"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "__na", "__nb").agg(count(lit(1)).as("__inter"))
-    (counts, () => { pruned.unpersist(); () })
   }
 
   /** Asymmetric near-dup detection: shingle-set CONTAINMENT
@@ -311,15 +280,12 @@ object DedupOps {
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             shingleN: Int = 3, threshold: Double = 0.8,
-                            maxBucket: Int = 1000): DataFrame = {
-    val (counts, _) = pairOverlapCountsReleasable(df, idCol, textCol,
-      shingleN, maxBucket)
-    counts
+                            maxBucket: Int = 1000): DataFrame =
+    pairOverlapCounts(df, idCol, textCol, shingleN, maxBucket)
       .select(col("id_a"), col("id_b"),
         (col("__inter").cast(DoubleType) / col("__na")).as("c_a_in_b"),
         (col("__inter").cast(DoubleType) / col("__nb")).as("c_b_in_a"))
       .where(greatest(col("c_a_in_b"), col("c_b_in_a")) >= threshold)
-  }
 
   /** Cross-corpus exact n-gram Jaccard pairs: candidates are (left,
     * right) documents sharing ≥1 shingle — the two sides NEVER
@@ -339,15 +305,15 @@ object DedupOps {
       .select(col(idCol).as("__id"), wordShingles(col(textCol), shingleN).as("__sh"))
       .where(size(col("__sh")) > 0)
       .select(col("__id"), explode(col("__sh")).as("__s"))
-    crossJaccardFromExploded(side(left), side(right), threshold, maxBucket)._1
+    crossJaccardFromExploded(side(left), side(right), threshold, maxBucket)
   }
 
   /** Cross-corpus Jaccard over ALREADY-EXPLODED `(__id, __s)` shingle
     * frames — `__s` may be shingle text or an injective hash of it
     * (the at-rest index stores 8-byte hashes; jaccard over hashes
     * equals jaccard over shingles up to hash collisions). Shared by
-    * [[crossNgramJaccardPairs]] and [[dedupAgainstIndex]]. Returns the
-    * pairs plus a release thunk for the internal pruned-union cache.
+    * [[crossNgramJaccardPairs]] and [[dedupAgainstIndex]]; the internal
+    * pruned-union cache registers with the caller's scope.
     */
   /** [[crossJaccardFromExploded]] with the combined hot-shingle count
     * driven by a MATERIALIZED per-shingle document-frequency frame
@@ -375,18 +341,17 @@ object DedupOps {
     */
   private def crossJaccardViaDf(left: DataFrame, right: DataFrame,
                                 histDf: DataFrame,
-                                threshold: Double, maxBucket: Int)
-  : (DataFrame, () => Unit) = {
-    import org.apache.spark.storage.StorageLevel
+                                threshold: Double, maxBucket: Int): DataFrame = {
     // the batch shingle kernel feeds its own bucket counts AND the
     // pruned fork — persisted so it runs once per call, not once per
     // consumer (mirrors crossMinhashViaBf's banded-batch persist)
-    val l = left.persist(StorageLevel.MEMORY_AND_DISK)
+    val l = graft.util.Materialize.persist(left)
     val batchCnt = l.groupBy("__s").agg(count(lit(1)).as("__bc"))
-    val hot = batchCnt.join(histDf, Seq("__s"), "full_outer")
-      .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
-      .select("__s")
-      .persist(StorageLevel.MEMORY_AND_DISK) // consumed by three anti-joins
+    // consumed by three anti-joins
+    val hot = graft.util.Materialize.persist(
+      batchCnt.join(histDf, Seq("__s"), "full_outer")
+        .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
+        .select("__s"))
     // prunedL's two consumers (denominator count, candidate join) each
     // recompute one cheap anti-join FROM the cached l — persisting
     // prunedL too would hold a second near-full copy of the batch's
@@ -399,7 +364,7 @@ object DedupOps {
     val prunedR = right.join(hot, Seq("__s"), "left_anti")
     val nr = prunedR.groupBy("__id").agg(count(lit(1)).as("__nr"))
       .select(col("__id").as("id_r"), col("__nr"))
-    val pairs = prunedL.select(col("__s"), col("__id").as("id_l"))
+    prunedL.select(col("__s"), col("__id").as("id_l"))
       .join(prunedR.select(col("__s"), col("__id").as("id_r")), Seq("__s"))
       .groupBy("id_l", "id_r").agg(count(lit(1)).as("__inter"))
       .join(nl, "id_l").join(nr, "id_r")
@@ -407,7 +372,6 @@ object DedupOps {
         (col("__inter").cast(DoubleType) /
           (col("__nl") + col("__nr") - col("__inter"))).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (pairs, () => { hot.unpersist(); l.unpersist(); () })
   }
 
   /** Cross-corpus jaccard pairs of a batch against the INDEX's shingle
@@ -420,8 +384,7 @@ object DedupOps {
     */
   private def indexJaccardPairs(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batchSh: DataFrame,
-                                threshold: Double, maxBucket: Int)
-  : (DataFrame, () => Unit) = {
+                                threshold: Double, maxBucket: Int): DataFrame = {
     val histSh = spark.read.parquet(s"$dir/sh")
       .select(col("doc_id").as("__id"), col("sh").as("__s"))
     if (graft.util.Tranches.countFresh(spark, dir, "sh", "df")) {
@@ -433,31 +396,29 @@ object DedupOps {
   }
 
   private def crossJaccardFromExploded(left: DataFrame, right: DataFrame,
-                                       threshold: Double, maxBucket: Int)
-  : (DataFrame, () => Unit) = {
+                                       threshold: Double, maxBucket: Int): DataFrame = {
     // one union feeds both the hot-shingle prune (combined occurrence
     // count — a shingle hot on either side is noise on both) and the
     // per-doc post-prune sizes; persisted because the cross join forks it
-    val pruned = left.select(lit(0).as("__side"), col("__id"), col("__s"))
-      .unionByName(right.select(lit(1).as("__side"), col("__id"), col("__s")))
-      .withColumn("__bn",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__s")))
-      .where(col("__bn") <= maxBucket).drop("__bn")
-      .withColumn("__n",
-        count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("__side", "__id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pruned = graft.util.Materialize.persist(
+      left.select(lit(0).as("__side"), col("__id"), col("__s"))
+        .unionByName(right.select(lit(1).as("__side"), col("__id"), col("__s")))
+        .withColumn("__bn",
+          count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__s")))
+        .where(col("__bn") <= maxBucket).drop("__bn")
+        .withColumn("__n",
+          count(lit(1)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy("__side", "__id"))))
     val a = pruned.where(col("__side") === 0)
       .select(col("__s"), col("__id").as("id_l"), col("__n").as("__nl"))
     val b = pruned.where(col("__side") === 1)
       .select(col("__s"), col("__id").as("id_r"), col("__n").as("__nr"))
-    val pairs = a.join(b, Seq("__s"))
+    a.join(b, Seq("__s"))
       .groupBy("id_l", "id_r", "__nl", "__nr").agg(count(lit(1)).as("__inter"))
       .select(col("id_l"), col("id_r"),
         (col("__inter").cast(DoubleType) /
           (col("__nl") + col("__nr") - col("__inter"))).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (pairs, () => { pruned.unpersist(); () })
   }
 
   /** Incremental-ingest dedup: drop from a NEW batch every document
@@ -477,8 +438,8 @@ object DedupOps {
     * projection + shingle explode) — both narrow column-pruned scans,
     * the unavoidable cost of consulting it; the batch-sized
     * exact-survivor projection is persisted because it forks into the
-    * candidate side and the final anti-join (same session-cache
-    * contract as the pair finders — `clearCache()` between jobs).
+    * candidate side and the final anti-join (the pair finders' caching
+    * contract).
     */
   def dedupAgainstHistory(batch: DataFrame, history: DataFrame,
                           idCol: String, textCol: String,
@@ -486,10 +447,9 @@ object DedupOps {
                           maxBucket: Int = 1000): DataFrame = {
     val histFp = history
       .select(TextOps.fingerprint(col(textCol)).as("__fp")).distinct()
-    val exactSurvivors = batch
+    val exactSurvivors = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
-      .join(histFp, Seq("__fp"), "left_anti").drop("__fp")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(histFp, Seq("__fp"), "left_anti").drop("__fp"))
     val nearIds = crossNgramJaccardPairs(exactSurvivors, history, idCol, textCol,
       shingleN, threshold, maxBucket)
       .select(col("id_l").as("__dup_id")).distinct()
@@ -661,9 +621,10 @@ object DedupOps {
     *
     * `newRows` is typically [[dedupAgainstIndex]]'s output, whose
     * LINEAGE READS THIS INDEX — and the append mutates it between the
-    * writes. `localCheckpoint(eager)` freezes the survivor set
-    * first; a lost block fails the job rather than recomputing against
-    * mutated state.
+    * writes. `Materialize.freeze` (an eager local checkpoint) freezes
+    * the survivor set first; a lost block fails the job rather than
+    * recomputing against mutated state. The frozen blocks register with
+    * the caller's scope.
     */
   def appendToDedupIndex(newRows: DataFrame, indexDir: String, idCol: String, textCol: String,
                          tag: String,
@@ -688,7 +649,7 @@ object DedupOps {
       fingerprintRows(newRows, textCol)
         .join(spark.read.parquet(s"$dir/fp").select("fp"), Seq("fp"), "left_anti")
         .count())) return
-    val frozen = newRows.localCheckpoint(true)
+    val frozen = graft.util.Materialize.freeze(newRows)
     // two independent row+count chains overlapped on driver threads
     // ([[graft.util.Par]]), then fp STRICTLY LAST —
     // the ordering contracts all hold: shingles and signatures (and
@@ -836,40 +797,25 @@ object DedupOps {
     */
   def dedupAgainstIndex(batch: DataFrame, dir: String, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.5,
-                        maxBucket: Int = 1000, portable: Boolean = false): DataFrame =
-    dedupAgainstIndexReleasable(batch, dir, idCol, textCol, shingleN, threshold,
-      maxBucket, portable)._1
-
-  /** [[dedupAgainstIndex]] plus a release thunk for the internal
-    * caches (pruned shingle union + exact-survivor projection) — the
-    * streaming loop calls it per micro-batch so a long-running stream
-    * does not pin one cache entry per batch. Only call after an action
-    * has materialized every consumer. */
-  private[graft] def dedupAgainstIndexReleasable(
-      batch: DataFrame, indexDir: String, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.5,
-      maxBucket: Int = 1000, portable: Boolean = false): (DataFrame, () => Unit) = {
+                        maxBucket: Int = 1000, portable: Boolean = false): DataFrame = {
     val spark = batch.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    validateIndexParams(spark, dir, shingleN, portable)
+    val idx = graft.merge.Merge.resolveDir(spark, dir)
+    validateIndexParams(spark, idx, shingleN, portable)
     // append tranches can re-add fps; distinct over the column alone
     // (the batch=<tag> partition column must not widen the key)
-    val histFp = spark.read.parquet(s"$dir/fp").select("fp").distinct()
+    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
     // persisted: the survivors fork into the near-dup candidate side
     // and the final anti-join — unpersisted, each branch re-runs the
     // batch fingerprint join (an extra scan of both inputs per action)
-    val exactSurvivors = batch
+    val exactSurvivors = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
       .join(histFp.withColumnRenamed("fp", "__fp"), Seq("__fp"), "left_anti")
-      .drop("__fp")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__fp"))
     val batchSh = hashedShingleRows(exactSurvivors, idCol, textCol, shingleN, portable)
       .select(col("doc_id").as("__id"), col("sh").as("__s"))
-    val (pairs, releasePairs) =
-      indexJaccardPairs(spark, dir, batchSh, threshold, maxBucket)
-    val nearIds = pairs.select(col("id_l").as("__dup_id")).distinct()
-    (exactSurvivors.join(nearIds, col(idCol) === col("__dup_id"), "left_anti"),
-      () => { releasePairs(); exactSurvivors.unpersist(); () })
+    val nearIds = indexJaccardPairs(spark, idx, batchSh, threshold, maxBucket)
+      .select(col("id_l").as("__dup_id")).distinct()
+    exactSurvivors.join(nearIds, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** At-rest index statistics: one row per artifact present —
@@ -973,45 +919,29 @@ object DedupOps {
     */
   def dedupDecisions(batch: DataFrame, dir: String, idCol: String, textCol: String,
                      shingleN: Int = 3, threshold: Double = 0.5,
-                     maxBucket: Int = 1000, portable: Boolean = false): DataFrame =
-    dedupDecisionsReleasable(batch, dir, idCol, textCol, shingleN, threshold,
-      maxBucket, portable)._1
-
-  /** [[dedupDecisions]] plus a release thunk for the internal caches
-    * (flagged batch + pruned shingle union) — looped daily callers in a
-    * long-lived session release after consuming each report, the same
-    * contract as [[dedupAgainstIndexReleasable]]. */
-  private[graft] def dedupDecisionsReleasable(
-      batch: DataFrame, indexDir: String, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.5,
-      maxBucket: Int = 1000, portable: Boolean = false): (DataFrame, () => Unit) = {
+                     maxBucket: Int = 1000, portable: Boolean = false): DataFrame = {
     val spark = batch.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    validateIndexParams(spark, dir, shingleN, portable)
-    val histFp = spark.read.parquet(s"$dir/fp").select("fp").distinct()
+    val idx = graft.merge.Merge.resolveDir(spark, dir)
+    validateIndexParams(spark, idx, shingleN, portable)
+    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
       .withColumnRenamed("fp", "__fp").withColumn("__hit", lit(true))
     // persisted: forks into the shingle pipeline and the final report join
-    val flagged = batch
+    val flagged = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
-      .join(histFp, Seq("__fp"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(histFp, Seq("__fp"), "left"))
     val batchSh = hashedShingleRows(flagged.where(col("__hit").isNull),
       idCol, textCol, shingleN, portable)
       .select(col("doc_id").as("__id"), col("sh").as("__s"))
     // threshold 0: keep every candidate pair so near-MISS scores reach
     // the report (pairs always share ≥1 post-prune shingle ⇒ jaccard > 0)
-    val (pairs, releasePairs) = indexJaccardPairs(spark, dir, batchSh, 0.0, maxBucket)
-    val best = pairs.groupBy(col("id_l")).agg(max(col("jaccard")).as("best_jaccard"))
-    // the release composes both caches and is ONLY safe after the
-    // caller's action has materialized the report — an eager release
-    // would demote the self-join fork to recompute-per-branch
-    (flagged.join(best, col(idCol) === col("id_l"), "left")
+    val best = indexJaccardPairs(spark, idx, batchSh, 0.0, maxBucket)
+      .groupBy(col("id_l")).agg(max(col("jaccard")).as("best_jaccard"))
+    flagged.join(best, col(idCol) === col("id_l"), "left")
       .select(col(idCol),
         when(col("__hit"), "exact")
           .when(col("best_jaccard") >= threshold, "near")
           .otherwise("unique").as("decision"),
-        col("best_jaccard")),
-      () => { releasePairs(); flagged.unpersist(); () })
+        col("best_jaccard"))
   }
 
   /** [[dedupDecisions]]' APPROXIMATE-tier twin — the decision report
@@ -1028,43 +958,34 @@ object DedupOps {
     */
   def dedupDecisionsApprox(batch: DataFrame, dir: String, idCol: String, textCol: String,
                            threshold: Double = 0.5,
-                           maxBucket: Int = 1000): DataFrame =
-    dedupDecisionsApproxReleasable(batch, dir, idCol, textCol, threshold, maxBucket)._1
-
-  /** [[dedupDecisionsApprox]] plus a release thunk (same contract as
-    * [[dedupDecisionsReleasable]]). */
-  private[graft] def dedupDecisionsApproxReleasable(
-      batch: DataFrame, indexDir: String, idCol: String, textCol: String,
-      threshold: Double = 0.5, maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                           maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = readDedupIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"dedup index $dir has no _graft_meta — the approximate tier needs the frozen " +
+    val idx = graft.merge.Merge.resolveDir(spark, dir)
+    val meta = readDedupIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
+      s"dedup index $idx has no _graft_meta — the approximate tier needs the frozen " +
         "signature family; rebuild with writeDedupIndex"))
-    require(pathExists(spark, s"$dir/sig"),
-      s"dedup index $dir has no sig artifact; rebuild with writeDedupIndex")
-    val histFp = spark.read.parquet(s"$dir/fp").select("fp").distinct()
+    require(pathExists(spark, s"$idx/sig"),
+      s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
+    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
       .withColumnRenamed("fp", "__fp").withColumn("__hit", lit(true))
     // persisted: forks into the signature pipeline and the report join
-    val flagged = batch
+    val flagged = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
-      .join(histFp, Seq("__fp"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(histFp, Seq("__fp"), "left"))
     val batchSigs = signatureRows(flagged.where(col("__hit").isNull),
       idCol, textCol, meta.shingleN, meta.sigK, meta.portable)
     // threshold 0: candidates reach the report unthresholded so
     // near-miss estimates survive (a banded candidate agrees on ≥ one
     // whole band ⇒ estimate > 0)
-    val (pairs, releasePairs) = indexMinhashPairs(spark, dir, batchSigs,
+    val best = indexMinhashPairs(spark, idx, batchSigs,
       meta.sigK, meta.sigBands, 0.0, maxBucket)
-    val best = pairs.groupBy(col("id_l")).agg(max(col("est_jaccard")).as("best_est_jaccard"))
-    (flagged.join(best, col(idCol) === col("id_l"), "left")
+      .groupBy(col("id_l")).agg(max(col("est_jaccard")).as("best_est_jaccard"))
+    flagged.join(best, col(idCol) === col("id_l"), "left")
       .select(col(idCol),
         when(col("__hit"), "exact")
           .when(col("best_est_jaccard") >= threshold, "near")
           .otherwise("unique").as("decision"),
-        col("best_est_jaccard")),
-      () => { releasePairs(); flagged.unpersist(); () })
+        col("best_est_jaccard"))
   }
 
   /** Cross-corpus MinHash candidate pairs over PER-DOC SIGNATURE rows
@@ -1074,12 +995,12 @@ object DedupOps {
     * corpora never self-join), estimate Jaccard from signature
     * agreement. `maxBucket` caps COMBINED (band, key) bucket size
     * across both sides, mirroring the exact path's combined hot-shingle
-    * prune. Returns `(id_l, id_r, est_jaccard)` plus a release thunk
-    * for the internal banded-union cache.
+    * prune. Returns `(id_l, id_r, est_jaccard)`; the internal
+    * banded-union cache registers with the caller's scope.
     */
   private def crossMinhashFromSigs(left: DataFrame, right: DataFrame,
                                    k: Int, bands: Int, threshold: Double,
-                                   maxBucket: Int): (DataFrame, () => Unit) = {
+                                   maxBucket: Int): DataFrame = {
     val rowsPer = k / bands
     def banded(sigs: DataFrame, side: Int) = sigs
       .select(lit(side).as("__side"), col("doc_id").as("__id"), col("sig").as("__sig"),
@@ -1087,22 +1008,21 @@ object DedupOps {
     // one union feeds the combined hot-bucket prune and both join
     // sides; persisted because the join forks it (same contract as the
     // exact path — k longs/doc cross this shuffle, not shingles)
-    val pruned = banded(left, 0).unionByName(banded(right, 1))
-      .withColumn("__bn", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__band", "__key")))
-      .where(col("__bn") <= maxBucket).drop("__bn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pruned = graft.util.Materialize.persist(
+      banded(left, 0).unionByName(banded(right, 1))
+        .withColumn("__bn", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("__band", "__key")))
+        .where(col("__bn") <= maxBucket).drop("__bn"))
     val a = pruned.where(col("__side") === 0)
       .select(col("__band"), col("__key"), col("__id").as("id_l"), col("__sig").as("__sl"))
     val b = pruned.where(col("__side") === 1)
       .select(col("__band"), col("__key"), col("__id").as("id_r"), col("__sig").as("__sr"))
-    val pairs = a.join(b, Seq("__band", "__key"))
+    a.join(b, Seq("__band", "__key"))
       .select(col("id_l"), col("id_r"), col("__sl"), col("__sr"))
       .distinct() // a pair meets once per agreeing band
       .select(col("id_l"), col("id_r"),
         estJaccard(col("__sl"), col("__sr"), k).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
-    (pairs, () => { pruned.unpersist(); () })
   }
 
   /** [[crossMinhashFromSigs]] with the combined hot-bucket count
@@ -1121,13 +1041,12 @@ object DedupOps {
     * small hot set (≤ combined-rows/maxBucket buckets by construction)
     * on their way into the candidate equi-join — one shuffle, no sort,
     * and the only persisted frames are the hot set and the batch's own
-    * banded rows (released via the thunk).
+    * banded rows (registered with the caller's scope).
     */
   private def crossMinhashViaBf(left: DataFrame, right: DataFrame,
                                 histBf: DataFrame,
                                 k: Int, bands: Int, threshold: Double,
-                                maxBucket: Int): (DataFrame, () => Unit) = {
-    import org.apache.spark.storage.StorageLevel
+                                maxBucket: Int): DataFrame = {
     val rowsPer = k / bands
     def banded(sigs: DataFrame) = sigs
       .select(col("doc_id").as("__id"), col("sig").as("__sig"),
@@ -1135,23 +1054,23 @@ object DedupOps {
     // persisted: the batch's banded rows fork into their own bucket
     // counts and the candidate join — recomputing would re-run the
     // minhash kernel over the batch per consumer
-    val l = banded(left).persist(StorageLevel.MEMORY_AND_DISK)
+    val l = graft.util.Materialize.persist(banded(left))
     val batchCnt = l.groupBy("__band", "__key").agg(count(lit(1)).as("__bc"))
-    val hot = batchCnt.join(histBf, Seq("__band", "__key"), "full_outer")
-      .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
-      .select("__band", "__key")
-      .persist(StorageLevel.MEMORY_AND_DISK) // both anti-joins below
+    // both anti-joins below
+    val hot = graft.util.Materialize.persist(
+      batchCnt.join(histBf, Seq("__band", "__key"), "full_outer")
+        .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
+        .select("__band", "__key"))
     val a = l.join(hot, Seq("__band", "__key"), "left_anti")
       .select(col("__band"), col("__key"), col("__id").as("id_l"), col("__sig").as("__sl"))
     val b = banded(right).join(hot, Seq("__band", "__key"), "left_anti")
       .select(col("__band"), col("__key"), col("__id").as("id_r"), col("__sig").as("__sr"))
-    val pairs = a.join(b, Seq("__band", "__key"))
+    a.join(b, Seq("__band", "__key"))
       .select(col("id_l"), col("id_r"), col("__sl"), col("__sr"))
       .distinct() // a pair meets once per agreeing band
       .select(col("id_l"), col("id_r"),
         estJaccard(col("__sl"), col("__sr"), k).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
-    (pairs, () => { l.unpersist(); hot.unpersist(); () })
   }
 
   /** Banded candidate pairs of batch signatures against the INDEX's
@@ -1164,7 +1083,7 @@ object DedupOps {
   private def indexMinhashPairs(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batchSigs: DataFrame,
                                 k: Int, bands: Int, threshold: Double,
-                                maxBucket: Int): (DataFrame, () => Unit) = {
+                                maxBucket: Int): DataFrame = {
     val histSigs = spark.read.parquet(s"$dir/sig").select("doc_id", "sig")
     if (graft.util.Tranches.countFresh(spark, dir, "sig", "bf")) {
       val histBf = spark.read.parquet(s"$dir/bf").drop("batch")
@@ -1195,34 +1114,25 @@ object DedupOps {
     */
   def dedupAgainstIndexApprox(batch: DataFrame, dir: String, idCol: String, textCol: String,
                               threshold: Double = 0.5,
-                              maxBucket: Int = 1000): DataFrame =
-    dedupAgainstIndexApproxReleasable(batch, dir, idCol, textCol, threshold, maxBucket)._1
-
-  /** [[dedupAgainstIndexApprox]] plus a release thunk (same contract
-    * as [[dedupAgainstIndexReleasable]]). */
-  private[graft] def dedupAgainstIndexApproxReleasable(
-      batch: DataFrame, indexDir: String, idCol: String, textCol: String,
-      threshold: Double = 0.5, maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                              maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = readDedupIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"dedup index $dir has no _graft_meta — the approximate tier needs the frozen " +
+    val idx = graft.merge.Merge.resolveDir(spark, dir)
+    val meta = readDedupIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
+      s"dedup index $idx has no _graft_meta — the approximate tier needs the frozen " +
         "signature family; rebuild with writeDedupIndex"))
-    require(pathExists(spark, s"$dir/sig"),
-      s"dedup index $dir has no sig artifact; rebuild with writeDedupIndex")
-    val histFp = spark.read.parquet(s"$dir/fp").select("fp").distinct()
-    val exactSurvivors = batch
+    require(pathExists(spark, s"$idx/sig"),
+      s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
+    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
+    val exactSurvivors = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
       .join(histFp.withColumnRenamed("fp", "__fp"), Seq("__fp"), "left_anti")
-      .drop("__fp")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__fp"))
     val batchSigs = signatureRows(exactSurvivors, idCol, textCol,
       meta.shingleN, meta.sigK, meta.portable)
-    val (pairs, releasePairs) = indexMinhashPairs(spark, dir, batchSigs,
+    val nearIds = indexMinhashPairs(spark, idx, batchSigs,
       meta.sigK, meta.sigBands, threshold, maxBucket)
-    val nearIds = pairs.select(col("id_l").as("__dup_id")).distinct()
-    (exactSurvivors.join(nearIds, col(idCol) === col("__dup_id"), "left_anti"),
-      () => { releasePairs(); exactSurvivors.unpersist(); () })
+      .select(col("id_l").as("__dup_id")).distinct()
+    exactSurvivors.join(nearIds, col(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** Near-duplicate GROUP assignment for a whole corpus: candidate
@@ -1251,8 +1161,9 @@ object DedupOps {
   def nearDupGroups(df: DataFrame, idCol: String, textCol: String,
                     shingleN: Int = 3, threshold: Double = 0.5,
                     maxBucket: Int = 1000): DataFrame = {
-    val (pairs, releasePairs) =
-      ngramJaccardPairsReleasable(df, idCol, textCol, shingleN, threshold, maxBucket)
+    val (pairs, releasePairs) = graft.util.Materialize.scoped {
+      ngramJaccardPairs(df, idCol, textCol, shingleN, threshold, maxBucket)
+    }
     // connectedComponents materializes the edge set into its own
     // persisted frame (or a driver array) on entry, so the jaccard
     // intermediate cache is dead weight the moment it returns

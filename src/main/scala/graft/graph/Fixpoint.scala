@@ -37,10 +37,11 @@ import org.apache.spark.storage.StorageLevel
   * `getPersistentRDDs` (that would also drop blocks concurrent jobs in
   * the same session own). Each superseded round is unpersisted as soon
   * as its successor is materialized; the final state (and its root,
-  * when distinct) backs the returned frame and is freed by the
-  * returned `release`. If anything throws — step, probe or action —
-  * every frame the run persisted, and the caller's `owned` frames, are
-  * unpersisted before the exception propagates.
+  * when distinct) backs the returned frame, and its release registers
+  * with the caller's innermost `graft.util.Materialize.scoped` block.
+  * If anything throws — step, probe or action — every frame the run
+  * persisted, and the caller's `owned` frames, are unpersisted before
+  * the exception propagates.
   */
 private[graph] object Fixpoint {
 
@@ -54,13 +55,13 @@ private[graph] object Fixpoint {
     * caller's persisted frames the steps read (edge layouts, node
     * universes); they are unpersisted when the run ends either way —
     * the returned frame reads only the final RDD. Returns `(frame,
-    * rounds, converged, release)`; with zero rounds the frame is
-    * `init` itself and `release` is a no-op.
+    * rounds, converged)`; with zero rounds the frame is `init` itself
+    * and nothing is registered.
     */
   def apply(init: DataFrame, maxRounds: Int, owned: Seq[DataFrame] = Nil)
            (step: (DataFrame, Int) => DataFrame,
             probe: Option[(DataFrame, DataFrame, Int) => Boolean])
-  : (DataFrame, Int, Boolean, () => Unit) = {
+  : (DataFrame, Int, Boolean) = {
     val spark = init.sparkSession
     import spark.implicits._
     val Array(a, b) = init.columns
@@ -96,13 +97,14 @@ private[graph] object Fixpoint {
     }
     view.unpersist()
     owned.foreach(_.unpersist())
-    if (state eq null) (init, 0, converged, () => ())
+    if (state eq null) (init, 0, converged)
     else {
       val (fin, pinned) = (state, root)
-      (fin.toDF(a, b), rounds, converged, () => {
+      graft.util.Materialize.register { () =>
         fin.unpersist()
         if ((pinned ne null) && (pinned ne fin)) pinned.unpersist()
-      })
+      }
+      (fin.toDF(a, b), rounds, converged)
     }
   }
 }

@@ -64,25 +64,15 @@ object GraphOps {
     * rounds run distributed. The driver edge bound is explicit: 100k
     * edges ≈ 1.6 MB. Set `localThreshold = 0` to force the
     * distributed path (the specs exercise both).
+    *
+    * The distributed tier's returned frame is backed by the final
+    * fixpoint state, released through the caller's
+    * `graft.util.Materialize.scoped` block; the driver tier persists
+    * nothing.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIterations: Int = 50,
-                          localThreshold: Int = 100000): DataFrame =
-    connectedComponentsReleasable(edges, srcCol, dstCol,
-      maxIterations, localThreshold)._1
-
-  /** [[connectedComponents]] plus a release handle that unpersists
-    * exactly the frames THIS call left persisted (the distributed
-    * tier's final fixpoint; nothing on the driver tier). Long-lived
-    * callers ([[updateGroupIndex]] under a stream) release by handle —
-    * never by sweeping `getPersistentRDDs`, which would also unpersist
-    * blocks concurrent jobs in the same session own. Call release only
-    * after the returned frame is consumed or durably written.
-    */
-  def connectedComponentsReleasable(edges: DataFrame, srcCol: String, dstCol: String,
-                                    maxIterations: Int = 50,
-                                    localThreshold: Int = 100000)
-  : (DataFrame, () => Unit) = {
+                          localThreshold: Int = 100000): DataFrame = {
     require(maxIterations >= 1, "connectedComponents: maxIterations must be >= 1")
     val e = simpleEdges(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     val spark = e.sparkSession
@@ -144,12 +134,11 @@ object GraphOps {
       import spark.implicits._
       val local = e.as[(Long, Long)].collect()
       e.unpersist()
-      return (spark.createDataset(localComponents(local).toSeq).toDF("node", "component"),
-        () => ())
+      return spark.createDataset(localComponents(local).toSeq).toDF("node", "component")
     }
     // the probe owns the cap: an unconverged last round throws inside
     // the run, which releases everything it persisted
-    val (fix, _, _, release) = Fixpoint(e, maxIterations)(
+    val (fix, _, _) = Fixpoint(e, maxIterations)(
       (cur, _) => smallStar(largeStar(cur)),
       Some { (_, next, round) =>
         val s = checksum(next)
@@ -161,10 +150,10 @@ object GraphOps {
       })
     // at the fixpoint every edge is (node → its component's min); the
     // roots themselves appear only on the dst side
-    (fix.select(inline(array(
+    fix.select(inline(array(
       struct(col("src").as("node"), col("dst").as("component")),
       struct(col("dst").as("node"), col("dst").as("component")))))
-      .distinct(), release)
+      .distinct()
   }
 
   /** WARM-START connected components over appended edge tranches —
@@ -192,34 +181,25 @@ object GraphOps {
     * no connectivity and are dropped by the self-edge filter — same
     * contract as [[connectedComponents]]: nodes only appear in the
     * output while incident to at least one non-self edge, so callers
-    * coalesce absent ids to themselves via [[assignGroups]].
+    * coalesce absent ids to themselves via [[assignGroups]]. The prior's
+    * severed-lineage materialization registers with the caller's
+    * scope alongside the fixpoint (the [[connectedComponents]]
+    * release contract).
     */
   def connectedComponentsFrom(prior: DataFrame, newEdges: DataFrame,
                               srcCol: String, dstCol: String,
                               maxIterations: Int = 50,
-                              localThreshold: Int = 100000): DataFrame =
-    connectedComponentsFromReleasable(prior, newEdges, srcCol, dstCol,
-      maxIterations, localThreshold)._1
-
-  /** [[connectedComponentsFrom]] with the
-    * [[connectedComponentsReleasable]] release contract — the handle
-    * also frees the prior's severed-lineage materialization. */
-  def connectedComponentsFromReleasable(prior: DataFrame, newEdges: DataFrame,
-                                        srcCol: String, dstCol: String,
-                                        maxIterations: Int = 50,
-                                        localThreshold: Int = 100000)
-  : (DataFrame, () => Unit) = {
+                              localThreshold: Int = 100000): DataFrame = {
     // Sever the prior's lineage before re-entering the recursion: in a
     // pipeline the prior is an artifact read (a scan), but a same-run
     // composition hands over the final star round's plan — nesting a
     // second iterative stack on top of it makes analysis/plan-string
     // cost explode (graft.util.Materialize rationale).
-    val (pruned, releasePrior) = graft.util.Materialize.boundedReleasable(prior)
-    val starred = pruned.select(col("node").as(srcCol), col("component").as(dstCol))
-    val (cc, releaseCc) = connectedComponentsReleasable(
+    val starred = graft.util.Materialize.bounded(prior)
+      .select(col("node").as(srcCol), col("component").as(dstCol))
+    connectedComponents(
       newEdges.select(col(srcCol), col(dstCol)).unionByName(starred),
       srcCol, dstCol, maxIterations, localThreshold)
-    (cc, () => { releaseCc(); releasePrior() })
   }
 
   /** AT-REST group-assignment artifact — the operational shell around
@@ -276,18 +256,16 @@ object GraphOps {
     // leak discipline for the STREAMING caller: the CC recursion leaves
     // its final fixpoint frame persisted and the warm start leaves a
     // local checkpoint — per refresh. A long-lived stream refreshing
-    // every epoch would accumulate blocks without bound, so release by
-    // HANDLE exactly what this call persisted once the artifact is
-    // durably written (safe: the returned frame re-reads the artifact,
-    // no lineage into the released blocks). Handles, NOT a
-    // getPersistentRDDs diff: a sweep would also unpersist blocks a
-    // concurrent job in the same session persisted mid-call — a
-    // severed checkpoint block is unrecoverable.
-    val (updated, release) =
-      if (exists) connectedComponentsFromReleasable(readGroupIndex(spark, dir),
+    // every epoch would accumulate blocks without bound, so release
+    // exactly what this call persisted once the artifact is durably
+    // written (safe: the returned frame re-reads the artifact, no
+    // lineage into the released blocks).
+    val (updated, release) = graft.util.Materialize.scoped {
+      if (exists) connectedComponentsFrom(readGroupIndex(spark, dir),
         newEdges, srcCol, dstCol, maxIterations, localThreshold)
-      else connectedComponentsReleasable(newEdges, srcCol, dstCol,
+      else connectedComponents(newEdges, srcCol, dstCol,
         maxIterations, localThreshold)   // first tick births the index
+    }
     writeGroupIndex(updated, dir, commit)
     release()
     readGroupIndex(spark, dir)
@@ -412,7 +390,8 @@ object GraphOps {
     * rank state on a persisted RDD backbone (plan depth stays
     * constant), superseded rounds released by handle, one job per
     * round. The RETURNED frame is backed by the final persisted rank
-    * RDD.
+    * RDD, released through the caller's `graft.util.Materialize.scoped`
+    * block.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 10, scale: Long = 1000000000L): DataFrame =
@@ -509,8 +488,9 @@ object GraphOps {
                         graft.merge.Merge.RenameCommit): DataFrame = {
     val exists = graft.merge.Merge.targetExists(spark, dir)
     val start = if (exists) Some(readRankIndex(spark, dir)) else None
-    val (ranks, _, release) =
+    val ((ranks, _), release) = graft.util.Materialize.scoped {
       pageRankCore(edges, srcCol, dstCol, start, iterations, scale, None)
+    }
     val dest = outDir.getOrElse(dir)
     writeRankIndex(ranks, dest, commit)
     release()
@@ -570,11 +550,8 @@ object GraphOps {
   def pageRankConverged(edges: DataFrame, srcCol: String, dstCol: String,
                         start: Option[DataFrame] = None,
                         tol: Long = 0L, maxIterations: Int = 50,
-                        scale: Long = 1000000000L): (DataFrame, Int) = {
-    val (df, iters, _) =
-      pageRankCore(edges, srcCol, dstCol, start, maxIterations, scale, Some(tol))
-    (df, iters)
-  }
+                        scale: Long = 1000000000L): (DataFrame, Int) =
+    pageRankCore(edges, srcCol, dstCol, start, maxIterations, scale, Some(tol))
 
   /** Synchronous LABEL PROPAGATION community detection (Raghavan et
     * al. 2007, the near-linear-time community heuristic): every node
@@ -602,23 +579,12 @@ object GraphOps {
     * one |V|-row left join. The rounds run in [[Fixpoint]] — the
     * [[pageRank]] lineage discipline; iterations are bounded
     * (communities stabilize in a handful of rounds on real graphs).
-    * Returns `(node, label)`.
+    * Returns `(node, label)`, backed by the final label state (the
+    * [[pageRank]] release contract).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int = 5): DataFrame =
     labelPropagationCore(edges, srcCol, dstCol, iterations, converge = false)._1
-
-  /** [[labelPropagation]] plus a release handle that unpersists the
-    * final label state THIS call left cached (the
-    * [[connectedComponentsReleasable]] contract: long-lived sessions
-    * release by handle, never by sweeping `getPersistentRDDs`). Call
-    * release only after the returned frame is consumed or written. */
-  def labelPropagationReleasable(edges: DataFrame, srcCol: String, dstCol: String,
-                                 iterations: Int = 5): (DataFrame, () => Unit) = {
-    val (df, _, release) =
-      labelPropagationCore(edges, srcCol, dstCol, iterations, converge = false)
-    (df, release)
-  }
 
   /** [[labelPropagation]] iterated to a FIXPOINT: rounds run until no
     * node changes label (or `maxIterations`), with the same 1-scalar
@@ -634,19 +600,16 @@ object GraphOps {
     * not a silent "converged". Either way the output is the exact
     * `roundsRun`-round state, so the unrolled SQL oracle replays it. */
   def labelPropagationConverged(edges: DataFrame, srcCol: String, dstCol: String,
-                                maxIterations: Int = 20): (DataFrame, Int) = {
-    val (df, iters, _) =
-      labelPropagationCore(edges, srcCol, dstCol, maxIterations, converge = true)
-    (df, iters)
-  }
+                                maxIterations: Int = 20): (DataFrame, Int) =
+    labelPropagationCore(edges, srcCol, dstCol, maxIterations, converge = true)
 
   private def labelPropagationCore(edges: DataFrame, srcCol: String, dstCol: String,
                                    iterations: Int, converge: Boolean)
-  : (DataFrame, Int, () => Unit) = {
+  : (DataFrame, Int) = {
     require(iterations >= 1, "labelPropagation: iterations must be >= 1")
     val (e, nodes, _) = srcLayout(srcEdges(edges, srcCol, dstCol), "labelPropagation")
     val start = nodes.select(col("node"), col("node").as("label"))
-    val (out, rounds, _, release) = Fixpoint(start, iterations, Seq(e, nodes))(
+    val (out, rounds, _) = Fixpoint(start, iterations, Seq(e, nodes))(
       { (labels, _) =>
         val votes = e
           .join(labels.withColumnRenamed("node", "src"), "src")
@@ -668,14 +631,14 @@ object GraphOps {
           .agg(count(when(col("__nl") =!= col("label"), lit(1))))
           .head().getLong(0) == 0
       })
-    (out, rounds, release)
+    (out, rounds)
   }
 
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
                            start: Option[DataFrame], iterations: Int,
                            scale: Long, tol: Option[Long],
                            seeds: Option[Seq[Long]] = None)
-  : (DataFrame, Int, () => Unit) = {
+  : (DataFrame, Int) = {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
     require(scale >= 1000000L,
       s"pageRank: scale < 1e6 leaves too few integer rank levels (got $scale)")
@@ -702,7 +665,7 @@ object GraphOps {
           .select(col("node"), coalesce(col("__pr"), lit(scale / n)).as("rank"))
     }
     val base = perNode(scale * 3L / 20L)
-    val (out, rounds, _, release) = Fixpoint(init, iterations, Seq(e, nodes))(
+    val (out, rounds, _) = Fixpoint(init, iterations, Seq(e, nodes))(
       { (rank, _) =>
         val contrib = e
           .join(rank.withColumnRenamed("node", "src").withColumnRenamed("rank", "__r"), "src")
@@ -716,7 +679,7 @@ object GraphOps {
         .join(prev.withColumnRenamed("rank", "__prev"), "node")
         .agg(coalesce(sum(abs(col("rank") - col("__prev"))), lit(0L)))
         .head().getLong(0) <= t))
-    (out, rounds, release)
+    (out, rounds)
   }
 
   /** CO-OCCURRENCE projection of a bipartite membership table ("parts
@@ -1117,8 +1080,8 @@ object GraphOps {
     * early stop), and the returned frame's plan does not grow with the
     * hop count. Seeds appear with dist 0 whether or not they occur in
     * the edge set (the caller asked about them). The returned frame is
-    * backed by the final persisted state; [[bfsCore]] returns it with
-    * its release handle.
+    * backed by the final persisted state (the [[pageRank]] release
+    * contract).
     *
     * Determinism: pure integer hop counts — trivially replayable; the
     * oracle is a recursive CTE with UNION dedup and `min(dist)`.
@@ -1127,18 +1090,16 @@ object GraphOps {
                    sources: Seq[Long], maxHops: Int): DataFrame =
     bfsCore(edges, srcCol, dstCol, sources, maxHops)._1
 
-  /** [[bfsDistances]] as `(distances, hopsRun, release)`: `release`
-    * unpersists exactly what this call left persisted (the
-    * [[connectedComponentsReleasable]] contract). */
+  /** [[bfsDistances]] as `(distances, hopsRun)`. */
   private[graft] def bfsCore(edges: DataFrame, srcCol: String, dstCol: String,
                              sources: Seq[Long], maxHops: Int)
-  : (DataFrame, Int, () => Unit) = {
+  : (DataFrame, Int) = {
     require(sources.nonEmpty, "bfsDistances: empty source set")
     require(maxHops >= 0, s"bfsDistances: maxHops=$maxHops must be >= 0")
     val e = simpleEdges(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     val seed = edges.sparkSession.createDataFrame(sources.distinct.map((_, 0L)))
       .toDF("node", "dist")
-    val (out, hops, _, release) = Fixpoint(seed, maxHops, Seq(e))(
+    val (out, hops, _) = Fixpoint(seed, maxHops, Seq(e))(
       // using-column joins: the frontier and the edges share lineage
       // from hop 2 on, and column-equality predicates would hit the
       // ambiguous-self-join check
@@ -1149,7 +1110,7 @@ object GraphOps {
           .withColumn("dist", lit(h.toLong))),
       Some((_, next, h) =>
         next.agg(count(when(col("dist") === h, lit(1)))).head().getLong(0) == 0))
-    (out, hops, release)
+    (out, hops)
   }
 
   /** Per-node triangle counts + local clustering coefficient over an

@@ -383,25 +383,15 @@ object MultimodalOps {
     * [[graft.relational.BloomIndex]]'s stream contract. */
   def imageDedupAgainstIndex(spark: SparkSession, batch: DataFrame,
                              dir: String, maxHamming: Int = 6,
-                             bands: Int = 8, maxBucket: Int = 10000): DataFrame =
-    imageDedupAgainstIndexReleasable(spark, batch, dir, maxHamming, bands,
-      maxBucket)._1
-
-  /** [[imageDedupAgainstIndex]] plus a release thunk for the
-    * internal hash cache — the [[graft.dedup.DedupOps
-    * .dedupAgainstIndexReleasable]] contract for looped daily
-    * callers. The `(media_id, dhash)` frame (16 bytes/row) is
-    * PERSISTED so the decode — the dominant cost, one ImageIO pass
-    * per payload — runs exactly once however many plan branches read
-    * the hashes (unpersisted, the probe subtree re-expanded into
-    * THREE decode passes over the batch); the history side is a
-    * 9-byte/image artifact scan whose hot-bucket cap comes from a
-    * single-pass count window, not a self-join that would scan the
-    * artifact twice. */
-  private[graft] def imageDedupAgainstIndexReleasable(
-      spark: SparkSession, batch: DataFrame, dir: String,
-      maxHamming: Int = 6, bands: Int = 8,
-      maxBucket: Int = 10000): (DataFrame, () => Unit) = {
+                             bands: Int = 8, maxBucket: Int = 10000): DataFrame = {
+    // The `(media_id, dhash)` frame (16 bytes/row) is PERSISTED (the
+    // dedup pair finders' caching contract, `graft.util.Materialize`)
+    // so the decode — the dominant cost, one ImageIO pass per payload —
+    // runs exactly once however many plan branches read the hashes
+    // (unpersisted, the probe subtree re-expanded into THREE decode
+    // passes over the batch); the history side is a 9-byte/image
+    // artifact scan whose hot-bucket cap comes from a single-pass count
+    // window, not a self-join that would scan the artifact twice.
     require(bands > maxHamming,
       s"imageDedupAgainstIndex: need bands ($bands) > maxHamming ($maxHamming)")
     require(64 % bands == 0, s"bands=$bands must divide 64")
@@ -412,9 +402,9 @@ object MultimodalOps {
         posexplode(array((0 until bands).map(b =>
           call_function("shiftright", col(sigCol), lit(b * width)).bitwiseAND(lit(mask))): _*))
           .as(Seq("__band", "__key")))
-    val batchHashed = imageDHash(spark, batch.select("media_id", "content")).toDF()
-      .select(col("media_id"), col("dhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchHashed = graft.util.Materialize.persist(
+      imageDHash(spark, batch.select("media_id", "content")).toDF()
+        .select(col("media_id"), col("dhash")))
     val hist = readImageHashes(spark, dir)
       .select(col("media_id").as("__hid"), col("dhash").as("__hsig"))
     // hot-bucket cap on the HISTORY side (a band value shared by that
@@ -432,9 +422,8 @@ object MultimodalOps {
       .where(graft.dedup.DedupOps.hammingDistance(col("dhash"), col("__hsig"))
         <= maxHamming)
       .select(col("media_id")).distinct()
-    (batch.join(batchHashed, Seq("media_id"))
-      .join(hit, Seq("media_id"), "left_anti"),
-      () => { batchHashed.unpersist(); () })
+    batch.join(batchHashed, Seq("media_id"))
+      .join(hit, Seq("media_id"), "left_anti")
   }
 
   /** Fold the hash tranches to one distinct set

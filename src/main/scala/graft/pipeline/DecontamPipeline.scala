@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * interactive (~5k docs → ~4.7 s): at 100k the exact pair stage
   * already costs ~2.3× the sig stage and is on the 8.9×/decade
   * branch of its curve. Those curves were measured on the ~54-token
-  * fixture documents (~47 8-gram shingles each — r17 left this
-  * doc-length assumption implicit), so the SAME operating point
+  * fixture documents (~47 8-gram shingles each — a doc-length
+  * assumption the doc count alone hides), so the SAME operating point
   * expressed length-independently is
   * [[AutoSigShingleMassThreshold]] = 5e6 total shingles
   * (100k docs × ~47); corpora of longer documents hit it at
@@ -46,18 +46,14 @@ import org.apache.spark.sql.functions._
   * cost behaves.
   *
   * Memory contract: the clean-id projection is materialized ONCE
-  * (r16: the lazy plan re-ran the whole bloom gate — shingle + probe
-  * over the corpus — per downstream consumer; 185 s vs ~90 s of
-  * stage work at 100× data) via a localCheckpoint whose blocks only
-  * a release handle can free (`Materialize.boundedReleasable`
-  * contract). [[decontamDedupSplitReleasable]] returns that handle;
-  * call it AFTER an action has materialized the returned split frame
-  * (the severed blocks are unrecoverable — a released frame cannot
-  * be recomputed). One-shot sessions can use [[decontamDedupSplit]]
-  * and let session teardown (or a between-jobs persistent-RDD sweep)
-  * reclaim the ~8 bytes/doc; a long-lived session invoking the
-  * composition repeatedly MUST use the releasable form or blocks
-  * accrue un-freeably.
+  * (a lazy plan re-runs the whole bloom gate — shingle + probe over
+  * the corpus — per downstream consumer; 185 s vs ~90 s of stage work
+  * at 100× data) via `Materialize.bounded`, and the returned split
+  * frame reads the CC fixpoint lazily. Both register with the
+  * caller's `Materialize.scoped` block: a long-lived session invoking
+  * the composition repeatedly wraps it and releases AFTER an action
+  * has materialized the split (the severed clean-id blocks are
+  * unrecoverable — a released frame cannot be recomputed).
   *
   * Reference scope: beyond-reference LLM-pipeline tier; stage
   * semantics are the oracle-gated `q_decontam_dedup_split` /
@@ -85,43 +81,20 @@ object DecontamPipeline {
     * class doc). Guards the long-doc corpus the doc count misses. */
   val AutoSigShingleMassThreshold = 5000000L
 
-  /** One-shot form of [[decontamDedupSplitReleasable]] — the
-    * materialized clean-id blocks are left for session teardown. */
-  def decontamDedupSplit(docs: DataFrame, idCol: String, textCol: String,
-                         bench: DataFrame, bloomDir: String,
-                         splits: Seq[(String, Double)],
-                         salt: String = "split",
-                         tier: Tier = Auto,
-                         contamShingleN: Int = 8,
-                         pairShingleN: Int = 3,
-                         jaccardThreshold: Double = 0.5,
-                         sigK: Int = 16, sigBands: Int = 8,
-                         sigThreshold: Double = 0.4,
-                         maxBucket: Int = 1000,
-                         portable: Boolean = false,
-                         autoSigThreshold: Long = AutoSigDocThreshold,
-                         autoSigMassThreshold: Long = AutoSigShingleMassThreshold): DataFrame =
-    decontamDedupSplitReleasable(docs, idCol, textCol, bench, bloomDir, splits,
-      salt, tier, contamShingleN, pairShingleN, jaccardThreshold, sigK, sigBands,
-      sigThreshold, maxBucket, portable, autoSigThreshold, autoSigMassThreshold)._1
-
-  /** The composition plus the clean-id release handle. `bloomDir` is
-    * the at-rest benchmark shingle bloom
-    * ([[graft.dedup.DedupOps.benchmarkShingleBloom]]) the gate
+  /** The composition. `bloomDir` is the at-rest benchmark shingle
+    * bloom ([[graft.dedup.DedupOps.benchmarkShingleBloom]]) the gate
     * probes; `bench` is the same benchmark frame, joined exactly
     * against the bloom's surviving candidates. Output:
     * `(<idCol>, group_id, <split>)` — one row per clean doc.
     *
-    * Release AFTER the returned frame is materialized (write or
-    * collect); the pair-stage cache is consumed and released
-    * internally (the connected-components build materializes it),
-    * and the handle also frees the CC fixpoint frame the distributed
-    * tier leaves persisted (r17 ADVICE: above the CC local threshold
-    * — exactly the at-scale Sig/Auto regime — the non-releasable form
-    * accrued one persisted fixpoint per invocation; the returned
-    * split frame reads that fixpoint lazily, so it can only be freed
-    * by the caller's handle, never internally). */
-  def decontamDedupSplitReleasable(
+    * The pair-stage cache is consumed and released internally (the
+    * connected-components build materializes it). The clean-id
+    * checkpoint and, above the CC local threshold (exactly the
+    * at-scale Sig/Auto regime), the CC fixpoint back the returned split
+    * frame, so they register with the caller's scope and can only be
+    * freed by it, never internally. `ccLocalThreshold` forces the CC
+    * tier (specs drive the distributed one). */
+  def decontamDedupSplit(
       docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, bloomDir: String,
       splits: Seq[(String, Double)],
@@ -136,31 +109,31 @@ object DecontamPipeline {
       portable: Boolean = false,
       autoSigThreshold: Long = AutoSigDocThreshold,
       autoSigMassThreshold: Long = AutoSigShingleMassThreshold,
-      ccLocalThreshold: Int = 100000): (DataFrame, () => Unit) = {
+      ccLocalThreshold: Int = 100000): DataFrame = {
     require(autoSigThreshold >= 0, s"autoSigThreshold=$autoSigThreshold must be >= 0")
     require(autoSigMassThreshold >= 0,
       s"autoSigMassThreshold=$autoSigMassThreshold must be >= 0")
-    val (cleanIds, releaseIds) = graft.util.Materialize.boundedReleasable(
+    val cleanIds = graft.util.Materialize.bounded(
       cleanIdsPlan(docs, idCol, textCol, bench, bloomDir, contamShingleN))
     val clean = docs.join(cleanIds, Seq(idCol), "left_semi")
     val chosen = resolveTier(tier, cleanIds, autoSigThreshold, autoSigMassThreshold)
-    val (pairs, releasePairs) = chosen match {
-      case Exact => graft.dedup.DedupOps.ngramJaccardPairsReleasable(
-        clean, idCol, textCol, pairShingleN, jaccardThreshold, maxBucket)
-      case Sig => graft.dedup.DedupOps.minhashNearDupPairsReleasable(
-        clean, idCol, textCol, pairShingleN, sigK, sigBands, sigThreshold,
-        portable, maxBucket)
-      case Auto => throw new IllegalStateException("resolveTier returned Auto")
+    val (pairs, releasePairs) = graft.util.Materialize.scoped {
+      chosen match {
+        case Exact => graft.dedup.DedupOps.ngramJaccardPairs(
+          clean, idCol, textCol, pairShingleN, jaccardThreshold, maxBucket)
+        case Sig => graft.dedup.DedupOps.minhashNearDupPairs(
+          clean, idCol, textCol, pairShingleN, sigK, sigBands, sigThreshold,
+          portable, maxBucket)
+        case Auto => throw new IllegalStateException("resolveTier returned Auto")
+      }
     }
-    val (cc, releaseCc) = graft.graph.GraphOps.connectedComponentsReleasable(
+    val cc = graft.graph.GraphOps.connectedComponents(
       pairs, "id_a", "id_b", localThreshold = ccLocalThreshold)
     releasePairs()   // the CC build materialized the pair pipeline
-    val out = graft.training.TrainingOps.leakageSafeSplit(cleanIds, idCol, cc,
+    // leakageSafeSplit is lazy — the split frame reads the CC fixpoint
+    graft.training.TrainingOps.leakageSafeSplit(cleanIds, idCol, cc,
         splits, salt, portable)
       .select(col(idCol), col("group_id"), col("split"))
-    // leakageSafeSplit is lazy — the split frame reads the CC fixpoint,
-    // so its distributed-tier blocks free with the caller's handle
-    (out, () => { releaseCc(); releaseIds() })
   }
 
   /** The UN-checkpointed clean-id subtree — bloom-gated contamination

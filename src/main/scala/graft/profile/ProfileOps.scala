@@ -3,7 +3,6 @@ package graft.profile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Data-profiling operators: per-key skew profiles and per-column
   * statistics. The operational counterpart of the engine's skew
@@ -25,14 +24,13 @@ object ProfileOps {
     * TakeOrdered, never a full sort; totals are a one-row aggregate of
     * the (distinct-key-sized) grouped frame joined back by literal
     * cross join of one row. The grouped frame forks into totals and
-    * top-N, so it is persisted for the duration of the plan (the same
-    * contract as the dedup pair-finders).
+    * top-N, so it is persisted behind the returned frame (the dedup
+    * pair finders' caching contract, `graft.util.Materialize`).
     */
   def keyProfile(df: DataFrame, keyCol: String, topN: Int = 50): DataFrame = {
     require(topN > 0, "keyProfile: topN must be > 0")
-    val grouped = df.groupBy(col(keyCol).cast(StringType).as("key"))
-      .agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val grouped = graft.util.Materialize.persist(
+      df.groupBy(col(keyCol).cast(StringType).as("key")).agg(count(lit(1)).as("n")))
     val stats = grouped.agg(
       sum(col("n")).cast(DoubleType).as("__total"),
       count(lit(1)).cast(DoubleType).as("__nkeys"))

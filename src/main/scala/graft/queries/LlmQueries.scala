@@ -1735,7 +1735,7 @@ object LlmQueries {
         emb.where(col("vec_id") >= 300 && col("vec_id") < 400),
         "vec_id", "embedding", threshold = 0.3, nProbe = 16)
       SimilarityOps.ivfAppendToIndex(
-        s1.localCheckpoint(true), idx, "vec_id", "embedding", tag = "day1")
+        graft.util.Materialize.freeze(s1), idx, "vec_id", "embedding", tag = "day1")
       SimilarityOps.consolidateIvfIndex(s, idx)
       SimilarityOps.semanticDedupAgainstIndex(s, idx,
         emb.where(col("vec_id") >= 400),
@@ -1815,8 +1815,9 @@ object LlmQueries {
       //    frame forks (near-dup candidate generation AND the final
       //    anti-join) — persist the compact projection so the
       //    union+quality+window subtree runs once, not per branch
-      val deduped = graft.dedup.DedupOps.exactDedup(scored, "text", Seq(col("doc_id").asc))
-        .select("doc_id", "text", "quality_score").persist()
+      val deduped = graft.util.Materialize.persist(
+        graft.dedup.DedupOps.exactDedup(scored, "text", Seq(col("doc_id").asc))
+          .select("doc_id", "text", "quality_score"))
       // 2. near-dup removal: drop the higher id of each jaccard>=0.6 pair
       //    (operator-default hot-shingle cap — the oracle plants the same)
       val drops = graft.dedup.DedupOps.ngramJaccardPairs(deduped, "doc_id", "text",
@@ -1886,8 +1887,9 @@ object LlmQueries {
         .where(col("quality_score") >= 0.4)
       // 2. exact dedup, first-wins by doc_id (compact persist: the
       //    frame forks into decontamination and the final split join)
-      val deduped = DedupOps.exactDedup(gated, "text", Seq(col("doc_id").asc))
-        .select("doc_id", "text", "quality_score").persist()
+      val deduped = graft.util.Materialize.persist(
+        DedupOps.exactDedup(gated, "text", Seq(col("doc_id").asc))
+          .select("doc_id", "text", "quality_score"))
       // 3. decontamination vs the eval set (doc_id < 25): drop docs
       //    sharing more than half their 8-gram shingles with it
       val contamination = DedupOps.contaminationCheck(
@@ -2294,8 +2296,10 @@ object LlmQueries {
         |      FROM asg)""".stripMargin
     }) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
-        docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      val (pairs, release) = graft.util.Materialize.scoped {
+        DedupOps.ngramJaccardPairs(
+          docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      }
       val cc = GraphOps.connectedComponents(pairs, "id_a", "id_b")
       release()
       TrainingOps.leakageSafeSplit(docs.select("doc_id"), "doc_id", cc,
@@ -2331,8 +2335,10 @@ object LlmQueries {
       val docs = Tables(s, dir, "documents")
       val ccIdx = graft.util.Scratch.path("leak_split_cc", dir)
       if (!new java.io.File(ccIdx).exists()) {
-        val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
-          docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+        val (pairs, release) = graft.util.Materialize.scoped {
+          DedupOps.ngramJaccardPairs(
+            docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+        }
         GraphOps.writeGroupIndex(
           GraphOps.connectedComponents(pairs, "id_a", "id_b"), ccIdx)
         release()
@@ -2386,9 +2392,8 @@ object LlmQueries {
       // clean-id set materialized ONCE (a lazy plan re-runs the whole
       // bloom gate per consumer: 185 s vs ~90 s of stage work at 100×
       // data), tier forced Exact so the oracle replay is
-      // SF-independent. The one-shot form leaves the ~8 B/doc clean-id
-      // blocks for the driver's between-queries persistent-RDD sweep;
-      // long-lived sessions use decontamDedupSplitReleasable.
+      // SF-independent. The ~8 B/doc clean-id blocks register with the
+      // caller's Materialize scope.
       graft.pipeline.DecontamPipeline.decontamDedupSplit(docs, "doc_id", "text",
         bench, bloomDir, Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)),
         salt = "plsplit", tier = graft.pipeline.DecontamPipeline.Exact,
@@ -2805,8 +2810,10 @@ object LlmQueries {
     //      incremental refresh ≡ rebuild is proven by hash match ----
     Q("q_cc_index", duckDupGroupsSql(maxBucket = 1000, threshold = 0.5)) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
-        docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      val (pairs, release) = graft.util.Materialize.scoped {
+        DedupOps.ngramJaccardPairs(
+          docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      }
       val half = pmod(xxhash64(lit("cci"), col("id_a"), col("id_b")), lit(2))
       val gDir = graft.util.Scratch.fresh("cc_group_index", dir)
       GraphOps.writeGroupIndex(
@@ -2834,8 +2841,10 @@ object LlmQueries {
         |  CAST(max(sz) AS BIGINT) AS max_group_size
         |FROM g""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
-        docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      val (pairs, release) = graft.util.Materialize.scoped {
+        DedupOps.ngramJaccardPairs(
+          docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      }
       val gDir = graft.util.Scratch.fresh("cc_group_index_stats", dir)
       GraphOps.writeGroupIndex(
         GraphOps.connectedComponents(pairs, "id_a", "id_b"), gDir)
@@ -2851,8 +2860,10 @@ object LlmQueries {
     //      rebuild is proven by hash match, not by a self-comparison ----
     Q("q_cc_incremental", duckDupGroupsSql(maxBucket = 1000, threshold = 0.5)) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val (pairs, release) = DedupOps.ngramJaccardPairsReleasable(
-        docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      val (pairs, release) = graft.util.Materialize.scoped {
+        DedupOps.ngramJaccardPairs(
+          docs, "doc_id", "text", shingleN = 3, threshold = 0.5, maxBucket = 1000)
+      }
       val half = pmod(xxhash64(lit("ccw"), col("id_a"), col("id_b")), lit(2))
       val prior = GraphOps.connectedComponents(
         pairs.where(half === 0), "id_a", "id_b")

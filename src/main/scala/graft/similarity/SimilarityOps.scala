@@ -1113,30 +1113,19 @@ object SimilarityOps {
     */
   def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 batch: DataFrame, idCol: String, vecCol: String,
-                                threshold: Double, nProbe: Int): DataFrame =
-    semanticDedupAgainstIndexReleasable(spark, dir, batch, idCol, vecCol,
-      threshold, nProbe)._1
-
-  /** [[semanticDedupAgainstIndex]] plus a release thunk for the
-    * persisted probe pipeline — looped callers (the streaming epoch
-    * loop) release after materializing each decision, the same
-    * contract as the text side's `dedupAgainstIndexReleasable`. */
-  private[graft] def semanticDedupAgainstIndexReleasable(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      batch: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nProbe: Int): (DataFrame, () => Unit) = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = requireIvfMeta(spark, dir)
+                                threshold: Double, nProbe: Int): DataFrame = {
+    val resolved = graft.merge.Merge.resolveDir(spark, dir)
+    val meta = requireIvfMeta(spark, resolved)
     // persisted: the probe pipeline (norms + fused nearest-centroids +
     // explode) forks into the probed-list collect below and the
     // candidate join — unpersisted it would run the whole batch twice.
-    // Same session-cache contract as the text-side dedup operators
-    // (`clearCache()` between jobs releases it).
-    val q = batch.select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
-      l2NormF(col(vecCol)).as("__qn"),
-      explode(nearestListsExpr(meta.centroids, col(vecCol),
-        math.min(nProbe, meta.nLists))).as("ivf_list"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Same caching contract as the text-side dedup operators
+    // (`graft.util.Materialize`).
+    val q = graft.util.Materialize.persist(
+      batch.select(col(idCol).as("__qid"), col(vecCol).as("__qv"),
+        l2NormF(col(vecCol)).as("__qn"),
+        explode(nearestListsExpr(meta.centroids, col(vecCol),
+          math.min(nProbe, meta.nLists))).as("ivf_list")))
     // STATIC partition pruning: the batch is too big to force-broadcast
     // (an OOM-or-die plan), but without a broadcast join Spark's
     // dynamic partition pruning stays off by default
@@ -1153,13 +1142,13 @@ object SimilarityOps {
     // a duplicate delivery (it matches itself at cosine 1) — dropping
     // it is the dedup contract, unlike top-k serving where a query
     // finding itself is noise
-    val dupIds = ivfIndexVectors(spark, dir)
+    val dupIds = ivfIndexVectors(spark, resolved)
       .where(col("ivf_list").isin(probedLists.toIndexedSeq.map(Integer.valueOf): _*))
       .join(q, Seq("ivf_list"))
       .where(cosineOf(dotF(col("__qv"), col("__cv")), l2NormF(col("__cv")), col("__qn"))
           >= threshold)
       .select(col("__qid")).distinct()
-    (batch.join(dupIds, col(idCol) === col("__qid"), "left_anti"), () => { q.unpersist(); () })
+    batch.join(dupIds, col(idCol) === col("__qid"), "left_anti")
   }
 
   /** Embedding-cosine near-duplicate pairs over one corpus: sign-LSH

@@ -207,19 +207,20 @@ object StreamingOps {
     * (deployments routinely disable success markers on object stores,
     * and mistaking a committed epoch for an unprocessed one recomputes
     * against the already-mutated index) — read the decision back;
-    * otherwise compute it, `localCheckpoint`-freeze BEFORE the caller
-    * mutates any index the computation's lineage reads, release the
-    * per-batch caches, write, then mark. ONE implementation so a fix
-    * to the commit protocol can never apply to one stream and not the
-    * other. */
+    * otherwise compute it under its own `Materialize.scoped` block,
+    * `Materialize.freeze` it BEFORE the caller mutates any index the
+    * computation's lineage reads (the frozen blocks register with the
+    * caller's scope), release the per-batch caches the computation
+    * registered, write, then mark. ONE implementation so a fix to the
+    * commit protocol can never apply to one stream and not the other. */
   private def decideEpochOnce(spark: SparkSession, batchOut: String)
-                             (compute: => (DataFrame, () => Unit)): DataFrame = {
+                             (compute: => DataFrame): DataFrame = {
     val committed = new org.apache.hadoop.fs.Path(batchOut + "/_graft_decided")
     val hfs = committed.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (hfs.exists(committed)) spark.read.parquet(batchOut) // replayed epoch
     else {
-      val (df, release) = compute
-      val frozen = df.localCheckpoint(true)
+      val (df, release) = graft.util.Materialize.scoped(compute)
+      val frozen = graft.util.Materialize.freeze(df)
       release() // per-batch caches must not accumulate across a long stream
       frozen.write.mode("overwrite").parquet(batchOut)
       hfs.create(committed, true).close() // marker AFTER the data commit
@@ -246,9 +247,9 @@ object StreamingOps {
       // of every hashed shingle of the growing history (params come
       // from the index's _graft_meta, so the stream can never band
       // against signatures built with a different family)
-      if (approx) graft.dedup.DedupOps.dedupAgainstIndexApproxReleasable(
+      if (approx) graft.dedup.DedupOps.dedupAgainstIndexApprox(
         batch, indexDir, idCol, textCol, threshold, maxBucket)
-      else graft.dedup.DedupOps.dedupAgainstIndexReleasable(
+      else graft.dedup.DedupOps.dedupAgainstIndex(
         batch, indexDir, idCol, textCol, shingleN, threshold, maxBucket, portable)
     }
     // in approx mode the caller's shingleN/portable were never consulted
@@ -301,7 +302,7 @@ object StreamingOps {
       minShared: Int = 2, maxBucket: Int = 1000): Unit = {
     val spark = batch.sparkSession
     decideEpochOnce(spark, s"$outDir/batch=$epoch") {
-      graft.text.TextOps.winnowOverlapAgainstIndexReleasable(
+      graft.text.TextOps.winnowOverlapAgainstIndex(
         batch, indexDir, idCol, textCol, minShared, maxBucket)
     }
     graft.text.TextOps.appendToWinnowIndex(batch, indexDir, idCol, textCol,
@@ -342,7 +343,7 @@ object StreamingOps {
       threshold: Double, nProbe: Int): Unit = {
     val spark = batch.sparkSession
     val survivors = decideEpochOnce(spark, s"$outDir/batch=$epoch") {
-      graft.similarity.SimilarityOps.semanticDedupAgainstIndexReleasable(
+      graft.similarity.SimilarityOps.semanticDedupAgainstIndex(
         spark, indexDir, batch, idCol, vecCol, threshold, nProbe)
     }
     graft.similarity.SimilarityOps.ivfAppendToIndex(
@@ -536,8 +537,8 @@ object StreamingOps {
         .exists(new org.apache.hadoop.fs.Path(indexDir, "_graft_bloom_meta"))
       decideEpochOnce(spark, s"$outDir/batch=$epoch") {
         // first epoch births the index: everything is provably new
-        (if (exists) bi.pruneAgainstBloomIndex(batch, indexDir, keyCol)
-         else batch, () => ())
+        if (exists) bi.pruneAgainstBloomIndex(batch, indexDir, keyCol)
+        else batch
       }
       bi.writeBloomTranche(batch, keyCol, indexDir, s"e$epoch",
         mBits, k, portable)
@@ -570,14 +571,14 @@ object StreamingOps {
       decideEpochOnce(spark, s"$outDir/batch=$epoch") {
         // first epoch births the index: everything survives, hash
         // attached so the sink schema matches later epochs
-        if (exists) mm.imageDedupAgainstIndexReleasable(spark, batch,
+        if (exists) mm.imageDedupAgainstIndex(spark, batch,
           indexDir, maxHamming, bands, maxBucket)
-        else (batch.join(
+        else batch.join(
           mm.imageDHash(spark, batch.select(org.apache.spark.sql.functions
             .col("media_id"), org.apache.spark.sql.functions.col("content"))).toDF()
             .select(org.apache.spark.sql.functions.col("media_id"),
               org.apache.spark.sql.functions.col("dhash")),
-          Seq("media_id")), () => ())
+          Seq("media_id"))
       }
       mm.writeImageHashTranche(spark, batch, indexDir, s"e$epoch")
       autoFold(spark, indexDir, maxLiveTranches)(

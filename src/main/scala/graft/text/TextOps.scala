@@ -792,41 +792,26 @@ object TextOps {
     * boilerplate hashes shared by half the corpus (a fingerprint that
     * common ranks pairs by cliché, not by reuse). Returns
     * `(id_a, id_b, n_shared)`, id_a < id_b. The pruned fingerprint
-    * frame is persisted (the self-join forks it) under the same
-    * session-cache contract as the dedup pair finders — `clearCache()`
-    * between jobs.
+    * frame is persisted (the self-join forks it) under the dedup pair
+    * finders' caching contract (`graft.util.Materialize`).
     */
   def winnowOverlapPairs(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 8, w: Int = 4, minShared: Int = 2,
                          portable: Boolean = false,
-                         maxBucket: Int = 1000): DataFrame =
-    winnowOverlapPairsReleasable(df, idCol, textCol, k, w, minShared,
-      portable, maxBucket)._1
-
-  /** [[winnowOverlapPairs]] plus a release thunk for the internal
-    * pruned-fingerprint cache (the same contract as
-    * `DedupOps.ngramJaccardPairsReleasable` — looped callers release
-    * after consuming each result). */
-  private[graft] def winnowOverlapPairsReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, w: Int = 4, minShared: Int = 2,
-      portable: Boolean = false,
-      maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                         maxBucket: Int = 1000): DataFrame = {
     val fps = df.select(col(idCol).as("__id"),
       explode(winnowFingerprints(col(textCol), k, w, portable)).as("__fp"))
     // persisted because the self-join forks the (expensive) winnow
     // pipeline — the same caching contract as the jaccard pair finder
-    val pruned = fps.withColumn("__bn",
+    val pruned = graft.util.Materialize.persist(fps.withColumn("__bn",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
-      .where(col("__bn") <= maxBucket).drop("__bn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("__bn") <= maxBucket).drop("__bn"))
     val a = pruned.select(col("__fp"), col("__id").as("id_a"))
     val b = pruned.select(col("__fp"), col("__id").as("id_b"))
-    val pairs = a.join(b, Seq("__fp"))
+    a.join(b, Seq("__fp"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
-    (pairs, () => { pruned.unpersist(); () })
   }
 
   // ------------------------------------------------- at-rest winnow index
@@ -1002,64 +987,54 @@ object TextOps {
     */
   def winnowOverlapAgainstIndex(batch: DataFrame, dir: String,
                                 idCol: String, textCol: String,
-                                minShared: Int = 2, maxBucket: Int = 1000): DataFrame =
-    winnowOverlapAgainstIndexReleasable(batch, dir, idCol, textCol,
-      minShared, maxBucket)._1
-
-  private[graft] def winnowOverlapAgainstIndexReleasable(
-      batch: DataFrame, indexDir: String, idCol: String, textCol: String,
-      minShared: Int = 2, maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                                minShared: Int = 2, maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = readWinnowIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"winnow index $dir has no _graft_meta; build it with writeWinnowIndex"))
+    val idx = graft.merge.Merge.resolveDir(spark, dir)
+    val meta = readWinnowIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
+      s"winnow index $idx has no _graft_meta; build it with writeWinnowIndex"))
     val l = winnowRows(batch, idCol, textCol, meta.k, meta.w, meta.portable)
       .select(col("doc_id").as("__id"), col("wfp").as("__fp"))
-    val r = spark.read.parquet(s"$dir/wfp")
+    val r = spark.read.parquet(s"$idx/wfp")
       .select(col("doc_id").as("__id"), col("wfp").as("__fp"))
     // combined hot-hash count: from the materialized wdf artifact when
     // the index carries it FRESH (tag sets equal — a crashed append or
     // consolidation diverges them, and stale counts over-prune); via
     // the union window for a legacy/stale index
     // (consolidateWinnowIndex retrofits/refreshes it)
-    val (a, b, release): (DataFrame, DataFrame, () => Unit) =
-      if (graft.util.Tranches.countFresh(spark, dir, "wfp", "wdf")) {
+    val (a, b) =
+      if (graft.util.Tranches.countFresh(spark, idx, "wfp", "wdf")) {
         // batch rows fork into their counts and the join — persisted
         // so the winnow kernel runs once per consumer set; history is
         // touched only by the hot anti-join into the candidate join
-        val lp = l.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val lp = graft.util.Materialize.persist(l)
         val batchCnt = lp.groupBy("__fp").agg(count(lit(1)).as("__bc"))
-        val histCnt = spark.read.parquet(s"$dir/wdf").drop("batch")
+        val histCnt = spark.read.parquet(s"$idx/wdf").drop("batch")
           .groupBy("wfp").agg(sum(col("n")).as("__hc"))
           .select(col("wfp").as("__fp"), col("__hc"))
-        val hot = batchCnt.join(histCnt, Seq("__fp"), "full_outer")
-          .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
-          .select("__fp")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val hot = graft.util.Materialize.persist(
+          batchCnt.join(histCnt, Seq("__fp"), "full_outer")
+            .where(coalesce(col("__bc"), lit(0L)) + coalesce(col("__hc"), lit(0L)) > maxBucket)
+            .select("__fp"))
         (lp.join(hot, Seq("__fp"), "left_anti").select(col("__fp"), col("__id").as("id_l")),
-          r.join(hot, Seq("__fp"), "left_anti").select(col("__fp"), col("__id").as("id_r")),
-          () => { lp.unpersist(); hot.unpersist(); () })
+          r.join(hot, Seq("__fp"), "left_anti").select(col("__fp"), col("__id").as("id_r")))
       } else {
-        val pruned = l.withColumn("__side", lit(0))
+        val pruned = graft.util.Materialize.persist(l.withColumn("__side", lit(0))
           .unionByName(r.withColumn("__side", lit(1)))
           .withColumn("__bn", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
-          .where(col("__bn") <= maxBucket).drop("__bn")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .where(col("__bn") <= maxBucket).drop("__bn"))
         (pruned.where(col("__side") === 0).select(col("__fp"), col("__id").as("id_l")),
-          pruned.where(col("__side") === 1).select(col("__fp"), col("__id").as("id_r")),
-          () => { pruned.unpersist(); () })
+          pruned.where(col("__side") === 1).select(col("__fp"), col("__id").as("id_r")))
       }
     // a batch doc that was already appended to the index (re-probe
     // after the probe→append loop crashed and retried) would otherwise
     // meet its own at-rest fingerprints and report a maximal-overlap
     // "pair" with itself — the cross-index analog of the in-corpus
     // path's id_a < id_b self-exclusion
-    val pairs = a.join(b, Seq("__fp"))
+    a.join(b, Seq("__fp"))
       .where(col("id_l") =!= col("id_r"))
       .groupBy("id_l", "id_r").agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
-    (pairs, () => { release(); () })
   }
 
   /** Content fingerprint: md5 of the normalized text — the exact-dedup

@@ -29,11 +29,11 @@ package graft.util
   * Thread state: plain threads, not a shared pool — callers are rare
   * and chains are few. Spark's scheduler state (job group/description)
   * is thread-local and NOT inherited; these maintenance jobs carry
-  * their own callsites. [[Materialize]]'s scope capture is NOT
-  * inherited either (a plain ThreadLocal): a handle a worker creates
-  * is invisible to the caller's `Materialize.scoped` and would never
-  * be released by it, so thunks must not materialize under a caller's
-  * `Materialize.scoped`.
+  * their own callsites. [[Materialize]]'s scope stack IS carried: it
+  * is captured on the calling thread and installed in every worker for
+  * its thunk, so whatever a thunk persists through `Materialize`
+  * registers with the caller's innermost `Materialize.scoped` and is
+  * freed by the caller's one release.
   */
 object Par {
   /** Run the thunks concurrently for their side effects. */
@@ -47,11 +47,12 @@ object Par {
   def eval[A](thunks: (() => A)*): Seq[A] = {
     if (thunks.sizeIs <= 1) return thunks.map(_.apply())
     val n = thunks.size
+    val scopes = Materialize.currentScopes
     val outs = new java.util.concurrent.atomic.AtomicReferenceArray[AnyRef](n)
     val errs = new java.util.concurrent.atomic.AtomicReferenceArray[Throwable](n)
     val ts = thunks.zipWithIndex.map { case (f, i) =>
       new Thread(() =>
-        try outs.set(i, f().asInstanceOf[AnyRef])
+        try outs.set(i, Materialize.withScopes(scopes)(f()).asInstanceOf[AnyRef])
         catch { case t: Throwable => errs.set(i, t) },
         s"graft-par-$i")
     }

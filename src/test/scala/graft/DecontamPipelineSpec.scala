@@ -66,9 +66,11 @@ class DecontamPipelineSpec extends SparkSpec {
   test("releasable form: clean-id blocks live behind the frame, freed by the handle") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (docs, bench, bloomDir) = fixture("rel")
-    val (out, release) = DecontamPipeline.decontamDedupSplitReleasable(
-      docs, "doc_id", "text", bench, bloomDir, splits, salt = "s",
-      tier = DecontamPipeline.Exact, portable = true)
+    val (out, release) = graft.util.Materialize.scoped {
+      DecontamPipeline.decontamDedupSplit(
+        docs, "doc_id", "text", bench, bloomDir, splits, salt = "s",
+        tier = DecontamPipeline.Exact, portable = true)
+    }
     val rows = out.collect()
     assert(rows.length == 6)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
@@ -104,9 +106,11 @@ class DecontamPipelineSpec extends SparkSpec {
     // could not see the distributed tier's fixpoint frame — force it
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (docs, bench, bloomDir) = fixture("ccdist")
-    val (out, release) = DecontamPipeline.decontamDedupSplitReleasable(
-      docs, "doc_id", "text", bench, bloomDir, splits, salt = "s",
-      tier = DecontamPipeline.Exact, portable = true, ccLocalThreshold = 0)
+    val (out, release) = graft.util.Materialize.scoped {
+      DecontamPipeline.decontamDedupSplit(
+        docs, "doc_id", "text", bench, bloomDir, splits, salt = "s",
+        tier = DecontamPipeline.Exact, portable = true, ccLocalThreshold = 0)
+    }
     assert(out.collect().length == 6)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
       "distributed-tier CC fixpoint + clean-id frame persisted behind the result")

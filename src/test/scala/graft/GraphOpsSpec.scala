@@ -136,15 +136,21 @@ class GraphOpsSpec extends SparkSpec {
     def exchanges(df: org.apache.spark.sql.DataFrame): Int =
       "Exchange".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
     def chain(n: Long) = (1L until n).map(i => (i, i + 1))
-    val (cc30, release30) = GraphOps.connectedComponentsReleasable(
-      chain(30).toDF("a", "b"), "a", "b", localThreshold = 0)
-    val (cc3k, release3k) = GraphOps.connectedComponentsReleasable(
-      chain(3000).toDF("a", "b"), "a", "b", localThreshold = 0)
+    val (cc30, release30) = graft.util.Materialize.scoped {
+      GraphOps.connectedComponents(chain(30).toDF("a", "b"), "a", "b", localThreshold = 0)
+    }
+    val (cc3k, release3k) = graft.util.Materialize.scoped {
+      GraphOps.connectedComponents(chain(3000).toDF("a", "b"), "a", "b", localThreshold = 0)
+    }
     assert(exchanges(cc30) == exchanges(cc3k))
     release30(); release3k()
     val und = chain(150).flatMap(e => Seq(e, e.swap)).toDF("src", "dst")
-    val (bfs1, _, releaseBfs1) = GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 1)
-    val (bfs4, hops4, releaseBfs4) = GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 4)
+    val ((bfs1, _), releaseBfs1) = graft.util.Materialize.scoped {
+      GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 1)
+    }
+    val ((bfs4, hops4), releaseBfs4) = graft.util.Materialize.scoped {
+      GraphOps.bfsCore(und, "src", "dst", Seq(1L), maxHops = 4)
+    }
     assert(hops4 == 4 && bfs4.count() == 5)
     assert(exchanges(bfs1) == exchanges(bfs4))
     releaseBfs1(); releaseBfs4()
@@ -810,8 +816,10 @@ class GraphOpsSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L))
     val edges = tri.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val (out, release) = GraphOps.labelPropagationReleasable(edges, "src", "dst",
-      iterations = 6) // crosses CheckpointEvery so a checkpoint root exists too
+    val (out, release) = graft.util.Materialize.scoped {
+      // crosses CheckpointEvery so a checkpoint root exists too
+      GraphOps.labelPropagation(edges, "src", "dst", iterations = 6)
+    }
     assert(out.count() == 6)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
       "final label state is cached behind the frame")

@@ -62,8 +62,9 @@ class GraphPropertySpec extends SparkSpec {
     val cases = Seq((0L until 14L).map(i => (i, i + 1)) -> 8, randomEdges(rnd, 30) -> 4)
     cases.foreach { case (edges, maxHops) =>
       val (rdds0, cacheEmpty0) = (sc.getPersistentRDDs.keySet, cm.isEmpty)
-      val (out, _, release) = GraphOps.bfsCore(edges.toDF("src", "dst"), "src", "dst",
-        Seq(0L), maxHops)
+      val ((out, _), release) = graft.util.Materialize.scoped {
+        GraphOps.bfsCore(edges.toDF("src", "dst"), "src", "dst", Seq(0L), maxHops)
+      }
       val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == driverBfs(edges, Seq(0L), maxHops), s"maxHops=$maxHops edges=$edges")
       release()

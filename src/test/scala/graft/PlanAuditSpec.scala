@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.PlanAudit.{QueryShapes, Shape, diff, parse, render, shapeOf}
+import graft.util.Materialize
 
 /** The ENFORCED plan gate. Every registered query is planned at sf0.001 under
   * the canonical session, then EXECUTED so AQE commits to its final
@@ -25,6 +26,12 @@ import graft.PlanAudit.{QueryShapes, Shape, diff, parse, render, shapeOf}
   * On intentional plan changes regenerate with
   * `GRAFT_PLAN_SNAPSHOT_UPDATE=1 sbt "testOnly graft.PlanAuditSpec"`
   * and commit the diff with the change that caused it.
+  *
+  * The same pass is the LEAK gate: each query is built inside a
+  * `Materialize.scoped` block and released after its execution, and
+  * the session must then be back at the baseline taken after the
+  * pre-query sweep — no persistent RDD and no CacheManager entry
+  * left — unless the query is on [[LeakAllowList]] with its reason.
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -35,21 +42,37 @@ class PlanAuditSpec extends SparkSpec {
   // the PRE-checkpoint shape too)
   private def audited = SparkEntry.queries ++ SparkEntry.auditOnlyPlans
 
-  private def shapesOf(name: String): QueryShapes = {
+  /** Queries whose blocks may outlive their scope, each with the
+    * reason. No entry may name an engine operator's persist: those
+    * register with the caller's scope (`graft.util.Materialize`). */
+  private val LeakAllowList: Map[String, String] = Map()
+
+  /** One query's plan shapes plus what it left behind once its scope
+    * was released: `(persistent RDDs, CacheManager left non-empty)`. */
+  private def shapesOf(name: String): (QueryShapes, (Int, Boolean)) = {
+    val sc = spark.sparkContext
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    val (rdds0, cacheEmpty0) = (sc.getPersistentRDDs.keySet, spark.sharedState.cacheManager.isEmpty)
     try {
-      val qe = audited(name)(spark, sfDir).queryExecution
+      val (qe, release) = Materialize.scoped(audited(name)(spark, sfDir).queryExecution)
       val static = shapeOf(qe.executedPlan.toString())
       qe.toRdd.count() // materialize every stage → AQE final plan
-      QueryShapes(static, shapeOf(qe.executedPlan.toString()))
+      val shapes = QueryShapes(static, shapeOf(qe.executedPlan.toString()))
+      release()
+      (shapes, (sc.getPersistentRDDs.keySet.diff(rdds0).size,
+        spark.sharedState.cacheManager.isEmpty != cacheEmpty0))
     } catch { case e: Throwable =>
       fail(s"plan gate: $name failed to plan/execute: ${e.toString.take(300)}")
     }
   }
 
-  private def currentShapes(): Seq[(String, QueryShapes)] =
+  // one pass over every audited query feeds both gates
+  private lazy val runs: Seq[(String, (QueryShapes, (Int, Boolean)))] =
     audited.keys.toSeq.sorted.map(n => n -> shapesOf(n))
+
+  private def currentShapes(): Seq[(String, QueryShapes)] =
+    runs.map { case (n, (qs, _)) => n -> qs }
 
   test("plan gate: zero cartesians; static AND adaptive-final shapes match the committed snapshot") {
     val shapes = currentShapes()
@@ -92,7 +115,7 @@ class PlanAuditSpec extends SparkSpec {
       // are logged so absorbed flaps stay visible, never silent.
       val flapAbsorbed = cur.keys.toSeq.sorted.filter { n =>
         snap.get(n).exists { s =>
-          PlanAudit.absorbFlap(s, cur(n), () => shapesOf(n), (i, fin, ok) => {
+          PlanAudit.absorbFlap(s, cur(n), () => shapesOf(n)._1, (i, fin, ok) => {
             info(s"final-exchange flap retry $i for $n: " +
               s"${fin.exchanges} vs committed ${s.fin.exchanges}" +
               (if (ok) " — absorbed (environmental AQE coalesce)" else ""))
@@ -110,6 +133,19 @@ class PlanAuditSpec extends SparkSpec {
            |GRAFT_PLAN_SNAPSHOT_UPDATE=1 sbt "testOnly graft.PlanAuditSpec"
            |and commit it with the change.""".stripMargin)
     }
+  }
+
+  test("leak gate: every query returns the session to its baseline once its scope is released") {
+    val leaks = runs.collect { case (n, (_, (rdds, cache))) if rdds > 0 || cache =>
+      n -> (s"$rdds persisted RDDs" + (if (cache) " + CacheManager entries" else ""))
+    }.toMap
+    val unexplained = leaks.keySet -- LeakAllowList.keySet
+    assert(unexplained.isEmpty, "blocks left after the query's scope was released:\n  " +
+      unexplained.toSeq.sorted.map(n => s"$n: ${leaks(n)}").mkString("\n  "))
+    // the allow-list is the exact census: an entry that stopped leaking goes
+    val stale = LeakAllowList.keySet -- leaks.keySet
+    assert(stale.isEmpty, s"allow-listed queries that no longer leak: ${stale.toSeq.sorted}")
+    assert(LeakAllowList.forall { case (n, why) => audited.contains(n) && why.nonEmpty })
   }
 
   test("audit-only builder is probe-stable: re-building the clean-ids frame leaves the bloom artifact untouched (r17 ADVICE #3)") {
