@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
+import graft.io.Readers
+
 /** Benchmark main. Prints per-query diagnostics to stderr and a
   * bench-detail JSON file, then ONE JSON line to stdout as the driver
   * contract, carrying the COMPLETE per-query warm map. The map is
@@ -156,8 +158,8 @@ object Bench {
     try {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
-      val region = spark.read.parquet(s"$sfDir/region.parquet")
-      val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+      val region = Readers.parquet(spark, s"$sfDir/region.parquet")
+      val nation = Readers.parquet(spark, s"$sfDir/nation.parquet")
       nation.join(broadcast(region), nation("n_regionkey") === region("r_regionkey"))
         .groupBy("r_name").agg(count(lit(1)).as("n"))
         .withColumn("rk", row_number().over(Window.orderBy(col("n").desc, col("r_name"))))
@@ -167,7 +169,7 @@ object Bench {
       // footer parsing that every suite pays exactly once anyway
       for (t <- Seq("lineitem", "orders", "customer", "part", "supplier",
         "events", "documents", "embeddings"))
-        try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).collect()
+        try Readers.parquet(spark, s"$sfDir/$t.parquet").limit(1).collect()
         catch { case _: Throwable => }
       // the fused per-row kernels (shingles, minhash, simhash, text
       // counts, md5 tier, dot products) JIT-compile on first use;
@@ -178,7 +180,7 @@ object Bench {
       {
         import graft.dedup.DedupOps
         import graft.text.TextOps
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        val docs = Readers.parquet(spark, s"$sfDir/documents.parquet")
           .limit(256).select("doc_id", "text").persist()
         docs.select(
           DedupOps.minhashSignature(DedupOps.wordShingles(col("text"), 3), 16, portable = true),
@@ -247,7 +249,7 @@ object Bench {
         // last(ignoreNulls) + per-user collapse compile one shared
         // codegen shape; first-hit it on a 512-event slice
         locally {
-          val ev = spark.read.parquet(s"$sfDir/events.parquet").limit(512)
+          val ev = Readers.parquet(spark, s"$sfDir/events.parquet").limit(512)
             .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
           graft.analytics.EventAnalytics.funnel(ev, "user_id", "ts",
             "event_type", Seq("view", "click"), "event_id")
@@ -256,14 +258,14 @@ object Bench {
             "event_type", Seq("view"), "purchase", "event_id")
             .write.format("noop").mode("overwrite").save()
         }
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64)
+        val emb = Readers.parquet(spark, s"$sfDir/embeddings.parquet").limit(64)
         graft.similarity.SimilarityOps.bruteForceTopK(
           emb.limit(4), emb, "vec_id", "vec_id", "embedding", k = 3)
           .write.format("noop").mode("overwrite").save()
         // exact-decimal aggregation codegen (every oracle-parity sum
         // uses it; q1_agg, alphabetically first over lineitem, was
         // absorbing its JIT)
-        spark.read.parquet(s"$sfDir/lineitem.parquet").limit(20000)
+        Readers.parquet(spark, s"$sfDir/lineitem.parquet").limit(20000)
           .groupBy("l_returnflag")
           .agg(sum(col("l_quantity").cast("decimal(20,4)")),
             avg(col("l_extendedprice")), count(lit(1)))

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.io.Readers
+
 /** Dev tool: build an sfN fixture set as `copies`× a source sf dir —
   * the fixture behind the scale curves ([[ScaleCurves]] records
   * sec(sf0.1) vs sec(sf1)). NOT part of the
@@ -42,7 +44,7 @@ object GenScale {
 
     def scaled(table: String, keyCols: Seq[String],
                textTweak: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Readers.parquet(spark, s"$src/$table.parquet")
       val parts = (0 until copies).map { i =>
         val shifted = keyCols.foldLeft(base) { (df, k) =>
           df.withColumn(k, col(k) + lit(Shift * i))
@@ -71,7 +73,7 @@ object GenScale {
     scaled("events", Seq("event_id", "user_id"))
     scaled("embeddings", Seq("vec_id"))
     for (t <- Seq("nation", "region"))
-      spark.read.parquet(s"$src/$t.parquet")
+      Readers.parquet(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
     println(s"[genscale] wrote $dst (${copies}x $src)")
     spark.stop()

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Readers
+
 /** Session factory + canonical test-table loader.
   *
   * Replaces the reference's session bootstrap
@@ -17,7 +19,10 @@ object Graft {
 
   /** Runtime confs applied on top of whatever session the host (driver
     * harness, test suite, notebook) created. All of these are safe to
-    * set per-session at runtime.
+    * set per-session at runtime. Applied once per session — by
+    * [[session]], and by `SparkEntry.entry` for a host-made session —
+    * never per table load, so a setting the caller makes afterwards
+    * stands.
     */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
@@ -170,8 +175,7 @@ object Tables {
     * TIMESTAMP_NTZ µs regardless of which fixture generation is on disk.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    Graft.tune(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Readers.parquet(spark, s"$dir/$name.parquet")
     assertSchema(name, if (name == "events") normalizeEventTs(df) else df)
   }
 }

@@ -26,6 +26,7 @@ object SparkEntry {
     * architectural seam; driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame = {
+    Graft.tune(spark)
     val dir = "/root/testdata/sf0.001"
     val targetDir = "/tmp/graft_entry_target"
     val lineitem = CleanOps.nanToNull(Tables(spark, dir, "lineitem"))

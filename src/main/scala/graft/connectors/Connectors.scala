@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Readers
+
 /** Connector-edge helpers (SURVEY.md §2.1 REST/file sources).
   *
   * The reference's dbt/tableau/sharepoint clients are driver-side REST
@@ -66,7 +68,7 @@ object Connectors {
       case None => spark.createDataset(buf.toSeq)
       case Some(dir) =>
         if (buf.nonEmpty) spill()
-        spark.read.parquet(dir).as[T] // row order is not defined; a REST drain is a set
+        Readers.parquet(spark, dir).as[T] // row order is not defined; a REST drain is a set
     }
   }
 

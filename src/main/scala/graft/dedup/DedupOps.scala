@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Hashes
+import graft.io.Readers
 import graft.text.TextOps
 
 /** Document deduplication operators: exact (content fingerprint),
@@ -385,10 +386,10 @@ object DedupOps {
   private def indexJaccardPairs(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batchSh: DataFrame,
                                 threshold: Double, maxBucket: Int): DataFrame = {
-    val histSh = spark.read.parquet(s"$dir/sh")
+    val histSh = Readers.parquet(spark, s"$dir/sh")
       .select(col("doc_id").as("__id"), col("sh").as("__s"))
     if (graft.util.Tranches.countFresh(spark, dir, "sh", "df")) {
-      val histDf = spark.read.parquet(s"$dir/df").drop("batch")
+      val histDf = Readers.parquet(spark, s"$dir/df").drop("batch")
         .groupBy("sh").agg(sum(col("df")).as("__hc"))
         .select(col("sh").as("__s"), col("__hc"))
       crossJaccardViaDf(batchSh, histSh, histDf, threshold, maxBucket)
@@ -572,7 +573,7 @@ object DedupOps {
         () => {
           hashedShingleRows(corpus, idCol, textCol, shingleN, portable)
             .write.mode("overwrite").parquet(s"$root/sh/batch=build")
-          shingleCounts(spark.read.parquet(s"$root/sh/batch=build"))
+          shingleCounts(Readers.parquet(spark, s"$root/sh/batch=build"))
             .write.mode("overwrite").parquet(s"$root/df/batch=build")
         },
         () => fingerprintRows(corpus, textCol)
@@ -580,7 +581,7 @@ object DedupOps {
         () => {
           signatureRows(corpus, idCol, textCol, shingleN, sigK, portable)
             .write.mode("overwrite").parquet(s"$root/sig/batch=build")
-          bandCounts(meta)(spark.read.parquet(s"$root/sig/batch=build"))
+          bandCounts(meta)(Readers.parquet(spark, s"$root/sig/batch=build"))
             .write.mode("overwrite").parquet(s"$root/bf/batch=build")
         })
       // a fresh build also resets the absorbed-tag ledger: the whole-dir
@@ -647,7 +648,7 @@ object DedupOps {
     // replay counts 0 (its fps were absorbed); new content counts > 0.
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "appendToDedupIndex", () =>
       fingerprintRows(newRows, textCol)
-        .join(spark.read.parquet(s"$dir/fp").select("fp"), Seq("fp"), "left_anti")
+        .join(Readers.parquet(spark, s"$dir/fp").select("fp"), Seq("fp"), "left_anti")
         .count())) return
     val frozen = graft.util.Materialize.freeze(newRows)
     // two independent row+count chains overlapped on driver threads
@@ -670,7 +671,7 @@ object DedupOps {
         // (undercounted combined counts → fewer pruned shingles) until
         // the documented same-tag retry overwrites both.
         if (pathExists(spark, s"$dir/df"))
-          shingleCounts(spark.read.parquet(s"$dir/sh/batch=$tag"))
+          shingleCounts(Readers.parquet(spark, s"$dir/sh/batch=$tag"))
             .write.mode("overwrite").parquet(s"$dir/df/batch=$tag")
       },
       () => {
@@ -682,7 +683,7 @@ object DedupOps {
             signatureRows(frozen, idCol, textCol, shingleN, m.sigK, portable)
               .write.mode("overwrite").parquet(s"$dir/sig/batch=$tag")
             if (pathExists(spark, s"$dir/bf"))
-              bandCounts(m)(spark.read.parquet(s"$dir/sig/batch=$tag"))
+              bandCounts(m)(Readers.parquet(spark, s"$dir/sig/batch=$tag"))
                 .write.mode("overwrite").parquet(s"$dir/bf/batch=$tag")
           }
         }
@@ -803,7 +804,7 @@ object DedupOps {
     validateIndexParams(spark, idx, shingleN, portable)
     // append tranches can re-add fps; distinct over the column alone
     // (the batch=<tag> partition column must not widen the key)
-    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
+    val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()
     // persisted: the survivors fork into the near-dup candidate side
     // and the final anti-join — unpersisted, each branch re-runs the
     // batch fingerprint join (an extra scan of both inputs per action)
@@ -852,7 +853,7 @@ object DedupOps {
     // is one wave of artifact scans instead of one job latency each
     val out = new Array[(String, Long, Option[Long], Int)](artifacts.size)
     graft.util.Par.jobs(artifacts.zipWithIndex.map { case (a, i) => () => {
-      val df = spark.read.parquet(s"$dir/$a")
+      val df = Readers.parquet(spark, s"$dir/$a")
       val nTranches = graft.util.Tranches.names(spark, s"$dir/$a").size
       // one aggregation pass per artifact (rows + distinct docs in a
       // single scan — the routine gauge must not read history twice)
@@ -923,7 +924,7 @@ object DedupOps {
     val spark = batch.sparkSession
     val idx = graft.merge.Merge.resolveDir(spark, dir)
     validateIndexParams(spark, idx, shingleN, portable)
-    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
+    val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()
       .withColumnRenamed("fp", "__fp").withColumn("__hit", lit(true))
     // persisted: forks into the shingle pipeline and the final report join
     val flagged = graft.util.Materialize.persist(batch
@@ -966,7 +967,7 @@ object DedupOps {
         "signature family; rebuild with writeDedupIndex"))
     require(pathExists(spark, s"$idx/sig"),
       s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
-    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
+    val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()
       .withColumnRenamed("fp", "__fp").withColumn("__hit", lit(true))
     // persisted: forks into the signature pipeline and the report join
     val flagged = graft.util.Materialize.persist(batch
@@ -1084,9 +1085,9 @@ object DedupOps {
                                 dir: String, batchSigs: DataFrame,
                                 k: Int, bands: Int, threshold: Double,
                                 maxBucket: Int): DataFrame = {
-    val histSigs = spark.read.parquet(s"$dir/sig").select("doc_id", "sig")
+    val histSigs = Readers.parquet(spark, s"$dir/sig").select("doc_id", "sig")
     if (graft.util.Tranches.countFresh(spark, dir, "sig", "bf")) {
-      val histBf = spark.read.parquet(s"$dir/bf").drop("batch")
+      val histBf = Readers.parquet(spark, s"$dir/bf").drop("batch")
         .groupBy("band", "key").agg(sum(col("n")).as("__hc"))
         .select(col("band").as("__band"), col("key").as("__key"), col("__hc"))
       crossMinhashViaBf(batchSigs, histSigs, histBf, k, bands, threshold, maxBucket)
@@ -1122,7 +1123,7 @@ object DedupOps {
         "signature family; rebuild with writeDedupIndex"))
     require(pathExists(spark, s"$idx/sig"),
       s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
-    val histFp = spark.read.parquet(s"$idx/fp").select("fp").distinct()
+    val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()
     val exactSurvivors = graft.util.Materialize.persist(batch
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
       .join(histFp.withColumnRenamed("fp", "__fp"), Seq("__fp"), "left_anti")

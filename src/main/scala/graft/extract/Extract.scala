@@ -17,11 +17,15 @@ import org.apache.spark.sql.types.DoubleType
 object Extract {
 
   /** Scalar watermark: max of a column (one value to the driver — the
-    * only sanctioned driver-side collect in the engine core). */
-  def maxValue(df: DataFrame, c: String): Option[Any] = {
-    val row = df.agg(max(col(c))).head()
-    if (row.isNullAt(0)) None else Some(row.get(0))
-  }
+    * only sanctioned driver-side collect in the engine core). A top-1
+    * under Spark's own ordering — NaN above every other double, nulls
+    * last — is `max` by definition, and it runs as one job (per-partition
+    * top-1, merged on the driver) where `agg(max)` under AQE runs two
+    * (the partial aggregate's stage, then the final). An empty or
+    * all-null column gives None. */
+  def maxValue(df: DataFrame, c: String): Option[Any] =
+    df.select(col(c)).orderBy(col(c).desc_nulls_last).limit(1).collect()
+      .headOption.flatMap(r => Option(r.get(0)))
 
   /** Rows strictly after a watermark (the `id__gt` / `> max(x)` pattern,
     * `src/pyveb/dbt_client.py:559-568`). */

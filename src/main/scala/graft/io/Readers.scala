@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.DriverFooterParquet
 import org.apache.spark.sql.types.StructType
 
 import graft.relational.RelationalOps
@@ -16,27 +17,36 @@ object Readers {
   /** Read every parquet file under a prefix (directory). With a schema:
     * lenient cast-by-projection, because parts written at different times
     * can disagree on types ("columns which contain only nulls in one
-    * file", `src/pyveb/spark_client.py:110-113`).
+    * file", `src/pyveb/spark_client.py:110-113`). Without `mergeSchema`
+    * the read starts no job: its schema is the one `spark.read.parquet`
+    * infers, from the same footer, read on the driver.
     * Reference: `read_parquet` `src/pyveb/spark_client.py:107-115`.
     */
   def parquet(spark: SparkSession, path: String,
               schema: Option[StructType] = None,
               mergeSchema: Boolean = false): DataFrame = {
-    // The scan reads with the files' OWN (first-footer) schema — cheap —
-    // and the declared schema is applied as a lenient cast-by-projection
-    // on top. Passing the declared schema to the reader instead would
-    // make the scan itself reject type drift (files that wrote a column
-    // as string while the caller declares timestamp — the reference's
-    // core drift case), and footer-merging every file (mergeSchema) is
-    // wasted metadata work at scale when a schema is declared. Opt into
-    // `mergeSchema` only for a schema-LESS read over parts with
-    // disjoint column subsets; per-file TYPE conflicts need the
-    // per-file drift path (multipleParquet).
+    // The declared schema is applied as a lenient cast-by-projection on
+    // top of the files' own. Passing it to the reader instead would make
+    // the scan itself reject type drift (files that wrote a column as
+    // string while the caller declares timestamp — the reference's core
+    // drift case), and footer-merging every file (mergeSchema) is wasted
+    // metadata work at scale when a schema is declared. Opt into
+    // `mergeSchema` only for a schema-LESS read over parts with disjoint
+    // column subsets; per-file TYPE conflicts need the per-file drift
+    // path (multipleParquet).
     val df =
       if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
-      else spark.read.parquet(path)
+      else parquet(spark, Seq(path))
     schema.fold(df)(SchemaOps.applySchema(df, _))
   }
+
+  /** One relation over several parquet paths (files or directories):
+    * `spark.read.parquet(paths: _*)` with the schema read on the driver.
+    * Every schema-less parquet read in the engine goes through here —
+    * same schema, relation and errors as Spark's, and no footer-reading
+    * job (see `DriverFooterParquet`). */
+  def parquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    DriverFooterParquet.read(spark, paths)
 
   /** One parquet file, optional cast-enforce.
     * Reference: `read_single_parquet_file` `src/pyveb/spark_client.py:136-153`. */
@@ -51,7 +61,7 @@ object Readers {
     */
   def multipleParquet(spark: SparkSession, files: Seq[String],
                       schema: Option[StructType] = None): DataFrame = {
-    val united = RelationalOps.uniteByName(files.map(f => spark.read.parquet(f)))
+    val united = RelationalOps.uniteByName(files.map(f => parquet(spark, f)))
     schema.fold(united)(SchemaOps.applySchema(united, _))
   }
 

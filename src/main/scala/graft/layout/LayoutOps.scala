@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.io.Readers
+
 /** Storage-layout operators — how the bytes land on disk decides what
   * a 100 TB scan can SKIP. Two tools:
   *
@@ -91,7 +93,7 @@ object LayoutOps {
     // self-overwrite hazard); a crash mid-compaction leaves the
     // original readable.
     graft.merge.Merge.atomicReplace(
-      spark.read.parquet(resolved).repartition(nFiles), dir, commit)
+      Readers.parquet(spark, resolved).repartition(nFiles), dir, commit)
     nFiles
   }
 }

@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.io.Readers
 import graft.relational.RelationalOps
 
 /** Warehouse-style mutation semantics over immutable parquet directories
@@ -128,7 +129,7 @@ object Merge {
     * through its `_current` manifest; anything else reads the
     * directory itself. */
   def readTarget(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(resolveDir(spark, dir))
+    Readers.parquet(spark, resolveDir(spark, dir))
 
   /** Commit-mode dispatch for an arbitrary whole-dir rebuild: `write`
     * populates a fresh directory (stage sibling under RenameCommit, an

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Hashes
+import graft.io.Readers
 
 /** Multimodal (image/audio/video) column handling: opaque `binary`
   * payloads + typed metadata, with decode / feature-extraction /
@@ -370,7 +371,7 @@ object MultimodalOps {
 
   /** The merged history hash set (distinct across tranches). */
   def readImageHashes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select("media_id", "dhash").distinct()
+    Readers.parquet(spark, dir).select("media_id", "dhash").distinct()
 
   /** Keep the batch images NOT perceptually matching any HISTORY
     * image — the incremental steady state of image dedup: today's

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Hashes
+import graft.io.Readers
 
 /** Mergeable distinct-count sketches (HyperLogLog register layout) —
   * the 100 TB answer to `count_distinct` over a key too hot or too wide
@@ -291,7 +292,7 @@ object Sketches {
 
   /** Merge-on-read of the day-keyed registers: per-(day, bucket) max. */
   def readDayHll(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Readers.parquet(spark, dir)
       .groupBy(col("__d"), col("bucket"))
       .agg(max(col("max_rho")).as("max_rho"))
 
@@ -327,7 +328,7 @@ object Sketches {
   /** Merge-on-read of an at-rest sketch artifact: one ≤tranches×m-row
     * scan, never a corpus. */
   def readSketch(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Readers.parquet(spark, dir)
       .groupBy("bucket")
       .agg(max(col("max_rho")).cast(IntegerType).as("max_rho"))
 

@@ -125,7 +125,7 @@ object ConnectorQueries {
       val orders = Tables(s, dir, "orders")
         .withColumn("year", date_format(col("o_orderdate"), "yyyy"))
       Writers.parquet(orders, path, partitionBy = Seq("year"))
-      s.read.parquet(path).where(col("year") === 1998)
+      Readers.parquet(s, path).where(col("year") === 1998)
         .select("o_orderkey", "o_totalprice")
     },
 
@@ -203,7 +203,7 @@ object ConnectorQueries {
       val region = Tables(s, dir, "region").select("r_regionkey", "r_name")
       region.repartition(8).write.mode("overwrite").parquet(path)
       graft.layout.LayoutOps.compact(s, path)
-      s.read.parquet(path)
+      Readers.parquet(s, path)
     },
 
     // ---- config.yml-driven pipeline (§3.1 file front door): a YAML

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
+import graft.io.Readers
+
 /** AT-REST membership-prune artifact — "have we EVER seen this key",
   * answered without scanning history: the k bit POSITIONS of a
   * classic Bloom filter stored as plain rows (`pos BIGINT`), one
@@ -113,7 +115,7 @@ object BloomIndex {
   /** The merged position set (≤ mBits rows however many tranches). */
   def readBloomPositions(spark: SparkSession, dir: String): DataFrame = {
     readMeta(spark, dir) // fail fast on a non-index dir
-    spark.read.parquet(dir).select(col("pos")).distinct()
+    Readers.parquet(spark, dir).select(col("pos")).distinct()
   }
 
   /** Keep the PROVABLY-NEW rows of `batch`: those with at least one

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.Readers
+
 /** Approximate-nearest-neighbor / similarity search over embedding
   * columns (`Array[Float]`).
   *
@@ -254,7 +256,7 @@ object SimilarityOps {
     val nbits = readLshNbits(spark, dir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "lshAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
-        .join(spark.read.parquet(s"$dir/vec").select("corpus_id"),
+        .join(Readers.parquet(spark, s"$dir/vec").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
       return
     lshIndexRows(newRows, cidCol, vecCol, nbits)
@@ -295,7 +297,7 @@ object SimilarityOps {
       else qBase.withColumn("lsh_bucket",
         explode(array((col("lsh_bucket") +:
           (0 until nbits).map(i => col("lsh_bucket").bitwiseXOR(lit(1L << i)))): _*)))
-    val index = spark.read.parquet(s"$dir/vec").drop("batch")
+    val index = Readers.parquet(spark, s"$dir/vec").drop("batch")
     val scored = index.join(broadcast(q), Seq("lsh_bucket"))
       .where(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
@@ -558,7 +560,7 @@ object SimilarityOps {
     val meta = requireIvfMeta(spark, dir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
-        .join(spark.read.parquet(s"$dir/vec").select("corpus_id"),
+        .join(Readers.parquet(spark, s"$dir/vec").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
       return
     ivfIndexRows(newRows, cidCol, vecCol, meta.centroids)
@@ -592,7 +594,7 @@ object SimilarityOps {
     * lifecycle detail, not a query dimension). */
   private def ivfIndexVectors(spark: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame =
-    spark.read.parquet(s"$dir/vec").drop("batch")
+    Readers.parquet(spark, s"$dir/vec").drop("batch")
 
   /** Probe a written IVF index: quantize each query to its `nProbe`
     * nearest lists (quantizer from `_graft_meta` — never
@@ -959,7 +961,7 @@ object SimilarityOps {
     val meta = requireIvfPqMeta(spark, dir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfPqAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
-        .join(spark.read.parquet(s"$dir/pq").select("corpus_id"),
+        .join(Readers.parquet(spark, s"$dir/pq").select("corpus_id"),
           Seq("corpus_id"), "left_anti").count()))
       return
     ivfPqIndexRows(newRows, cidCol, vecCol, meta.centroids, meta.codebooks)
@@ -981,7 +983,7 @@ object SimilarityOps {
     val dir = graft.merge.Merge.resolveDir(spark, indexDir)
     requireIvfMeta(spark, dir)
     val nTranches = graft.util.Tranches.names(spark, s"$dir/vec").size
-    spark.read.parquet(s"$dir/vec")
+    Readers.parquet(spark, s"$dir/vec")
       .groupBy(col("ivf_list").cast(IntegerType).as("ivf_list"))
       .agg(count(lit(1)).as("n_rows"), count_distinct(col("corpus_id")).as("n_ids"))
       .withColumn("n_tranches", lit(nTranches))
@@ -1041,7 +1043,7 @@ object SimilarityOps {
       pqLut(col(vecCol), codebooks).as("__lut"),
       explode(nearestListsExpr(centroids, col(vecCol),
         math.min(nProbe, meta.nLists))).as("ivf_list"))
-    val index = spark.read.parquet(s"$dir/pq").drop("batch")
+    val index = Readers.parquet(spark, s"$dir/pq").drop("batch")
     val quantized = index.join(broadcast(q), Seq("ivf_list"))
       .where(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.Readers
+
 /** Structured Streaming operators (SURVEY.md §2.10).
   *
   * The reference's only "streaming" is a bounded server-side cursor
@@ -217,7 +219,7 @@ object StreamingOps {
                              (compute: => DataFrame): DataFrame = {
     val committed = new org.apache.hadoop.fs.Path(batchOut + "/_graft_decided")
     val hfs = committed.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(committed)) spark.read.parquet(batchOut) // replayed epoch
+    if (hfs.exists(committed)) Readers.parquet(spark, batchOut) // replayed epoch
     else {
       val (df, release) = graft.util.Materialize.scoped(compute)
       val frozen = graft.util.Materialize.freeze(df)
@@ -446,7 +448,7 @@ object StreamingOps {
   /** Merge-on-read of a [[driftStream]] log: one row per scored epoch. */
   def readDriftLog(spark: org.apache.spark.sql.SparkSession,
                    logDir: String): DataFrame =
-    spark.read.parquet(logDir)
+    Readers.parquet(spark, logDir)
 
   /** Streaming maintenance of the at-rest GROUP-assignment index
     * ([[graft.graph.GraphOps.writeGroupIndex]]): each micro-batch of

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.Readers
+
 /** Lexical retrieval scoring + rank fusion — the missing half of the
   * hybrid-search stack the ANN family already provides. A curation
   * pipeline that mines "documents like these seed queries" wants BOTH
@@ -233,7 +235,7 @@ object RetrievalOps {
     val nBuckets = readNBuckets(spark, dir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "bm25AppendToIndex",
       () => newDocs.select(col(idCol).cast(LongType).as("doc_id")).distinct()
-        .join(spark.read.parquet(s"$dir/doclen").select("doc_id"),
+        .join(Readers.parquet(spark, s"$dir/doclen").select("doc_id"),
           Seq("doc_id"), "left_anti").count()))
       return
     writeTranche(newDocs, dir, idCol, textCol, nBuckets, tag)
@@ -303,11 +305,11 @@ object RetrievalOps {
     // would not prune the partition listing)
     val buckets = qTerms.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = Readers.parquet(spark, s"$dir/postings")
       .where(col("bucket").isin(buckets.toIndexedSeq.map(Integer.valueOf): _*))
       .select(col("doc_id"), col("term"), col("tf"))
     val tf = postings.join(broadcast(qTerms.select("term")), "term")
-    val doclen = spark.read.parquet(s"$dir/doclen").select(col("doc_id"), col("dl"))
+    val doclen = Readers.parquet(spark, s"$dir/doclen").select(col("doc_id"), col("dl"))
     val (dT, tT) = {
       val r = doclen.agg(count(lit(1)), sum("dl")).head()
       (r.getLong(0).toDouble, if (r.isNullAt(1)) 0.0 else r.getLong(1).toDouble)

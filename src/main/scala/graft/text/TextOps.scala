@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.Readers
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
   *
@@ -863,7 +865,7 @@ object TextOps {
         winnowMetaString(WinnowIndexMeta(k, w, portable)))
       winnowRows(corpus, idCol, textCol, k, w, portable)
         .write.mode("overwrite").parquet(s"$root/wfp/batch=build")
-      winnowCounts(spark.read.parquet(s"$root/wfp/batch=build"))
+      winnowCounts(Readers.parquet(spark, s"$root/wfp/batch=build"))
         .write.mode("overwrite").parquet(s"$root/wdf/batch=build")
     }
     commit match {
@@ -893,7 +895,7 @@ object TextOps {
     // its selected fingerprints all happen to exist in the index.
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "appendToWinnowIndex",
       () => winnowRows(newRows, idCol, textCol, meta.k, meta.w, meta.portable)
-        .join(spark.read.parquet(s"$dir/wfp").select("doc_id", "wfp"),
+        .join(Readers.parquet(spark, s"$dir/wfp").select("doc_id", "wfp"),
           Seq("doc_id", "wfp"), "left_anti")
         .count()))
       return
@@ -905,7 +907,7 @@ object TextOps {
     // next consolidation's regeneration); pre-wdf legacy indexes skip
     // (consolidateWinnowIndex retrofits the artifact)
     if (pathExists(spark, s"$dir/wdf"))
-      winnowCounts(spark.read.parquet(s"$dir/wfp/batch=$tag"))
+      winnowCounts(Readers.parquet(spark, s"$dir/wfp/batch=$tag"))
         .write.mode("overwrite").parquet(s"$dir/wdf/batch=$tag")
   }
 
@@ -994,7 +996,7 @@ object TextOps {
       s"winnow index $idx has no _graft_meta; build it with writeWinnowIndex"))
     val l = winnowRows(batch, idCol, textCol, meta.k, meta.w, meta.portable)
       .select(col("doc_id").as("__id"), col("wfp").as("__fp"))
-    val r = spark.read.parquet(s"$idx/wfp")
+    val r = Readers.parquet(spark, s"$idx/wfp")
       .select(col("doc_id").as("__id"), col("wfp").as("__fp"))
     // combined hot-hash count: from the materialized wdf artifact when
     // the index carries it FRESH (tag sets equal — a crashed append or
@@ -1008,7 +1010,7 @@ object TextOps {
         // touched only by the hot anti-join into the candidate join
         val lp = graft.util.Materialize.persist(l)
         val batchCnt = lp.groupBy("__fp").agg(count(lit(1)).as("__bc"))
-        val histCnt = spark.read.parquet(s"$idx/wdf").drop("batch")
+        val histCnt = Readers.parquet(spark, s"$idx/wdf").drop("batch")
           .groupBy("wfp").agg(sum(col("n")).as("__hc"))
           .select(col("wfp").as("__fp"), col("__hc"))
         val hot = graft.util.Materialize.persist(

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Readers
+
 /** The tranche lifecycle every at-rest artifact family shares. An
   * artifact is a directory of tagged tranches (`dir/batch=<tag>`); an
   * ingest overwrites its OWN tranche, so replays converge. This object
@@ -192,7 +194,7 @@ object Tranches {
     def mergeSum(c: String): org.apache.spark.sql.Column =
       when(count(when(col(c).isNull, lit(1))) > 0, lit(null))
         .otherwise(try_sum(col(c))).as(c)
-    spark.read.parquet(paths.map(_.toString): _*)
+    Readers.parquet(spark, paths.map(_.toString))
       .groupBy(keyCols.map(col): _*)
       .agg(mergeSum(cntCols.head), cntCols.tail.map(mergeSum): _*)
   }
@@ -487,7 +489,7 @@ object Tranches {
       Par.jobs(artifacts.map { case (a, parts) => () => {
         // partition values may be type-inferred, hence the string cast;
         // a legacy flat artifact has no batch column and is read whole
-        val all = spark.read.parquet(s"$dir/$a")
+        val all = Readers.parquet(spark, s"$dir/$a")
         val rows = (if (all.columns.contains("batch"))
           all.where(col("batch").cast("string").isin(tags.toSeq: _*))
         else all).drop("batch").distinct()
@@ -503,7 +505,7 @@ object Tranches {
       }}: _*)
       Par.jobs(counts.map { case (name, source, derive) => () =>
         place(name) { out =>
-          derive(spark.read.parquet(s"$root/$source/batch=consolidated"))
+          derive(Readers.parquet(spark, s"$root/$source/batch=consolidated"))
             .write.mode("overwrite").parquet(s"$out/batch=consolidated")
         }
       }: _*)

@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.extract.Extract
+import graft.io.Readers
 import graft.merge.Merge
 import graft.meta.MetaOps
 import graft.pipeline.Pipeline
@@ -178,5 +180,36 @@ class MiscSpec extends SparkSpec {
     assert(rows.exists(r => r.tasks > 0 && r.site.nonEmpty), s"stage rows: $rows")
     assert(rows.forall(_.job >= 0), s"stage without its job: $rows")
     assert(rows.map(_.taskMs) == rows.map(_.taskMs).sorted.reverse, "not ordered by task time")
+  }
+
+  test("maxValue ≡ agg(max) per type, in one job; empty and all-null frames give None") {
+    val base = tempDir("maxvalue")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "long" -> Seq(Some(3L), None, Some(-1L), Some(7L)).toDF("c"),
+      "double+NaN" -> Seq(Some(1.5), Some(Double.NaN), None, Some(-2.0)).toDF("c"),
+      "double" -> Seq(1.5, -2.0, 0.25).toDF("c"),
+      "decimal" -> Seq("1.10", "12.05", null, "-3.00").toDF("c").select(col("c").cast("decimal(10,2)").as("c")),
+      "date" -> Seq("2024-01-31", null, "2023-12-01").toDF("c").select(col("c").cast("date").as("c")),
+      "timestamp" -> Seq(Some(ts("2024-01-02 03:04:05")), None, Some(ts("2024-01-02 03:04:06"))).toDF("c"),
+      "timestamp_ntz" -> Seq(Some(LocalDateTime.of(2024, 5, 1, 0, 0)), None,
+        Some(LocalDateTime.of(2023, 5, 1, 0, 0))).toDF("c"),
+      "string" -> Seq("apple", "Zebra", null, "éclair", "").toDF("c"),
+      "all-null" -> Seq[Option[Long]](None, None).toDF("c"),
+      "empty" -> Seq(1L).toDF("c").where(lit(false)))
+    cases.foreach { case (name, df) =>
+      val dir = s"$base/$name"
+      df.repartition(3).write.parquet(dir)
+      val read = Readers.parquet(spark, dir)
+      val want = Option(read.agg(max(col("c"))).head().get(0))
+      val (got, jobs) = withJobCount(Extract.maxValue(read, "c"))
+      assert(got.map(_.toString) == want.map(_.toString), name)
+      assert(jobs == 1, s"$name: $jobs jobs")
+      assert(Extract.maxValue(df, "c").map(_.toString) == want.map(_.toString), s"$name (local)")
+    }
+    assert(Extract.maxValue(Readers.parquet(spark, s"$base/all-null"), "c").isEmpty)
+    assert(Extract.maxValue(Readers.parquet(spark, s"$base/empty"), "c").isEmpty)
+    assert(Extract.maxValue(Readers.parquet(spark, s"$base/double+NaN"), "c")
+      .exists(_.asInstanceOf[Double].isNaN))
   }
 }

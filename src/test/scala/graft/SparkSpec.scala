@@ -54,6 +54,24 @@ abstract class SparkSpec extends AnyFunSuite {
     try body finally prev.foreach { case (n, l) => Configurator.setLevel(n, l) }
   }
 
+  /** `body`'s result and the number of Spark jobs it started, counted
+    * by a listener between two drains of the listener bus. */
+  def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.SpecListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.SpecListenerBus.drain(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Order-insensitive full comparison of small frames. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.sorted.toSeq == b.columns.sorted.toSeq,
