@@ -57,12 +57,29 @@ object Graft {
     * threshold (200) anyway, so bypass never engages there — this pins
     * the same writer choice at every scale instead of flipping to the
     * file-per-partition writer exactly when partitions are few.
-    * `GRAFT_BYPASS_MERGE` overrides (the A/B knob).
+    *
+    * Hold every generated class of a session's working set in Spark's
+    * codegen cache. `spark.sql.codegen.cache.maxEntries` is a static
+    * conf that `CodeGenerator` reads once per JVM, from the active
+    * session, when the object initialises: at the first generated
+    * class, or at any earlier touch, which finds no session and takes
+    * Spark's default of 100. So it must be in the first session's
+    * SparkConf, and that session must exist before anything touches
+    * `CodeGenerator`. 100 is below one `query_mix` pass (119 classes),
+    * so each repeat pass evicts and recompiles most of them; 4096 covers
+    * one ETL pass (42), one `query_mix` pass (119) and one pass over all
+    * 234 registered queries at sf0.01 (about 2,900). At a mean of 4.4 KB
+    * of bytecode a class (136 KB at most), a full cache holds about
+    * 18 MB.
+    *
+    * Either property set beforehand — by `-D` or a builder `.config`,
+    * which lands in the same SparkConf — wins over these defaults.
     */
   def coreTune(): Unit =
-    if (System.getProperty("spark.shuffle.sort.bypassMergeThreshold") == null)
-      System.setProperty("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_MERGE", "1"))
+    Seq("spark.shuffle.sort.bypassMergeThreshold" -> "1",
+      "spark.sql.codegen.cache.maxEntries" -> "4096").foreach { case (k, v) =>
+      if (System.getProperty(k) == null) System.setProperty(k, v)
+    }
 
   /** Local core count for the package mains (`Bench`, `Verify`,
     * `Profile`, `GenScale`, `ScaleCurves`): `SPARK_GRAFT_CPUS`,

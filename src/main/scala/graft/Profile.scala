@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev tool: time, stage-profile or explain named `SparkEntry.queries`
   * entries in one fresh session with the same confs as [[Bench]].
@@ -12,12 +14,16 @@ import org.apache.spark.sql.SparkSession
   * mode; `SPARK_GRAFT_CPUS` sets the core count as for every main). Every
   * mode runs the reps after the between-query hygiene Bench applies
   * and prints `[profile] <q> run <i>: <s> s` per rep, cold first —
-  * the lines [[Bench.isolatedSec]] parses.
+  * the lines [[Bench.isolatedSec]] parses — then
+  * `[profile] <q> run <i> codegen: <n> classes, <ms> ms`, the classes
+  * Spark compiled during the rep and their compile time. A rep that
+  * repeats an earlier one compiles 0 classes unless the codegen cache
+  * evicted them or the query generates different code each run.
   *
   *   - `time` (default): the rep timings only.
   *   - `stages`: the last (warmest) rep runs under [[stages]]; its job
-  *     and stage counts and a per-stage table follow, descending by
-  *     task time, with each stage's callsite so rows map back to
+  *     and stage counts and a table of every stage follow, descending
+  *     by task time, with each stage's callsite so rows map back to
   *     operators — the local stand-in for the Spark UI's stage table.
   *     A `[profile] <q> left …` line then gives the persistent RDDs
   *     (and whether CacheManager entries remain) the query left behind
@@ -107,12 +113,20 @@ object Profile {
     }.sortBy(-_.taskMs)
   }
 
+  /** Classes compiled by Spark's codegen in this JVM so far, and their
+    * total compile time in ms. Call it only once a session exists: its
+    * first call initialises `CodeGenerator`, which sizes its class cache
+    * from the active session's conf, or at Spark's default of 100 when
+    * there is none (see [[Graft.coreTune]]). */
+  def codegenTotals(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+
   private def printStages(rows: Seq[StageRow]): Unit = {
     println(f"[profile] ${rows.map(_.job).distinct.size} jobs, ${rows.size} stages, total task-time ${rows.map(_.taskMs).sum / 1e3}%.1f s")
     println(f"[profile] ${"stage"}%-7s ${"taskS"}%7s ${"cpuS"}%7s ${"wallS"}%6s " +
       f"${"tasks"}%5s ${"maxMs"}%6s ${"medMs"}%6s ${"deserS"}%6s ${"gcS"}%5s " +
       f"${"shRdMB"}%7s ${"shWrMB"}%7s ${"inMB"}%7s  site")
-    rows.take(60).foreach { r =>
+    rows.foreach { r =>
       println(f"[profile] ${r.id}%-7d ${r.taskMs / 1e3}%7.2f ${r.cpuNs / 1e9}%7.2f " +
         f"${r.wallMs / 1e3}%6.2f ${r.tasks}%5d ${r.maxTaskMs}%6d ${r.medTaskMs}%6d " +
         f"${r.deserMs / 1e3}%6.2f ${r.gcMs / 1e3}%5.2f ${r.shuffleReadBytes / 1e6}%7.1f " +
@@ -150,8 +164,11 @@ object Profile {
           sec = (System.nanoTime() - t0) / 1e9
         }
         val profiled = mode == "stages" && i == reps
+        val (n0, ms0) = codegenTotals()
         val rows = if (profiled) stages(spark)(run()) else { run(); Nil }
+        val (n1, ms1) = codegenTotals()
         println(f"[profile] $name run $i: $sec%.3f s")
+        println(f"[profile] $name run $i codegen: ${n1 - n0} classes, ${ms1 - ms0}%.0f ms")
         if (profiled) {
           printStages(rows)
           def held = (spark.sparkContext.getPersistentRDDs.size,
