@@ -23,8 +23,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   *   - `time` (default): the rep timings only.
   *   - `stages`: the last (warmest) rep runs under [[stages]]; its job
   *     and stage counts and a table of every stage follow, descending
-  *     by task time, with each stage's callsite so rows map back to
-  *     operators — the local stand-in for the Spark UI's stage table.
+  *     by task time, with the operators each stage runs (its RDDs'
+  *     operation scopes, see [[site]]) — the local stand-in for the
+  *     Spark UI's stage table.
   *     A `[profile] <q> left …` line then gives the persistent RDDs
   *     (and whether CacheManager entries remain) the query left behind
   *     before and after the release of the `Materialize.scoped` block
@@ -68,7 +69,7 @@ object Profile {
       }
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
         val a = agg(s.stageInfo.stageId)
-        a.site = s.stageInfo.name
+        a.site = site(s.stageInfo)
         a.firstMs = System.currentTimeMillis()
         events.incrementAndGet()
       }
@@ -113,6 +114,16 @@ object Profile {
     }.sortBy(-_.taskMs)
   }
 
+  /** The operators a stage runs: the distinct operation scopes of its
+    * RDDs in RDD-id order, e.g. `Scan parquet, WholeStageCodegen (2),
+    * Exchange`. Under AQE a stage's own name is the frame of the
+    * thread that materialized it, the same for every stage; the stage
+    * name stands only when no RDD carries a scope. */
+  private[graft] def site(info: StageInfo): String = {
+    val scopes = info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
+    if (scopes.isEmpty) info.name else scopes.mkString(", ")
+  }
+
   /** Classes compiled by Spark's codegen in this JVM so far, and their
     * total compile time in ms. Call it only once a session exists: its
     * first call initialises `CodeGenerator`, which sizes its class cache
@@ -130,7 +141,7 @@ object Profile {
       println(f"[profile] ${r.id}%-7d ${r.taskMs / 1e3}%7.2f ${r.cpuNs / 1e9}%7.2f " +
         f"${r.wallMs / 1e3}%6.2f ${r.tasks}%5d ${r.maxTaskMs}%6d ${r.medTaskMs}%6d " +
         f"${r.deserMs / 1e3}%6.2f ${r.gcMs / 1e3}%5.2f ${r.shuffleReadBytes / 1e6}%7.1f " +
-        f"${r.shuffleWriteBytes / 1e6}%7.1f ${r.inputBytes / 1e6}%7.1f  ${r.site.take(45)}")
+        f"${r.shuffleWriteBytes / 1e6}%7.1f ${r.inputBytes / 1e6}%7.1f  ${r.site.take(90)}")
     }
   }
 

@@ -908,6 +908,22 @@ object GraphOps {
     * instead of throwing under ANSI mode (Spark 4's default) and
     * killing the feature job. Output: `(node, n_neighbors, sum_val,
     * avg_val)`.
+    *
+    * 2-hop plan invariant: ONE edge shuffle. The distinct edge set is
+    * hash-partitioned by `src` at the session's shuffle-partition
+    * count (an explicit count, which AQE does not coalesce), and
+    * everything after it is partition-local: the edge distinct, the
+    * capped cut, one outer join in which each edge u→m emits u's
+    * neighbor m and m's capped list (each intermediate contributes
+    * itself plus its list, so the 1-hop rows need no union), the pair
+    * distinct and the per-node aggregate. That holds while the
+    * capped side and the value frame are broadcast, as AQE does when
+    * it measures them small; a side that is not joins by sort-merge
+    * and pays a shuffle by `dst`. The per-node rows then leave through
+    * one round-robin exchange, so a coalescing consumer does not pull
+    * the expansion into one task. A source u gets at most
+    * deg(u)·(maxDegree + 1) two-hop rows, all in the task that owns u,
+    * so a hub source is that task's cost.
     */
   def neighborhoodAgg(edges: DataFrame, srcCol: String, dstCol: String,
                       values: DataFrame, nodeCol: String, valueCol: String,
@@ -918,11 +934,15 @@ object GraphOps {
     require(maxDegree >= 0, s"neighborhoodAgg: maxDegree=$maxDegree < 0")
     // The operator leaves no persisted state: the returned frame is a
     // plain lazy plan, so callers have nothing to release.
-    val e = simpleEdges(edges, srcCol, dstCol)
+    val np = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val nbr =
-      if (hops == 1) e
+      if (hops == 1) simpleEdges(edges, srcCol, dstCol)
       else {
-        val e2base = e.select(col("src").as("__m"), col("dst").as("__d2"))
+        // the one edge shuffle: by src, at an explicit count AQE does
+        // not coalesce, so the edge distinct, the capped cut, the pair
+        // distinct and the per-node aggregate all keep this layout
+        val e = longEdges(edges, srcCol, dstCol).where(col("src") =!= col("dst"))
+          .repartition(np, col("src")).distinct()
         // truncation order: smallest-id (default) or seeded-hash
         // (unbiased); id tiebreak keeps the hash order total
         val capOrder: Seq[Column] = sampleSalt match {
@@ -934,20 +954,26 @@ object GraphOps {
               else xxhash64(lit(salt), col("__d2"))
             Seq(h.asc, col("__d2").asc)
         }
-        val e2 =
-          if (maxDegree == 0) e2base
-          else e2base
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy("__m").orderBy(capOrder: _*)))
-            .where(col("__rn") <= maxDegree).drop("__rn")
-        val two = e.join(e2, col("dst") === col("__m"))
-          .where(col("__d2") =!= col("src"))
-          .select(col("src"), col("__d2").as("dst"))
-        e.unionAll(two).distinct()
+        val ranked = e.select(col("src").as("__m"), col("dst").as("__d2"))
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy("__m").orderBy(capOrder: _*)))
+        val capped = if (maxDegree == 0) ranked else ranked.where(col("__rn") <= maxDegree)
+        // each intermediate m reaches itself (once, on its first row)
+        // and its capped list, so one join emits the 1-hop and the
+        // 2-hop rows together
+        val reach = capped.select(col("__m"), explode(
+          when(col("__rn") === 1, array(col("__m"), col("__d2")))
+            .otherwise(array(col("__d2")))).as("__x"))
+        // outer: an m with no out-edges matches nothing and reaches
+        // itself through the NULL
+        e.join(reach, col("dst") === col("__m"), "left")
+          .select(col("src"), coalesce(col("__x"), col("dst")).as("dst"))
+          .where(col("dst") =!= col("src"))
+          .distinct()
       }
     val v = values.select(col(nodeCol).cast(LongType).as("dst"),
       col(valueCol).try_cast(org.apache.spark.sql.types.DecimalType(12, 2)).as("__v"))
-    nbr.join(v, "dst")
+    val out = nbr.join(v, "dst")
       .groupBy(col("src"))
       .agg(count(lit(1)).as("n_neighbors"),
         // (38,2) summand: the default (22,2) sum
@@ -959,6 +985,11 @@ object GraphOps {
       .select(col("src").as("node"), col("n_neighbors"),
         col("__sum").cast(DoubleType).as("sum_val"),
         (col("__sum").cast(DoubleType) / col("n_neighbors")).as("avg_val"))
+    // the 2-hop result leaves its stage through a round-robin exchange
+    // of one row per node: a consumer that narrows partitions (a
+    // coalescing writer) then narrows only that small last stage, and
+    // the expansion keeps the session's parallelism
+    if (hops == 1) out else out.repartition(np)
   }
 
   /** 2-hop feature aggregation over WALKS instead of the distinct

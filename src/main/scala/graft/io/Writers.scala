@@ -66,19 +66,15 @@ object Writers {
     * for one partition date replaces exactly that partition.
     */
   def overwritePartitions(df: DataFrame, path: String, partitionBy: Seq[String],
-                          maxRecordsPerFile: Int = 100000): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      df.write
-        .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-        .mode(SaveMode.Overwrite)
-        .partitionBy(partitionBy: _*)
-        .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+                          maxRecordsPerFile: Int = 100000): Unit =
+    // the per-write option, not the session conf: a session-wide
+    // set-and-restore lets a concurrent writer on the same session plan
+    // with the other mode, and a static plan of this write deletes
+    // every partition it does not rewrite
+    df.write
+      .option("maxRecordsPerFile", maxRecordsPerFile.toString)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(SaveMode.Overwrite)
+      .partitionBy(partitionBy: _*)
+      .parquet(path)
 }

@@ -781,6 +781,28 @@ class GraphOpsSpec extends SparkSpec {
     assert(hashSum(100L) != idSum(100L), "hash sample should differ from id sample")
   }
 
+  test("neighborhoodAgg 2-hop: one edge shuffle, at most 6 jobs (q_neighborhood_agg, sf0.001)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    val qe = SparkEntry.queries("q_neighborhood_agg")(spark, "/root/testdata/sf0.001").queryExecution
+    val (rows, jobs) = withJobCount(qe.toRdd.count())
+    assert(rows > 0)
+    assert(jobs <= 6, s"$jobs jobs")
+    // the executed (AQE-final) plan: every materialized shuffle once,
+    // reused ones are leaves and not counted
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shuffles = helper.collect(qe.executedPlan) { case s: ShuffleExchangeExec => s }
+    // one hash shuffle (the edge set, by src); the only other is the
+    // round-robin spread of the per-node result rows
+    val hashed = shuffles.map(_.outputPartitioning).collect { case h: HashPartitioning =>
+      h.expressions.collect { case a: Attribute => a.name } }
+    assert(hashed == Seq(Seq("src")) &&
+      shuffles.count(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning]) == 1 &&
+      shuffles.size == 2, s"shuffles: ${shuffles.map(_.outputPartitioning)}")
+  }
+
   // ---- label propagation ---------------------------------------------
 
   test("labelPropagation: two triangles with one bridge resolve to two communities") {

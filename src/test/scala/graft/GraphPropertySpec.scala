@@ -102,43 +102,69 @@ class GraphPropertySpec extends SparkSpec {
   }
 
   test("neighborhoodAgg ≡ driver replay: 1-hop, capped 2-hop, partial value coverage") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(15016)
-    (1 to TRIALS).foreach { trial =>
+    // hash caps' sort keys come from the engine's own hash expressions,
+    // evaluated once per node id; the replay owns the cap, the
+    // 1-hop/2-hop union and the aggregate
+    def keys(h: Column): Map[Long, Long] =
+      (0L until N.toLong).toDF("d").select(col("d"), h).as[(Long, Long)].collect().toMap
+    val salt = "nbh"
+    val orders: Seq[(Option[String], Boolean, Long => (Long, Long))] = Seq(
+      (None, false, d => (d, d)),
+      (Some(salt), false, { val k = keys(xxhash64(lit(salt), col("d"))); d => (k(d), d) }),
+      (Some(salt), true, { val k = keys(graft.functions.Hashes.portable(
+        concat(lit(salt), lit("|"), col("d").cast("string")))); d => (k(d), d) }))
+    (1 to 3 * TRIALS).foreach { trial =>
       val edges = randomEdges(rnd, 30)
-      // value MAP: unique nodes, ~70% coverage, cent-exact doubles
-      val values = (0L until N.toLong).filter(_ => rnd.nextInt(10) < 7)
-        .map(v => (v, (rnd.nextInt(500) + 1) / 100.0))
-      val vmap = values.toMap
       val hops = 1 + trial % 2
-      val maxDegree = if (trial % 2 == 1 && rnd.nextBoolean()) 2 else 0
+      val maxDegree = rnd.nextInt(4) // 0 = uncapped
+      val (sampleSalt, portable, order) = orders(trial % 3)
+      // value ROWS, ~70% node coverage: a node may have two rows, and
+      // a row may be NULL or beyond DECIMAL(12,2) (excluded like NULL,
+      // still counted); the rest are cent-exact
+      val values: Seq[(Long, Option[Double])] = (0L until N.toLong).flatMap { v =>
+        Seq.fill(if (rnd.nextInt(10) < 3) 0 else 1 + rnd.nextInt(2))(v -> (rnd.nextInt(10) match {
+          case 0 => None
+          case 1 => Some((if (rnd.nextBoolean()) 1 else -1) * (1e10 + rnd.nextInt(5) * 1e9))
+          case _ => Some((rnd.nextInt(200001) - 100000) / 100.0)
+        }))
+      }
       val e = edges.filter(x => x._1 != x._2).distinct
       val nbr: Seq[(Long, Long)] =
         if (hops == 1) e
         else {
-          val out = e.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-          val capped = out.view.mapValues(ds =>
-            if (maxDegree == 0) ds else ds.take(maxDegree)).toMap
+          val capped = e.groupBy(_._1).view.mapValues { out =>
+            val ds = out.map(_._2).sortBy(order)
+            if (maxDegree == 0) ds else ds.take(maxDegree)
+          }.toMap
           (e ++ e.flatMap { case (u, m) =>
             capped.getOrElse(m, Nil).filter(_ != u).map(d2 => (u, d2))
           }).distinct
         }
-      val expect = nbr.filter(p => vmap.contains(p._2)).groupBy(_._1)
-        .map { case (u, ps) =>
-          val vs = ps.map(p => BigDecimal(vmap(p._2)).setScale(2))
-          u -> (ps.size.toLong, vs.sum.toDouble,
-            (vs.sum / vs.size).toDouble)
+      val rowsOf = values.groupBy(_._1)
+      val expect = nbr.flatMap { case (u, d) => rowsOf.getOrElse(d, Nil).map(r => u -> r._2) }
+        .groupBy(_._1).map { case (u, rs) =>
+          val vs = rs.flatMap(_._2).filter(v => math.abs(v) < 1e10)
+            .map(v => BigDecimal(v).setScale(2))
+          val sum = if (vs.isEmpty) None else Some(vs.sum.toDouble)
+          u -> (rs.size.toLong, sum, sum.map(_ / rs.size))
         }
       val got = GraphOps.neighborhoodAgg(edges.toDF("src", "dst"), "src", "dst",
           values.toDF("node", "value"), "node", "value",
-          hops = hops, maxDegree = maxDegree)
-        .collect().map(r => r.getLong(0) ->
-          (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-      assert(got.keySet == expect.keySet,
-        s"trial $trial hops=$hops cap=$maxDegree nodes")
+          hops = hops, maxDegree = maxDegree, sampleSalt = sampleSalt, portable = portable)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1),
+          Option(r.get(2)).map(_.asInstanceOf[Double]),
+          Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
+      val ctx = s"trial $trial hops=$hops cap=$maxDegree salt=$sampleSalt portable=$portable"
+      assert(got.keySet == expect.keySet, s"$ctx nodes")
       got.foreach { case (u, (n, s, a)) =>
         val (en, es, ea) = expect(u)
-        assert(n == en && math.abs(s - es) < 1e-9 && math.abs(a - ea) < 1e-9,
-          s"trial $trial hops=$hops cap=$maxDegree node $u: got ($n,$s,$a) want ($en,$es,$ea)")
+        def near(x: Option[Double], y: Option[Double]) =
+          x.isDefined == y.isDefined && x.zip(y).forall { case (p, q) => math.abs(p - q) < 1e-9 }
+        assert(n == en && near(s, es) && near(a, ea),
+          s"$ctx node $u: got ($n,$s,$a) want ($en,$es,$ea)")
       }
     }
   }

@@ -179,7 +179,30 @@ class MiscSpec extends SparkSpec {
     }
     assert(rows.exists(r => r.tasks > 0 && r.site.nonEmpty), s"stage rows: $rows")
     assert(rows.forall(_.job >= 0), s"stage without its job: $rows")
+    // sites name operators, not the thread frame that materializes
+    // every AQE stage alike
+    assert(rows.forall(!_.site.contains("withThreadLocalCaptured")), s"unnamed stage: $rows")
+    assert(rows.exists(_.site.contains("Scan parquet")), s"no scan stage named: $rows")
     assert(rows.map(_.taskMs) == rows.map(_.taskMs).sorted.reverse, "not ordered by task time")
+  }
+
+  test("overwritePartitions replaces only df's partitions and leaves the session conf alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val dir = tempDir("overwrite-parts") + "/t"
+      graft.io.Writers.overwritePartitions(Seq((1L, 1), (2L, 2), (3L, 3)).toDF("k", "day"),
+        dir, Seq("day"))
+      graft.io.Writers.overwritePartitions(Seq((20L, 2), (21L, 2)).toDF("k", "day"),
+        dir, Seq("day"))
+      assert(spark.conf.get(key) == "static")
+      val got = Readers.parquet(spark, dir).as[(Long, Int)].collect().sortBy(_._1).toSeq
+      assert(got == Seq((1L, 1), (3L, 3), (20L, 2), (21L, 2)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("maxValue ≡ agg(max) per type, in one job; empty and all-null frames give None") {
