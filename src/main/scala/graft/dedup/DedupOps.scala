@@ -478,33 +478,27 @@ object DedupOps {
       .where(size(col("__sh")) > 0)
       .select(col("doc_id"), minhashSignature(col("__sh"), k, portable).as("sig"))
 
-  /** The index's frozen parameter family, persisted in
-    * `dir/_graft_meta` at build time. The shingle/hash/signature params
-    * are a STRUCTURAL invariant of the artifacts (like the IVF index's
-    * frozen centroids): an append or probe with different params would
-    * silently diverge the shingle universe and the near-dup tier would
-    * find nothing. Every mutating/reading entry point validates against
-    * the file and fails fast on mismatch; a legacy (pre-meta) index has
-    * no file and skips the check. */
+  /** The index's frozen parameter family, the `dedup` family's view of
+    * its [[graft.util.IndexMeta]] header. The shingle/hash/signature
+    * params are a STRUCTURAL invariant of the artifacts (like the IVF
+    * index's frozen centroids): an append or probe with different
+    * params would silently diverge the shingle universe and the
+    * near-dup tier would find nothing. Every mutating/reading entry
+    * point validates against the header and fails fast on mismatch; a
+    * legacy (pre-header) index skips the check. */
   private[graft] final case class DedupIndexMeta(
       shingleN: Int, portable: Boolean, sigK: Int, sigBands: Int)
 
   // filesystem plumbing lives in graft.util.Fs (shared by every index
   // family — no domain module should depend on dedup for FS access)
-  import graft.util.Fs.{pathExists, readSmallFile, writeSmallFile}
-
-  private def metaString(m: DedupIndexMeta): String =
-    s"shingleN=${m.shingleN}\nportable=${m.portable}\nsigK=${m.sigK}\nsigBands=${m.sigBands}\n"
+  import graft.util.Fs.pathExists
 
   private[graft] def readDedupIndexMeta(
       spark: org.apache.spark.sql.SparkSession, dir: String): Option[DedupIndexMeta] =
-    readSmallFile(spark, s"$dir/_graft_meta").map { s =>
-      val kv = s.linesIterator.filter(_.contains('=')).map { l =>
-        val Array(k, v) = l.split("=", 2); (k.trim, v.trim)
-      }.toMap
-      DedupIndexMeta(kv("shingleN").toInt, kv("portable").toBoolean,
-        kv("sigK").toInt, kv("sigBands").toInt)
-    }
+    graft.util.IndexMeta.read(spark, dir, "dedup").map(dedupMeta)
+
+  private def dedupMeta(h: graft.util.IndexMeta.Header): DedupIndexMeta =
+    DedupIndexMeta(h.int("shingleN"), h.bool("portable"), h.int("sigK"), h.int("sigBands"))
 
   private def validateIndexParams(spark: org.apache.spark.sql.SparkSession,
                                   dir: String, shingleN: Int, portable: Boolean): Unit =
@@ -528,9 +522,9 @@ object DedupOps {
     * re-shingles or re-reads the 100 TB corpus text: consulting history
     * becomes column-pruned scans of compact artifacts. The parameter
     * family (`shingleN`, the `portable` hash tier, `sigK`/`sigBands`)
-    * is frozen into `dir/_graft_meta` — an append invariant, like the
-    * IVF index's frozen centroids — and validated by every later
-    * mutation/probe.
+    * is frozen into the index header ([[graft.util.IndexMeta]]) — an
+    * append invariant, like the IVF index's frozen centroids — and
+    * validated by every later mutation/probe.
     *
     * Layout: every tranche (the build and each append) lands under its
     * own `batch=<tag>` partition subdirectory, so a RE-APPEND with the
@@ -539,13 +533,14 @@ object DedupOps {
     * rows (duplicated `(doc_id, sh)` rows would silently inflate the
     * history-side jaccard denominators).
     *
-    * A rebuild over a LIVE index stages ALL artifacts plus the meta
-    * file in ONE tmp tree and swaps the whole directory in two renames:
-    * a crash can never pair a new shingle corpus with stale
-    * fingerprints (the per-artifact swap's failure window — the exact
-    * tier would wrongly drop new-corpus batch docs whose text matched
-    * the OLD corpus until a rerun). The first-ever build writes
-    * directly; there is nothing to keep readable.
+    * Every build stages ALL artifacts plus the header in ONE tree and
+    * publishes it whole ([[graft.merge.Merge.swapWith]]): a first build
+    * is born by stage + rename (or a first manifest), a rebuild over a
+    * live index swaps the whole directory. A crash can never pair a
+    * new shingle corpus with stale fingerprints (the per-artifact
+    * swap's failure window — the exact tier would wrongly drop
+    * new-corpus batch docs whose text matched the OLD corpus until a
+    * rerun), and never leaves a half-built index visible.
     */
   def writeDedupIndex(corpus: DataFrame, dir: String, idCol: String, textCol: String,
                       shingleN: Int = 3, portable: Boolean = false,
@@ -554,21 +549,15 @@ object DedupOps {
                         graft.merge.Merge.RenameCommit): Unit = {
     require(sigK % sigBands == 0, s"sigK=$sigK must divide into sigBands=$sigBands")
     val spark = corpus.sparkSession
-    def buildInto(root: String): Unit = {
-      // meta FIRST: a direct (first-ever) build that crashes mid-way
-      // must never leave complete-looking artifacts with param
-      // validation silently disabled — a meta-only or meta+partial dir
-      // fails loudly on read instead
-      val meta = DedupIndexMeta(shingleN, portable, sigK, sigBands)
-      writeSmallFile(spark, s"$root/_graft_meta", metaString(meta))
+    val meta = DedupIndexMeta(shingleN, portable, sigK, sigBands)
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("shingleN" -> shingleN,
+        "portable" -> portable, "sigK" -> sigK, "sigBands" -> sigBands))
       // three INDEPENDENT artifact chains overlapped on driver threads
       // ([[graft.util.Par]]): (sh → df), (fp),
       // (sig → bf) share no intermediate — each derived count reads
-      // back ITS OWN just-written row tranche, never a sibling. Crash
-      // contract unchanged: the swap paths publish all-or-nothing, and
-      // a direct first-ever build that dies mid-wave leaves a partial
-      // dir that fails loudly on read (meta exists, artifacts missing
-      // or uncommitted) whichever chain died first.
+      // back ITS OWN just-written row tranche, never a sibling. The
+      // publish is all-or-nothing whichever chain dies first.
       graft.util.Par.jobs(
         () => {
           hashedShingleRows(corpus, idCol, textCol, shingleN, portable)
@@ -587,22 +576,12 @@ object DedupOps {
       // a fresh build also resets the absorbed-tag ledger: the whole-dir
       // swap drops the previous ledger with the old tranches
     }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        // S3-safe: the whole tree lands in an immutable
-        // __data_ generation; one manifest PUT publishes it. Every
-        // index reader/mutator resolves the root through the manifest.
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (pathExists(spark, dir)) graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
-    }
   }
 
   /** Append a tranche of SURVIVING rows to the index — the steady-state
     * loop is `dedupAgainstIndex(batch) → append(survivors, tag)`; the
     * index only ever grows by deduplicated content. Params are
-    * validated against `dir/_graft_meta` (mismatch fails fast); a tag
+    * validated against the index header (mismatch fails fast); a tag
     * already ABSORBED by [[consolidateDedupIndex]] makes the call a
     * NO-OP — a crashed stream re-delivering an epoch whose tranche was
     * consolidated away must not re-append rows that already live in
@@ -951,8 +930,8 @@ object DedupOps {
     * estimated jaccard any history document reached (NULL for exact
     * dups and candidate-less docs). The steady-state loop runs the sig
     * tier, so when ITS drop-rate moves, this is the triage view —
-    * same banded candidate generation, same signature family from
-    * `_graft_meta`, same maxBucket cap as the operator it explains;
+    * same banded candidate generation, same signature family from the
+    * index header, same maxBucket cap as the operator it explains;
     * `decision != 'unique'` rows are exactly
     * [[dedupAgainstIndexApprox]]'s drop set (spec-tied). The history
     * side reads k longs/doc from `dir/sig`, never `dir/sh`.
@@ -961,10 +940,8 @@ object DedupOps {
                            threshold: Double = 0.5,
                            maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val idx = graft.merge.Merge.resolveDir(spark, dir)
-    val meta = readDedupIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
-      s"dedup index $idx has no _graft_meta — the approximate tier needs the frozen " +
-        "signature family; rebuild with writeDedupIndex"))
+    val header = graft.util.IndexMeta.open(spark, dir, "dedup", "writeDedupIndex")
+    val (idx, meta) = (header.dir, dedupMeta(header))
     require(pathExists(spark, s"$idx/sig"),
       s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
     val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()
@@ -1107,9 +1084,9 @@ object DedupOps {
     * estimated Jaccard.
     *
     * The signature family (shingleN, hash tier, k, bands) is read from
-    * `dir/_graft_meta` — never passed by the caller — so a probe can
+    * the index header — never passed by the caller — so a probe can
     * never band with different params than the at-rest signatures were
-    * built with (the structural invariant the meta file exists for).
+    * built with (the structural invariant the header exists for).
     * Requires a sig-bearing index ([[writeDedupIndex]] always writes
     * one; legacy pre-sig indexes need a rebuild).
     */
@@ -1117,10 +1094,8 @@ object DedupOps {
                               threshold: Double = 0.5,
                               maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val idx = graft.merge.Merge.resolveDir(spark, dir)
-    val meta = readDedupIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
-      s"dedup index $idx has no _graft_meta — the approximate tier needs the frozen " +
-        "signature family; rebuild with writeDedupIndex"))
+    val header = graft.util.IndexMeta.open(spark, dir, "dedup", "writeDedupIndex")
+    val (idx, meta) = (header.dir, dedupMeta(header))
     require(pathExists(spark, s"$idx/sig"),
       s"dedup index $idx has no sig artifact; rebuild with writeDedupIndex")
     val histFp = Readers.parquet(spark, s"$idx/fp").select("fp").distinct()

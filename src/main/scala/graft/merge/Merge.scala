@@ -95,7 +95,7 @@ object Merge {
     * PointerCommit rewrite of a rename-committed dir would publish a
     * manifest readers of the root files never consult, leaving them on
     * stale data forever while the old root files are never GC'd. Both
-    * now fail fast (r14 ADVICE #2). [[overwrite]] stays the sanctioned
+    * fail fast before anything is written. [[overwrite]] stays the sanctioned
     * CONVERTER in both directions — it is by definition a full rewrite,
     * and its pointer-mode publish GCs the superseded root files one
     * graced commit later (see [[pointerSwap]]). */
@@ -135,30 +135,30 @@ object Merge {
     * populates a fresh directory (stage sibling under RenameCommit, an
     * immutable `__data_` generation under PointerCommit) while readers
     * keep seeing the OLD tree, then the swap publishes it atomically —
-    * the protocol the at-rest index families (rank/group vectors,
-    * dedup/winnow consolidation) share with the relational sinks. An
+    * the protocol every at-rest index build and ledger fold (and the
+    * rank/group vectors) share with the relational sinks. An
     * absent target is born in place under RenameCommit (no readers
     * yet, stage + one rename) and through a first manifest under
     * PointerCommit. */
   def swapWith(spark: SparkSession, dir: String,
-               commit: Commit)(write: String => Unit): Unit = commit match {
-    case PointerCommit =>
-      requireCommitMode(spark, dir, commit, "Merge.swapWith")
-      pointerSwap(spark, dir)(write)
-    case RenameCommit =>
-      requireCommitMode(spark, dir, commit, "Merge.swapWith")
-      val f = fs(spark, dir)
-      val p = new Path(dir)
-      if (f.exists(p)) atomicSwap(spark, dir)(write)
-      else {
-        val tmp = new Path(dir + "__stage_" + UUID.randomUUID().toString.take(8))
-        try write(tmp.toString)
-        catch { case e: Throwable => f.delete(tmp, true); throw e }
-        if (!f.rename(tmp, p)) {
-          f.delete(tmp, true)
-          throw new IllegalStateException(s"rename $tmp -> $p failed")
+               commit: Commit)(write: String => Unit): Unit = {
+    requireCommitMode(spark, dir, commit, "Merge.swapWith")
+    commit match {
+      case PointerCommit => pointerSwap(spark, dir)(write)
+      case RenameCommit =>
+        val f = fs(spark, dir)
+        val p = new Path(dir)
+        if (f.exists(p)) atomicSwap(spark, dir)(write)
+        else {
+          val tmp = new Path(dir + "__stage_" + UUID.randomUUID().toString.take(8))
+          try write(tmp.toString)
+          catch { case e: Throwable => f.delete(tmp, true); throw e }
+          if (!f.rename(tmp, p)) {
+            f.delete(tmp, true)
+            throw new IllegalStateException(s"rename $tmp -> $p failed")
+          }
         }
-      }
+    }
   }
 
   /** The insert dispatcher (`insert_type ∈ {append, overwrite, upsert}`,
@@ -173,7 +173,7 @@ object Merge {
 
   /** INSERT INTO target SELECT * FROM stage (`_append` `rs_client.py:314-337`).
     *
-    * Commit-mode aware (r13 ADVICE #3): a plain `SaveMode.Append` onto a
+    * Commit-mode aware: a plain `SaveMode.Append` onto a
     * pointer-committed target would land files in the directory ROOT
     * while `readTarget` keeps resolving the `_current` manifest — the
     * load "succeeds" but readers never see the rows and the GC never
@@ -248,7 +248,7 @@ object Merge {
     if (!targetExists(spark, targetDir)) { overwrite(stage, targetDir, commit); return }
 
     if (prunePartitions.nonEmpty) {
-      // same fail-fast as append (r15 review): dynamic partition
+      // same fail-fast as append: dynamic partition
       // overwrite writes into the directory ROOT — on a
       // pointer-committed target those partitions land beside the
       // __data_ generations where manifest readers never look
@@ -341,8 +341,8 @@ object Merge {
     *   - crash during the publish  → either the old or the new
     *     manifest is visible, never a torn one (single-object swap).
     *
-    * After a successful publish, GC is best-effort and READER-GRACED
-    * (r13 ADVICE #5): the JUST-SUPERSEDED data dir (the one the old
+    * After a successful publish, GC is best-effort and READER-GRACED:
+    * the JUST-SUPERSEDED data dir (the one the old
     * manifest named) survives this commit and is collected on the NEXT
     * one — a reader that resolved the old manifest mid-swap keeps a
     * full commit interval to finish its scan, on every store (the
@@ -380,8 +380,7 @@ object Merge {
       // stray collection targets RENAME-COMMIT leftovers only: data-
       // file shapes a Spark/engine writer produces. An out-of-protocol
       // file an operator or foreign tool dropped at the root is NOT
-      // ours to destroy (r15 ADVICE #3: the old clause deleted ANY
-      // unrecognized entry once a prior manifest existed) — those are
+      // ours to destroy, even once a prior manifest exists — those are
       // kept and logged so the anomaly is visible.
       val dataShape = n.startsWith("part-") || n == "_SUCCESS" ||
         n.endsWith(".parquet") || n.endsWith(".crc") ||

@@ -39,10 +39,11 @@ import graft.io.Readers
   *
   * Hashing: `portable = true` routes through the md5 tier so an
   * oracle replays every position; default xxhash64. The `(mBits, k,
-  * portable)` triple is FROZEN in a `_graft_bloom_meta` file at birth
-  * — positions from mismatched parameters would silently never match,
-  * so appends and probes validate against the stored triple and fail
-  * fast on drift (the BM25 `nbuckets` contract).
+  * portable)` triple is FROZEN in the index header
+  * ([[graft.util.IndexMeta]], the file every at-rest family keeps) at
+  * birth — positions from mismatched parameters would silently never
+  * match, so appends and probes validate against the stored triple and
+  * fail fast on drift (the BM25 `nbuckets` contract).
   *
   * 100 TB shape: the probe joins the batch against the ≤m-row
   * position set k times on the position key — AQE broadcasts the set
@@ -51,30 +52,12 @@ import graft.io.Readers
   */
 object BloomIndex {
 
-  private val MetaName = "_graft_bloom_meta"
+  private def triple(h: graft.util.IndexMeta.Header): (Long, Int, Boolean) =
+    (h.long("mBits"), h.int("k"), h.bool("portable"))
 
-  private def metaPath(dir: String) = new org.apache.hadoop.fs.Path(dir, MetaName)
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeMeta(spark: SparkSession, dir: String,
-                        mBits: Long, k: Int, portable: Boolean): Unit = {
-    val out = fs(spark, dir).create(metaPath(dir), true)
-    try out.write(s"$mBits $k $portable".getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): (Long, Int, Boolean) = {
-    val f = fs(spark, dir)
-    require(f.exists(metaPath(dir)),
-      s"BloomIndex: no $MetaName under $dir — not a bloom index (build with writeBloomTranche)")
-    val in = f.open(metaPath(dir))
-    val parts =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.split(" ")
-      finally in.close()
-    (parts(0).toLong, parts(1).toInt, parts(2).toBoolean)
-  }
+  /** The frozen `(mBits, k, portable)`; fails fast on a non-index dir. */
+  private def frozenParams(spark: SparkSession, dir: String): (Long, Int, Boolean) =
+    triple(graft.util.IndexMeta.open(spark, dir, "bloom", "writeBloomTranche"))
 
   /** The k position columns for a key — seeded hash family, each
     * reduced mod mBits. Both tiers yield non-negative hashes into
@@ -98,23 +81,21 @@ object BloomIndex {
     require(mBits >= 64, s"writeBloomTranche: mBits=$mBits too small")
     require(k >= 1 && k <= 8, s"writeBloomTranche: k=$k not in [1,8]")
     val spark = df.sparkSession
-    val exists = fs(spark, dir).exists(metaPath(dir))
-    if (exists) {
-      val (m0, k0, p0) = readMeta(spark, dir)
-      require((m0, k0, p0) == ((mBits, k, portable)),
-        s"writeBloomTranche: params ($mBits,$k,$portable) != frozen ($m0,$k0,$p0)")
-    }
+    val frozen = graft.util.IndexMeta.read(spark, dir, "bloom").map(triple)
+    frozen.foreach(f => require(f == ((mBits, k, portable)),
+      s"writeBloomTranche: params ($mBits,$k,$portable) != frozen $f"))
     val key = col(keyCol)
     df.where(key.isNotNull)
       .select(explode(array(positionCols(key, mBits, k, portable): _*)).as("pos"))
       .distinct()
       .write.mode("overwrite").parquet(s"$dir/batch=$tag")
-    if (!exists) writeMeta(spark, dir, mBits, k, portable)
+    if (frozen.isEmpty)
+      graft.util.IndexMeta.write(spark, dir, Seq("mBits" -> mBits, "k" -> k, "portable" -> portable))
   }
 
   /** The merged position set (≤ mBits rows however many tranches). */
   def readBloomPositions(spark: SparkSession, dir: String): DataFrame = {
-    readMeta(spark, dir) // fail fast on a non-index dir
+    frozenParams(spark, dir) // fail fast on a non-index dir
     Readers.parquet(spark, dir).select(col("pos")).distinct()
   }
 
@@ -145,7 +126,7 @@ object BloomIndex {
   private def flagAgainst(batch: DataFrame, dir: String, keyCol: String)
   : (DataFrame, Column, Seq[String]) = {
     val spark = batch.sparkSession
-    val (mBits, k, portable) = readMeta(spark, dir)
+    val (mBits, k, portable) = frozenParams(spark, dir)
     val posSet = readBloomPositions(spark, dir)
     val ps = positionCols(col(keyCol), mBits, k, portable)
     val joined = ps.zipWithIndex.foldLeft(batch) { case (acc, (p, i)) =>
@@ -174,7 +155,7 @@ object BloomIndex {
     * dial for this family is [[bloomIndexStats]]' fill fraction,
     * which needs a data scan and so stays a separate gauge. */
   def bloomIndexHealth(spark: SparkSession, dir: String): DataFrame = {
-    readMeta(spark, dir) // fail fast on a non-index dir
+    frozenParams(spark, dir) // fail fast on a non-index dir
     graft.util.Tranches.health(spark, dir, "pos")
   }
 
@@ -182,7 +163,7 @@ object BloomIndex {
     * saturation dial (false-possible rate ≈ fill^k); one scan of the
     * ≤m-row artifact. */
   def bloomIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val (mBits, k, _) = readMeta(spark, dir)
+    val (mBits, k, _) = frozenParams(spark, dir)
     readBloomPositions(spark, dir)
       .agg(count(lit(1)).as("n_positions"))
       .select(lit(mBits).as("m_bits"), lit(k).as("k"), col("n_positions"),

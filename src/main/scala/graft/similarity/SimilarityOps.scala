@@ -26,7 +26,6 @@ import graft.io.Readers
   */
 object SimilarityOps {
 
-  import graft.util.Fs.{pathExists, readSmallFile, writeSmallFile}
 
   /** Deterministic sequential-fold dot product (double) — generic over
     * numeric array element types. For the float-array hot path use
@@ -194,66 +193,41 @@ object SimilarityOps {
     * IS the structural invariant ([[signBucket]] is a pure function of
     * (vector, nbits) — a probe under a different width re-buckets
     * every query and silently stops finding neighbors), so it is
-    * frozen into `dir/_graft_meta` like every at-rest family's params
-    * and read back by append/probe. Rows live under
-    * `dir/vec/batch=<tag>/lsh_bucket=<b>` tranches — the shared
+    * frozen into the index header ([[graft.util.IndexMeta]]) like every
+    * at-rest family's params and read back by append/probe. Rows live
+    * under `dir/vec/batch=<tag>/lsh_bucket=<b>` tranches — the shared
     * lifecycle (overwrite-idempotent tagged appends, consolidation,
-    * rebuild via atomic swap). */
+    * builds published whole through [[graft.merge.Merge.swapWith]]). */
   def lshWriteIndex(corpus: DataFrame, dir: String, cidCol: String, vecCol: String,
                     nbits: Int = 8,
                     commit: graft.merge.Merge.Commit =
                       graft.merge.Merge.RenameCommit): Unit = {
     val spark = corpus.sparkSession
-    def buildInto(root: String): Unit = {
-      writeSmallFile(spark, s"$root/_graft_meta", s"nbits=$nbits\n")
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("nbits" -> nbits))
       lshIndexRows(corpus, cidCol, vecCol, nbits)
         .write.mode("overwrite").partitionBy("lsh_bucket").parquet(s"$root/vec/batch=build")
     }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (pathExists(spark, dir)) graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
-    }
   }
 
-  /** Meta-file key lookup that names the FAMILY MISMATCH when absent:
-    * pointing an IVF probe at an IVF-PQ dir (or any cross-family mixup)
-    * must fail with the dir, the missing key, and the remedy — not a
-    * bare `NoSuchElementException: key not found`. */
-  private def metaKey(kv: Map[String, String], key: String,
-                      dir: String, family: String): String =
-    kv.getOrElse(key, throw new IllegalArgumentException(
-      s"$family index $dir: _graft_meta has no '$key' — the directory holds a " +
-        s"DIFFERENT index family (meta keys: ${kv.keys.toSeq.sorted.mkString(", ")}); " +
-        s"probe it with its own family's operators, or rebuild it as $family"))
-
-  private[graft] def readLshNbits(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String): Int =
-    readSmallFile(spark, s"$dir/_graft_meta")
-      .map { s =>
-        s.linesIterator.find(_.startsWith("nbits=")).map(_.stripPrefix("nbits=").trim.toInt)
-          .getOrElse(throw new IllegalArgumentException(
-            s"LSH index $dir: _graft_meta has no 'nbits' — the directory holds a " +
-              "DIFFERENT index family; probe it with its own family's operators"))
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"LSH index $dir has no _graft_meta — not a written LSH index (build it " +
-          "with lshWriteIndex; the frozen nbits is the bucket-function contract)"))
+  /** The LSH index's resolved directory and frozen `nbits`. */
+  private def openLshIndex(spark: org.apache.spark.sql.SparkSession,
+                           indexDir: String): (String, Int) = {
+    val h = graft.util.IndexMeta.open(spark, indexDir, "LSH", "lshWriteIndex")
+    (h.dir, h.int("nbits"))
+  }
 
   /** Incrementally append vectors to a written LSH layout — new rows
     * land under their own `batch=<tag>` tranche only (untouched
     * tranches see zero I/O), bucketed with the INDEX's frozen `nbits`
-    * from `_graft_meta`. Same tagged-tranche contract as
+    * from its header. Same tagged-tranche contract as
     * [[ivfAppendToIndex]]. Probe-after-append ≡ probe of a one-shot
     * build over the unioned corpus (spec-proven).
     */
   def lshAppendToIndex(newRows: DataFrame, indexDir: String, cidCol: String, vecCol: String,
                        tag: String): Unit = {
     val spark = newRows.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val nbits = readLshNbits(spark, dir)
+    val (dir, nbits) = openLshIndex(spark, indexDir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "lshAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(Readers.parquet(spark, s"$dir/vec").select("corpus_id"),
@@ -269,7 +243,7 @@ object SimilarityOps {
                           indexDir: String,
                           commit: graft.merge.Merge.Commit =
                             graft.merge.Merge.RenameCommit): Unit = {
-    readLshNbits(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    openLshIndex(spark, indexDir)
     graft.util.Tranches.foldLedger(spark, indexDir, Seq("vec" -> Seq("lsh_bucket")),
       witness = "vec", commit = commit)
   }
@@ -283,13 +257,12 @@ object SimilarityOps {
     * neighborhood when `multiProbe`) and top-k score only the matching
     * bucket partitions — the broadcast bucket join dynamic-partition-
     * prunes the index scan exactly like [[ivfProbeTopK]]. `nbits`
-    * comes from the index's `_graft_meta`, never callers.
+    * comes from the index header, never callers.
     */
   def lshProbeTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                    queries: DataFrame, qidCol: String, vecCol: String,
                    k: Int, multiProbe: Boolean = false): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val nbits = readLshNbits(spark, dir)
+    val (dir, nbits) = openLshIndex(spark, indexDir)
     val qBase = queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv"),
       l2NormF(col(vecCol)).as("__qn"), signBucket(col(vecCol), nbits).as("lsh_bucket"))
     val q =
@@ -450,46 +423,34 @@ object SimilarityOps {
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
-  /** The IVF index's frozen quantizer, persisted in `dir/_graft_meta`
-    * at build time. The centroids are a STRUCTURAL invariant of the
-    * artifact (same role as the dedup index's shingle/hash params): a
-    * row's home list is a function of the centroid family, so probing
-    * or appending under DIFFERENT centroids silently prunes the wrong
-    * partitions and near-dups vanish without an error. Readers take
-    * the quantizer from the file, never from callers. Centroid doubles
-    * are serialized as raw IEEE-754 long bits — bit-exact round-trip,
-    * locale-proof (a decimal repr that loses one ulp would reassign
-    * boundary vectors). */
+  /** The IVF index's frozen quantizer, its view of the
+    * [[graft.util.IndexMeta]] header written at build time (`dir` is
+    * the resolved index directory). The centroids are a STRUCTURAL
+    * invariant of the artifact (same role as the dedup index's
+    * shingle/hash params): a row's home list is a function of the
+    * centroid family, so probing or appending under DIFFERENT
+    * centroids silently prunes the wrong partitions and near-dups
+    * vanish without an error. Readers take the quantizer from the
+    * header, never from callers; a pre-header index must be rebuilt so
+    * its centroids become part of the artifact. */
   private[graft] final case class IvfIndexMeta(
-      nLists: Int, dim: Int, centroids: Array[(Int, Array[Double])])
+      dir: String, nLists: Int, dim: Int, centroids: Array[(Int, Array[Double])])
 
-  private def ivfMetaString(m: IvfIndexMeta): String =
-    s"nLists=${m.nLists}\ndim=${m.dim}\n" +
-      m.centroids.map { case (i, v) =>
-        s"centroid=$i:" + v.map(java.lang.Double.doubleToRawLongBits).mkString(",")
-      }.mkString("", "\n", "\n")
+  /** One `centroid=<list>:<bits>` line per list. */
+  private def centroidEntries(cents: Array[(Int, Array[Double])]): Seq[(String, String)] =
+    cents.toSeq.map { case (i, v) => "centroid" -> s"$i:${graft.util.IndexMeta.encodeDoubles(v)}" }
 
-  private[graft] def readIvfIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[IvfIndexMeta] =
-    readSmallFile(spark, s"$dir/_graft_meta").map { s =>
-      val lines = s.linesIterator.toSeq
-      val kv = lines.filter(l => l.contains('=') && !l.startsWith("centroid="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k.trim, v.trim) }.toMap
-      val cents = lines.filter(_.startsWith("centroid=")).map { l =>
-        val body = l.stripPrefix("centroid=")
-        val Array(i, bits) = body.split(":", 2)
-        (i.toInt, bits.split(",").map(b => java.lang.Double.longBitsToDouble(b.toLong)))
-      }.toArray
-      IvfIndexMeta(metaKey(kv, "nLists", dir, "IVF").toInt,
-        metaKey(kv, "dim", dir, "IVF").toInt, cents)
-    }
+  private def centroidsOf(h: graft.util.IndexMeta.Header): Array[(Int, Array[Double])] =
+    h.all("centroid").map { c =>
+      val Array(i, bits) = c.split(":", 2)
+      (i.toInt, graft.util.IndexMeta.decodeDoubles(bits))
+    }.toArray
 
-  private def requireIvfMeta(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): IvfIndexMeta =
-    readIvfIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"IVF index $dir has no _graft_meta — not a written IVF index (build it " +
-        "with ivfWriteIndex; the frozen quantizer IS the index contract, and a " +
-        "pre-meta index must be rebuilt so its centroids become part of the artifact)"))
+  private[graft] def openIvfIndex(spark: org.apache.spark.sql.SparkSession,
+                                  indexDir: String): IvfIndexMeta = {
+    val h = graft.util.IndexMeta.open(spark, indexDir, "IVF", "ivfWriteIndex")
+    IvfIndexMeta(h.dir, h.int("nLists"), h.int("dim"), centroidsOf(h))
+  }
 
   /** Materialize the IVF index: assign every corpus vector its nearest
     * list and write the corpus PARTITIONED BY the list id. This is the
@@ -498,12 +459,12 @@ object SimilarityOps {
     * partition-PRUNED scan — the other nLists−nProbe partitions are
     * never read.
     *
-    * Layout: `dir/_graft_meta` freezes the quantizer (centroids +
+    * Layout: the index header freezes the quantizer (centroids +
     * nLists + dim); vector rows live under `dir/vec/batch=<tag>/
     * ivf_list=<n>` tranches — the same lifecycle discipline as the
     * dedup/winnow indexes (overwrite-idempotent tagged appends,
-    * consolidation with an absorbed-tag ledger, rebuild over a live
-    * index via one whole-dir atomic swap). Returns the centroids for
+    * consolidation with an absorbed-tag ledger, every build published
+    * whole through [[graft.merge.Merge.swapWith]]). Returns the centroids for
     * caller convenience (e.g. feeding the in-memory [[ivfTopK]]);
     * every reader of THIS index takes them from the artifact.
     */
@@ -516,21 +477,11 @@ object SimilarityOps {
     val spark = corpus.sparkSession
     val centroids = precomputed.getOrElse(ivfCentroids(corpus, vecCol, nLists, seed))
     require(centroids.nonEmpty, "ivfWriteIndex: empty centroid family")
-    def buildInto(root: String): Unit = {
-      // meta first: the row write lands in a subdir, so the only crash
-      // window leaves meta-without-vectors — readers see an empty index
-      // (fail-safe), never vectors under an unrecorded quantizer
-      writeSmallFile(spark, s"$root/_graft_meta",
-        ivfMetaString(IvfIndexMeta(nLists, centroids.head._2.length, centroids)))
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("nLists" -> nLists,
+        "dim" -> centroids.head._2.length) ++ centroidEntries(centroids))
       ivfIndexRows(corpus, cidCol, vecCol, centroids)
         .write.mode("overwrite").partitionBy("ivf_list").parquet(s"$root/vec/batch=build")
-    }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (pathExists(spark, dir)) graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
     }
     centroids
   }
@@ -538,7 +489,7 @@ object SimilarityOps {
   /** Incrementally append vectors to a written IVF index — the index
     * lifecycle's add() step (a 100 TB index is never rebuilt for a
     * daily ingest batch). New rows are assigned with the index's
-    * FROZEN centroids, read from `_graft_meta` — the quantizer is
+    * FROZEN centroids, read from its header — the quantizer is
     * trained at build time, and appending must not move list
     * boundaries or every existing row's home list would silently
     * shift — and land under their own `batch=<tag>` tranche only;
@@ -556,8 +507,8 @@ object SimilarityOps {
   def ivfAppendToIndex(newRows: DataFrame, indexDir: String, cidCol: String, vecCol: String,
                        tag: String): Unit = {
     val spark = newRows.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = requireIvfMeta(spark, dir)
+    val meta = openIvfIndex(spark, indexDir)
+    val dir = meta.dir
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(Readers.parquet(spark, s"$dir/vec").select("corpus_id"),
@@ -579,7 +530,7 @@ object SimilarityOps {
                           indexDir: String,
                           commit: graft.merge.Merge.Commit =
                             graft.merge.Merge.RenameCommit): Unit = {
-    requireIvfMeta(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    openIvfIndex(spark, indexDir)
     graft.util.Tranches.foldLedger(spark, indexDir, Seq("vec" -> Seq("ivf_list")),
       witness = "vec", commit = commit)
   }
@@ -597,7 +548,7 @@ object SimilarityOps {
     Readers.parquet(spark, s"$dir/vec").drop("batch")
 
   /** Probe a written IVF index: quantize each query to its `nProbe`
-    * nearest lists (quantizer from `_graft_meta` — never
+    * nearest lists (quantizer from the index header — never
     * caller-supplied) and top-k score ONLY those partitions. The
     * `ivf_list IN (…)` filter on the partition column prunes the scan
     * (verify with `.explain`: the FileScan's partitionFilters carry the
@@ -608,8 +559,8 @@ object SimilarityOps {
   def ivfProbeTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                    queries: DataFrame, qidCol: String, vecCol: String,
                    k: Int, nProbe: Int): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = requireIvfMeta(spark, dir)
+    val meta = openIvfIndex(spark, indexDir)
+    val dir = meta.dir
     val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv"),
       l2NormF(col(vecCol)).as("__qn"),
       explode(nearestListsExpr(meta.centroids, col(vecCol),
@@ -854,55 +805,27 @@ object SimilarityOps {
   }
 
   /** The IVF-PQ index's frozen quantizer PAIR (coarse centroids AND
-    * product-quantizer codebooks), persisted in `dir/_graft_meta` —
-    * re-encoding with refit codebooks would make old and new codes
-    * incomparable under one ADC table, so both fits are structural
-    * invariants of the artifact. Same bit-exact long-bits
-    * serialization as the IVF meta. */
+    * product-quantizer codebooks), its view of the
+    * [[graft.util.IndexMeta]] header (`dir` is the resolved index
+    * directory) — re-encoding with refit codebooks would make old and
+    * new codes incomparable under one ADC table, so both fits are
+    * structural invariants of the artifact. */
   private[graft] final case class IvfPqIndexMeta(
-      nLists: Int, m: Int, codebookK: Int,
+      dir: String, nLists: Int, m: Int, codebookK: Int,
       centroids: Array[(Int, Array[Double])],
       codebooks: Array[Array[Array[Double]]])
 
-  private def ivfPqMetaString(meta: IvfPqIndexMeta): String =
-    s"nLists=${meta.nLists}\nm=${meta.m}\ncodebookK=${meta.codebookK}\n" +
-      meta.centroids.map { case (i, v) =>
-        s"centroid=$i:" + v.map(java.lang.Double.doubleToRawLongBits).mkString(",")
-      }.mkString("\n") + "\n" +
-      meta.codebooks.zipWithIndex.flatMap { case (book, sub) =>
-        book.zipWithIndex.map { case (v, code) =>
-          s"book=$sub:$code:" + v.map(java.lang.Double.doubleToRawLongBits).mkString(",")
-        }
-      }.mkString("", "\n", "\n")
-
-  private[graft] def readIvfPqIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[IvfPqIndexMeta] =
-    readSmallFile(spark, s"$dir/_graft_meta").map { s =>
-      val lines = s.linesIterator.toSeq
-      val kv = lines.filter(l => l.contains('=') &&
-          !l.startsWith("centroid=") && !l.startsWith("book="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k.trim, v.trim) }.toMap
-      val cents = lines.filter(_.startsWith("centroid=")).map { l =>
-        val Array(i, bits) = l.stripPrefix("centroid=").split(":", 2)
-        (i.toInt, bits.split(",").map(b => java.lang.Double.longBitsToDouble(b.toLong)))
-      }.toArray
-      val m = metaKey(kv, "m", dir, "IVF-PQ").toInt
-      val k = metaKey(kv, "codebookK", dir, "IVF-PQ").toInt
-      val books = Array.ofDim[Array[Double]](m, k)
-      lines.filter(_.startsWith("book=")).foreach { l =>
-        val Array(sub, code, bits) = l.stripPrefix("book=").split(":", 3)
-        books(sub.toInt)(code.toInt) =
-          bits.split(",").map(b => java.lang.Double.longBitsToDouble(b.toLong))
-      }
-      IvfPqIndexMeta(metaKey(kv, "nLists", dir, "IVF-PQ").toInt, m, k, cents, books)
+  private[graft] def openIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+                                    indexDir: String): IvfPqIndexMeta = {
+    val h = graft.util.IndexMeta.open(spark, indexDir, "IVF-PQ", "ivfPqWriteIndex")
+    val (m, k) = (h.int("m"), h.int("codebookK"))
+    val books = Array.ofDim[Array[Double]](m, k)
+    h.all("book").foreach { b =>
+      val Array(sub, code, bits) = b.split(":", 3)
+      books(sub.toInt)(code.toInt) = graft.util.IndexMeta.decodeDoubles(bits)
     }
-
-  private def requireIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): IvfPqIndexMeta =
-    readIvfPqIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"IVF-PQ index $dir has no _graft_meta — not a written IVF-PQ index (build " +
-        "it with ivfPqWriteIndex; the frozen centroid+codebook pair IS the index " +
-        "contract, and a pre-meta index must be rebuilt)"))
+    IvfPqIndexMeta(h.dir, h.int("nLists"), m, k, centroidsOf(h), books)
+  }
 
   /** Materialize the IVF-PQ index — the at-rest billion-scale ANN
     * layout: one row per corpus vector holding ONLY
@@ -913,7 +836,7 @@ object SimilarityOps {
     * at 100 TB the index is ~dim·4/m× smaller than the corpus and the
     * probe reads nProbe/nLists of THAT.
     *
-    * Layout: `dir/_graft_meta` freezes BOTH quantizers; code rows live
+    * Layout: the index header freezes BOTH quantizers; code rows live
     * under `dir/pq/batch=<tag>/ivf_list=<n>` tranches (same lifecycle
     * as [[ivfWriteIndex]]). Returns (centroids, codebooks) for caller
     * convenience; every reader of this index takes them from the
@@ -932,33 +855,31 @@ object SimilarityOps {
       val dim = corpus.select(size(col(vecCol))).head().getInt(0)
       pqCodebooks(corpus, vecCol, dim, m, codebookK, seed)
     }
-    def buildInto(root: String): Unit = {
-      writeSmallFile(spark, s"$root/_graft_meta",
-        ivfPqMetaString(IvfPqIndexMeta(nLists, books.length,
-          books.head.length, cents, books)))
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("nLists" -> nLists,
+        "m" -> books.length, "codebookK" -> books.head.length) ++
+        centroidEntries(cents) ++
+        books.toSeq.zipWithIndex.flatMap { case (book, sub) =>
+          book.toSeq.zipWithIndex.map { case (v, code) =>
+            "book" -> s"$sub:$code:${graft.util.IndexMeta.encodeDoubles(v)}"
+          }
+        })
       ivfPqIndexRows(corpus, cidCol, vecCol, cents, books)
         .write.mode("overwrite").partitionBy("ivf_list").parquet(s"$root/pq/batch=build")
-    }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (pathExists(spark, dir)) graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
     }
     (cents, books)
   }
 
   /** Append to a written IVF-PQ index with the index's frozen
-    * quantizers, read from `_graft_meta`. Same tagged-tranche contract
+    * quantizers, read from its header. Same tagged-tranche contract
     * as [[ivfAppendToIndex]]: overwrite-idempotent per tag, absorbed
     * tags no-op only on provable replay, untouched tranches see zero
     * I/O. */
   def ivfPqAppendToIndex(newRows: DataFrame, indexDir: String, cidCol: String, vecCol: String,
                          tag: String): Unit = {
     val spark = newRows.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = requireIvfPqMeta(spark, dir)
+    val meta = openIvfPqIndex(spark, indexDir)
+    val dir = meta.dir
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "ivfPqAppendToIndex",
       () => newRows.select(col(cidCol).as("corpus_id")).distinct()
         .join(Readers.parquet(spark, s"$dir/pq").select("corpus_id"),
@@ -980,8 +901,7 @@ object SimilarityOps {
     * the id and partition columns — the vectors never load. */
   def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
                     indexDir: String): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    requireIvfMeta(spark, dir)
+    val dir = openIvfIndex(spark, indexDir).dir
     val nTranches = graft.util.Tranches.names(spark, s"$dir/vec").size
     Readers.parquet(spark, s"$dir/vec")
       .groupBy(col("ivf_list").cast(IntegerType).as("ivf_list"))
@@ -1010,7 +930,7 @@ object SimilarityOps {
                             indexDir: String,
                             commit: graft.merge.Merge.Commit =
                               graft.merge.Merge.RenameCommit): Unit = {
-    requireIvfPqMeta(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    openIvfPqIndex(spark, indexDir)
     graft.util.Tranches.foldLedger(spark, indexDir, Seq("pq" -> Seq("ivf_list")),
       witness = "pq", commit = commit)
   }
@@ -1034,8 +954,8 @@ object SimilarityOps {
                      qidCol: String, cidCol: String, vecCol: String,
                      k: Int, nProbe: Int, shortlist: Int = 100): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = requireIvfPqMeta(spark, dir)
+    val meta = openIvfPqIndex(spark, indexDir)
+    val dir = meta.dir
     val (centroids, codebooks) = (meta.centroids, meta.codebooks)
     val nSub = codebooks.length
     val q = queries.select(col(qidCol).as("query_id"),
@@ -1098,7 +1018,7 @@ object SimilarityOps {
     * mode); serving budgets (`nProbe < nLists`) trade the same recall
     * as [[ivfProbeTopK]]: a near-dup whose history vector lives in an
     * unprobed list is missed. The quantizer comes from the index's
-    * `_graft_meta` — never callers: batch vectors quantized under a
+    * header — never callers: batch vectors quantized under a
     * different centroid family would probe the WRONG partitions and
     * near-dups would vanish without an error. Scores round to 6 dp
     * like every cosine in the engine, so decisions are replayable
@@ -1116,8 +1036,7 @@ object SimilarityOps {
   def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 batch: DataFrame, idCol: String, vecCol: String,
                                 threshold: Double, nProbe: Int): DataFrame = {
-    val resolved = graft.merge.Merge.resolveDir(spark, dir)
-    val meta = requireIvfMeta(spark, resolved)
+    val meta = openIvfIndex(spark, dir)
     // persisted: the probe pipeline (norms + fused nearest-centroids +
     // explode) forks into the probed-list collect below and the
     // candidate join — unpersisted it would run the whole batch twice.
@@ -1144,7 +1063,7 @@ object SimilarityOps {
     // a duplicate delivery (it matches itself at cosine 1) — dropping
     // it is the dedup contract, unlike top-k serving where a query
     // finding itself is noise
-    val dupIds = ivfIndexVectors(spark, resolved)
+    val dupIds = ivfIndexVectors(spark, meta.dir)
       .where(col("ivf_list").isin(probedLists.toIndexedSeq.map(Integer.valueOf): _*))
       .join(q, Seq("ivf_list"))
       .where(cosineOf(dotF(col("__qv"), col("__cv")), l2NormF(col("__cv")), col("__qn"))

@@ -247,18 +247,19 @@ object StreamingOps {
       // approx: the daily steady-state tier at corpus scale — the
       // near-dup decision reads the k-longs/doc sig artifact instead
       // of every hashed shingle of the growing history (params come
-      // from the index's _graft_meta, so the stream can never band
-      // against signatures built with a different family)
+      // from the index header, so the stream can never band against
+      // signatures built with a different family)
       if (approx) graft.dedup.DedupOps.dedupAgainstIndexApprox(
         batch, indexDir, idCol, textCol, threshold, maxBucket)
       else graft.dedup.DedupOps.dedupAgainstIndex(
         batch, indexDir, idCol, textCol, shingleN, threshold, maxBucket, portable)
     }
     // in approx mode the caller's shingleN/portable were never consulted
-    // (the probe reads the frozen family from _graft_meta) — the append
-    // must honor the same contract, or defaulted params wedge the
-    // stream permanently: the decision commits, then every replay dies
-    // on the append's param validation
+    // (the probe reads the frozen family from the header of the
+    // RESOLVED index, pointer-committed or not) — the append must honor
+    // the same contract, or defaulted params wedge the stream
+    // permanently: the decision commits, then every replay dies on the
+    // append's param validation
     val (apShingleN, apPortable) =
       if (approx)
         graft.dedup.DedupOps.readDedupIndexMeta(spark, indexDir)
@@ -534,9 +535,7 @@ object StreamingOps {
     epochLoop("bloomStream", rows, checkpointDir) { (batch, epoch) =>
       val spark = batch.sparkSession
       val bi = graft.relational.BloomIndex
-      val exists = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(indexDir, "_graft_bloom_meta"))
+      val exists = graft.util.IndexMeta.read(spark, indexDir, "bloom").isDefined
       decideEpochOnce(spark, s"$outDir/batch=$epoch") {
         // first epoch births the index: everything is provably new
         if (exists) bi.pruneAgainstBloomIndex(batch, indexDir, keyCol)

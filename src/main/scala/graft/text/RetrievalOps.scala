@@ -147,8 +147,9 @@ object RetrievalOps {
     * those pruned postings, and reuses the identical scoring tail as
     * [[bm25Scores]] — so probe ≡ in-memory is structural.
     *
-    * Layout: `dir/_graft_meta` freezes `nbuckets` (the bucket function
-    * is the probe contract, like LSH's nbits); postings/doclen tranches
+    * Layout: the index header ([[graft.util.IndexMeta]]) freezes
+    * `nbuckets` (the bucket function is the probe contract, like LSH's
+    * nbits); postings/doclen tranches
     * append under `batch=<tag>` (an ingest overwrites its OWN tag —
     * replay-safe; docs must be tranche-disjoint, the same data-layout
     * obligation as the co-occurrence groups). `doclen` is written last
@@ -167,18 +168,9 @@ object RetrievalOps {
                        graft.merge.Merge.RenameCommit): Unit = {
     require(nBuckets >= 1, s"bm25WriteIndex: nBuckets=$nBuckets must be >= 1")
     val spark = docs.sparkSession
-    def buildInto(root: String): Unit = {
-      graft.util.Fs.writeSmallFile(spark, s"$root/_graft_meta",
-        s"family=bm25\nnbuckets=$nBuckets\n")
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("nbuckets" -> nBuckets))
       writeTranche(docs, root, idCol, textCol, nBuckets, "build")
-    }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (graft.util.Fs.pathExists(spark, dir))
-          graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
     }
   }
 
@@ -209,20 +201,12 @@ object RetrievalOps {
       .write.mode("overwrite").parquet(s"$root/doclen/batch=$tag")
   }
 
-  private def readNBuckets(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Int =
-    graft.util.Fs.readSmallFile(spark, s"$dir/_graft_meta")
-      .map { s =>
-        s.linesIterator.find(_.startsWith("nbuckets="))
-          .map(_.stripPrefix("nbuckets=").trim.toInt)
-          .getOrElse(throw new IllegalArgumentException(
-            s"BM25 index $dir: _graft_meta has no 'nbuckets' — the directory " +
-              "holds a DIFFERENT index family; probe it with its own operators"))
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"BM25 index $dir has no _graft_meta — not a written BM25 index " +
-          "(build it with bm25WriteIndex; the frozen nbuckets is the " +
-          "bucket-function contract)"))
+  /** The BM25 index's resolved directory and frozen `nbuckets`. */
+  private def openBm25Index(spark: org.apache.spark.sql.SparkSession,
+                            indexDir: String): (String, Int) = {
+    val h = graft.util.IndexMeta.open(spark, indexDir, "BM25", "bm25WriteIndex")
+    (h.dir, h.int("nbuckets"))
+  }
 
   /** Append a doc tranche under its own `batch=<tag>`, bucketed with
     * the index's frozen `nbuckets`. Tagged-tranche replay contract via
@@ -231,8 +215,7 @@ object RetrievalOps {
   def bm25AppendToIndex(newDocs: DataFrame, indexDir: String, idCol: String,
                         textCol: String, tag: String): Unit = {
     val spark = newDocs.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val nBuckets = readNBuckets(spark, dir)
+    val (dir, nBuckets) = openBm25Index(spark, indexDir)
     if (!graft.util.Tranches.appendTagAllowed(spark, dir, tag, "bm25AppendToIndex",
       () => newDocs.select(col(idCol).cast(LongType).as("doc_id")).distinct()
         .join(Readers.parquet(spark, s"$dir/doclen").select("doc_id"),
@@ -253,7 +236,7 @@ object RetrievalOps {
                            indexDir: String,
                            commit: graft.merge.Merge.Commit =
                              graft.merge.Merge.RenameCommit): Unit = {
-    readNBuckets(spark, graft.merge.Merge.resolveDir(spark, indexDir))
+    openBm25Index(spark, indexDir)
     graft.util.Tranches.foldLedger(spark, indexDir,
       Seq("postings" -> Seq("bucket"), "doclen" -> Nil), witness = "doclen",
       commit = commit)
@@ -266,8 +249,7 @@ object RetrievalOps {
     * meta first (a typo'd path must fail, not read empty). */
   def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    readNBuckets(spark, dir)
+    val dir = openBm25Index(spark, indexDir)._1
     graft.dedup.DedupOps.artifactStats(spark, dir, Seq("postings", "doclen"))
   }
 
@@ -281,8 +263,7 @@ object RetrievalOps {
     * retry. */
   def bm25IndexHealth(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    readNBuckets(spark, dir)
+    val dir = openBm25Index(spark, indexDir)._1
     graft.util.Tranches.ledgerHealth(spark, dir, Seq("postings", "doclen"),
       Map.empty, witness = Some("doclen"))
   }
@@ -295,8 +276,7 @@ object RetrievalOps {
   def bm25ProbeIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val nBuckets = readNBuckets(spark, dir)
+    val (dir, nBuckets) = openBm25Index(spark, indexDir)
     val qt = normalizedQueries(queries)
     val qTerms = qt.select(col("term")).distinct()
       .withColumn("bucket", termBucket(col("term"), nBuckets))

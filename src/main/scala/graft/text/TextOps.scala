@@ -818,31 +818,26 @@ object TextOps {
 
   // ------------------------------------------------- at-rest winnow index
 
-  import graft.util.Fs.{pathExists, readSmallFile, writeSmallFile}
+  import graft.util.Fs.pathExists
 
   private def winnowRows(df: DataFrame, idCol: String, textCol: String,
                          k: Int, w: Int, portable: Boolean): DataFrame =
     df.select(col(idCol).as("doc_id"),
       explode(winnowFingerprints(col(textCol), k, w, portable)).as("wfp"))
 
-  /** The winnow index's frozen parameter family (`dir/_graft_meta`) —
-    * same structural-invariant role as the dedup index's: fingerprints
-    * selected under different (k, w, hash) never meet their at-rest
-    * counterparts, so probes read the params from the file instead of
-    * trusting callers. */
-  private[graft] final case class WinnowIndexMeta(k: Int, w: Int, portable: Boolean)
+  /** The winnow index's frozen parameter family, the `winnow` view of
+    * its [[graft.util.IndexMeta]] header — same structural-invariant
+    * role as the dedup index's: fingerprints selected under different
+    * (k, w, hash) never meet their at-rest counterparts, so probes read
+    * the params from the header instead of trusting callers. `dir` is
+    * the resolved index directory. */
+  private final case class WinnowIndexMeta(dir: String, k: Int, w: Int, portable: Boolean)
 
-  private def winnowMetaString(m: WinnowIndexMeta): String =
-    s"k=${m.k}\nw=${m.w}\nportable=${m.portable}\n"
-
-  private[graft] def readWinnowIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[WinnowIndexMeta] =
-    readSmallFile(spark, s"$dir/_graft_meta").map { s =>
-      val kv = s.linesIterator.filter(_.contains('=')).map { l =>
-        val Array(a, b) = l.split("=", 2); (a.trim, b.trim)
-      }.toMap
-      WinnowIndexMeta(kv("k").toInt, kv("w").toInt, kv("portable").toBoolean)
-    }
+  private def openWinnowIndex(spark: org.apache.spark.sql.SparkSession,
+                              indexDir: String): WinnowIndexMeta = {
+    val h = graft.util.IndexMeta.open(spark, indexDir, "winnow", "writeWinnowIndex")
+    WinnowIndexMeta(h.dir, h.int("k"), h.int("w"), h.bool("portable"))
+  }
 
   /** Materialize winnowing fingerprints at rest: `dir/wfp` holds the
     * corpus's exploded selected hashes `(doc_id, wfp)` — 8 bytes per
@@ -850,35 +845,26 @@ object TextOps {
     * [[winnowOverlapAgainstIndex]] never re-winnows or re-reads corpus
     * text. Same lifecycle discipline as the dedup index
     * ([[graft.dedup.DedupOps.writeDedupIndex]]): `batch=<tag>` tranche
-    * layout with overwrite-idempotent appends, params frozen in
-    * `_graft_meta`, rebuild over a live index via one whole-dir atomic
-    * swap.
+    * layout with overwrite-idempotent appends, params frozen in the
+    * index header, every build published whole through
+    * [[graft.merge.Merge.swapWith]].
     */
   def writeWinnowIndex(corpus: DataFrame, dir: String, idCol: String, textCol: String,
                        k: Int = 8, w: Int = 4, portable: Boolean = false,
                        commit: graft.merge.Merge.Commit =
                          graft.merge.Merge.RenameCommit): Unit = {
     val spark = corpus.sparkSession
-    def buildInto(root: String): Unit = {
-      // meta first — same crash-window reasoning as writeDedupIndex
-      writeSmallFile(spark, s"$root/_graft_meta",
-        winnowMetaString(WinnowIndexMeta(k, w, portable)))
+    graft.merge.Merge.swapWith(spark, dir, commit) { root =>
+      graft.util.IndexMeta.write(spark, root, Seq("k" -> k, "w" -> w, "portable" -> portable))
       winnowRows(corpus, idCol, textCol, k, w, portable)
         .write.mode("overwrite").parquet(s"$root/wfp/batch=build")
       winnowCounts(Readers.parquet(spark, s"$root/wfp/batch=build"))
         .write.mode("overwrite").parquet(s"$root/wdf/batch=build")
     }
-    commit match {
-      case graft.merge.Merge.PointerCommit =>
-        graft.merge.Merge.swapWith(spark, dir, commit)(buildInto)
-      case graft.merge.Merge.RenameCommit =>
-        if (pathExists(spark, dir)) graft.merge.Merge.atomicSwap(spark, dir)(buildInto)
-        else buildInto(dir)
-    }
   }
 
   /** Append a tranche of documents to the winnow index (params from
-    * `_graft_meta` — never caller-supplied). Unlike the dedup index,
+    * the index header — never caller-supplied). Unlike the dedup index,
     * the natural loop appends the WHOLE probed batch, not survivors:
     * overlap detection reports reuse, it does not drop documents.
     * Overwrite-idempotent per tag; a tag absorbed by
@@ -886,9 +872,8 @@ object TextOps {
   def appendToWinnowIndex(newRows: DataFrame, indexDir: String, idCol: String, textCol: String,
                           tag: String): Unit = {
     val spark = newRows.sparkSession
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    val meta = readWinnowIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"winnow index $dir has no _graft_meta; build it with writeWinnowIndex"))
+    val meta = openWinnowIndex(spark, indexDir)
+    val dir = meta.dir
     // novelty probe for the absorbed-tag path: (doc_id, wfp) pairs
     // absent from the consolidated artifact — pair granularity so a
     // NEW document aliased onto an absorbed tag fails fast even when
@@ -944,14 +929,11 @@ object TextOps {
     * aggregation pass; fails fast off-family. */
   def winnowIndexStats(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    readWinnowIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"winnowIndexStats: $dir has no _graft_meta — not a winnow index " +
-        "(build it with writeWinnowIndex)"))
-    require(graft.util.Fs.pathExists(spark, s"$dir/wfp"),
+    val dir = openWinnowIndex(spark, indexDir).dir
+    require(pathExists(spark, s"$dir/wfp"),
       s"winnowIndexStats: $dir has no wfp artifact — not a winnow index")
     graft.dedup.DedupOps.artifactStats(spark, dir,
-      Seq("wfp", "wdf").filter(a => graft.util.Fs.pathExists(spark, s"$dir/$a")))
+      Seq("wfp", "wdf").filter(a => pathExists(spark, s"$dir/$a")))
   }
 
   /** [[graft.dedup.DedupOps.dedupIndexHealth]]'s winnow twin: tranche/
@@ -959,18 +941,15 @@ object TextOps {
     * alone. */
   def winnowIndexHealth(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): DataFrame = {
-    val dir = graft.merge.Merge.resolveDir(spark, indexDir)
-    readWinnowIndexMeta(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"winnowIndexHealth: $dir has no _graft_meta — not a winnow index " +
-        "(build it with writeWinnowIndex)"))
+    val dir = openWinnowIndex(spark, indexDir).dir
     graft.util.Tranches.ledgerHealth(spark, dir,
-      Seq("wfp", "wdf").filter(a => graft.util.Fs.pathExists(spark, s"$dir/$a")),
+      Seq("wfp", "wdf").filter(a => pathExists(spark, s"$dir/$a")),
       Map("wdf" -> "wfp"), witness = Some("wfp"))
   }
 
   /** Partial-overlap pairs of a NEW batch against the MATERIALIZED
-    * winnow index: the batch winnows from text (params from
-    * `_graft_meta`), the history side reads the compact `wfp` artifact
+    * winnow index: the batch winnows from text (params from the
+    * index header), the history side reads the compact `wfp` artifact
     * — the daily partial-reuse scan without re-fingerprinting the
     * corpus. Combined hot-hash cap across both sides (a fingerprint
     * cliché on either side is cliché, mirroring
@@ -991,9 +970,8 @@ object TextOps {
                                 idCol: String, textCol: String,
                                 minShared: Int = 2, maxBucket: Int = 1000): DataFrame = {
     val spark = batch.sparkSession
-    val idx = graft.merge.Merge.resolveDir(spark, dir)
-    val meta = readWinnowIndexMeta(spark, idx).getOrElse(throw new IllegalArgumentException(
-      s"winnow index $idx has no _graft_meta; build it with writeWinnowIndex"))
+    val meta = openWinnowIndex(spark, dir)
+    val idx = meta.dir
     val l = winnowRows(batch, idCol, textCol, meta.k, meta.w, meta.portable)
       .select(col("doc_id").as("__id"), col("wfp").as("__fp"))
     val r = Readers.parquet(spark, s"$idx/wfp")

@@ -3,8 +3,8 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-filesystem plumbing shared by the at-rest index families
-  * (dedup, winnow) and anything else that keeps small engine-owned
-  * control files (`_graft_meta`, the absorbed-tag ledger) next to parquet
+  * and anything else that keeps small engine-owned control files (the
+  * [[IndexMeta]] header, the absorbed-tag ledger) next to parquet
   * artifacts. Lives in `util` so no domain module has to depend on
   * another for filesystem access.
   */

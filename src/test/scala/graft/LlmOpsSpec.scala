@@ -976,7 +976,7 @@ class LlmOpsSpec extends SparkSpec {
       nLists = 8, precomputed = Some(cents))
     // the quantizer is frozen into the artifact bit-exactly: what every
     // probe/append reads back IS the family the build used
-    val meta = SimilarityOps.readIvfIndexMeta(spark, idx).get
+    val meta = SimilarityOps.openIvfIndex(spark, idx)
     assert(meta.nLists == 8 &&
       meta.centroids.map { case (i, v) => (i, v.toSeq) }.toSeq ==
         cents.map { case (i, v) => (i, v.toSeq) }.toSeq)
@@ -1273,6 +1273,28 @@ class LlmOpsSpec extends SparkSpec {
         "embedding", k = 3, nProbe = 2, shortlist = 10)
     }
     assert(ePq.getMessage.contains("DIFFERENT index family"))
+    // the text families read the same header the same way: a dedup
+    // probe on a winnow dir, a winnow probe on a dedup dir and a BM25
+    // probe on an LSH dir name the mismatch too
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "an entirely new document about training corpora for language models"))
+      .toDF("doc_id", "text")
+    val winnowDir = tempDir("graft_fam_winnow") + "/w"
+    TextOps.writeWinnowIndex(docs, winnowDir, "doc_id", "text")
+    val dedupDir = tempDir("graft_fam_dedup") + "/d"
+    DedupOps.writeDedupIndex(docs, dedupDir, "doc_id", "text")
+    val textProbes: Seq[(String, () => Any)] = Seq(
+      "dedupAgainstIndexApprox on winnow" -> (() =>
+        DedupOps.dedupAgainstIndexApprox(docs, winnowDir, "doc_id", "text")),
+      "winnowOverlapAgainstIndex on dedup" -> (() =>
+        TextOps.winnowOverlapAgainstIndex(docs, dedupDir, "doc_id", "text")),
+      "bm25ProbeIndex on LSH" -> (() =>
+        graft.text.RetrievalOps.bm25ProbeIndex(spark, lshDir,
+          Seq(("q1", "fox")).toDF("query_id", "term"), k = 3)))
+    textProbes.foreach { case (name, probe) =>
+      val e = intercept[IllegalArgumentException](probe())
+      assert(e.getMessage.contains("DIFFERENT index family"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("recallAtK: exact-vs-itself is 1.0; misses and extras counted against the exact set only") {

@@ -578,6 +578,31 @@ class RelationalMergeSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Merge.upsert(Seq((9, 9)).toDF("k", "v"), dir2, Seq("k"))
     }
+    // every index builder publishes through swapWith, so each refuses
+    // the same mix instead of rename-swapping the manifest tree
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    val emb = Seq((1L, Array.fill(64)(0.5))).toDF("vec_id", "embedding")
+    val cents = Some(Array((0, Array.fill(64)(0.0))))
+    val rc = Merge.RenameCommit
+    val builders: Seq[(String, () => Any)] = Seq(
+      "writeDedupIndex" -> (() =>
+        graft.dedup.DedupOps.writeDedupIndex(docs, dir2, "doc_id", "text", commit = rc)),
+      "writeWinnowIndex" -> (() =>
+        graft.text.TextOps.writeWinnowIndex(docs, dir2, "doc_id", "text", commit = rc)),
+      "lshWriteIndex" -> (() => graft.similarity.SimilarityOps.lshWriteIndex(
+        emb, dir2, "vec_id", "embedding", nbits = 4, commit = rc)),
+      "ivfWriteIndex" -> (() => graft.similarity.SimilarityOps.ivfWriteIndex(
+        emb, dir2, "vec_id", "embedding", nLists = 1, precomputed = cents, commit = rc)),
+      "ivfPqWriteIndex" -> (() => graft.similarity.SimilarityOps.ivfPqWriteIndex(
+        emb, dir2, "vec_id", "embedding", nLists = 1, m = 8, codebookK = 16,
+        centroids = cents, codebooks = Some(Array.fill(8, 16)(Array.fill(8)(0.0))),
+        commit = rc)),
+      "bm25WriteIndex" -> (() =>
+        graft.text.RetrievalOps.bm25WriteIndex(docs, dir2, "doc_id", "text", commit = rc)))
+    builders.foreach { case (name, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("is pointer-committed"), s"$name: ${e.getMessage}")
+    }
     assert(Merge.readTarget(spark, dir2).as[(Int, Int)].collect().toSet == Set((2, 2)))
   }
 

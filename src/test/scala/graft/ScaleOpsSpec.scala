@@ -471,7 +471,7 @@ class ScaleOpsSpec extends SparkSpec {
         .select("query_id", "corpus_id", "cos").collect().map(_.toString).sorted.toSeq
     assert(probe(inc) == probe(full))
     // the frozen centroid+codebook pair round-trips bit-exactly
-    val meta = SimilarityOps.readIvfPqIndexMeta(spark, inc).get
+    val meta = SimilarityOps.openIvfPqIndex(spark, inc)
     assert(meta.centroids.map { case (i, v) => (i, v.toSeq) }.toSeq ==
       cents.map { case (i, v) => (i, v.toSeq) }.toSeq)
     assert(meta.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==

@@ -104,6 +104,25 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(s"$idx/sh/batch=0").exists())
   }
 
+  test("approx epoch on a pointer-committed index reads the frozen params from its current generation") {
+    // the header of a PointerCommit index lives inside its __data_
+    // generation; the append must find it there too, or the non-default
+    // shingleN fails the append's validation on every replay
+    val base = tempDir("graft_apx_ptr")
+    val idx = s"$base/idx"; val out = s"$base/out"
+    graft.dedup.DedupOps.writeDedupIndex(
+      Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text"),
+      idx, "doc_id", "text", shingleN = 4, commit = graft.merge.Merge.PointerCommit)
+    val batch = Seq((10L, "an entirely new document about training corpora")).toDF("doc_id", "text")
+    StreamingOps.processIndexedDedupEpoch(batch, 0L, idx, out, "doc_id", "text",
+      approx = true) // shingleN left at its default
+    assert(spark.read.parquet(out).select("doc_id").as[Long].collect().toSeq == Seq(10L))
+    val gen = graft.merge.Merge.resolveDir(spark, idx)
+    assert(gen != idx, "index is pointer-committed")
+    Seq("sh", "sig", "fp").foreach(a =>
+      assert(new java.io.File(s"$gen/$a/batch=0").exists(), s"$a tranche appended"))
+  }
+
   test("indexedDedupStream replay: re-delivered epochs converge (decision reuse + tranche overwrite)") {
     val base = tempDir("graft_idx_replay")
     val idx = s"$base/idx"; val out = s"$base/out"
