@@ -83,7 +83,9 @@ object Graft {
 
   /** Local core count for the package mains (`Bench`, `Verify`,
     * `Profile`, `GenScale`, `ScaleCurves`): `SPARK_GRAFT_CPUS`,
-    * default 4. Also their shuffle-partition count. */
+    * default 4. Also their shuffle-partition count. `ScaleCurves`
+    * passes its own count to every `Profile` child it spawns, the only
+    * child JVMs a main starts. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus): SparkSession = {

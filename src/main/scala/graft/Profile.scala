@@ -11,10 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   *   sbt "runMain graft.Profile <q[,q…]> <sfDir> <reps> [time|stages|explain]"
   *
   * (comma-separated query names, fixture dir, repetitions per query,
-  * mode; `SPARK_GRAFT_CPUS` sets the core count as for every main). Every
-  * mode runs the reps after the between-query hygiene Bench applies
-  * and prints `[profile] <q> run <i>: <s> s` per rep, cold first —
-  * the lines [[Bench.isolatedSec]] parses — then
+  * mode; `SPARK_GRAFT_CPUS` sets the core count as for every main).
+  * Bad arguments (fewer than three, a `<reps>` that is not a positive
+  * integer, an unknown mode or query) throw IllegalArgumentException
+  * before any session is built. Every mode runs the reps after the
+  * between-query hygiene Bench applies and prints
+  * `[profile] <q> run <i>: <s> s` per rep, cold first — the lines
+  * [[ScaleCurves.isolatedSec]] parses — then
   * `[profile] <q> run <i> codegen: <n> classes, <ms> ms`, the classes
   * Spark compiled during the rep and their compile time. A rep that
   * repeats an earlier one compiles 0 classes unless the codegen cache
@@ -147,14 +150,15 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: graft.Profile <q[,q…]> <sfDir> <reps> [time|stages|explain]")
+    val usage = "usage: graft.Profile <q[,q…]> <sfDir> <reps> [time|stages|explain]"
+    require(args.length >= 3, usage)
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args(1)
-    val reps = args(2).toInt
+    val reps = args(2).toIntOption.getOrElse(0)
+    require(reps > 0, s"<reps> must be a positive integer, got '${args(2)}'; $usage")
     val mode = args.lift(3).getOrElse("time")
     require(Set("time", "stages", "explain")(mode),
-      s"unknown mode $mode; expected time, stages or explain")
+      s"unknown mode $mode; expected time, stages or explain; $usage")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries ${unknown.mkString(", ")}; known: " +
       SparkEntry.queries.keys.toSeq.sorted.mkString(", "))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Regenerate the COMMITTED scale curves (`scale_curves.json`) with one
   * command. The curve catches what neither the sf0.1 bench nor the
   * plan gate can: a plan-preserving constant-factor regression (e.g. a
@@ -15,8 +17,8 @@ package graft
   * with [[GenScale]] (10 disjoint-key copies of sf0.1 — the
   * corpus-growth scaling model).
   * Per (query, SF) the recorded figure is the MIN over reps in a
-  * FRESH child JVM ([[Bench.isolatedSec]]'s `graft.Profile` spawn,
-  * 24 GiB heap): measured in one long-lived JVM, the tail queries read
+  * FRESH child JVM ([[isolatedSec]]'s `graft.Profile` spawn, 24 GiB
+  * heap): measured in one long-lived JVM, the tail queries read
   * 4–8× slow — by the tenth query the heap carries every predecessor's
   * shuffle/cleaner debt (unpersist is async, the ContextCleaner lags)
   * and the biggest shuffles then run inside a GC storm that has
@@ -66,6 +68,62 @@ object ScaleCurves {
       .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
       .toMap
 
+  /** One curve figure: spawns `graft.Profile <q> <sfDir> <reps> time`
+    * in a fresh JVM and returns the MIN of the printed reps, the cold
+    * run included. The child gets this JVM's own input arguments
+    * verbatim (module opens, `-D` confs), then `-Xmx<heapGb>g`, which
+    * overrides any earlier `-Xmx`; this JVM's classpath made absolute;
+    * tmpdir as cwd, so its metastore and derby files collide with
+    * nobody's; and `SPARK_GRAFT_CPUS=cpus`. None on any spawn or parse
+    * failure, on a child that prints no rep (an unknown query fails
+    * `Profile`'s argument checks before any session exists), or after
+    * `timeoutSec`. */
+  private[graft] def isolatedSec(name: String, sfDir: String, cpus: Int, reps: Int,
+                                 heapGb: Int = 24,
+                                 timeoutSec: Long = 1800): Option[Double] =
+    try {
+      val javaBin = System.getProperty("java.home") + "/bin/java"
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+      // the child runs from tmpdir, so relative classpath entries (a
+      // plain `java -cp target/...` launch) must be made absolute
+      val sep = java.io.File.pathSeparator
+      val absCp = System.getProperty("java.class.path").split(sep)
+        .filter(_.nonEmpty)
+        .map(e => new java.io.File(e).getAbsolutePath)
+        .mkString(sep)
+      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xmx${heapGb}g", "-cp", absCp,
+        "graft.Profile", name, sfDir, reps.toString, "time")).toArray
+      val pb = new ProcessBuilder(cmd: _*)
+      pb.directory(new java.io.File(System.getProperty("java.io.tmpdir")))
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
+      pb.redirectErrorStream(true)
+      val p = pb.start()
+      // drain stdout on its OWN thread: a to-EOF read on this thread
+      // would block forever on a hung child, so the timeout could
+      // never engage
+      val rep = """\[profile\] \S+ run \d+: ([0-9.]+) s""".r
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+      val reader = new Thread(() =>
+        try scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
+          .getLines().foreach {
+            case rep(s) => out.add(s.toDouble)
+            case _ =>
+          }
+        catch { case scala.util.control.NonFatal(_) => () },
+        s"curves-drain-$name")
+      reader.setDaemon(true)
+      reader.start()
+      val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
+      if (!done) { p.destroyForcibly(); reader.join(2000); None }
+      else {
+        reader.join(10000) // stream closes with the exited process
+        out.asScala.minOption
+      }
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[curves] spawn for $name failed: $e"); None
+    }
+
   def main(args: Array[String]): Unit = {
     val sf01 = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val sf1 = args.lift(1).getOrElse("/tmp/graft_sf1")
@@ -76,8 +134,8 @@ object ScaleCurves {
       GenScale.main(Array(sf01, sf1, "10"))
     }
     val rows = CurveQueries.filter(SparkEntry.queries.contains).flatMap { q =>
-      val a = Bench.isolatedSec(q, sf01, cpus, reps, heapGb = 24, timeoutSec = 1800)
-      val b = Bench.isolatedSec(q, sf1, cpus, reps, heapGb = 24, timeoutSec = 1800)
+      val a = isolatedSec(q, sf01, cpus, reps)
+      val b = isolatedSec(q, sf1, cpus, reps)
       (a, b) match {
         case (Some(x), Some(y)) =>
           val jit = if (y / x < JitFloorRatio) ", \"jit_floor\": true" else ""

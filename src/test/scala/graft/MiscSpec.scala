@@ -130,46 +130,31 @@ class MiscSpec extends SparkSpec {
     assert(df.columns.contains("revenue") && df.columns.contains(MetaOps.PartitionDate))
   }
 
-  test("Bench.priorWarms parses compact and pretty-printed detail files; corrupt → empty") {
-    val dir = java.nio.file.Paths.get(tempDir("graft_priorwarm"))
-    def write(name: String, body: String): String = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.write(p, body.getBytes("UTF-8")); p.toString
-    }
-    val compact = write("c.json",
-      """{"metric":"detail","queries":{"q_a":{"sec":2.5,"warm":1.25,"gc":0.1,"peak_mb":12},""" +
-        """"q_b":{"sec":-1,"warm":-1,"gc":0.0,"peak_mb":3},""" +
-        """"q_c":{"sec":0.7,"warm":0.5,"gc":0.0,"peak_mb":4,"prior_warm":0.4,"isolated":0.45}}}""")
-    val got = graft.Bench.priorWarms(compact)
-    assert(got == Map("q_a" -> 1.25, "q_c" -> 0.5))   // failed (-1) excluded
-    val pretty = write("p.json",
-      """{ "queries": { "q_a": { "sec": 2.5, "warm": 1.25 }, "q_b": { "sec": 1.0, "warm": 0.9 } } }""")
-    assert(graft.Bench.priorWarms(pretty) == Map("q_a" -> 1.25, "q_b" -> 0.9))
-    assert(graft.Bench.priorWarms(write("x.json", "not json")).isEmpty)
-    assert(graft.Bench.priorWarms(dir.resolve("missing.json").toString).isEmpty)
-  }
-
-  test("Bench.driftVerdict: judged against the PRIOR warm, confirmed regressions reachable") {
-    import graft.Bench.driftVerdict
-    assert(driftVerdict(-1.0, 1.0) == "spawn-failed")
-    // prior 1.0 s, in-suite warm 2.0 s, isolated 1.9 s: an `iso <= warm`
-    // rule would read this as suite noise; it is a CONFIRMED 2×-class
-    // regression (the fresh-JVM figure itself nearly doubled vs prior)
-    assert(driftVerdict(1.9, 1.0) == "regressed?")
-    assert(driftVerdict(2.0, 1.0) == "regressed?")
-    // isolated back at the prior run's figure → the suite run was hot
-    assert(driftVerdict(1.1, 1.0) == "suite-noise(prior)")
-    // the 1.2× bound is inclusive; a hair above surfaces
-    assert(driftVerdict(1.2, 1.0) == "suite-noise(prior)")
-    assert(driftVerdict(1.2 + 1e-9, 1.0) == "regressed?")
-  }
-
-  test("Bench.isolatedSec spawns a fresh-JVM Profile run and parses the min") {
-    // the adjudication spawn path end-to-end on the smallest fixture:
-    // one rep of a trivial query (~20 s JVM+session boot dominated)
-    val got = graft.Bench.isolatedSec("q_filter_equals",
-      "/root/testdata/sf0.001", 4, reps = 1)
+  test("ScaleCurves.isolatedSec spawns a fresh-JVM Profile run and parses the min") {
+    // the curve spawn path end-to-end on the smallest fixture: one rep
+    // of a trivial query (~20 s JVM+session boot dominated)
+    val got = ScaleCurves.isolatedSec("q_filter_equals",
+      "/root/testdata/sf0.001", 4, reps = 1, heapGb = 2)
     assert(got.exists(s => s > 0 && s < 120), s"isolatedSec returned $got")
+  }
+
+  test("ScaleCurves.isolatedSec: a spawn for an unregistered query returns None") {
+    // the child fails Profile's unknown-query check before it builds a
+    // session, prints no rep line and exits; the curve row is omitted
+    val got = ScaleCurves.isolatedSec("q_not_registered",
+      "/root/testdata/sf0.001", 4, reps = 1, heapGb = 2, timeoutSec = 300)
+    assert(got.isEmpty, s"isolatedSec returned $got")
+  }
+
+  test("Profile rejects a <reps> that is not a positive integer before any session") {
+    // invalid inputs only: a valid call ends in spark.stop(), which would
+    // stop this suite's shared session
+    for (reps <- Seq("0", "-3", "x", "1.5", "")) {
+      val e = intercept[IllegalArgumentException](
+        Profile.main(Array("q_filter_equals", "/root/testdata/sf0.001", reps)))
+      assert(e.getMessage.contains("usage: graft.Profile"), s"reps '$reps': ${e.getMessage}")
+    }
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("Profile.stages: the stage table counts tasks and names callsites") {
